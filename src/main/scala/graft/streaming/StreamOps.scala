@@ -265,11 +265,10 @@ object StreamOps {
         val live = new org.apache.hadoop.fs.Path(statePath)
         val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val merged =
-          if (fs.exists(live)) {
-            val aggs = stages.map(t => min(s"t_$t").as(s"t_$t"))
-            spark.read.parquet(statePath).unionByName(part)
-              .groupBy(userCol).agg(aggs.head, aggs.tail: _*)
-          } else part
+          if (fs.exists(live))
+            stageMinsMerge(spark.read.parquet(statePath).unionByName(part),
+              userCol, stages)
+          else part
         publishAtomic(spark, statePath, merged, Some(batchId))
       }
     }
@@ -329,8 +328,9 @@ object StreamOps {
     * mode-overwrite = retry-idempotent, the dedup-index LSM shape);
     * the standing mins are the min-merge of the deltas at read time
     * ([[stageFunnelFromDeltas]]), and min-merge absorbs any duplicate
-    * rows a crashed compaction leaves. [[compactStageFunnelDeltas]]
-    * bounds the listed-dir count exactly like the dedup index.
+    * rows a crashed compaction leaves. [[tieredForeachBatch]] over
+    * [[LsmStore.stageFunnel]] bounds the listed-dir count exactly like
+    * the dedup index.
     */
   def stageFunnelForeachBatchDelta(statePath: String, userCol: String,
                                    typeCol: String, tsCol: String,
@@ -343,26 +343,23 @@ object StreamOps {
     }
   }
 
-  private def deltaDirs(spark: org.apache.spark.sql.SparkSession,
-                        statePath: String): Seq[String] =
-    liveDeltaDirs(spark, statePath)
-
-  private def unionDeltas(spark: org.apache.spark.sql.SparkSession,
-                          statePath: String): Option[DataFrame] = {
-    val dirs = deltaDirs(spark, statePath)
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
-  }
-
   /** Standing per-user stage mins from the delta log (min of mins),
     * and the x26 dashboard row from them. */
   def stageFunnelMinsFromDeltas(spark: org.apache.spark.sql.SparkSession,
                                 statePath: String, userCol: String,
                                 stages: Seq[String]): DataFrame = {
-    val all = unionDeltas(spark, statePath).getOrElse(
+    val all = readDeltaDirs(spark, statePath).getOrElse(
       throw new IllegalStateException(
         s"stageFunnelMinsFromDeltas: no deltas under $statePath"))
+    stageMinsMerge(all, userCol, stages)
+  }
+
+  /** Min-of-mins by user: folds any union of stage-min rows (state,
+    * batch partials, deltas, duplicates) into the standing mins. */
+  private def stageMinsMerge(rows: DataFrame, userCol: String,
+                             stages: Seq[String]): DataFrame = {
     val aggs = stages.map(t => min(s"t_$t").as(s"t_$t"))
-    all.groupBy(userCol).agg(aggs.head, aggs.tail: _*)
+    rows.groupBy(userCol).agg(aggs.head, aggs.tail: _*)
   }
 
   def stageFunnelFromDeltas(spark: org.apache.spark.sql.SparkSession,
@@ -371,20 +368,6 @@ object StreamOps {
     graft.operators.Retention.funnelCounts(
       stageFunnelMinsFromDeltas(spark, statePath, userCol, stages),
       stages)
-
-  /** LSM compaction of the funnel delta log: min-merge every delta
-    * into one `d=c<upTo>` dir (staged rename BEFORE source deletes —
-    * a crash in between leaves duplicate rows that the min-merge read
-    * absorbs, the compactDedupIndex discipline). */
-  def compactStageFunnelDeltas(spark: org.apache.spark.sql.SparkSession,
-                               statePath: String, upTo: Long,
-                               userCol: String,
-                               stages: Seq[String]): Unit =
-    compactDeltaLog(spark, statePath, upTo) { dirs =>
-      val aggs = stages.map(t => min(s"t_$t").as(s"t_$t"))
-      spark.read.parquet(dirs: _*).groupBy(userCol)
-        .agg(aggs.head, aggs.tail: _*)
-    }
 
   /** [[retentionForeachBatch]]'s DELTA-LOG form (same motivation as
     * the funnel delta above — the retention state is |users| rows):
@@ -406,92 +389,22 @@ object StreamOps {
   }
 
   def retentionStateFromDeltas(spark: org.apache.spark.sql.SparkSession,
-                               statePath: String): DataFrame = {
-    import graft.operators.Retention
-    val all = unionDeltas(spark, statePath).getOrElse(
+                               statePath: String): DataFrame =
+    retentionMerge(readDeltaDirs(spark, statePath).getOrElse(
       throw new IllegalStateException(
-        s"retentionStateFromDeltas: no deltas under $statePath"))
-    Retention.retentionState(Retention.stateDays(all).distinct())
+        s"retentionStateFromDeltas: no deltas under $statePath")))
+
+  /** The distinct re-reduce: any union of retention states (deltas,
+    * segments, duplicates) back to one (cohort_day, mask) per user. */
+  private def retentionMerge(rows: DataFrame): DataFrame = {
+    import graft.operators.Retention
+    Retention.retentionState(Retention.stateDays(rows).distinct())
   }
 
   def retentionFromDeltas(spark: org.apache.spark.sql.SparkSession,
                           statePath: String): DataFrame =
     graft.operators.Retention.retentionTable(
       retentionStateFromDeltas(spark, statePath))
-
-  def compactRetentionDeltas(spark: org.apache.spark.sql.SparkSession,
-                             statePath: String, upTo: Long): Unit =
-    compactDeltaLog(spark, statePath, upTo) { dirs =>
-      import graft.operators.Retention
-      Retention.retentionState(
-        Retention.stateDays(spark.read.parquet(dirs: _*)).distinct())
-    }
-
-  /** The cadence knob for the dashboard delta logs (the
-    * dedupIndexForeachBatchCompacted discipline): compact whenever the
-    * listed delta-dir count reaches `maxDeltas`. */
-  def stageFunnelForeachBatchDeltaCompacted(statePath: String,
-      userCol: String, typeCol: String, tsCol: String,
-      stages: Seq[String], maxDeltas: Int)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    require(maxDeltas >= 2, s"maxDeltas must be >= 2, got $maxDeltas")
-    stageFunnelForeachBatchDelta(statePath, userCol, typeCol, tsCol,
-      stages)(batch, batchId)
-    val spark = batch.sparkSession
-    if (deltaDirCount(spark, statePath) >= maxDeltas)
-      compactStageFunnelDeltas(spark, statePath, upTo = batchId,
-        userCol, stages)
-  }
-
-  def retentionForeachBatchDeltaCompacted(statePath: String,
-      userCol: String, tsUsCol: String, maxDeltas: Int)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    require(maxDeltas >= 2, s"maxDeltas must be >= 2, got $maxDeltas")
-    retentionForeachBatchDelta(statePath, userCol, tsUsCol)(
-      batch, batchId)
-    val spark = batch.sparkSession
-    if (deltaDirCount(spark, statePath) >= maxDeltas)
-      compactRetentionDeltas(spark, statePath, upTo = batchId)
-  }
-
-  /** Shared LSM compaction plumbing for the dashboard delta logs:
-    * merge every delta dir named `d=<id>` with id <= upTo (and any
-    * prior `d=c<id>` segments in range) into one staged `d=c<upTo>`,
-    * rename it live, THEN delete the sources — every reader tolerates
-    * the crash window because the read-side merges are duplicate-
-    * absorbing (min / distinct). */
-  private def compactDeltaLog(spark: org.apache.spark.sql.SparkSession,
-                              statePath: String, upTo: Long)(
-      merge: Seq[String] => DataFrame): Unit = {
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    def idOf(name: String): Option[Long] = {
-      val s = name.stripPrefix("d=")
-      (if (s.startsWith("c")) s.drop(1) else s).toLongOption
-    }
-    val eligible = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("d=") &&
-        !s.getPath.getName.contains("__staging"))
-      .filter(s => idOf(s.getPath.getName).exists(_ <= upTo))
-      .map(_.getPath)
-    if (eligible.length < 2) return
-    val staging = new org.apache.hadoop.fs.Path(root,
-      s"d=c${upTo}__staging")
-    val target = new org.apache.hadoop.fs.Path(root, s"d=c$upTo")
-    merge(eligible.map(_.toString).toSeq)
-      .write.mode("overwrite").parquet(staging.toString)
-    fs.delete(target, true)
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(
-        s"compactDeltaLog: cannot publish $staging to $target")
-    // qualify both sides before comparing (the compactDedupIndex
-    // lesson: qualified-vs-unqualified Path equality once deleted a
-    // just-published target)
-    val qualifiedTarget = fs.makeQualified(target)
-    eligible.filterNot(p => fs.makeQualified(p) == qualifiedTarget)
-      .foreach(fs.delete(_, true))
-  }
 
   /** STREAMING line-frequency state for boilerplate removal
     * ([[graft.operators.Dedup.lineFrequencyFilter]]'s corpus statistic
@@ -555,46 +468,6 @@ object StreamOps {
         hashedLineKeys),
       lineFreq(docs.sparkSession, statePath, hashedLineKeys),
       maxDocFreq, delim, idCol)
-
-  /** LSM-compact the line-frequency delta log: merge all deltas with
-    * `first_batch <= upTo` into one SUM-merged dir (this state folds by
-    * addition, so compaction groups and sums — unlike the
-    * dropDuplicates stores — and is logically inert by the same
-    * monoid that makes [[lineFreq]] correct).
-    */
-  def compactLineFreq(spark: org.apache.spark.sql.SparkSession,
-                      statePath: String, upTo: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(statePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    val eligible = fs.listStatus(p)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("d=") &&
-        !s.getPath.getName.contains("__staging"))
-      .map(_.getPath)
-      .filter { d =>
-        val top = spark.read.parquet(d.toString)
-          .agg(max("first_batch")).head()
-        !top.isNullAt(0) && top.getLong(0) <= upTo
-      }
-    if (eligible.length < 2) return
-    val merged = spark.read
-      .parquet(eligible.map(_.toString).toIndexedSeq: _*)
-      .groupBy("lk").agg(sum("d").as("d"))
-      .withColumn("first_batch", lit(upTo))
-    val staging =
-      new org.apache.hadoop.fs.Path(s"$statePath/d=c${upTo}__staging")
-    val target = new org.apache.hadoop.fs.Path(s"$statePath/d=c$upTo")
-    merged.write.mode("overwrite").parquet(staging.toString)
-    fs.delete(target, true)
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"compact: cannot publish $target")
-    // compare by NAME: listStatus returns fully-qualified paths while
-    // `target` is unqualified, so Path equality is false even when the
-    // names match — a re-compaction at the same upTo (cadence retry)
-    // would otherwise delete the target it just published
-    eligible.filterNot(_.getName == target.getName)
-      .foreach(fs.delete(_, true))
-  }
 
   /** Streaming vocabulary heavy hitters via the mergeable Misra–Gries
     * summary (x18's sketch, graft.functions.MisraGries): each
@@ -1253,103 +1126,9 @@ object StreamOps {
     }
   }
 
-  /** Published delta-dir count of an LSM index root (`d=*`, staging
-    * excluded) — what the RISKS row-6 cadence bound is ON: the index
-    * read lists and opens one directory per delta, so reads degrade
-    * O(appended batches) without compaction while data VOLUME is
-    * irrelevant (the union is the same bytes either way). */
-  def deltaDirCount(spark: org.apache.spark.sql.SparkSession,
-                    indexPath: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) 0
-    else fs.listStatus(root)
-      .count(s => s.isDirectory && s.getPath.getName.startsWith("d=") &&
-        !s.getPath.getName.contains("__staging"))
-  }
-
-  /** [[dedupIndexForeachBatch]] with the compaction CADENCE wired in —
-    * the RISKS.md row-6 knob made mechanical instead of a documented
-    * policy: after each publish, if the delta-dir count has reached
-    * `maxDeltas`, every delta up to and including this batch compacts
-    * into one base segment. The steady state is ≤ `maxDeltas` dirs
-    * listed per index read, and each batch's amortized compaction cost
-    * is (index size / maxDeltas·batches-per-segment) — pick maxDeltas
-    * so maxDeltas × batch-size ≈ one base-segment size. Semantics are
-    * untouched (compaction preserves per-row `first_batch`, so
-    * at-arrival flags replay byte-identically — the result-inertness
-    * the compaction specs already pin); a batch RETRY that lands after
-    * its delta was compacted re-creates `d=<batchId>` next to the base
-    * segment holding the same hashes, which every reader tolerates
-    * (known-set distinct, anti-join multiplicity-blind) and the next
-    * compaction absorbs. StreamOpsSpec pins the cadence bound and
-    * flag equality against the never-compacted run.
-    */
-  def dedupIndexForeachBatchCompacted(indexPath: String, flagsPath: String,
-                                      idCol: String, textCol: String,
-                                      maxDeltas: Int)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    require(maxDeltas >= 2, s"maxDeltas must be >= 2, got $maxDeltas")
-    dedupIndexForeachBatch(indexPath, flagsPath, idCol, textCol)(
-      batch, batchId)
-    val spark = batch.sparkSession
-    if (deltaDirCount(spark, indexPath) >= maxDeltas)
-      compactDedupIndex(spark, indexPath, upTo = batchId)
-  }
-
-  /** LSM-style compaction of the dedup delta log: merges every delta
-    * whose MAX first_batch is <= `upTo` into one directory, preserving
-    * each row's original `first_batch` (so the at-arrival flag
-    * semantics and retry reads are byte-unchanged — compaction is
-    * purely physical, bounding the delta-dir count the index read has
-    * to list). Publish order makes a crash safe at every point: the
-    * compacted dir (named `d=c<upTo>`, which no future `d=<batchId>`
-    * retry can ever overwrite) is staged and renamed BEFORE the source
-    * dirs are deleted — a crash in between leaves duplicate hash rows
-    * across old+new dirs, which every reader tolerates (the known-set
-    * is distinct()ed, the anti-join ignores multiplicity) and the next
-    * compaction cleans up.
-    */
-  def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
-                        indexPath: String, upTo: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val all = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("d=") &&
-        !s.getPath.getName.contains("__staging"))
-      .map(_.getPath)
-    val eligible = all.filter { p =>
-      val top = spark.read.parquet(p.toString)
-        .agg(max("first_batch")).head()
-      // an all-dup batch publishes an EMPTY delta (null max): it holds
-      // nothing, so it is always eligible — excluding it would leak one
-      // listed dir per all-dup batch past every compaction forever
-      top.isNullAt(0) || top.getLong(0) <= upTo
-    }
-    if (eligible.length < 2) return // nothing worth merging
-    val merged = spark.read
-      .parquet(eligible.map(_.toString).toIndexedSeq: _*)
-      .groupBy("content_hash")
-      .agg(min("first_batch").as("first_batch")) // dedups crash leftovers
-    val staging =
-      new org.apache.hadoop.fs.Path(s"$indexPath/d=c${upTo}__staging")
-    val target = new org.apache.hadoop.fs.Path(s"$indexPath/d=c$upTo")
-    merged.write.mode("overwrite").parquet(staging.toString)
-    fs.delete(target, true)
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"compact: cannot publish $target")
-    // compare by NAME: listStatus returns fully-qualified paths while
-    // `target` is unqualified, so Path equality is false even when the
-    // names match — a re-compaction at the same upTo (cadence retry)
-    // would otherwise delete the target it just published
-    eligible.filterNot(_.getName == target.getName)
-      .foreach(fs.delete(_, true))
-  }
-
   /** Plain (uncompacted) delta-dir count — `d=<digits>` only, staging
-    * and compacted segments excluded: the tiered cadence triggers on
-    * THIS, because compacted segments legitimately accumulate
+    * and compacted segments excluded: the tiered trigger counts THIS,
+    * because compacted segments legitimately accumulate
     * (O(fanout·log batches) of them) and counting them would make the
     * trigger fire every batch forever once enough segments exist. */
   def plainDeltaDirCount(spark: org.apache.spark.sql.SparkSession,
@@ -1358,64 +1137,111 @@ object StreamOps {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) 0
     else fs.listStatus(root)
-      .count(s => s.isDirectory &&
-        s.getPath.getName.matches("d=[0-9]+"))
+      .count(s => s.isDirectory && isPlainDelta(s.getPath.getName))
   }
 
-  /** [[dedupIndexForeachBatch]] with SIZE-TIERED compaction — the
-    * probe-measured fix for [[dedupIndexForeachBatchCompacted]]'s
-    * write amplification: the cadence form folds EVERY delta plus the
-    * previous base into one new base each time it fires, so each hash
-    * row is rewritten O(batches / maxDeltas) times over the stream's
-    * life (total write cost O(B²/maxDeltas) — SCALE_r15 §12 measures
-    * the resulting per-batch wall slope at 1,000 batches). Here a
-    * firing folds ONLY the plain deltas into a NEW segment and never
-    * touches old segments; segments then merge geometrically (when
-    * `fanout` segments share a size class they merge into the next
-    * class), so a row is rewritten once per class it passes through —
-    * O(log B) — while the index read still lists ≤ maxDeltas deltas +
-    * O(fanout·log B) segments. Flag semantics and retry idempotence
-    * are EXACTLY the cadence form's; crash safety is STRICTLY
-    * STRONGER: every merge publishes via [[publishSegment]]'s
-    * rename-aside discipline, so committed hashes stay reader-visible
-    * at every instant and a checkpoint-replayed compaction absorbs
-    * (never deletes) a previously published segment.
+  /** [[dedupIndexForeachBatch]] with SIZE-TIERED compaction: after each
+    * publish, once `maxDeltas` plain deltas exist they fold into a NEW
+    * segment and old segments are never touched; segments then merge
+    * geometrically (when `fanout` segments share a size class they
+    * merge into the next class), so each hash row is rewritten once
+    * per class it passes through — O(log B) over the stream's life,
+    * where rewriting one base per firing costs O(B/maxDeltas) per row
+    * (SCALE_r15 §12 measures the per-batch wall slope that causes at
+    * 1,000 batches) — while the index read still lists ≤ maxDeltas
+    * deltas + O(fanout·log B) segments. Compaction preserves each
+    * row's `first_batch`, so at-arrival flags replay byte-identically;
+    * a batch RETRY that lands after its delta was compacted re-creates
+    * `d=<batchId>`, which the segment manifests resolve as consumed.
+    * Every merge publishes via [[publishSegment]]'s rename-aside
+    * discipline, so committed hashes stay reader-visible at every
+    * instant and a checkpoint-replayed compaction absorbs (never
+    * deletes) a previously published segment.
     */
   def dedupIndexForeachBatchTiered(indexPath: String, flagsPath: String,
                                    idCol: String, textCol: String,
                                    maxDeltas: Int, fanout: Int = 4)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    require(maxDeltas >= 2, s"maxDeltas must be >= 2, got $maxDeltas")
-    require(fanout >= 2, s"fanout must be >= 2, got $fanout")
-    dedupIndexForeachBatch(indexPath, flagsPath, idCol, textCol)(
-      batch, batchId)
-    val spark = batch.sparkSession
-    if (plainDeltaDirCount(spark, indexPath) >= maxDeltas)
-      compactDedupIndexTiered(spark, indexPath, upTo = batchId, fanout)
+      : (DataFrame, Long) => Unit =
+    tieredForeachBatch(indexPath, LsmStore.dedup, maxDeltas, fanout)(
+      dedupIndexForeachBatch(indexPath, flagsPath, idCol, textCol))
+
+  /** An LSM delta-log store described as data: each of its logs — the
+    * sub-directory under the store root that holds the `d=<batchId>`
+    * deltas, "" for the root itself — with its DUPLICATE-TOLERANT
+    * fold, which merges any union of that log's rows (the compacted
+    * dirs plus whatever a crash or replay left behind) given the
+    * compaction's `upTo`. [[compactStoreTiered]] compacts every log of
+    * a store; [[tieredForeachBatch]] fires it behind a sink.
+    */
+  final case class LsmStore(
+      logs: (String, (DataFrame, Long) => DataFrame)*)
+
+  /** Every compacted store's logs and folds. */
+  object LsmStore {
+    private def minFirstBatch(key: String) =
+      (rows: DataFrame, _: Long) =>
+        rows.groupBy(key).agg(min("first_batch").as("first_batch"))
+    private def distinctBy(keys: String*) =
+      (rows: DataFrame, _: Long) => rows.dropDuplicates(keys)
+
+    /** [[dedupIndexForeachBatch]]: min `first_batch` per hash. */
+    val dedup = LsmStore("" -> minFirstBatch("content_hash"))
+    /** [[dupSpanIndexForeachBatch]]: min `first_batch` per gram key. */
+    val dupSpan = LsmStore("" -> minFirstBatch("gk"))
+    /** [[nearDupIndexForeachBatch]]: payloads are identical per key
+      * by construction, so crash leftovers just drop. */
+    val nearDup = LsmStore("shingles" -> distinctBy("doc"),
+      "buckets" -> distinctBy("doc", "band"))
+    /** [[prefixDupIndexForeachBatch]] (the frozen `order/` table is no
+      * log): a doc carries MANY prefix rows, so that key must include
+      * the shingle or a merge would collapse a prefix to one row. */
+    val prefixDup = LsmStore("prefixes" -> distinctBy("doc", "shingle"),
+      "shingles" -> distinctBy("doc"))
+    /** [[edDistIndexForeachBatch]]'s segment, probe and text logs. */
+    val edDist = LsmStore("segs" -> distinctBy("doc", "key"),
+      "probes" -> distinctBy("doc", "key"), "texts" -> distinctBy("doc"))
+    /** [[lineFreqForeachBatch]] folds by ADDITION, so it is the store
+      * that needs the segment manifests' exactly-once resolution. */
+    val lineFreq = LsmStore("" -> ((rows: DataFrame, upTo: Long) =>
+      rows.groupBy("lk").agg(sum("d").as("d"))
+        .withColumn("first_batch", lit(upTo))))
+    /** [[stageFunnelForeachBatchDelta]]: min-of-mins by user. */
+    def stageFunnel(userCol: String, stages: Seq[String]) =
+      LsmStore("" -> ((rows: DataFrame, _: Long) =>
+        stageMinsMerge(rows, userCol, stages)))
+    /** [[retentionForeachBatchDelta]]: the distinct re-reduce. */
+    val retention =
+      LsmStore("" -> ((rows: DataFrame, _: Long) => retentionMerge(rows)))
   }
 
-  /** Tiered compaction of the dedup index — delegates to the SHARED
-    * size-tiered compactor [[compactStoreTiered]] with the dedup
-    * fold (groupBy content_hash, min first_batch). See that method
-    * for the tier structure and the crash-FREE publish discipline.
-    */
-  def compactDedupIndexTiered(spark: org.apache.spark.sql.SparkSession,
-                              indexPath: String, upTo: Long,
-                              fanout: Int = 4): Unit =
-    compactStoreTiered(spark, indexPath, upTo, fanout) { dirs =>
-      spark.read.parquet(dirs: _*)
-        .groupBy("content_hash")
-        .agg(min("first_batch").as("first_batch"))
+  /** The one tiered sink: `sink` appends each batch's deltas under
+    * `root`; once the store's first log holds `maxDeltas` PLAIN deltas
+    * (a sink writes one delta per log per batch, so one count stands
+    * for all) every log compacts through [[compactStoreTiered]]. */
+  def tieredForeachBatch(root: String, store: LsmStore, maxDeltas: Int,
+                         fanout: Int = 4)(sink: (DataFrame, Long) => Unit)
+      : (DataFrame, Long) => Unit = {
+    require(maxDeltas >= 2, s"maxDeltas must be >= 2, got $maxDeltas")
+    require(fanout >= 2, s"fanout must be >= 2, got $fanout")
+    (batch, batchId) => {
+      sink(batch, batchId)
+      val spark = batch.sparkSession
+      if (plainDeltaDirCount(spark, logPath(root, store.logs.head._1))
+          >= maxDeltas)
+        compactStoreTiered(spark, root, store, upTo = batchId, fanout)
     }
+  }
 
-  /** SHARED size-tiered LSM compactor for every `d=<batchId>` delta
-    * log in this file, parameterized by the store's merge fold
-    * (dedup-min, dropDuplicates-by-key, sum, min-of-mins, …):
+  private def logPath(root: String, sub: String): String =
+    if (sub.isEmpty) root else s"$root/$sub"
+
+  /** The size-tiered LSM compactor — the one compaction path of every
+    * [[LsmStore]]. For each log of `store`, with that log's fold:
     *
     *  - phase 1: every PLAIN delta `d=<id>` with id <= upTo folds into
     *    one NEW segment `d=c<upTo>`; previously compacted segments are
-    *    untouched (the fix for the cadence compactors' measured
-    *    O(B²/maxDeltas) base rewrite — SCALE_r15 §12);
+    *    untouched (folding them into one base on every firing costs
+    *    O(B²/maxDeltas) writes — SCALE_r15 §12);
     *  - phase 2: while any size class (floor(log_fanout(bytes))) holds
     *    >= fanout segments, that class folds into one `d=c<upTo>t<n>`
     *    segment — geometric merging, so a row is rewritten once per
@@ -1423,7 +1249,7 @@ object StreamOps {
     *
     * Eligibility is by DIRECTORY NAME (the id a retry-idempotent
     * foreachBatch wrote), not a per-dir `max(first_batch)` scan — one
-    * listStatus instead of one Spark job per listed delta per cadence
+    * listStatus instead of one Spark job per listed delta per trigger
     * check. An empty delta (all-dup batch) is eligible like any other.
     *
     * Every merge publishes through [[publishSegment]], whose
@@ -1436,51 +1262,54 @@ object StreamOps {
     * tolerated by every reader in between (readers exclude only
     * `__staging`; duplicate rows are absorbed by each store's
     * duplicate-tolerant fold).
-    *
-    * Mixing this with the same store's CADENCE compactor is safe for
-    * correctness (both preserve the logical fold) but not recommended:
-    * the cadence forms' name parsing treats `d=c<upTo>t<n>` segments
-    * as ineligible, so they would accumulate unmerged.
     */
   def compactStoreTiered(spark: org.apache.spark.sql.SparkSession,
-                         root: String, upTo: Long, fanout: Int = 4)(
-      merge: Seq[String] => DataFrame): Unit = {
+                         root: String, store: LsmStore, upTo: Long,
+                         fanout: Int = 4): Unit = {
     require(fanout >= 2, s"fanout must be >= 2, got $fanout")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) return
-    recoverSegments(fs, rootPath)
+    for ((sub, fold) <- store.logs) {
+      val log = logPath(root, sub)
+      val logDir = new org.apache.hadoop.fs.Path(log)
+      val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(logDir)) {
+        recoverSegments(fs, logDir)
+        val merge = (dirs: Seq[String]) =>
+          fold(spark.read.parquet(dirs: _*), upTo)
 
-    // phase 1: plain deltas -> one new segment (old segments
-    // untouched). Post-recovery every listed plain is LIVE, so the
-    // merge consumes each row exactly once — sound for additive folds.
-    val plain = fs.listStatus(rootPath)
-      .filter(s => s.isDirectory && isPlainDelta(s.getPath.getName))
-      .map(_.getPath)
-      .filter(p => p.getName.stripPrefix("d=").toLong <= upTo)
-    if (plain.length >= 2)
-      publishSegment(fs, root, plain.toSeq, s"d=c$upTo",
-        plainFloor = upTo)(merge)
+        // phase 1: plain deltas -> one new segment (old segments
+        // untouched). Post-recovery every listed plain is LIVE, so the
+        // merge consumes each row exactly once — sound for additive
+        // folds.
+        val plain = fs.listStatus(logDir)
+          .filter(s => s.isDirectory && isPlainDelta(s.getPath.getName))
+          .map(_.getPath)
+          .filter(p => p.getName.stripPrefix("d=").toLong <= upTo)
+        if (plain.length >= 2)
+          publishSegment(fs, log, plain.toSeq, s"d=c$upTo",
+            plainFloor = upTo)(merge)
 
-    // phase 2: geometric segment merging by size class
-    var mergeN = 0
-    var again = true
-    while (again) {
-      val segs = fs.listStatus(rootPath)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("d=c") &&
-          !s.getPath.getName.contains("__staging") &&
-          !s.getPath.getName.contains("__replaced"))
-        .map(s => (s.getPath,
-          fs.getContentSummary(s.getPath).getLength.max(1L)))
-      val byClass = segs.groupBy { case (_, bytes) =>
-        (math.log(bytes.toDouble) / math.log(fanout.toDouble)).toInt
-      }
-      byClass.find(_._2.length >= fanout) match {
-        case Some((_, members)) =>
-          mergeN += 1
-          publishSegment(fs, root, members.map(_._1).toSeq,
-            s"d=c${upTo}t$mergeN", plainFloor = Long.MinValue)(merge)
-        case None => again = false
+        // phase 2: geometric segment merging by size class
+        var mergeN = 0
+        var again = true
+        while (again) {
+          val segs = fs.listStatus(logDir)
+            .filter(s => s.isDirectory &&
+              s.getPath.getName.startsWith("d=c") &&
+              !s.getPath.getName.contains("__staging") &&
+              !s.getPath.getName.contains("__replaced"))
+            .map(s => (s.getPath,
+              fs.getContentSummary(s.getPath).getLength.max(1L)))
+          val byClass = segs.groupBy { case (_, bytes) =>
+            (math.log(bytes.toDouble) / math.log(fanout.toDouble)).toInt
+          }
+          byClass.find(_._2.length >= fanout) match {
+            case Some((_, members)) =>
+              mergeN += 1
+              publishSegment(fs, log, members.map(_._1).toSeq,
+                s"d=c${upTo}t$mergeN", plainFloor = Long.MinValue)(merge)
+            case None => again = false
+          }
+        }
       }
     }
   }
@@ -1614,8 +1443,9 @@ object StreamOps {
       fs.exists(p) && !sources.exists(_.getName == p.getName))
     val withExtras = sources ++ extras
     // every non-plain source needs a segid so a crash-left copy stays
-    // resolvable; cadence-compactor segments and test fixtures lack
-    // one — assign it in place (underscore file, invisible to scans)
+    // resolvable; a segment written without a manifest (a test
+    // fixture) lacks one — assign it in place (underscore file,
+    // invisible to scans)
     val sourceMetas = withExtras.map { p =>
       if (isPlainDelta(p.getName)) None
       else Some(readSegMeta(fs, p).getOrElse {
@@ -1681,130 +1511,16 @@ object StreamOps {
       .foreach(d => fs.delete(d._1, true))
   }
 
-  /** Tiered variants of every cadence compactor in this file — same
-    * logical fold per store, [[compactStoreTiered]]'s write cost
-    * (O(log B) rewrites per row instead of the cadence forms'
-    * O(B/maxDeltas)) and crash-free publish. */
-  def compactPrefixDupIndexTiered(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, upTo: Long, fanout: Int = 4): Unit = {
-    compactStoreTieredByKey(spark, s"$indexPath/prefixes",
-      Seq("doc", "shingle"), upTo, fanout)
-    compactStoreTieredByKey(spark, s"$indexPath/shingles",
-      Seq("doc"), upTo, fanout)
-  }
-
-  def compactNearDupIndexTiered(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, upTo: Long, fanout: Int = 4): Unit = {
-    compactStoreTieredByKey(spark, s"$indexPath/shingles",
-      Seq("doc"), upTo, fanout)
-    compactStoreTieredByKey(spark, s"$indexPath/buckets",
-      Seq("doc", "band"), upTo, fanout)
-  }
-
-  def compactEdDistIndexTiered(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, upTo: Long, fanout: Int = 4): Unit = {
-    compactStoreTieredByKey(spark, s"$indexPath/segs",
-      Seq("doc", "key"), upTo, fanout)
-    compactStoreTieredByKey(spark, s"$indexPath/probes",
-      Seq("doc", "key"), upTo, fanout)
-    compactStoreTieredByKey(spark, s"$indexPath/texts",
-      Seq("doc"), upTo, fanout)
-  }
-
-  private def compactStoreTieredByKey(
-      spark: org.apache.spark.sql.SparkSession, root: String,
-      keyCols: Seq[String], upTo: Long, fanout: Int): Unit =
-    compactStoreTiered(spark, root, upTo, fanout) { dirs =>
-      spark.read.parquet(dirs: _*).dropDuplicates(keyCols)
-    }
-
-  def compactLineFreqTiered(spark: org.apache.spark.sql.SparkSession,
-                            statePath: String, upTo: Long,
-                            fanout: Int = 4): Unit =
-    compactStoreTiered(spark, statePath, upTo, fanout) { dirs =>
-      spark.read.parquet(dirs: _*)
-        .groupBy("lk").agg(sum("d").as("d"))
-        .withColumn("first_batch", lit(upTo))
-    }
-
-  def compactStageFunnelDeltasTiered(
-      spark: org.apache.spark.sql.SparkSession, statePath: String,
-      upTo: Long, userCol: String, stages: Seq[String],
-      fanout: Int = 4): Unit =
-    compactStoreTiered(spark, statePath, upTo, fanout) { dirs =>
-      val aggs = stages.map(t => min(s"t_$t").as(s"t_$t"))
-      spark.read.parquet(dirs: _*).groupBy(userCol)
-        .agg(aggs.head, aggs.tail: _*)
-    }
-
-  def compactRetentionDeltasTiered(
-      spark: org.apache.spark.sql.SparkSession, statePath: String,
-      upTo: Long, fanout: Int = 4): Unit =
-    compactStoreTiered(spark, statePath, upTo, fanout) { dirs =>
-      import graft.operators.Retention
-      Retention.retentionState(
-        Retention.stateDays(spark.read.parquet(dirs: _*)).distinct())
-    }
-
-  /** Tiered-cadence foreachBatch wrappers (the
-    * [[dedupIndexForeachBatchTiered]] trigger shape — fire when the
-    * PLAIN delta count reaches maxDeltas; compacted segments
-    * legitimately accumulate O(fanout·log B) and don't count). */
-  def lineFreqForeachBatchTiered(statePath: String, idCol: String,
-                                 textCol: String, maxDeltas: Int,
-                                 delim: String = "\n",
-                                 hashedLineKeys: Boolean = true,
-                                 fanout: Int = 4)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    require(maxDeltas >= 2, s"maxDeltas must be >= 2, got $maxDeltas")
-    lineFreqForeachBatch(statePath, idCol, textCol, delim,
-      hashedLineKeys)(batch, batchId)
-    val spark = batch.sparkSession
-    if (plainDeltaDirCount(spark, statePath) >= maxDeltas)
-      compactLineFreqTiered(spark, statePath, upTo = batchId, fanout)
-  }
-
-  def stageFunnelForeachBatchDeltaTiered(statePath: String,
-      userCol: String, typeCol: String, tsCol: String,
-      stages: Seq[String], maxDeltas: Int, fanout: Int = 4)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    require(maxDeltas >= 2, s"maxDeltas must be >= 2, got $maxDeltas")
-    stageFunnelForeachBatchDelta(statePath, userCol, typeCol, tsCol,
-      stages)(batch, batchId)
-    val spark = batch.sparkSession
-    if (plainDeltaDirCount(spark, statePath) >= maxDeltas)
-      compactStageFunnelDeltasTiered(spark, statePath, upTo = batchId,
-        userCol, stages, fanout)
-  }
-
-  def retentionForeachBatchDeltaTiered(statePath: String,
-      userCol: String, tsUsCol: String, maxDeltas: Int,
-      fanout: Int = 4)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    require(maxDeltas >= 2, s"maxDeltas must be >= 2, got $maxDeltas")
-    retentionForeachBatchDelta(statePath, userCol, tsUsCol)(
-      batch, batchId)
-    val spark = batch.sparkSession
-    if (plainDeltaDirCount(spark, statePath) >= maxDeltas)
-      compactRetentionDeltasTiered(spark, statePath, upTo = batchId,
-        fanout)
-  }
-
   /** The full standing hash index: the union of all published deltas
     * (each hash appears in exactly one — the delta build anti-joins
     * history). Empty frame when no delta exists yet.
     */
   def dedupIndex(spark: org.apache.spark.sql.SparkSession,
-                 indexPath: String): DataFrame = {
-    val deltas = liveDeltaDirs(spark, indexPath)
-    if (deltas.isEmpty) {
+                 indexPath: String): DataFrame =
+    readDeltaDirs(spark, indexPath).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long)].toDF("content_hash", "first_batch")
-    } else spark.read.parquet(deltas.toIndexedSeq: _*)
-  }
+    }
 
   /** Streaming fixed-n duplicated-SPAN dedup —
     * [[graft.operators.Dedup.dupSpanRemoval]] maintained incrementally
@@ -1827,7 +1543,7 @@ object StreamOps {
     * publish, so every retry order recomputes byte-identical flags
     * from the still-pre-batch standing set (`first_batch < batchId`).
     * [[dupSpanIndexForeachBatchTiered]] adds the shared size-tiered
-    * compaction cadence.
+    * compaction.
     *
     * `hashedGramKeys` defaults TRUE (8-byte standing keys — the state
     * is long-lived by definition; the l23h contract: value-identical
@@ -1876,22 +1592,10 @@ object StreamOps {
   def dupSpanIndexForeachBatchTiered(indexPath: String,
       flagsPath: String, idCol: String, textCol: String, n: Int,
       maxDeltas: Int, hashedGramKeys: Boolean = true, fanout: Int = 4)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    require(maxDeltas >= 2, s"maxDeltas must be >= 2, got $maxDeltas")
-    dupSpanIndexForeachBatch(indexPath, flagsPath, idCol, textCol, n,
-      hashedGramKeys)(batch, batchId)
-    val spark = batch.sparkSession
-    if (plainDeltaDirCount(spark, indexPath) >= maxDeltas)
-      compactDupSpanIndexTiered(spark, indexPath, upTo = batchId, fanout)
-  }
-
-  def compactDupSpanIndexTiered(spark: org.apache.spark.sql.SparkSession,
-                                indexPath: String, upTo: Long,
-                                fanout: Int = 4): Unit =
-    compactStoreTiered(spark, indexPath, upTo, fanout) { dirs =>
-      spark.read.parquet(dirs: _*)
-        .groupBy("gk").agg(min("first_batch").as("first_batch"))
-    }
+      : (DataFrame, Long) => Unit =
+    tieredForeachBatch(indexPath, LsmStore.dupSpan, maxDeltas, fanout)(
+      dupSpanIndexForeachBatch(indexPath, flagsPath, idCol, textCol, n,
+        hashedGramKeys))
 
   /** Streaming incremental NEAR-dup dedup — the MinHash-LSH pair
     * pipeline (l3) maintained against a standing corpus, closing the
@@ -2063,8 +1767,9 @@ object StreamOps {
     * equals the exact tau-join — drift costs only candidate
     * efficiency (new-vocabulary shingles over-index), never recall
     * (spec pins streamed == one-shot == the capless exact join).
-    * Re-freezing on a vocabulary shift is a [[compactPrefixDupIndex]]
-    * + reseed, the documented operational lever.
+    * Re-freezing on a vocabulary shift is a compaction
+    * ([[LsmStore.prefixDup]]) + reseed, the documented operational
+    * lever.
     *
     * State under `indexPath`, both append-only delta logs (the
     * [[dedupIndexForeachBatch]] discipline — O(batch) writes, reads
@@ -2173,18 +1878,6 @@ object StreamOps {
       import spark.implicits._
       Seq.empty[(Long, Seq[Long], Long)].toDF("doc", "sh", "first_batch")
     }
-
-  /** LSM compaction for the prefix-filter index's two delta logs —
-    * purely physical (the frozen `order/` table is untouched; rows
-    * keep their original `first_batch`).
-    */
-  def compactPrefixDupIndex(spark: org.apache.spark.sql.SparkSession,
-                            indexPath: String, upTo: Long): Unit = {
-    // a doc carries MANY prefix rows — the dedup key must include the
-    // shingle or compaction would collapse a doc's prefix to one row
-    compactStore(spark, s"$indexPath/prefixes", Seq("doc", "shingle"), upTo)
-    compactStore(spark, s"$indexPath/shingles", Seq("doc"), upTo)
-  }
 
   /** Streaming DSIR — importance scoring AT INGEST: each arriving
     * batch is scored against the raw/target hashed-unigram
@@ -2361,65 +2054,6 @@ object StreamOps {
   private def latestLabels(log: DataFrame): DataFrame =
     log.groupBy("node")
       .agg(max_by(col("component"), col("as_of")).as("component"))
-
-  /** LSM compaction of the near-dup index: merges every published
-    * delta with max first_batch <= `upTo` in BOTH stores, preserving
-    * per-row `first_batch` (so retry reads are byte-unchanged — purely
-    * physical, same contract/publish order as [[compactDedupIndex]]).
-    * Crash leftovers (a doc present in an old delta AND a compacted
-    * dir) dedup by key; their payloads are identical by construction.
-    */
-  def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
-                          indexPath: String, upTo: Long): Unit = {
-    compactStore(spark, s"$indexPath/shingles", Seq("doc"), upTo)
-    compactStore(spark, s"$indexPath/buckets", Seq("doc", "band"), upTo)
-  }
-
-  /** LSM compaction for the edit-distance index's three delta logs
-    * ([[edDistIndexForeachBatch]]): purely physical — the logical
-    * seg/probe/text sets are unchanged, rows keep their original
-    * first_batch, and subsequent batches read the compacted dirs
-    * through the same delta union (StreamOpsSpec pins inertness).
-    */
-  def compactEdDistIndex(spark: org.apache.spark.sql.SparkSession,
-                         indexPath: String, upTo: Long): Unit = {
-    compactStore(spark, s"$indexPath/segs", Seq("doc", "key"), upTo)
-    compactStore(spark, s"$indexPath/probes", Seq("doc", "key"), upTo)
-    compactStore(spark, s"$indexPath/texts", Seq("doc"), upTo)
-  }
-
-  private def compactStore(spark: org.apache.spark.sql.SparkSession,
-                           root: String, keyCols: Seq[String],
-                           upTo: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    val all = fs.listStatus(p)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("d=") &&
-        !s.getPath.getName.contains("__staging"))
-      .map(_.getPath)
-    val eligible = all.filter { d =>
-      val top = spark.read.parquet(d.toString)
-        .agg(max("first_batch")).head()
-      !top.isNullAt(0) && top.getLong(0) <= upTo
-    }
-    if (eligible.length < 2) return
-    val merged = spark.read
-      .parquet(eligible.map(_.toString).toIndexedSeq: _*)
-      .dropDuplicates(keyCols)
-    val staging = new org.apache.hadoop.fs.Path(s"$root/d=c${upTo}__staging")
-    val target = new org.apache.hadoop.fs.Path(s"$root/d=c$upTo")
-    merged.write.mode("overwrite").parquet(staging.toString)
-    fs.delete(target, true)
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"compact: cannot publish $target")
-    // compare by NAME: listStatus returns fully-qualified paths while
-    // `target` is unqualified, so Path equality is false even when the
-    // names match — a re-compaction at the same upTo (cadence retry)
-    // would otherwise delete the target it just published
-    eligible.filterNot(_.getName == target.getName)
-      .foreach(fs.delete(_, true))
-  }
 
   private def readDeltaDirs(spark: org.apache.spark.sql.SparkSession,
                             root: String)

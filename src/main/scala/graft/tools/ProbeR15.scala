@@ -463,9 +463,9 @@ object ProbeR15 {
         // RISKS row 6 says the uncompacted delta-log read dominates
         // "after ~10^3 batches" — measured only to 8 batches in
         // StreamOpsSpec. Drive the dedup standing index to 1,000
-        // batches under the cadence compaction (maxDeltas=8) and to 300
+        // batches under tiered compaction (maxDeltas=8) and to 300
         // under no compaction, recording per-batch wall windows: the
-        // compacted arm must stay FLAT, the uncompacted arm shows the
+        // tiered arm must stay FLAT, the uncompacted arm shows the
         // listed-dir growth. Batches are 100 docs with a 50k-key id
         // space so later batches carry real duplicates.
         import graft.streaming.StreamOps
@@ -482,25 +482,19 @@ object ProbeR15 {
         }
         val arms = args.drop(1) match {
           case a if a.nonEmpty => a.toSeq
-          case _ => Seq("compacted", "tiered", "uncompacted")
+          case _ => Seq("tiered", "uncompacted")
         }
         for (label <- arms) {
-          val (nBatches, maxDeltas) = label match {
-            case "uncompacted" => (300, -1)
-            case _             => (1000, 8)
-          }
           val idx = s"$base/$label/index"
           val flags = s"$base/$label/flags"
-          val sink = label match {
+          val (nBatches, sink) = label match {
             case "uncompacted" =>
-              StreamOps.dedupIndexForeachBatch(idx, flags, "doc_id",
-                "text")
+              (300, StreamOps.dedupIndexForeachBatch(idx, flags,
+                "doc_id", "text"))
             case "tiered" =>
-              StreamOps.dedupIndexForeachBatchTiered(idx, flags,
-                "doc_id", "text", maxDeltas, fanout = 4)
-            case _ =>
-              StreamOps.dedupIndexForeachBatchCompacted(idx, flags,
-                "doc_id", "text", maxDeltas)
+              (1000, StreamOps.dedupIndexForeachBatchTiered(idx, flags,
+                "doc_id", "text", maxDeltas = 8, fanout = 4))
+            case other => sys.error(s"unknown compact1k arm: $other")
           }
           val walls = Array.ofDim[Double](nBatches)
           val t0 = System.nanoTime()

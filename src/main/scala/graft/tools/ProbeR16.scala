@@ -21,11 +21,9 @@ import graft.core.Sessions
   *  - `lsmtail`: flat-tail proof for a NON-dedup store under the
   *    shared tiered compactor (round-15 verdict item 2's probe row):
   *    drives the ADDITIVE lineFreq store (the fold where compaction
-  *    correctness is hardest) for 600 batches under
-  *    `lineFreqForeachBatchTiered` (maxDeltas=8) vs the cadence
-  *    compactor, printing per-100-batch wall windows and cumulative
-  *    bytes written: the tiered arm's tail must stay flat while the
-  *    cadence arm's grows with the base rewrite.
+  *    correctness is hardest) for 600 batches under the tiered sink
+  *    (maxDeltas=8), printing per-100-batch wall windows and live
+  *    bytes: the tail must stay flat.
   */
 object ProbeR16 {
 
@@ -111,43 +109,29 @@ object ProbeR16 {
           (b * 1000 + i,
             s"$hdr\nuniq-$b-$i-one\nuniq-$b-$i-two\nshared quote $i")
         }.toDF("doc_id", "text")
-        def drive(label: String,
-                  sink: (org.apache.spark.sql.DataFrame, Long) => Unit,
-                  statePath: String): Unit = {
-          var windowStart = System.nanoTime()
-          for (b <- 1 to batches) {
-            sink(batchDf(b.toLong), b.toLong)
-            if (b % 100 == 0) {
-              val secs = (System.nanoTime() - windowStart) / 1e9
-              val dirs = new java.io.File(statePath).listFiles()
-                .count(_.getName.startsWith("d="))
-              val bytes = {
-                def sz(f: java.io.File): Long =
-                  if (f.isFile) f.length()
-                  else Option(f.listFiles()).map(_.map(sz).sum)
-                    .getOrElse(0L)
-                sz(new java.io.File(statePath)) / (1 << 20)
-              }
-              println(f"PROBE16 lsmtail_$label batches=$b " +
-                f"window100=$secs%.1f s dirs=$dirs liveMB=$bytes")
-              windowStart = System.nanoTime()
+        val statePath = s"$root/t"
+        val sink = StreamOps.tieredForeachBatch(statePath,
+          StreamOps.LsmStore.lineFreq, maxDeltas = 8)(
+          StreamOps.lineFreqForeachBatch(statePath, "doc_id", "text"))
+        var windowStart = System.nanoTime()
+        for (b <- 1 to batches) {
+          sink(batchDf(b.toLong), b.toLong)
+          if (b % 100 == 0) {
+            val secs = (System.nanoTime() - windowStart) / 1e9
+            val dirs = new java.io.File(statePath).listFiles()
+              .count(_.getName.startsWith("d="))
+            val bytes = {
+              def sz(f: java.io.File): Long =
+                if (f.isFile) f.length()
+                else Option(f.listFiles()).map(_.map(sz).sum)
+                  .getOrElse(0L)
+              sz(new java.io.File(statePath)) / (1 << 20)
             }
+            println(f"PROBE16 lsmtail_tiered batches=$b " +
+              f"window100=$secs%.1f s dirs=$dirs liveMB=$bytes")
+            windowStart = System.nanoTime()
           }
         }
-        drive("tiered", StreamOps.lineFreqForeachBatchTiered(
-          s"$root/t", "doc_id", "text", maxDeltas = 8), s"$root/t")
-        drive("cadence", (df, b) => {
-          StreamOps.lineFreqForeachBatch(s"$root/c", "doc_id",
-            "text")(df, b)
-          if (StreamOps.deltaDirCount(spark, s"$root/c") >= 8)
-            StreamOps.compactLineFreq(spark, s"$root/c", upTo = b)
-        }, s"$root/c")
-        // the two folds must agree at the end (600-batch parity)
-        val t = StreamOps.lineFreq(spark, s"$root/t").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-        val c = StreamOps.lineFreq(spark, s"$root/c").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-        println(s"PROBE16 lsmtail parity=${t == c} keys=${t.length}")
 
       case other =>
         println(s"PROBE16 unknown mode $other")

@@ -663,7 +663,8 @@ class StreamOpsSpec extends AnyFunSuite {
     // COMPACTION is purely physical: deltas 0..1 merge into one dir,
     // rows keep their original first_batch, the index set is unchanged,
     // and a subsequent batch still flags/appends correctly
-    StreamOps.compactDedupIndex(s, indexPath, upTo = 1L)
+    StreamOps.compactStoreTiered(s, indexPath, StreamOps.LsmStore.dedup,
+      upTo = 1L)
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(indexPath))
@@ -678,54 +679,6 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(flagsOf(s"$flagsPath/batch=3") == Map(6L -> 1L, 7L -> 0L))
     assert(StreamOps.dedupIndex(s, indexPath).count() ==
       index.length + 1, "batch 3 must add exactly its one new hash")
-  }
-
-  test("auto-compacted dedup sink: the delta-dir count stays bounded " +
-    "at the cadence, flags and index equal the never-compacted run, " +
-    "and a post-compaction retry is absorbed", graft.SlowProof) {
-    import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_dedup_cadence").toString
-    val plainSink = StreamOps.dedupIndexForeachBatch(
-      s"$root/pidx", s"$root/pflags", "doc_id", "text")
-    val autoSink = StreamOps.dedupIndexForeachBatchCompacted(
-      s"$root/cidx", s"$root/cflags", "doc_id", "text", maxDeltas = 3)
-    val pool = Seq("alpha text", "beta text", "gamma text", "delta text",
-      "epsilon text", "zeta text")
-    val rnd = new scala.util.Random(13)
-    val batches = (1L to 8L).map { b =>
-      b -> (1 to 3).map(i =>
-        (b * 10 + i, pool(rnd.nextInt(pool.length)))).toDF("doc_id", "text")
-    }
-    for ((b, df) <- batches) {
-      plainSink(df, b)
-      autoSink(df, b)
-      assert(StreamOps.deltaDirCount(s, s"$root/cidx") <= 3,
-        s"cadence bound broken after batch $b")
-    }
-    // the never-compacted run lists one dir per batch — the growth the
-    // cadence exists to stop (non-vacuity of the bound above)
-    assert(StreamOps.deltaDirCount(s, s"$root/pidx") == 8)
-    def flags(path: String) = s.read.parquet(path)
-      .collect().map(r => r.getAs[Long]("doc_id") ->
-        r.getAs[Long]("dup_of_existing")).toMap
-    for ((b, _) <- batches)
-      assert(flags(s"$root/cflags/batch=$b") ==
-        flags(s"$root/pflags/batch=$b"), s"batch $b flags drifted")
-    def index(path: String) = StreamOps.dedupIndex(s, path)
-      .select("content_hash", "first_batch").distinct()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).sorted.toSeq
-    assert(index(s"$root/cidx") == index(s"$root/pidx"),
-      "compaction changed the logical index")
-    // retry batch 7 AFTER its delta was compacted away: flags must be
-    // byte-identical, the re-created d=7 sits next to the base segment
-    // holding the same hashes, and the next compaction absorbs it
-    val f7 = flags(s"$root/cflags/batch=7")
-    autoSink(batches(6)._2, 7L)
-    assert(flags(s"$root/cflags/batch=7") == f7,
-      "post-compaction retry changed flags")
-    assert(index(s"$root/cidx") == index(s"$root/pidx"),
-      "post-compaction retry changed the logical index")
   }
 
   test("tiered dedup sink: flags and index equal the never-compacted " +
@@ -777,6 +730,12 @@ class StreamOpsSpec extends AnyFunSuite {
     for ((b, _) <- batches)
       assert(flags(s"$root/tflags/batch=$b") ==
         flags(s"$root/pflags/batch=$b"), s"batch $b flags drifted")
+    // an all-duplicate batch publishes an EMPTY delta, which must be
+    // compacted like any other (else one listed dir leaks per such
+    // batch) — non-vacuity: the seeded stream has one
+    assert(batches.exists { case (b, _) =>
+      flags(s"$root/tflags/batch=$b").values.forall(_ == 1L) },
+      "no all-duplicate batch in the stream")
     def index(path: String) = StreamOps.dedupIndex(s, path)
       .select("content_hash", "first_batch").distinct()
       .collect().map(r => r.getString(0) -> r.getLong(1)).sorted.toSeq
@@ -1017,7 +976,8 @@ class StreamOpsSpec extends AnyFunSuite {
     // compaction is purely physical: deltas 0..1 merge, and a
     // subsequent batch still finds its standing partners through the
     // compacted dirs
-    StreamOps.compactEdDistIndex(s, indexPath, upTo = 1L)
+    StreamOps.compactStoreTiered(s, indexPath, StreamOps.LsmStore.edDist,
+      upTo = 1L)
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val segDirs = fs.listStatus(
@@ -1094,7 +1054,8 @@ class StreamOpsSpec extends AnyFunSuite {
     val shBefore = StreamOps.nearDupShingles(s, indexPath)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
       .toSet
-    StreamOps.compactNearDupIndex(s, indexPath, upTo = 1L)
+    StreamOps.compactStoreTiered(s, indexPath,
+      StreamOps.LsmStore.nearDup, upTo = 1L)
     val shAfter = StreamOps.nearDupShingles(s, indexPath)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
       .toSet
@@ -1215,7 +1176,8 @@ class StreamOpsSpec extends AnyFunSuite {
     val pxBefore = StreamOps.prefixDupPrefixes(s, indexPath)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
-    StreamOps.compactPrefixDupIndex(s, indexPath, upTo = 1L)
+    StreamOps.compactStoreTiered(s, indexPath,
+      StreamOps.LsmStore.prefixDup, upTo = 1L)
     val pxAfter = StreamOps.prefixDupPrefixes(s, indexPath)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
@@ -1287,7 +1249,8 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(freqMap() == oneShotFreq, "retried batch double-counted")
 
     // compaction sums, never changes the logical state
-    StreamOps.compactLineFreq(s, statePath, upTo = 1L)
+    StreamOps.compactStoreTiered(s, statePath,
+      StreamOps.LsmStore.lineFreq, upTo = 1L)
     assert(freqMap() == oneShotFreq, "compaction changed the fold")
     val dirs = new java.io.File(statePath).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("d="))
@@ -1899,15 +1862,18 @@ class StreamOpsSpec extends AnyFunSuite {
 
     // ---- DELTA-LOG forms (the |users|-scale shape): O(batch)
     // appends instead of a full-state rewrite per batch; dashboards
-    // from the deltas == the rewrite forms == one-shot; compaction
-    // cadence bounds the dir count and is result-inert; a retried
-    // batch after compaction is absorbed by the min/distinct reads
+    // from the deltas == the rewrite forms == one-shot; tiered
+    // compaction bounds the dir count and is result-inert; a retried
+    // batch after compaction is absorbed at read
     val fdPath = s"$root/funnel_delta"
     val rdPath = s"$root/retention_delta"
-    val fdSink = StreamOps.stageFunnelForeachBatchDeltaCompacted(
-      fdPath, "user_id", "event_type", "ts_us", stages, maxDeltas = 2)
-    val rdSink = StreamOps.retentionForeachBatchDeltaCompacted(
-      rdPath, "user_id", "ts_us", maxDeltas = 2)
+    val fdSink = StreamOps.tieredForeachBatch(fdPath,
+      StreamOps.LsmStore.stageFunnel("user_id", stages), maxDeltas = 2)(
+      StreamOps.stageFunnelForeachBatchDelta(fdPath, "user_id",
+        "event_type", "ts_us", stages))
+    val rdSink = StreamOps.tieredForeachBatch(rdPath,
+      StreamOps.LsmStore.retention, maxDeltas = 2)(
+      StreamOps.retentionForeachBatchDelta(rdPath, "user_id", "ts_us"))
     batches.zipWithIndex.foreach { case (b, i) =>
       val df = b.toDF("user_id", "event_type", "ts_us")
       fdSink(df, i.toLong); rdSink(df, i.toLong)
@@ -1916,13 +1882,17 @@ class StreamOpsSpec extends AnyFunSuite {
       stages)) == streamedFunnel)
     assert(retMap(StreamOps.retentionFromDeltas(s, rdPath))
       == streamedRet)
-    assert(StreamOps.deltaDirCount(s, fdPath) <= 2,
-      "funnel delta-dir count must stay cadence-bounded")
-    assert(StreamOps.deltaDirCount(s, rdPath) <= 2,
-      "retention delta-dir count must stay cadence-bounded")
+    // every listed delta dir, compacted segments included
+    def listedDirs(path: String) = new java.io.File(path).listFiles()
+      .map(_.getName)
+      .filter(n => n.startsWith("d=") && !n.contains("__staging"))
+    assert(listedDirs(fdPath).length <= 2,
+      "funnel delta-dir count must stay bounded")
+    assert(listedDirs(rdPath).length <= 2,
+      "retention delta-dir count must stay bounded")
     // retry a batch whose delta was already compacted away: its
-    // re-created d=1 sits next to the compacted segment; duplicate
-    // rows/day pairs must be absorbed at read
+    // re-created d=1 sits next to the compacted segment that already
+    // holds its rows, and the reads must not count them twice
     fdSink(batches(1).toDF("user_id", "event_type", "ts_us"), 1L)
     rdSink(batches(1).toDF("user_id", "event_type", "ts_us"), 1L)
     assert(row1(StreamOps.stageFunnelFromDeltas(s, fdPath, "user_id",

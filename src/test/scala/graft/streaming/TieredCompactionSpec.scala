@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The SHARED size-tiered compactor ([[StreamOps.compactStoreTiered]])
-  * applied to every LSM store beyond the exact-dedup index it was
-  * built for in round 15 — the round-15 verdict's item 2. Each store
+/** The size-tiered compactor ([[StreamOps.compactStoreTiered]])
+  * applied to every [[StreamOps.LsmStore]] beyond the exact-dedup
+  * index it was built for in round 15. Each store
   * gets the dedup form's discipline: multi-batch parity against the
   * never-compacted run, the plain-delta cadence bound, evidence a
   * tier merge actually fired, and a post-compaction retry arm. Plus
@@ -33,8 +33,9 @@ class TieredCompactionSpec extends AnyFunSuite {
       .createTempDirectory("graft_linefreq_tiered").toString
     val plainSink = StreamOps.lineFreqForeachBatch(
       s"$root/p", "doc_id", "text")
-    val tierSink = StreamOps.lineFreqForeachBatchTiered(
-      s"$root/t", "doc_id", "text", maxDeltas = 3, fanout = 2)
+    val tierSink = StreamOps.tieredForeachBatch(s"$root/t",
+      StreamOps.LsmStore.lineFreq, maxDeltas = 3, fanout = 2)(
+      StreamOps.lineFreqForeachBatch(s"$root/t", "doc_id", "text"))
     val hdr = "nav home menu"
     val batches = (1L to 20L).map { b =>
       b -> Seq(
@@ -86,13 +87,16 @@ class TieredCompactionSpec extends AnyFunSuite {
     }
     val fPlain = StreamOps.stageFunnelForeachBatchDelta(
       s"$root/fp", "user_id", "event_type", "ts_us", stages)
-    val fTier = StreamOps.stageFunnelForeachBatchDeltaTiered(
-      s"$root/ft", "user_id", "event_type", "ts_us", stages,
-      maxDeltas = 3, fanout = 2)
+    val fTier = StreamOps.tieredForeachBatch(s"$root/ft",
+      StreamOps.LsmStore.stageFunnel("user_id", stages), maxDeltas = 3,
+      fanout = 2)(StreamOps.stageFunnelForeachBatchDelta(s"$root/ft",
+      "user_id", "event_type", "ts_us", stages))
     val rPlain = StreamOps.retentionForeachBatchDelta(
       s"$root/rp", "user_id", "ts_us")
-    val rTier = StreamOps.retentionForeachBatchDeltaTiered(
-      s"$root/rt", "user_id", "ts_us", maxDeltas = 3, fanout = 2)
+    val rTier = StreamOps.tieredForeachBatch(s"$root/rt",
+      StreamOps.LsmStore.retention, maxDeltas = 3, fanout = 2)(
+      StreamOps.retentionForeachBatchDelta(s"$root/rt", "user_id",
+        "ts_us"))
     for ((b, df) <- batches) {
       fPlain(df, b); fTier(df, b); rPlain(df, b); rTier(df, b)
       assert(StreamOps.plainDeltaDirCount(s, s"$root/ft") <= 3)
@@ -147,8 +151,8 @@ class TieredCompactionSpec extends AnyFunSuite {
       val df = rows.toDF("doc_id", "text")
       ndPlain(df, i.toLong)
       ndTier(df, i.toLong)
-      StreamOps.compactNearDupIndexTiered(s, s"$root/ndt/index",
-        upTo = i.toLong, fanout = 2)
+      StreamOps.compactStoreTiered(s, s"$root/ndt/index",
+        StreamOps.LsmStore.nearDup, upTo = i.toLong, fanout = 2)
     }
     def pairs(path: String) = s.read.parquet(path).collect()
       .map(r => (r.getAs[Long]("batch"), r.getLong(0), r.getLong(1)))
@@ -176,8 +180,8 @@ class TieredCompactionSpec extends AnyFunSuite {
       val df = rows.toDF("doc_id", "text")
       pfPlain(df, i.toLong)
       pfTier(df, i.toLong)
-      StreamOps.compactPrefixDupIndexTiered(s, s"$root/pft/index",
-        upTo = i.toLong, fanout = 2)
+      StreamOps.compactStoreTiered(s, s"$root/pft/index",
+        StreamOps.LsmStore.prefixDup, upTo = i.toLong, fanout = 2)
     }
     assert(pairsNoBatch(s"$root/pft/pairs") ==
       pairsNoBatch(s"$root/pfp/pairs"),
@@ -207,8 +211,8 @@ class TieredCompactionSpec extends AnyFunSuite {
       val df = rows.toDF("doc_id", "text")
       edPlain(df, i.toLong)
       edTier(df, i.toLong)
-      StreamOps.compactEdDistIndexTiered(s, s"$root/edt/index",
-        upTo = i.toLong, fanout = 2)
+      StreamOps.compactStoreTiered(s, s"$root/edt/index",
+        StreamOps.LsmStore.edDist, upTo = i.toLong, fanout = 2)
     }
     def edPairs(path: String) = s.read.parquet(path).collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
@@ -240,7 +244,8 @@ class TieredCompactionSpec extends AnyFunSuite {
       .coalesce(1).write.parquet(s"$root/d=c4")
     val before = StreamOps.dedupIndex(s, root)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    StreamOps.compactDedupIndexTiered(s, root, upTo = 5L, fanout = 2)
+    StreamOps.compactStoreTiered(s, root, StreamOps.LsmStore.dedup,
+      upTo = 5L, fanout = 2)
     val after = StreamOps.dedupIndex(s, root)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(after == before,
@@ -272,7 +277,8 @@ class TieredCompactionSpec extends AnyFunSuite {
     assert(preRecovery == Set("orphan", "kept", "extra"))
     // fanout=3: with only two recovered segments no tier merge fires,
     // so the recovery outcome is observable by name
-    StreamOps.compactDedupIndexTiered(s, root, upTo = 9L, fanout = 3)
+    StreamOps.compactStoreTiered(s, root, StreamOps.LsmStore.dedup,
+      upTo = 9L, fanout = 3)
     val dirs = dirNames(root)
     assert(dirs.contains("d=c7"), s"park-only aside not restored: $dirs")
     assert(!dirs.exists(_.endsWith("__replaced")),
