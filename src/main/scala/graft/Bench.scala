@@ -15,7 +15,7 @@ import graft.queries.Registry
   * - "queries"/"value" stay the headline set (round-comparable); the FULL
   *   registry is timed too ("all_queries") so a regression in any of the
   *   ~80 non-headline queries is visible, and "deltas_vs_prev" compares
-  *   every shared query against the newest BENCH_r*.json in the repo
+  *   every shared query against the previous run's BENCH_DETAIL.json
   *   (positive delta = slower than last round, seconds).
   * - Headliners and the 15 slowest breadth entries are the MEDIAN of 3
   *   runs with the max-min "spreads" alongside (n=1 noise on this box is
@@ -72,82 +72,34 @@ object Bench {
     }.toMap
   }
 
-  /** Per-query timings from the newest prior BENCH_r*.json, parsed with
-    * the Jackson shipped in Spark. Empty when no prior round exists.
-    *
-    * The driver wraps our stdout line as {n, rc, cpus, sf, tail, parsed}:
-    * "parsed" holds the metric object when the driver could parse it,
-    * otherwise the raw line sits inside the captured "tail" text — both
-    * shapes (and a bare metric object) are handled.
+  /** Per-query timings of the previous run, parsed with the Jackson
+    * shipped in Spark: BENCH_DETAIL.json (the committed full record of
+    * the newest run), else the newest full-registry line of
+    * [[historyFile]]. Empty when neither exists.
     */
   private def previousBench(): (String, Map[String, Double]) = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-    def fromFile(f: java.io.File): Map[String, Double] = {
-      val root = mapper.readTree(f)
-      val direct = timingsOf(root)
-      if (direct.nonEmpty) direct
-      else {
-        val parsed = timingsOf(root.path("parsed"))
-        if (parsed.nonEmpty) parsed
-        else {
-          // the driver may truncate the FRONT of the captured tail, in
-          // which case no complete {"metric"...} object survives — fall
-          // back to extracting the flat "all_queries"/"queries" fragment
-          // (no nested braces inside, so a [^}]* match is exact)
-          val tail = root.path("tail").asText("")
-          val full = "\\{\"metric\".*\\}".r.findFirstIn(tail)
-            .map(line => timingsOf(mapper.readTree(line)))
-            .getOrElse(Map.empty)
-          if (full.nonEmpty) full
-          else Seq("all_queries", "queries").iterator.flatMap { k =>
-            (s""""$k":\\{[^}]*\\}""").r.findFirstIn(tail)
-              .map(frag => timingsOf(mapper.readTree("{" + frag + "}")))
-          }.find(_.nonEmpty).getOrElse(Map.empty)
-        }
-      }
-    }
-
-    // BENCH_DETAIL.json is the committed full record of the newest run
-    // (the compact stdout line the driver captures carries only the
-    // headline set since round 7) — prefer it for breadth deltas
     val detailFile = new java.io.File("BENCH_DETAIL.json")
     if (detailFile.isFile) {
-      val m = try fromFile(detailFile)
+      val m = try timingsOf(mapper.readTree(detailFile))
       catch { case _: Throwable => Map.empty[String, Double] }
       if (m.size > 1) return "BENCH_DETAIL.json" -> m
     }
-    // numeric round sort — lexicographic would rank r9 above r10
-    val prior = Option(new java.io.File(".").listFiles()).toSeq.flatten
-      .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
-      .sortBy(f => f.getName.replaceAll("\\D", "").toInt)
-    val fromDriver: (String, Map[String, Double]) =
-      prior.lastOption.map { f =>
-        try f.getName -> fromFile(f)
-        catch {
-          case _: Throwable => f.getName -> Map.empty[String, Double]
-        }
-      }.getOrElse("" -> Map.empty[String, Double])
-    if (fromDriver._2.nonEmpty) fromDriver
+    // Walk BACKWARDS to the newest history line with a full timing
+    // map: dev runs (GRAFT_BENCH_ONLY=e2e) append single-query lines
+    // that would otherwise shrink the delta comparison to one query.
+    val hist = new java.io.File(historyFile)
+    val none = "" -> Map.empty[String, Double]
+    if (!hist.isFile) none
     else {
-      // the driver keeps only the last ~2KB of our stdout, which
-      // truncates (or loses) the full-registry timing map — fall back to
-      // our own history sidecar. Walk BACKWARDS to the newest line with
-      // a full timing map: dev runs (GRAFT_BENCH_ONLY=e2e) append
-      // single-query lines that would otherwise shrink the delta
-      // comparison to one query.
-      val hist = new java.io.File(historyFile)
-      if (!hist.isFile) fromDriver
-      else {
-        val lines = scala.io.Source.fromFile(hist)
-        val all = try lines.getLines().toList finally lines.close()
-        all.reverseIterator.map { l =>
-          try timingsOf(mapper.readTree(l))
-          catch { case _: Throwable => Map.empty[String, Double] }
-        }.find(_.size > 1)
-          .map(historyFile -> _)
-          .getOrElse(fromDriver)
-      }
+      val lines = scala.io.Source.fromFile(hist)
+      val all = try lines.getLines().toList finally lines.close()
+      all.reverseIterator.map { l =>
+        try timingsOf(mapper.readTree(l))
+        catch { case _: Throwable => Map.empty[String, Double] }
+      }.find(_.size > 1)
+        .map(historyFile -> _)
+        .getOrElse(none)
     }
   }
 

@@ -17,10 +17,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
-  /** JDK-17 module opens Spark 4 needs outside spark-submit — the
-    * build.sbt fork list; executor JVMs launched by a local-cluster
-    * Worker need them injected explicitly. */
-  private val jdk17AddOpens = Seq(
+  /** JDK-17 module opens Spark 4 needs outside spark-submit, one JVM
+    * flag each (build.sbt forks with the same list). Executor JVMs
+    * launched by a local-cluster Worker and [[graft.tools.ChildJvm]]
+    * children need them injected explicitly. */
+  private[graft] val jdk17AddOpens: Seq[String] = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io",
     "java.base/java.net", "java.base/java.nio",
@@ -28,7 +29,7 @@ object Sessions {
     "java.base/java.util.concurrent.atomic",
     "java.base/sun.nio.ch", "java.base/sun.nio.cs",
     "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
+  ).map(p => s"--add-opens=$p=ALL-UNNAMED")
 
   def build(appName: String, cores: Int): SparkSession = {
     // SPARK_GRAFT_MASTER overrides the master for the multi-JVM
@@ -62,30 +63,21 @@ object Sessions {
           sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "4g"))
         .config("spark.executor.extraClassPath",
           System.getProperty("java.class.path"))
-        .config("spark.executor.extraJavaOptions", jdk17AddOpens)
+        .config("spark.executor.extraJavaOptions",
+          jdk17AddOpens.mkString(" "))
     val s = builder
       // One shuffle partition per core: at local[32] the driver contract asks
       // for 32, not the 200 default sized for real clusters. AQE coalesces
       // further when partitions come out small.
       .config("spark.sql.shuffle.partitions", cores.toString)
-      // AQE SMJ->shuffled-hash conversion: OFF (Spark default),
-      // REVERTING round 16's 64m threshold on round-17 measurements.
-      // (a) Gate-SF effect is noise: a within-JVM ALTERNATING A/B
-      // (ProbeR17 shjab — both arms share JIT warmup, unlike round
-      // 16's ordered A/B) reads every converted query inside +/-6% at
-      // sf0.1 (l61 0.96x, l2b 0.98x, l49 0.99x, l54h 1.14x...).
-      // (b) At 50x corpus scale (250k docs) the conversion is a CRASH:
-      // l61's candidate join dies with SparkOutOfMemoryError "not
-      // enough memory to build hash map", reproducibly — a 64 MB
-      // compressed-shuffle-bytes partition expands several-fold as an
-      // in-memory hash map, and 32 concurrent build tasks share
-      // ~0.6*heap of execution memory, so the per-partition gate does
-      // not bound peak usage (guide §3.1's stated SHJ risk). With the
-      // conversion off the same join sort-merge-spills and completes
-      // (94.5 s cold / 53.3 s warm, same box). A deployment with real
-      // per-core memory headroom can opt in via the env.
+      // AQE SMJ->shuffled-hash conversion: OFF (Spark default), set
+      // explicitly because round 16's 64m threshold was reverted on
+      // measurement (OPTIMIZATION_r17.md §6): within noise at sf0.1,
+      // and at 50x corpus scale l61's candidate join dies with "not
+      // enough memory to build hash map" where sort-merge spills and
+      // completes.
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "0"))
+        "0")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       // Performance-only, result-inert: keep bucketed scans BUCKETED

@@ -360,15 +360,6 @@ object Dedup {
     verifyContainment(sh, cand, threshold)
   }
 
-  /** Candidate pairs of [[containmentPairs]] before the exact verify —
-    * the observable the probe/bench layer measures (candidate volume is
-    * the quadratic risk, not shuffle bytes).
-    */
-  def containmentCandidates(df: DataFrame, idCol: String, textCol: String,
-                            n: Int, threshold: Double,
-                            hashedShingles: Boolean = false): DataFrame =
-    containmentStage(df, idCol, textCol, n, threshold, hashedShingles)._2
-
   /** [[containmentPairs]] over the DF-CAPPED shingle universe — the
     * l2b treatment for the containment family's one honest weak spot:
     * the container-side inverted list has no df cap by completeness
@@ -395,33 +386,6 @@ object Dedup {
     verifyContainment(sh, cand, threshold)
   }
 
-  /** [[containmentPairs]] with a PROBE-SIDE Bloom pre-filter on the
-    * container inverted list (guide §3.2, round-16 deferred item): the
-    * candidate join probes each doc's rarest-first PREFIX (≈(1−τ)·m+1
-    * shingles per doc) against the FULL inverted list, so at corpus
-    * scale the inverted list is the dominant shuffle side and the
-    * overwhelming majority of its occurrences match no prefix shingle
-    * at all. One driver-built Bloom over the distinct prefix-shingle
-    * hashes, applied map-side to the inverted list BEFORE its
-    * exchange, drops those occurrences for the cost of one extra pass
-    * over the (already ~10x smaller) prefix side. False positives
-    * just produce candidates the exact intersect-count verify already
-    * rejects — the result is IDENTICAL to [[containmentPairs]].
-    *
-    * The prefix table is localCheckpointed so the Bloom build and the
-    * candidate join share one materialization (it is (1−τ)-fraction
-    * of the inverted list — bounded); the inverted list itself stays
-    * fully lazy and is only ever scanned post-filter.
-    */
-  def containmentPairsBloom(df: DataFrame, idCol: String,
-                            textCol: String, n: Int, threshold: Double,
-                            hashedShingles: Boolean = false,
-                            fpp: Double = 0.03): DataFrame = {
-    val (sh, cand) = containmentStage(df, idCol, textCol, n, threshold,
-      hashedShingles, probeBloomFpp = fpp)
-    verifyContainment(sh, cand, threshold)
-  }
-
   private def verifyContainment(sh: DataFrame, cand: DataFrame,
                                 threshold: Double): DataFrame =
     cand
@@ -442,8 +406,7 @@ object Dedup {
   private def containmentStage(df: DataFrame, idCol: String,
                                textCol: String, n: Int, threshold: Double,
                                hashedShingles: Boolean,
-                               maxDf: Long = 0L,
-                               probeBloomFpp: Double = 0.0)
+                               maxDf: Long = 0L)
       : (DataFrame, DataFrame) = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
@@ -480,34 +443,11 @@ object Dedup {
     val p = col("m") - t + lit(1L)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc").orderBy(col("dfreq"), col("shingle"))
-    val prefix0 = prefixSrc
+    val prefix = prefixSrc
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= p)
       .select("doc", "m", "shingle")
-    // probe-side Bloom arm (containmentPairsBloom): materialize the
-    // prefix ONCE (shared by the filter build and the candidate join),
-    // build the filter over its distinct shingle hashes, and cut the
-    // inverted list map-side before its exchange. Key = the shingle
-    // itself when already hashed, xxhash64 otherwise (the l15b
-    // discipline).
-    val (prefix, invJ) =
-      if (probeBloomFpp <= 0.0) (prefix0, inv)
-      else {
-        val pfx = prefix0.localCheckpoint()
-        def keyOf(c: org.apache.spark.sql.Column) =
-          if (hashedShingles) c else xxhash64(c)
-        val keys = pfx.select(keyOf(col("shingle")).as("h")).distinct()
-        val nKeys = math.max(1L, keys.count())
-        val bf = keys.stat.bloomFilter("h", nKeys, probeBloomFpp)
-        val bytes = {
-          val bos = new java.io.ByteArrayOutputStream()
-          bf.writeTo(bos)
-          bos.toByteArray
-        }
-        (pfx, inv.filter(call_function("bloom_might_contain",
-          lit(bytes), keyOf(col("shingle")))))
-      }
-    val cand = prefix.as("a").join(invJ.as("b"),
+    val cand = prefix.as("a").join(inv.as("b"),
         col("a.shingle") === col("b.shingle") &&
           col("a.doc") =!= col("b.doc") &&
           col("b.m") >=

@@ -191,8 +191,8 @@ object Pq {
   /** [[ivfPqTopKResidual]] against a STANDING codes table
     * (`(n_id, cell, codes)` from [[encodeResidual]], persisted/cached
     * once) — the production shape: the per-query-batch cost is the
-    * probed-cells code scan only, never a corpus re-encode. ProbeR15
-    * `ann1m` prices the two forms separately.
+    * probed-cells code scan only, never a corpus re-encode. SCALE_r15.md
+    * §7 prices the two forms separately.
     */
   def ivfPqTopKResidualCodes(assigned: DataFrame, queries: DataFrame,
                              idCol: String, vecCol: String, k: Int,

@@ -274,17 +274,10 @@ object ReferenceParity {
     // whole-stage codegen trades ~100-300ms of Janino compilation per
     // plan shape for faster per-row execution — the right trade on
     // millions of rows, the wrong one on thousands (the audit queries'
-    // compile time exceeds their entire interpreted runtime).
-    // GRAFT_PARITY_WSCG=1 flips it back on for A/B. Round-17 measured
-    // it (6 warm ProbePerf reps each way): WSCG ON is 2-4x SLOWER even
-    // warm (7.4-19 s vs 3.9-5.9 s) — the compile cache does not
-    // amortize across reps for this pipeline's hundreds of small
-    // codegen units (fresh expression trees per run), so the compile
-    // tax is paid every rep. OFF stays the default; the knob stays for
-    // re-measurement on future Spark versions.
-    s.conf.set("spark.sql.codegen.wholeStage",
-      if (sys.env.get("GRAFT_PARITY_WSCG").contains("1")) "true"
-      else "false")
+    // compile time exceeds their entire interpreted runtime). Measured
+    // (OPTIMIZATION_r17.md §8): ON is 2-4x slower even warm — fresh
+    // expression trees per run defeat the compile cache.
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
     // ...and broadcast joins trade a shuffle for an ASYNC job per
     // exchange (~100-300ms of scheduling each, ~18 of them across the
     // fact build) — also the wrong trade on thousands of rows, where a

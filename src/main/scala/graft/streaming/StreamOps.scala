@@ -1532,7 +1532,7 @@ object StreamOps {
     * window already occurs in the standing corpus, or in >= 2 docs of
     * the batch itself; standing docs keep the flags they got when THEY
     * arrived), and the exact data-adaptive grid recomputes per release
-    * (ProbeR16 prices the crossover).
+    * (SCALE_r16.md §3 prices the crossover).
     *
     * State is the dedup-index LSM shape applied to gram keys:
     * `indexPath/d=<batchId>` holds (gk, first_batch) — the batch's

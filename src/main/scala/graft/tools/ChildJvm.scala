@@ -3,22 +3,13 @@ package graft.tools
 /** Dev/test helper: launch another main of THIS build in a fresh JVM
   * (the forked sbt JVM carries the full classpath in java.class.path;
   * the URLClassLoader walk is the defensive fallback). Used by the
-  * crash/restart proofs (RestartSpec, ProbeR15 curationkill) — the
-  * point is a REAL process boundary, not a thread.
+  * crash/restart proofs in RestartSpec (RestartDriver,
+  * CurationKillDriver) — the point is a REAL process boundary, not a
+  * thread.
   */
 object ChildJvm {
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
-  def classpath: String = {
+  private def classpath: String = {
     def urls(cl: ClassLoader): Seq[String] = cl match {
       case null => Nil
       case u: java.net.URLClassLoader =>
@@ -42,7 +33,7 @@ object ChildJvm {
           maxHeap: String = "8g"): (Int, String) = {
     val javaBin = java.nio.file.Paths.get(
       System.getProperty("java.home"), "bin", "java").toString
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
+    val cmd = Seq(javaBin) ++ graft.core.Sessions.jdk17AddOpens ++ Seq(
       s"-Xmx$maxHeap", "-cp", classpath, mainClass) ++ args
     val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
     val p = pb.start()

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.CurationPipeline
 
-/** Child-JVM driver for the at-scale curation kill/restart proof
-  * (ProbeR15 `curationkill`, verdict item 5): runs the CHECKPOINTED
-  * curation pipeline over a ScaleGen textdiv corpus; with
+/** Child-JVM driver for the curation kill/restart proof (RestartSpec;
+  * the 1M-doc ScaleGen textdiv run is SCALE_r15.md §5): runs the
+  * CHECKPOINTED curation pipeline over `corpusDir`'s documents; with
   * `haltAfterStage > 0` a watcher thread Runtime.halt(42)s the JVM the
   * moment that stage's funnel table commits — usually mid-write of the
   * NEXT stage, the realistic mid-run kill. The knob set lives HERE so

@@ -8,9 +8,10 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
 import graft.queries.Registry
 
 /** Shared task-level measurement for the scale-evidence tools
-  * (SkewStress / SpillStress / ProbeL12C): spill, straggler, peak task
-  * memory, shuffle volume. One implementation so the tools whose
-  * numbers are compared against each other measure identically.
+  * (SkewStress / SpillStress / ProbeL12C) and GraphRankSpec: spill,
+  * straggler, peak task memory, shuffle volume. One implementation so
+  * the tools whose numbers are compared against each other measure
+  * identically.
   */
 final class TaskMetricsListener extends SparkListener {
   val spilledBytes = new AtomicLong(0L)

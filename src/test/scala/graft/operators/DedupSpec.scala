@@ -496,24 +496,6 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("containment join, Bloom-prefiltered probe side: value-identical " +
-    "to the plain form on testdata (one-sided error: false positives " +
-    "die at the exact verify), string and hashed keys, several fpp") {
-    val docs = Tables.documents(s, sf)
-    for (tau <- Seq(0.5, 0.9); hashed <- Seq(false, true)) {
-      def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
-          r.getAs[Double]("containment"))).toSet
-      val plain = norm(Dedup.containmentPairs(docs, "doc_id", "text",
-        n = 3, threshold = tau, hashedShingles = hashed))
-      val bloom = norm(Dedup.containmentPairsBloom(docs, "doc_id",
-        "text", n = 3, threshold = tau, hashedShingles = hashed,
-        fpp = 0.03))
-      assert(bloom == plain, s"tau=$tau hashed=$hashed diverged")
-      assert(plain.nonEmpty, "testdata should contain containments")
-    }
-  }
-
   test("containment join, df-capped variant: exact containment over " +
     "the sub-cap universe — hot-shingle-witnessed pairs invisible, " +
     "rare-shingle pairs identical to uncapped, brute-force parity") {

@@ -1,12 +1,13 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.tools.ChildJvm
 
 /** CROSS-PROCESS streaming restart proof — the round-14 verdict's one
   * unproven claim: every standing-index sink is idempotent-by-marker,
@@ -20,54 +21,17 @@ import graft.TestSpark
   * resumes from the checkpoint. The spec asserts the window actually
   * happened (state marker ahead of the commit log), that the replayed
   * batch is absorbed exactly once, and that the final states equal the
-  * one-shot batch operators over everything streamed.
+  * one-shot batch operators over everything streamed. The checkpointed
+  * curation pipeline gets the same treatment through
+  * [[graft.tools.CurationKillDriver]]: halted after a stage commits,
+  * resumed in a fresh JVM.
   */
 class RestartSpec extends AnyFunSuite {
   private val s = TestSpark.spark
   import s.implicits._
 
-  // same list build.sbt forks with (Spark 4 on JDK 17 outside
-  // spark-submit needs the opens injected by hand)
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
-  /** Classpath for the child JVM: the forked test JVM's own property,
-    * plus any URLClassLoader chain entries (defensive against sbt
-    * launcher indirection). */
-  private def fullClasspath: String = {
-    def urls(cl: ClassLoader): Seq[String] = cl match {
-      case null => Nil
-      case u: java.net.URLClassLoader =>
-        u.getURLs.toSeq.flatMap(x =>
-          scala.util.Try(Paths.get(x.toURI).toString).toOption) ++
-          urls(u.getParent)
-      case other => urls(other.getParent)
-    }
-    (System.getProperty("java.class.path")
-      .split(File.pathSeparator).toSeq ++
-      urls(getClass.getClassLoader))
-      .filter(_.nonEmpty).distinct.mkString(File.pathSeparator)
-  }
-
-  private def runChild(args: Seq[String]): (Int, String) = {
-    val javaBin = Paths.get(
-      System.getProperty("java.home"), "bin", "java").toString
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx4g", "-cp", fullClasspath,
-      "graft.tools.RestartDriver") ++ args
-    val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-    val p = pb.start()
-    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-    val code = p.waitFor()
-    (code, out)
-  }
+  private def runChild(args: Seq[String]): (Int, String) =
+    ChildJvm.run("graft.tools.RestartDriver", args, "4g")
 
   private def listLog(ckpt: String, sub: String): Seq[Long] = {
     val d = new File(s"$ckpt/$sub")
@@ -331,5 +295,56 @@ class RestartSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(indexSet(s"$stateRoot/index") == indexSet(s"$refRoot/index"),
       "crash inside compaction changed the logical index")
+  }
+
+  test("cross-process curation restart: halt after stage 6 commits, " +
+    "resume in a fresh JVM — stages 1-6 reused untouched, funnel == " +
+    "the uninterrupted run's", graft.SlowProof) {
+    val corpusDir = graft.plans.PlanGolden.sfDir // the gate SF, sf0.01
+    val corpus = new File(s"$corpusDir/documents.parquet")
+    assert(corpus.exists(), s"curation corpus missing: $corpus")
+    val root = Files.createTempDirectory("graft_curation_kill").toString
+    val dirA = s"$root/uninterrupted"
+    val dirB = s"$root/killed"
+    def runDriver(stageDir: String, haltAfter: Int): (Int, String) =
+      ChildJvm.run("graft.tools.CurationKillDriver",
+        Seq(corpusDir, stageDir, haltAfter.toString), "4g")
+    // stdout and stderr share one pipe: a log line can run into a
+    // funnel line, so match the marker anywhere and cut from it
+    def funnel(out: String): Seq[String] = {
+      val tag = "CURATIONKILL funnel"
+      out.linesIterator.filter(_.contains(tag))
+        .map(l => l.substring(l.indexOf(tag))).toSeq
+    }
+    // stage-table dir -> its _SUCCESS commit mtime
+    def commits(dir: String): Map[String, Long] =
+      new File(dir).listFiles().filter(_.isDirectory).flatMap { st =>
+        val ok = new File(st, "_SUCCESS")
+        if (ok.exists()) Some(st.getName -> ok.lastModified()) else None
+      }.toMap
+
+    val (codeA, outA) = runDriver(dirA, -1)
+    assert(codeA == 0, s"uninterrupted run failed rc=$codeA\n$outA")
+    assert(funnel(outA).nonEmpty, outA)
+
+    val (codeB, outB) = runDriver(dirB, 6)
+    assert(codeB != 0, "the halt after stage 6 lost the race to " +
+      "completion (rc 0): the run finished before the watcher fired, " +
+      s"so no restart was exercised\n$outB")
+    assert(codeB == 42, s"kill run should halt(42); got $codeB\n$outB")
+    assert(outB.contains("CURATIONKILL halting after stage 6"), outB)
+    val beforeRestart = commits(dirB)
+    val firstSix = (1 to 6).flatMap(i => Seq(s"s$i", s"funnel_s$i"))
+    assert(firstSix.forall(beforeRestart.contains),
+      s"stages 1-6 not all committed at the halt: $beforeRestart")
+
+    val (codeC, outC) = runDriver(dirB, -1)
+    assert(codeC == 0, s"restart run failed rc=$codeC\n$outC")
+    val afterRestart = commits(dirB)
+    firstSix.foreach { d =>
+      assert(afterRestart.get(d) == beforeRestart.get(d),
+        s"$d was rebuilt on restart (its _SUCCESS mtime changed)")
+    }
+    assert(funnel(outC) == funnel(outA))
   }
 }
