@@ -190,6 +190,11 @@ object Bench {
         f"(load=$loadAtStart%.2f, busy jvms=${busyAtStart.size}) — " +
         "numbers below are taken on a contended box")
     val spark = Sessions.build("graft-bench", Sessions.cpusFromEnv(32))
+    // Janino compiles (generated-class cache misses) so far in this JVM;
+    // "codegen_compiles" records deltas of it for the run and its phases
+    def compiles(): Long = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val compilesAtStart = compiles()
     // The bounded-window sites (orderedIdBounded, w1) are boundedness-
     // spec-pinned; WindowExec's per-execution "No Partition Defined"
     // WARN repeats 8+ times per bench run and was ~half of the driver's
@@ -248,8 +253,11 @@ object Bench {
     // ~1s for the complex plans), which is per-JVM overhead, not query
     // cost — the generated classes are shared with the identical plan at
     // the target SF, so the timed runs below measure steady-state
-    // execution. (The breadth sweep stays unwarmed: its purpose is
-    // regression DELTAS, which cold-vs-cold comparison preserves.)
+    // execution. That holds only while the codegen cache holds the
+    // working set (Sessions.build sizes it); "codegen_compiles" ->
+    // "headline_reps" counts the compiles the timed reps still paid.
+    // (The breadth sweep stays unwarmed: its purpose is regression
+    // DELTAS, which cold-vs-cold comparison preserves.)
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory)
       Registry.headlines.foreach { q =>
@@ -347,11 +355,13 @@ object Bench {
     while (calib.lastOption.exists(_ > 1.0) && waitedSec < 180) {
       Thread.sleep(30000); waitedSec += 30; probe()
     }
+    val compilesBeforeHeadlines = compiles()
     if (!e2eOnly) Registry.headlines.foreach { q =>
       time(q.name, () => q.run(spark, sfDir)
         .write.format("noop").mode(SaveMode.Overwrite).save(), timings,
         headlineReps)
     }
+    val headlineCompiles = compiles() - compilesBeforeHeadlines
     allTimings ++= timings
     // ...then the rest of the registry, so every query has a regression
     // signal (timed after the headlines to keep the headline numbers
@@ -360,6 +370,7 @@ object Bench {
     // regressions in deltas_vs_prev with no recorded spread to expose
     // them as noise — at n=2 every breadth entry carries a spread, so a
     // delta smaller than its spread is self-describing as noise.
+    val compilesBeforeBreadth = compiles()
     if (!e2eOnly) Registry.all.filterNot(_.headline).foreach { q =>
       time(q.name, () => q.run(spark, sfDir)
         .write.format("noop").mode(SaveMode.Overwrite).save(), allTimings,
@@ -385,6 +396,7 @@ object Bench {
           .write.format("noop").mode(SaveMode.Overwrite).save(),
           allTimings, 2)
       }
+    val breadthCompiles = compiles() - compilesBeforeBreadth
     if (!e2eOnly) probe()
 
     // Gate state, declared before the e2e block because the e2e gate
@@ -607,6 +619,9 @@ object Bench {
         s""""heavy_queries":${jmap(
           present.map(n => n -> allTimings(n)), round = true)}"""
     }
+    val compilesJson =
+      s""""codegen_compiles":{"run":${compiles() - compilesAtStart},""" +
+        s""""headline_reps":$headlineCompiles,"breadth":$breadthCompiles}"""
     val calibJson = calib.map(r3).mkString("[", ",", "]")
     val loadJson = loads.map(r3).mkString("[", ",", "]")
     val loadGateJson =
@@ -632,7 +647,7 @@ object Bench {
     //   with the numbers only recoverable from the truncated tail text.
     //   The compact line (headline medians rounded to ms + errors +
     //   calibration evidence) stays well under the window.
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","method":"median-of-$headlineReps"$e2eJson,"queries":${jmap(timings, round = false)},"errors":$errs,"spreads":${jmap(spreads, round = false)},"cold_first":${jmap(coldFirst, round = false)},"all_queries":${jmap(allTimings, round = false)},"all_total":${allTimings.values.sum}$heavyJson,"prev_bench":${jstr(prevFile)},"deltas_vs_prev":$deltas,$gateJson,"codegen_failures":${codegenFailures.get},"calib_sec":$calibJson,"load_avg":$loadJson,$loadGateJson,"waited_sec":$waitedSec,"sf":${jstr(sfDir)}}"""
+    val detail = s"""{"metric":"total","value":$total,"unit":"sec","method":"median-of-$headlineReps"$e2eJson,"queries":${jmap(timings, round = false)},"errors":$errs,"spreads":${jmap(spreads, round = false)},"cold_first":${jmap(coldFirst, round = false)},"all_queries":${jmap(allTimings, round = false)},"all_total":${allTimings.values.sum}$heavyJson,"prev_bench":${jstr(prevFile)},"deltas_vs_prev":$deltas,$gateJson,"codegen_failures":${codegenFailures.get},$compilesJson,"calib_sec":$calibJson,"load_avg":$loadJson,$loadGateJson,"waited_sec":$waitedSec,"sf":${jstr(sfDir)}}"""
     // history append BEFORE the detail overwrite: a crash between the
     // two can lose the overwrite, never the append-only log
     val w = new java.io.FileWriter(historyFile, true)

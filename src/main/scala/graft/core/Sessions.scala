@@ -91,6 +91,16 @@ object Sessions {
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled",
         "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Performance-only, result-inert: the JVM-wide generated-class
+      // cache is an LRU of 100 entries by default, smaller than one
+      // reference-parity pass's ~350 distinct classes, so every class
+      // was evicted before its next use: 479 of a warm pass's 520
+      // compiles had source identical to a class compiled before. 2000
+      // holds that working set ~5.7x over (~5 MB of generated source).
+      // Static, and read ONCE per JVM, when CodeGenerator is first
+      // loaded: nothing may generate code before this session exists
+      // (CodegenCacheSpec pins it).
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -275,8 +275,10 @@ object ReferenceParity {
     // plan shape for faster per-row execution — the right trade on
     // millions of rows, the wrong one on thousands (the audit queries'
     // compile time exceeds their entire interpreted runtime). Measured
-    // (OPTIMIZATION_r17.md §8): ON is 2-4x slower even warm — fresh
-    // expression trees per run defeat the compile cache.
+    // (OPTIMIZATION_r17.md §8): ON was 2-4x slower even warm, but under
+    // Spark's default 100-entry codegen cache, which the pass's working
+    // set thrashed; the cache is now sized in Sessions.build and the
+    // A/B has not been re-run under it.
     s.conf.set("spark.sql.codegen.wholeStage", "false")
     // ...and broadcast joins trade a shuffle for an ASYNC job per
     // exchange (~100-300ms of scheduling each, ~18 of them across the

@@ -33,6 +33,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NativeCodegenCanarySpec extends AnyFunSuite {
 
+  // Session first: the JVM's codegen cache takes its size from Sessions.build.
+  graft.TestSpark.spark
+
   private val vecA = BoundReference(0, ArrayType(DoubleType), nullable = true)
   private val vecB = BoundReference(1, ArrayType(DoubleType), nullable = true)
   private val str = BoundReference(0, StringType, nullable = true)
