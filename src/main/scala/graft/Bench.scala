@@ -431,12 +431,16 @@ object Bench {
     // ONE session. (The reference runs the same flow as nine separate
     // spark-submit processes with per-row Python UDFs.)
     val refRaw = "/root/reference/data/raw"
-    if (new java.io.File(refRaw).isDirectory) {
+    // what this run could not measure, and why — recorded, never silent
+    val unmeasured = scala.collection.mutable.LinkedHashMap[String, String]()
+    if (!new java.io.File(refRaw).isDirectory)
+      unmeasured("ref_pipeline_e2e") = s"reference snapshot missing at $refRaw"
+    else {
       // one untimed warm run for the same codegen-compilation reason;
       // drop its caches so the timed run re-does the real I/O + cleaning.
       // Both runs execute under the pipeline's own small-data tuning
-      // (ReferenceParity.smallDataTuned — AQE off, few shuffle
-      // partitions), exactly as a production deployment of this bounded
+      // (ReferenceParity.smallDataTuned — AQE off, one shuffle
+      // partition), exactly as a production deployment of this bounded
       // pipeline would run it.
       graft.pipeline.ReferenceParity.smallDataTuned(spark) {
         // (e2e-only mode skips the ~90-query sweep that normally deep-
@@ -590,6 +594,8 @@ object Bench {
         .mkString("{", ",", "}")
     val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
       .mkString("{", ",", "}")
+    val unmeasuredJson = unmeasured
+      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val (prevFile, prev) = previousBench()
     val deltas = allTimings.collect {
       case (k, v) if prev.contains(k) => s"${jstr(k)}:${r3(v - prev(k))}"
@@ -647,7 +653,7 @@ object Bench {
     //   with the numbers only recoverable from the truncated tail text.
     //   The compact line (headline medians rounded to ms + errors +
     //   calibration evidence) stays well under the window.
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","method":"median-of-$headlineReps"$e2eJson,"queries":${jmap(timings, round = false)},"errors":$errs,"spreads":${jmap(spreads, round = false)},"cold_first":${jmap(coldFirst, round = false)},"all_queries":${jmap(allTimings, round = false)},"all_total":${allTimings.values.sum}$heavyJson,"prev_bench":${jstr(prevFile)},"deltas_vs_prev":$deltas,$gateJson,"codegen_failures":${codegenFailures.get},$compilesJson,"calib_sec":$calibJson,"load_avg":$loadJson,$loadGateJson,"waited_sec":$waitedSec,"sf":${jstr(sfDir)}}"""
+    val detail = s"""{"metric":"total","value":$total,"unit":"sec","method":"median-of-$headlineReps"$e2eJson,"queries":${jmap(timings, round = false)},"errors":$errs,"unmeasured":$unmeasuredJson,"spreads":${jmap(spreads, round = false)},"cold_first":${jmap(coldFirst, round = false)},"all_queries":${jmap(allTimings, round = false)},"all_total":${allTimings.values.sum}$heavyJson,"prev_bench":${jstr(prevFile)},"deltas_vs_prev":$deltas,$gateJson,"codegen_failures":${codegenFailures.get},$compilesJson,"calib_sec":$calibJson,"load_avg":$loadJson,$loadGateJson,"waited_sec":$waitedSec,"sf":${jstr(sfDir)}}"""
     // history append BEFORE the detail overwrite: a crash between the
     // two can lose the overwrite, never the append-only log
     val w = new java.io.FileWriter(historyFile, true)
@@ -658,7 +664,7 @@ object Bench {
       if (e2eOnly) "BENCH_E2E_ONLY.json" else "BENCH_DETAIL.json"
     val dw = new java.io.FileWriter(detailFileOut, false)
     try dw.write(detail + "\n") finally dw.close()
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","method":"median-of-$headlineReps"$e2eJson,"queries":${jmap(timings, round = true)},"errors":$errs,"all_total":${r3(allTimings.values.sum)}$heavyJson,"gate_passes":$gatePasses,"gate_flags":${gateFlags.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")},"codegen_failures":${codegenFailures.get},"calib_sec":$calibJson,"load_avg":$loadJson,$loadGateJson,"waited_sec":$waitedSec,"detail":${jstr(detailFileOut)},"sf":${jstr(sfDir)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","method":"median-of-$headlineReps"$e2eJson,"queries":${jmap(timings, round = true)},"errors":$errs,"unmeasured":$unmeasuredJson,"all_total":${r3(allTimings.values.sum)}$heavyJson,"gate_passes":$gatePasses,"gate_flags":${gateFlags.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")},"codegen_failures":${codegenFailures.get},"calib_sec":$calibJson,"load_avg":$loadJson,$loadGateJson,"waited_sec":$waitedSec,"detail":${jstr(detailFileOut)},"sf":${jstr(sfDir)}}"""
     println(line)
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, ByteType, DateType,
@@ -35,7 +35,7 @@ object Audit {
       expectedType: String,
       errorIds: Seq[Any])
 
-  /** Typed audit result consumed by [[Cleaning]] — the reference's
+  /** Typed audit result consumed by the cleaning step — the reference's
     * audit_report.json document (audit_report.py:152-181) as a case class.
     * `formatViolations` keeps every rule's count (including zeros);
     * `inconsistencies` carries the reference-parity entries (only rules
@@ -148,7 +148,6 @@ object Audit {
   /** Restore an error-id sampled as a string back to the id column's
     * native type, so reports serialize ids exactly as the pre-sampler
     * limit-scan did (numbers unquoted, dates via java.sql toString).
-    * Shared by [[report]] and [[reportAll]].
     */
   private def idRestore(
       dt: org.apache.spark.sql.types.DataType): String => Any = dt match {
@@ -165,27 +164,41 @@ object Audit {
     case _ => identity
   }
 
-  /** Audit SEVERAL sources in TWO Spark actions total, however many
+  /** Cap on each fired rule's `error_ids` sample (the reference,
+    * audit_report.py:96-100, collects ALL ids — unbounded driver memory).
+    */
+  private val MaxErrorIds = 10000
+
+  /** Audit one or more sources in TWO Spark actions total, however many
     * sources there are: every source's fused profile scan (null counts +
     * violation counts + bounded id samples, uniformly shaped as maps)
     * unions into one job whose per-source subtrees execute in parallel
     * executor-side, and the per-source duplicate-row counts union into a
-    * second, concurrently-scheduled job. Running k separate
-    * [[report]]s from k threads does NOT parallelize in practice — tiny
+    * second, concurrently-scheduled job. Auditing k sources as k separate
+    * actions from k threads does NOT parallelize in practice — tiny
     * jobs serialize behind the driver's single-threaded scheduling, so
     * k sources cost k × one-source latency; this shape costs ~one.
     * (Fusing the dup counts into the SAME collect — they union cleanly —
     * was tried and is SLOWER: one 8-branch job serializes all stage
     * submissions through the DAGScheduler event loop, while two
     * concurrent actions overlap their scheduling rounds.)
+    *
+    * When a source has an `idColumn`, every fired rule's violating-id
+    * sample (the reference-parity `error_ids` field) rides THE SAME scan
+    * as the counts, one [[BoundedIds]] collector per rule capped at
+    * [[MaxErrorIds]] in both aggregation state and driver result. (One
+    * early-terminating `limit` scan per rule wins only when violations
+    * are dense enough to hit the cap early; with rare violations each of
+    * the k scans reads the entire table.) Only rules that fired emit an
+    * entry, mirroring the reference's append-if-nonzero behavior.
+    * The pool is dedicated (callers run this on a future themselves)
+    * and the wait finite, so a wedged job fails instead of hanging.
     */
-  def reportAll(sources: Seq[SourceAudit], maxErrorIds: Int = 10000,
-                jobTimeout: scala.concurrent.duration.Duration =
-                  scala.concurrent.duration.Duration(15, "min"))
-      : Map[String, AuditReport] = {
+  def reportAll(sources: Seq[SourceAudit]): Map[String, AuditReport] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
     require(sources.nonEmpty)
-    val sampler = udaf(new BoundedIds(maxErrorIds), Encoders.STRING)
+    val sampler = udaf(new BoundedIds(MaxErrorIds), Encoders.STRING)
     val emptySamples = map_from_arrays(
       array().cast("array<string>"),
       array().cast("array<array<string>>"))
@@ -217,19 +230,13 @@ object Audit {
         sources.map(dupRow).reduce(_ unionByName _).collect()
           .map(r => r.getString(0) -> r.getLong(1)).toMap
       }
-      val t0 = System.nanoTime()
-      val profilePlan = sources.map(profileRow).reduce(_ unionByName _)
-      profilePlan.queryExecution.executedPlan
-      val t1 = System.nanoTime()
-      val profiles = profilePlan.collect()
+      val profiles = sources.map(profileRow).reduce(_ unionByName _)
+        .collect()
         .map(r => r.getString(0) ->
           (r.getMap[String, Long](1),
             r.getMap[String, scala.collection.Seq[String]](2)))
         .toMap
-      if (sys.env.get("GRAFT_PARITY_TIMING").contains("1"))
-        println(f"[audit] reportAll analyze+plan ${(t1 - t0) / 1e9}%.2f s, " +
-          f"exec ${(System.nanoTime() - t1) / 1e9}%.2f s")
-      val dups = Await.result(fDups, jobTimeout)
+      val dups = Await.result(fDups, Duration(15, "min"))
 
       sources.map { sa =>
         val (counts, samples) = profiles(sa.name)
@@ -254,7 +261,7 @@ object Audit {
     * partition-merge order, so a rule with a billion violations holds
     * `cap` strings of aggregation state, not a billion (a plain
     * collect_list + slice would buffer them ALL first). One instance per
-    * rule rides a single fused scan in [[report]].
+    * rule rides the fused profile scan in [[reportAll]].
     */
   private final class BoundedIds(cap: Int)
       extends Aggregator[String, Seq[String], Seq[String]] {
@@ -270,95 +277,12 @@ object Audit {
 
   private object BoundedIds {
     // derived ONCE per JVM (encoder derivation goes through Scala's
-    // globally-locked runtime reflection — deriving per report() call
+    // globally-locked runtime reflection — deriving per audit call
     // serialized every concurrent audit behind the lock), and
     // catalyst-native rather than Encoders.kryo: a kryo-encoded buffer
     // makes every TASK pay a fresh Kryo instantiation per aggregator,
     // which dwarfed the actual 2,155-row scan in the parity audit
     val enc: Encoder[Seq[String]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[String]]()
-  }
-
-  /** Assemble the typed report. The three aggregates are tiny (one row
-    * each); collecting them is driver-side by nature, not a scale concern.
-    *
-    * When `idColumn` is given, every fired rule's violating-id sample
-    * (the reference-parity `error_ids` field; audit_report.py:96-100
-    * collects ALL ids — unbounded driver memory) rides THE SAME single
-    * scan as the null/violation counts, one [[BoundedIds]] collector per
-    * rule: `maxErrorIds` caps both the aggregation state and the driver
-    * result, and the entire audit is one row-level scan plus the
-    * duplicate-count shuffle. (The alternative — one early-terminating
-    * `limit` scan per rule — wins only when violations are dense enough
-    * to hit the cap early; with rare violations each of the k scans
-    * reads the entire table.) Only rules that fired emit an entry,
-    * mirroring the reference's append-if-nonzero behavior.
-    */
-  def report(df: DataFrame, rules: Seq[FormatRule],
-             idColumn: Option[String] = None,
-             maxErrorIds: Int = 10000,
-             jobTimeout: scala.concurrent.duration.Duration =
-               scala.concurrent.duration.Duration(15, "min")): AuditReport = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-
-    // a DEDICATED pool, not ExecutionContext.global: report() may itself
-    // be called from a future (the parity pipeline audits sources
-    // concurrently), and nested blocking on the shared global pool can
-    // starve it once maxExtraThreads compensation runs out. The finite
-    // jobTimeout turns a wedged Spark job into a clear TimeoutException
-    // instead of an audit that hangs forever.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      // the duplicate-row count needs its own shuffle job — overlap it
-      // with the profile scan (Spark schedules jobs from separate threads
-      // side by side)
-      val fDups = Future(duplicateRowCount(df).collect()(0).getLong(0))
-
-      // null counts, rule-violation counts AND the violating-id samples
-      // are all row-level aggregates over the same rows: ONE fused scan
-      // (ids collected as strings, restored to the id column's type
-      // below so int ids keep serializing unquoted)
-      val nCols = df.columns.length
-      val sampler = udaf(new BoundedIds(maxErrorIds), Encoders.STRING)
-      val sampleCols = idColumn.toSeq.flatMap(id => rules.map(r =>
-        sampler(when(r.bad, col(id).cast("string")))
-          .as(s"__ids_${r.name}")))
-      val tProfile0 = System.nanoTime()
-      val profileDf = df.select(
-        df.columns.toSeq.map(c =>
-          count(when(isNullOrNan(df, c), lit(1))).as(s"__null_$c")) ++
-          rules.map(r => count(when(r.bad, lit(1))).as(s"__vio_${r.name}"))
-          ++ sampleCols
-          : _*)
-      val tPlan0 = System.nanoTime()
-      profileDf.queryExecution.executedPlan
-      val tPlan1 = System.nanoTime()
-      val profile: Row = profileDf.collect()(0)
-      if (sys.env.get("GRAFT_PARITY_TIMING").contains("1"))
-        println(f"[audit] profile scan " +
-          f"${(System.nanoTime() - tProfile0) / 1e9}%.2f s " +
-          f"(analyze ${(tPlan0 - tProfile0) / 1e9}%.2f, " +
-          f"plan ${(tPlan1 - tPlan0) / 1e9}%.2f; " +
-          f"${df.columns.length} cols, ${rules.length} rules)")
-      val missing = df.columns.zipWithIndex
-        .map { case (c, i) => c -> profile.getLong(i) }.toMap
-      val vioMap = rules.zipWithIndex
-        .map { case (r, i) => r.name -> profile.getLong(nCols + i) }.toMap
-
-      val issues = idColumn.toSeq.flatMap { id =>
-        val restore = idRestore(df.schema(id).dataType)
-        rules.zipWithIndex
-          .filter { case (r, _) => vioMap(r.name) > 0 }
-          .map { case (r, i) =>
-            FormatIssue(r.name, vioMap(r.name), r.expectedType,
-              profile.getSeq[String](nCols + rules.length + i)
-                .map(restore))
-          }
-      }
-      AuditReport(missing, Await.result(fDups, jobTimeout),
-        duplicateColumnGroups(df.columns.toSeq), vioMap, issues,
-        hasIdSamples = idColumn.isDefined)
-    } finally pool.shutdown()
   }
 }

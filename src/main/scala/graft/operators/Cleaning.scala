@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Audit.AuditReport
 
-/** Audit-driven cleaning (SURVEY §2.10 Q5-Q6, §2.9 U1, §2.4 E9; reference:
-  * BBT-ETL-DW scripts/etl_transform/data_cleaning.py).
+/** Cleaning rules (SURVEY §2.10 Q6, §2.9 U1; reference: BBT-ETL-DW
+  * scripts/etl_transform/data_cleaning.py). The audit-driven dispatcher
+  * that applies them (Q5) is ReferenceParity.cleanFromReport.
   *
   * The reference implements numeric cleaning as a per-row Python UDF
   * (data_cleaning.py:50-61: strip non-[0-9.], parse, default). Every rule
@@ -68,54 +69,6 @@ object Cleaning {
     // (13/45/1996) — cleaning maps it to null, never a runtime error.
     when(c.rlike(shape), try_to_date(c, fmt))
   }
-
-  /** E9 fill-policy map (data_cleaning.py:81-105): column -> default for
-    * string/numeric columns; date columns deliberately keep their nulls
-    * (data_cleaning.py:88-90 — ShippedDate nulls are by design).
-    */
-  def fillPolicy(df: DataFrame, strings: Map[String, String],
-                 numerics: Map[String, Double]): DataFrame =
-    df.na.fill(strings).na.fill(numerics)
-
-  /** Q5 — the audit-driven dispatcher (data_cleaning.py:139-179): apply
-    * each rule kind to the columns the audit flagged. Rule order matches
-    * the reference: fills first, then dedup, then type fixes, dates last.
-    */
-  final case class CleaningRules(
-      stringFills: Map[String, String] = Map.empty,
-      numericFills: Map[String, Double] = Map.empty,
-      dropDuplicateRows: Boolean = false,
-      positiveFloatCols: Seq[String] = Nil,
-      positiveIntCols: Seq[String] = Nil,
-      nonEmptyStringCols: Seq[String] = Nil,
-      alphaOnlyCols: Seq[String] = Nil,
-      dateCols: Seq[String] = Nil,
-      dateFormat: String = "M/d/yyyy")
-
-  def clean(df: DataFrame, rules: CleaningRules): DataFrame = {
-    var out = fillPolicy(df, rules.stringFills, rules.numericFills)
-    if (rules.dropDuplicateRows) out = out.dropDuplicates()
-    out = rules.positiveFloatCols.foldLeft(out)((d, c) =>
-      d.withColumn(c, cleanPositiveFloat(col(c))))
-    out = rules.positiveIntCols.foldLeft(out)((d, c) =>
-      d.withColumn(c, cleanPositiveInt(col(c))))
-    out = rules.nonEmptyStringCols.foldLeft(out)((d, c) =>
-      d.withColumn(c, cleanNonEmptyString(col(c))))
-    out = rules.alphaOnlyCols.foldLeft(out)((d, c) =>
-      d.withColumn(c, cleanAlphaOnly(col(c))))
-    rules.dateCols.foldLeft(out)((d, c) =>
-      d.withColumn(c, normalizeDate(col(c), rules.dateFormat)))
-  }
-
-  /** Derive [[CleaningRules]] from an [[AuditReport]] the way the reference
-    * derives its dispatch from audit_report.json (data_cleaning.py:196-206):
-    * drop duplicate rows iff the audit saw any; name-based date-column
-    * detection ("Date" substring, data_cleaning.py:182).
-    */
-  def rulesFromAudit(df: DataFrame, report: AuditReport): CleaningRules =
-    CleaningRules(
-      dropDuplicateRows = report.duplicateRows > 0,
-      dateCols = df.columns.toSeq.filter(_.toLowerCase.contains("date")))
 
   /** Drop duplicate-suffixed columns and strip the suffix from the survivor
     * (data_cleaning.py:114-134: OrderID0/OrderID14 -> OrderID).

@@ -28,6 +28,11 @@ import graft.sources.Csv
   *    monotonically_increasing_id (parity data is dim-scale; the testdata
   *    fact path in [[Gold]] shows the arithmetic-key variant for scale);
   *  - run date is injected (`runDate`) instead of wall-clock now().
+  *
+  * Each step has one implementation, shared by [[run]] and
+  * [[runResilient]]: the audit [[Audit.reportAll]], the cleaning
+  * dispatcher [[cleanFromReport]] and the shuffle_hash-hinted dimension
+  * joins of [[dimSide]], meant to run inside [[smallDataTuned]].
   */
 object ReferenceParity {
 
@@ -71,26 +76,10 @@ object ReferenceParity {
     "nonEmpty" -> "must be a non-empty string",
     "alpha" -> "must contain only alphabetic characters and spaces")
 
-  /** Audit-then-clean one source: the reference's feedback loop — only
-    * columns the audit flagged get cleaned (data_cleaning.py:196-206).
-    * `idColumn` feeds the report's error_ids samples (audit parity).
-    */
-  private def auditAndClean(df: DataFrame,
-                            rules: Seq[(String, String, Column)],
-                            fillStrings: Map[String, String],
-                            fillNumerics: Map[String, Double],
-                            idColumn: String)
-      : (Audit.AuditReport, DataFrame) = {
-    val report = Audit.report(df,
-      rules.map { case (c, kind, bad) =>
-        Audit.FormatRule(c, bad, expectedTypeOf(kind)) },
-      idColumn = Some(idColumn))
-    (report, cleanFromReport(df, report, rules, fillStrings, fillNumerics))
-  }
-
-  /** The audit-driven cleaning steps, given an already-computed report
+  /** Q5 — the audit-driven cleaning dispatcher, given a computed report
     * (the reference's feedback loop: only columns the audit flagged get
-    * cleaned, data_cleaning.py:196-206).
+    * cleaned, data_cleaning.py:196-206). Rule order matches the
+    * reference: fills first, then dedup, then type fixes, dates last.
     */
   private def cleanFromReport(df: DataFrame, report: Audit.AuditReport,
                               rules: Seq[(String, String, Column)],
@@ -147,6 +136,18 @@ object ReferenceParity {
       idColumn: String)
 
   private val unknownFill = "Unknown"
+
+  /** The audit recipe of audited source `name` over `df`: its rule
+    * triples as [[Audit.FormatRule]]s carrying the reference's
+    * expected-type strings, and its id column feeding error_ids parity.
+    */
+  private def sourceAudit(name: String, df: DataFrame): Audit.SourceAudit = {
+    val spec = sourceSpecs(name)
+    Audit.SourceAudit(name, df,
+      spec.rules.map { case (c, kind, bad) =>
+        Audit.FormatRule(c, bad, expectedTypeOf(kind)) },
+      idColumn = Some(spec.idColumn))
+  }
 
   /** Per-source audit/clean specs (audit_report.py:103-138 rule sets,
     * data_cleaning.py:196-226 fill policies).
@@ -256,21 +257,22 @@ object ReferenceParity {
     * session confs after: adaptive query execution off (AQE's
     * stage-by-stage driver re-planning exists to fix BIG shuffles at
     * runtime; on a bounded fixed-shape workload it only serializes every
-    * tiny stage behind a driver round-trip) and a handful of shuffle
-    * partitions (2,155 rows do not need 32 reducers; fewer tasks = less
-    * scheduling latency per stage). Results are identical either way —
-    * both confs are physical-planning only. They are read at ACTION
+    * tiny stage behind a driver round-trip) and one shuffle partition
+    * (2,155 rows do not need 32 reducers; fewer tasks = less scheduling
+    * latency per stage). Results are identical either way
+    * (ReferenceParityFixtureSpec checks it) — every conf set here is
+    * physical-planning only. They are read at ACTION
     * time, so the scope must cover the actions, not just run(): wrap the
     * whole run-plus-consume block. Callers on a shared session should
     * not run unrelated large queries concurrently inside the scope.
     */
-  def smallDataTuned[T](s: SparkSession, partitions: Int = 1)(body: => T): T = {
+  def smallDataTuned[T](s: SparkSession)(body: => T): T = {
     val aqe = s.conf.get("spark.sql.adaptive.enabled", "true")
     val parts = s.conf.get("spark.sql.shuffle.partitions", "200")
     val wscg = s.conf.get("spark.sql.codegen.wholeStage", "true")
     val autoB = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    s.conf.set("spark.sql.shuffle.partitions", "1")
     // whole-stage codegen trades ~100-300ms of Janino compilation per
     // plan shape for faster per-row execution — the right trade on
     // millions of rows, the wrong one on thousands (the audit queries'
@@ -283,54 +285,39 @@ object ReferenceParity {
     // ...and broadcast joins trade a shuffle for an ASYNC job per
     // exchange (~100-300ms of scheduling each, ~18 of them across the
     // fact build) — also the wrong trade on thousands of rows, where a
-    // single-partition shuffle join (the default `partitions = 1` here)
-    // chains its stages inside the action's one job with no reducer
-    // fan-out to schedule. The flag is read by dimSide at PLAN-BUILD time; the
-    // threshold at physical-planning (action) time — both inside this
-    // scope for the bounded pipeline's callers.
+    // single-partition shuffle join chains its stages inside the
+    // action's one job with no reducer fan-out to schedule. The
+    // threshold is read at physical-planning (action) time, inside this
+    // scope for the bounded pipeline's callers; it keeps the un-hinted
+    // joins off broadcast, and dimSide's hint makes the dim joins hash.
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("graft.parity.inJobJoins", "true")
-    // ...and those in-job shuffle joins should HASH, not sort-merge: at
-    // thousands of rows the build map is trivially small and the two
-    // per-join sort operators are pure serial latency in the stage chain
-    val smj = s.conf.get("spark.sql.join.preferSortMergeJoin", "true")
-    s.conf.set("spark.sql.join.preferSortMergeJoin", "false")
     try body
     finally {
       s.conf.set("spark.sql.adaptive.enabled", aqe)
       s.conf.set("spark.sql.shuffle.partitions", parts)
       s.conf.set("spark.sql.codegen.wholeStage", wscg)
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", autoB)
-      s.conf.set("graft.parity.inJobJoins", "false")
-      s.conf.set("spark.sql.join.preferSortMergeJoin", smj)
     }
   }
 
-  /** Dim-side wrapper for the bounded pipeline's joins: a broadcast()
-    * hint normally (all dims are sub-MB), or the bare frame under
-    * `graft.parity.inJobJoins` (set by [[smallDataTuned]]) — read HERE
-    * at plan-build time by our own code, not a Spark
-    * conf-at-action-time trap. With AQE off and auto-broadcast
-    * disabled, the un-hinted joins plan as small shuffle joins whose
-    * stages chain inside each action's single job, eliminating the
-    * per-exchange async broadcast jobs that dominate e2e wall time at
-    * reference scale.
+  /** Dim-side wrapper for the bounded pipeline's joins: a shuffle_hash
+    * hint. Under [[smallDataTuned]] (AQE off, one shuffle partition) the
+    * hinted joins' stages chain inside each action's single job, with
+    * none of the per-exchange async jobs a broadcast costs — those
+    * dominate e2e wall time at reference scale. The hint, not a bare
+    * frame: with auto-broadcast at -1 the planner's own size-based SHJ
+    * path (canBuildLocalHashMap) is disabled too, and a bare frame would
+    * sort-merge — two serial sort operators per join in the stage chain
+    * for thousands of rows.
     */
-  private def dimSide(s: SparkSession, df: DataFrame): DataFrame =
-    if (s.conf.get("graft.parity.inJobJoins", "false") == "true")
-      // shuffle_hash, not bare: with auto-broadcast at -1 the planner's
-      // own SHJ path (canBuildLocalHashMap) is disabled too, and a bare
-      // frame would sort-merge — two serial sort operators per join in
-      // the stage chain for thousands of rows
-      df.hint("shuffle_hash")
-    else broadcast(df)
+  private def dimSide(df: DataFrame): DataFrame = df.hint("shuffle_hash")
 
   /** FAIL-FAST orchestration: any extract failure aborts the run with an
     * exception (a driver main exits non-zero). For the reference's
     * log-and-continue behavior use [[runResilient]].
     */
   def run(s: SparkSession, rawDir: String, runDate: String): Outputs = {
-    val extracted = phase("extract")(extractAll(s, rawDir))
+    val extracted = extractAll(s, rawDir)
     val failed = extracted.collect { case (n, Left(e)) => s"$n ($e)" }
     if (failed.nonEmpty)
       throw new IllegalStateException(
@@ -340,10 +327,10 @@ object ReferenceParity {
   }
 
   /** LOG-AND-CONTINUE orchestration (reference parity for
-    * etl_extract.py:39-61): every source extracts independently, the
-    * audited survivors still get their audit+clean pass (so a run with
-    * one broken file still produces five usable source results and four
-    * — or fewer — audit reports), and all failures are surfaced in the
+    * etl_extract.py:39-61): every source extracts independently, each
+    * audited survivor is still audited on its own (so a run with one
+    * broken file still produces five usable source results and four —
+    * or fewer — audit reports), and all failures are surfaced in the
     * returned report instead of thrown. Full pipeline outputs are built
     * only when all six sources arrived (the enrichment joins need them).
     */
@@ -362,32 +349,18 @@ object ReferenceParity {
         n -> (extracted(n) match {
           case Left(err) => SourceOutcome(None, None, Some(err))
           case Right(df) =>
-            sourceSpecs.get(n) match {
-              case None => SourceOutcome(Some(df), None, None)
-              case Some(spec) =>
-                scala.util.Try(auditAndClean(df, spec.rules,
-                  spec.fillStrings, spec.fillNumerics, spec.idColumn)) match {
-                  case scala.util.Success((audit, _)) =>
-                    SourceOutcome(Some(df), Some(audit), None)
-                  case scala.util.Failure(e) =>
-                    SourceOutcome(Some(df), None,
-                      Some(s"audit: ${e.getMessage}"))
-                }
+            if (!sourceSpecs.contains(n)) SourceOutcome(Some(df), None, None)
+            else scala.util.Try(
+                Audit.reportAll(Seq(sourceAudit(n, df)))(n)) match {
+              case scala.util.Success(audit) =>
+                SourceOutcome(Some(df), Some(audit), None)
+              case scala.util.Failure(e) =>
+                SourceOutcome(Some(df), None, Some(s"audit: ${e.getMessage}"))
             }
         })
       }
       ResilientRun(outcomes.toMap, None)
     }
-  }
-
-  // dev-only phase timing (GRAFT_PARITY_TIMING=1)
-  private def phase[T](name: String)(body: => T): T = {
-    if (sys.env.get("GRAFT_PARITY_TIMING").contains("1")) {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[parity] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    } else body
   }
 
   private def runFrom(s: SparkSession, raw: Map[String, DataFrame],
@@ -404,7 +377,7 @@ object ReferenceParity {
     // run as ONE fused action (Audit.reportAll) — the reference
     // serializes them only because it is one driver script looping
     // (audit_report.py:155), not because of a data dependency. (Running
-    // them as four concurrent report() futures does not actually
+    // them as four concurrent single-source audits does not actually
     // parallelize: tiny jobs serialize behind driver scheduling.)
     val auditNames = Seq("sales", "customers", "products", "suppliers")
     // the audit ACTION runs on a side thread while the driver builds the
@@ -415,15 +388,8 @@ object ReferenceParity {
     val auditPool = java.util.concurrent.Executors.newFixedThreadPool(1)
     val auditEc =
       scala.concurrent.ExecutionContext.fromExecutor(auditPool)
-    val fAudits = scala.concurrent.Future(phase("audit") {
-      Audit.reportAll(auditNames.map { n =>
-        val spec = sourceSpecs(n)
-        Audit.SourceAudit(n, raw(n),
-          spec.rules.map { case (c, kind, bad) =>
-            Audit.FormatRule(c, bad, expectedTypeOf(kind)) },
-          idColumn = Some(spec.idColumn))
-      })
-    })(auditEc)
+    val fAudits = scala.concurrent.Future(
+      Audit.reportAll(auditNames.map(n => sourceAudit(n, raw(n)))))(auditEc)
     // taxrate: ISO + deterministic TaxRateID (W1, add_columns.py:170-173)
     // — built (and analyzed) while the audit executes
     val taxEnriched = Gold.orderedIdBounded(
@@ -496,17 +462,18 @@ object ReferenceParity {
     // Northwind-bounded by construction (the largest source is sales at
     // 11,371 raw rows — fixed parity data, NOT SF-scaling), which is why
     // (a) id assignment uses Gold.orderedIdBounded (lazy single-partition
-    // row_number; zero construction jobs) and (b) bare dimSide(s, ) hints
-    // are safe here. Do NOT copy either pattern into an SF-scaling path —
-    // those use Gold's parallel orderedId and DimBroadcast.hint's size
-    // guard.
+    // row_number; zero construction jobs) and (b) unguarded dimSide
+    // shuffle_hash hints are safe here: the build side of every hinted
+    // join fits one task's hash map. Do NOT copy either pattern into an
+    // SF-scaling path — those use Gold's parallel orderedId and
+    // DimBroadcast.hint's size guard.
 
     // ---- tax conformance (J2, sales_tax.py:62-67) ----
     val salesIso = CountryCodes.withIsoCode(salesGeo, "ShipCountry",
         "ISO_ShipCountry")
       .withColumn("OrderYear", year(col("OrderDate").cast("date")))
     val salesWithTax = salesIso.join(
-        dimSide(s, taxEnriched.select(col("Country").as("ISO_Country"),
+        dimSide(taxEnriched.select(col("Country").as("ISO_Country"),
           col("Year").as("TaxYear"), col("TaxRateID"))),
         col("ISO_ShipCountry") === col("ISO_Country") &&
           col("OrderYear") === col("TaxYear"), "left")
@@ -514,18 +481,18 @@ object ReferenceParity {
 
     // ---- currency conformance (J3-J5, W2, sales_currency.py) ----
     val productCountry = productsClean
-      .join(dimSide(s, suppliersClean.select(col("SupplierID"),
+      .join(dimSide(suppliersClean.select(col("SupplierID"),
         col("Country").as("ProductCountry"))), Seq("SupplierID"))
       .select("ProductID", "ProductCountry")
     val salesWithCountry = salesWithTax
-      .join(dimSide(s, productCountry), Seq("ProductID"), "left")
+      .join(dimSide(productCountry), Seq("ProductID"), "left")
     val salesProdIso = CountryCodes.withIsoCode(salesWithCountry,
       "ProductCountry", "ISO_ProdCountry")
     // exact-date join carries the ExchangeID (reference J5 semantics)...
     val exRates = exchangeEnriched.select(
       col("country").as("ex_country"), col("date").as("ex_date"),
       col("ExchangeID"), col("exchange_rate_to_euro"))
-    val salesWithEx = salesProdIso.join(dimSide(s, exRates),
+    val salesWithEx = salesProdIso.join(dimSide(exRates),
         col("ISO_ProdCountry") === col("ex_country") &&
           col("OrderDate") === col("ex_date"), "left")
     // ...and the rate falls back as-of style: last known rate at-or-before
@@ -561,7 +528,7 @@ object ReferenceParity {
       .filter(col("last_rate").isNotNull)
       .select("k", "t", "last_rate")
     val salesConformed = salesWithEx
-      .join(dimSide(s, lastRate),
+      .join(dimSide(lastRate),
         col("ISO_ProdCountry") === col("k") && col("OrderDate") === col("t"),
         "left")
       .withColumn("exchange_rate_to_euro",
@@ -584,7 +551,7 @@ object ReferenceParity {
       .select("ProductID").distinct()
       .withColumnRenamed("ProductID", "SalesProductID")
     val productsFlagged = productsEnriched
-      .join(dimSide(s, recentProducts),
+      .join(dimSide(recentProducts),
         col("ProductID") === col("SalesProductID"), "left")
       .withColumn("anomaly_type",
         when(col("product_status") === "Active" &&
@@ -638,7 +605,7 @@ object ReferenceParity {
         "IsCurrent", "EffectiveStartDate", "EffectiveEndDate")
 
     val dimStore = key(
-      productsClean.join(dimSide(s, suppliersClean), Seq("SupplierID"))
+      productsClean.join(dimSide(suppliersClean), Seq("SupplierID"))
         .select(col("SupplierID").as("StoreID"),
           col("CompanyName").as("StoreName"), col("Address"), col("City"),
           col("PostalCode"), col("Country"))
@@ -657,22 +624,22 @@ object ReferenceParity {
       "CalendarDate", "CalendarKey")
 
     val productsWithStore = dimProducts
-      .join(dimSide(s, dimStore.select(col("StoreID"), col("StoreKey"))),
+      .join(dimSide(dimStore.select(col("StoreID"), col("StoreKey"))),
         col("SupplierID") === col("StoreID"), "left")
       .select("ProductID", "ProductKey", "StoreKey")
 
     val fact = salesConformed
-      .join(dimSide(s, dimCustomers.select("CustomerID", "CustomerKey")),
+      .join(dimSide(dimCustomers.select("CustomerID", "CustomerKey")),
         Seq("CustomerID"), "inner")
-      .join(dimSide(s, dimCalendar.select("CalendarDate", "CalendarKey")),
+      .join(dimSide(dimCalendar.select("CalendarDate", "CalendarKey")),
         col("OrderDate") === col("CalendarDate"), "inner")
-      .join(dimSide(s, dimTaxRate.select(col("TaxRateKey"),
+      .join(dimSide(dimTaxRate.select(col("TaxRateKey"),
         col("TaxRateID").as("t_id"))), col("TaxRateID") === col("t_id"),
         "inner")
-      .join(dimSide(s, dimExchange.select(col("ExchangeKey"),
+      .join(dimSide(dimExchange.select(col("ExchangeKey"),
         col("ExchangeID").as("e_id"))), col("ExchangeID") === col("e_id"),
         "inner")
-      .join(dimSide(s, productsWithStore), Seq("ProductID"), "left")
+      .join(dimSide(productsWithStore), Seq("ProductID"), "left")
       .filter(col("StoreKey").isNotNull)
     val factSales = Gold.orderedIdBounded(fact,
         Seq("OrderID", "ProductID", "Quantity", "Discount", "OrderDate"),

@@ -14,71 +14,6 @@ object ProbePerf {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     val spark = Sessions.build("probe-perf", Sessions.cpusFromEnv(32))
-    if (name == "ref_pipeline_e2e") {
-      // job accounting: how many jobs each phase launches and their
-      // aggregate scheduler time — the e2e latency lever is job COUNT
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val jobNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-      val starts =
-        new scala.collection.concurrent.TrieMap[Int, (Long, String)]()
-      // GRAFT_PROBE_JOBS=1: per-job log (duration + call site) to see
-      // WHERE the job count comes from
-      val logJobs = sys.env.get("GRAFT_PROBE_JOBS").contains("1")
-      val jobLog =
-        new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            val site = js.stageInfos.map(si =>
-              s"${si.numTasks}t:${si.name.takeWhile(_ != ' ')}")
-              .mkString(s"${js.stageInfos.size} stages [", ",", "]")
-            starts.put(js.jobId, (js.time, site))
-          }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-            starts.remove(je.jobId).foreach { case (t0, site) =>
-              jobs.incrementAndGet()
-              jobNanos.addAndGet((je.time - t0) * 1000000L)
-              if (logJobs) jobLog.add((je.jobId, je.time - t0, site))
-            }
-        })
-      // GRAFT_PROBE_COLD=1 reproduces Bench's measurement (codegen warm,
-      // caches cleared before each rep)
-      val cold = sys.env.get("GRAFT_PROBE_COLD").contains("1")
-      for (i <- 1 to reps) {
-        if (cold) spark.catalog.clearCache()
-        jobs.set(0); jobNanos.set(0L)
-        val t0 = System.nanoTime()
-        val (t1, runJobs, t2, t3) =
-          graft.pipeline.ReferenceParity.smallDataTuned(spark) {
-            val out = graft.pipeline.ReferenceParity.run(spark,
-              "/root/reference/data/raw", "2024-11-24")
-            val t1 = System.nanoTime()
-            val runJobs = jobs.get()
-            out.factSales.write.format("noop").mode(SaveMode.Overwrite)
-              .save()
-            val t2 = System.nanoTime()
-            out.dimProducts.write.format("noop").mode(SaveMode.Overwrite)
-              .save()
-            (t1, runJobs, t2, System.nanoTime())
-          }
-        Thread.sleep(300) // let the listener bus drain
-        println(f"PROBE $name rep$i total ${(t3 - t0) / 1e9}%.2f s " +
-          f"(run ${(t1 - t0) / 1e9}%.2f, fact ${(t2 - t1) / 1e9}%.2f, " +
-          f"dims ${(t3 - t2) / 1e9}%.2f; jobs: run=$runJobs " +
-          f"all=${jobs.get()} busy=${jobNanos.get() / 1e9}%.2f s)")
-        if (logJobs && i == reps) {
-          import scala.jdk.CollectionConverters._
-          jobLog.asScala.toSeq.sortBy(_._1).foreach { case (id, ms, site) =>
-            println(f"  job $id%3d $ms%5d ms  $site")
-          }
-        }
-        jobLog.clear()
-      }
-      spark.stop()
-      return
-    }
     val q = Registry.all.find(_.name == name).get
     graft.core.Tables.all.foreach { t =>
       try graft.core.Tables.t(spark, sfDir, t).count()

@@ -116,7 +116,7 @@ class CleaningSpec extends AnyFunSuite {
 
   test("dropDuplicateColumns repairs the OrderID0/OrderID14 situation") {
     val df = Seq((1, 1, "x")).toDF("OrderID0", "OrderID14", "Status")
-    val report = Audit.report(df, Nil)
+    val report = Audit.reportAll(Seq(Audit.SourceAudit("t", df, Nil)))("t")
     assert(report.duplicateColumnGroups ==
       Map("OrderID" -> Seq("OrderID0", "OrderID14")))
     val repaired = Cleaning.dropDuplicateColumns(df, report)
