@@ -62,10 +62,4 @@ object Tables {
     val ev = events(s, d)
     ev.withColumn("ts_us", eventTsUs(ev))
   }
-
-  /** Session factory used by tests and ad-hoc mains. Delegates to
-    * [[Sessions.build]] so semantic confs can't drift across entry points.
-    */
-  def localSession(appName: String, cores: Int = 4): SparkSession =
-    Sessions.build(appName, cores)
 }

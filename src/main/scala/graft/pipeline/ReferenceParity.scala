@@ -288,8 +288,9 @@ object ReferenceParity {
     // single-partition shuffle join chains its stages inside the
     // action's one job with no reducer fan-out to schedule. The
     // threshold is read at physical-planning (action) time, inside this
-    // scope for the bounded pipeline's callers; it keeps the un-hinted
-    // joins off broadcast, and dimSide's hint makes the dim joins hash.
+    // scope for the bounded pipeline's callers; it keeps the rate
+    // spine's cross join off broadcast, and dimSide's hint makes every
+    // equi-join hash.
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try body
     finally {
@@ -308,7 +309,9 @@ object ReferenceParity {
     * frame: with auto-broadcast at -1 the planner's own size-based SHJ
     * path (canBuildLocalHashMap) is disabled too, and a bare frame would
     * sort-merge — two serial sort operators per join in the stage chain
-    * for thousands of rows.
+    * for thousands of rows. Every equi-join in [[runFrom]] takes it on
+    * its build side (ReferenceParityFixtureSpec checks that no output
+    * plans a SortMergeJoin).
     */
   private def dimSide(df: DataFrame): DataFrame = df.hint("shuffle_hash")
 
@@ -444,7 +447,7 @@ object ReferenceParity {
     val purchases = salesGeo.groupBy("CustomerID")
       .agg(sum("TotalAmount").as("total_purchase_amount"))
     val customersEnriched = customersGeo
-      .join(purchases, Seq("CustomerID"), "left")
+      .join(dimSide(purchases), Seq("CustomerID"), "left")
       .na.fill(Map("total_purchase_amount" -> 0.0))
       .withColumn("status_client",
         when(col("total_purchase_amount") > 10000, "VIP")
@@ -523,7 +526,7 @@ object ReferenceParity {
         .unboundedPreceding, 0)
     val lastRate = ratePoints.select("k").distinct()
       .crossJoin(rateDays) // bounded: |countries| x data-span days
-      .join(ratePoints, Seq("k", "t"), "left")
+      .join(dimSide(ratePoints), Seq("k", "t"), "left")
       .withColumn("last_rate", last("r", ignoreNulls = true).over(fillW))
       .filter(col("last_rate").isNotNull)
       .select("k", "t", "last_rate")
@@ -584,7 +587,7 @@ object ReferenceParity {
     val lastSold = salesConformed.groupBy("ProductID")
       .agg(max("OrderDate").as("LastSoldDate"))
     val dimProducts = key(
-      productsEnriched.join(lastSold, Seq("ProductID"), "left")
+      productsEnriched.join(dimSide(lastSold), Seq("ProductID"), "left")
         .withColumn("ProductStatus",
           when(col("product_status") === "Discontinued", "Obsolete")
             .when(col("UnitsInStock") === 0 && col("UnitsOnOrder") === 0 &&

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.{Anomalies, Cleaning}
 import graft.operators.Anomalies.AnomalyRule
@@ -106,18 +109,50 @@ object StreamOps {
   def scd2ForeachBatch(dimPath: String, naturalKey: String,
                        compareCols: Seq[String],
                        asOfForBatch: Long => String)
+      : (DataFrame, Long) => Unit =
+    snapshotSink(dimPath) { (batch, current, batchId) =>
+      graft.operators.ScdMerge.merge(
+        current.getOrElse(throw new IllegalStateException(
+          s"scd2ForeachBatch: no dim to merge into at $dimPath")),
+        batch, naturalKey, compareCols,
+        asOf = asOfForBatch(batchId), closeMissing = false)
+    }
+
+  /** The one rewrite-per-batch sink, shared by every BOUNDED standing
+    * state here (the SCD2 dim, histograms, counters, sketches, cluster
+    * labels). It skips an empty batch and a batch the live state's
+    * `_GRAFT_BATCH` marker says was already absorbed; otherwise
+    * `fold(batch, prior, batchId)` — `prior` is the live state, None
+    * before the first publish — becomes the new state through
+    * [[publishAtomic]], marked with the batch id. Corpus-sized states
+    * take the delta-log shape instead ([[LsmStore]]).
+    */
+  private def snapshotSink(statePath: String)(
+      fold: (DataFrame, Option[DataFrame], Long) => DataFrame)
       : (DataFrame, Long) => Unit = { (batch, batchId) =>
     if (!batch.isEmpty) {
       val spark = batch.sparkSession
-      if (!appliedBatch(spark, dimPath).contains(batchId)) {
-        val current = spark.read.parquet(dimPath)
-        val merged = graft.operators.ScdMerge.merge(
-            current, batch, naturalKey, compareCols,
-            asOf = asOfForBatch(batchId), closeMissing = false)
-        publishAtomic(spark, dimPath, merged, Some(batchId))
+      if (!appliedBatch(spark, statePath).contains(batchId)) {
+        val live = new org.apache.hadoop.fs.Path(statePath)
+        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val prior =
+          if (fs.exists(live)) Some(spark.read.parquet(statePath)) else None
+        publishAtomic(spark, statePath, fold(batch, prior, batchId),
+          Some(batchId))
       }
     }
   }
+
+  /** The additive fold most snapshot states share: the batch's partial
+    * state `part` alone on the first batch, else prior ∪ part with
+    * each of `sums` summed by `keys`. */
+  private def sumByKeys(prior: Option[DataFrame], part: DataFrame,
+                        keys: Seq[String], sums: String*): DataFrame =
+    prior.fold(part) { p =>
+      val aggs = sums.map(c => sum(c).as(c))
+      p.unionByName(part).groupBy(keys.head, keys.tail: _*)
+        .agg(aggs.head, aggs.tail: _*)
+    }
 
   /** Stage-then-rename publish of a rewritten parquet state dir (shared
     * by the foreachBatch sinks). Leaves either the prior version live or
@@ -188,25 +223,13 @@ object StreamOps {
     */
   def histogramForeachBatch(histPath: String, valueCol: String,
                             bucketWidth: Double)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      if (!appliedBatch(spark, histPath).contains(batchId)) {
-        val part = batch
-          .select(floor(col(valueCol) / lit(bucketWidth)).cast("long")
-            .as("b"))
-          .groupBy("b").agg(count(lit(1)).as("n"))
-        val live = new org.apache.hadoop.fs.Path(histPath)
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(live))
-            spark.read.parquet(histPath).unionByName(part)
-              .groupBy("b").agg(sum("n").as("n"))
-          else part
-        publishAtomic(spark, histPath, merged, Some(batchId))
-      }
+      : (DataFrame, Long) => Unit =
+    snapshotSink(histPath) { (batch, prior, _) =>
+      sumByKeys(prior, batch
+        .select(floor(col(valueCol) / lit(bucketWidth)).cast("long")
+          .as("b"))
+        .groupBy("b").agg(count(lit(1)).as("n")), Seq("b"), "n")
     }
-  }
 
   /** Streaming filter-funnel accounting — the l58 observability
     * counters ([[graft.operators.TextAnalysis.filterFunnel]]) folded
@@ -222,115 +245,29 @@ object StreamOps {
     */
   def funnelForeachBatch(statePath: String,
                          rules: Seq[(String, org.apache.spark.sql.Column)])
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      if (!appliedBatch(spark, statePath).contains(batchId)) {
-        val part = graft.operators.TextAnalysis.filterFunnel(batch, rules)
-        val live = new org.apache.hadoop.fs.Path(statePath)
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(live))
-            spark.read.parquet(statePath).unionByName(part)
-              .groupBy("rule_idx", "rule")
-              .agg(sum("n_failing").as("n_failing"),
-                sum("n_killed_here").as("n_killed_here"),
-                sum("n_survivors").as("n_survivors"))
-          else part
-        publishAtomic(spark, statePath, merged, Some(batchId))
-      }
+      : (DataFrame, Long) => Unit =
+    snapshotSink(statePath) { (batch, prior, _) =>
+      sumByKeys(prior,
+        graft.operators.TextAnalysis.filterFunnel(batch, rules),
+        Seq("rule_idx", "rule"), "n_failing", "n_killed_here",
+        "n_survivors")
     }
-  }
 
   /** STREAMING ordered-funnel state (x26's activation dashboard
-    * maintained at ingest — round-15 verdict item 7): the standing
-    * state is per-user earliest-timestamp-per-stage
-    * ([[graft.operators.Retention.stageMins]]), which merges across
-    * batches by MIN — order-insensitive, so late/out-of-order events
-    * land exactly where the one-shot query would put them. State is
-    * |users| rows of (stages+1) longs; the dashboard is computed from
-    * state on demand by [[stageFunnelFromState]] with the SAME code
-    * x26 runs, so streamed == one-shot by construction (StreamOpsSpec
-    * pins it on shuffled batches).
-    */
-  def stageFunnelForeachBatch(statePath: String, userCol: String,
-                              typeCol: String, tsCol: String,
-                              stages: Seq[String])
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      if (!appliedBatch(spark, statePath).contains(batchId)) {
-        val part = graft.operators.Retention.stageMins(
-          batch, userCol, typeCol, tsCol, stages)
-        val live = new org.apache.hadoop.fs.Path(statePath)
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(live))
-            stageMinsMerge(spark.read.parquet(statePath).unionByName(part),
-              userCol, stages)
-          else part
-        publishAtomic(spark, statePath, merged, Some(batchId))
-      }
-    }
-  }
-
-  /** The x26 dashboard row from the standing funnel state — equal to
-    * the one-shot query over everything streamed so far. */
-  def stageFunnelFromState(spark: org.apache.spark.sql.SparkSession,
-                           statePath: String,
-                           stages: Seq[String]): DataFrame =
-    graft.operators.Retention.funnelCounts(
-      spark.read.parquet(statePath), stages)
-
-  /** STREAMING retention-cohort state (x27 at ingest): per-user
-    * (cohort_day, 8-bit active-day mask) — two longs per user forever,
-    * closed under merge (see [[graft.operators.Retention]]: an
-    * earlier-day arrival shifts existing days to HIGHER offsets, some
-    * permanently out of the window, exactly as the one-shot filter
-    * would). Per batch: reduce the batch to distinct (user, day)
-    * pairs, union with the state EXPLODED back to its pairs (≤ 8 per
-    * user), re-reduce. [[retentionFromState]] then computes x27's
-    * exact dashboard from the state.
-    */
-  def retentionForeachBatch(statePath: String, userCol: String,
-                            tsUsCol: String)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      if (!appliedBatch(spark, statePath).contains(batchId)) {
-        import graft.operators.Retention
-        val fresh = Retention.activeDays(batch, userCol, tsUsCol)
-        val live = new org.apache.hadoop.fs.Path(statePath)
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val pairs =
-          if (fs.exists(live))
-            Retention.stateDays(spark.read.parquet(statePath))
-              .unionByName(fresh).distinct()
-          else fresh
-        publishAtomic(spark, statePath, Retention.retentionState(pairs),
-          Some(batchId))
-      }
-    }
-  }
-
-  /** The x27 activation dashboard from the standing retention state. */
-  def retentionFromState(spark: org.apache.spark.sql.SparkSession,
-                         statePath: String): DataFrame =
-    graft.operators.Retention.retentionTable(
-      spark.read.parquet(statePath))
-
-  /** [[stageFunnelForeachBatch]]'s DELTA-LOG form — the rewrite-per-
-    * batch pattern above is right for BOUNDED states (the |rules|-row
-    * funnel, the |sources|-row quota) but the per-USER state is
-    * corpus-sized: rewriting 10⁸ user rows every micro-batch is the
-    * row-6 anti-pattern. Here each batch appends ONLY its own partial
+    * maintained at ingest): the standing state is per-user
+    * earliest-timestamp-per-stage ([[graft.operators.Retention.stageMins]]),
+    * which merges across batches by MIN — order-insensitive, so
+    * late/out-of-order events land exactly where the one-shot query
+    * would put them, and the dashboard is computed from the state by
+    * the SAME code x26 runs ([[stageFunnelFromDeltas]]). The state is
+    * per-USER, i.e. corpus-sized, so it is a delta log, not a
+    * rewritten snapshot: each batch appends ONLY its own partial
     * stage-mins to `statePath/d=<batchId>` (O(batch) writes,
     * mode-overwrite = retry-idempotent, the dedup-index LSM shape);
-    * the standing mins are the min-merge of the deltas at read time
-    * ([[stageFunnelFromDeltas]]), and min-merge absorbs any duplicate
-    * rows a crashed compaction leaves. [[tieredForeachBatch]] over
-    * [[LsmStore.stageFunnel]] bounds the listed-dir count exactly like
-    * the dedup index.
+    * the standing mins are the min-merge of the deltas at read time,
+    * and min-merge absorbs any duplicate rows a crashed compaction
+    * leaves. [[tieredForeachBatch]] over [[LsmStore.stageFunnel]]
+    * bounds the listed-dir count exactly like the dedup index.
     */
   def stageFunnelForeachBatchDelta(statePath: String, userCol: String,
                                    typeCol: String, tsCol: String,
@@ -347,15 +284,13 @@ object StreamOps {
     * and the x26 dashboard row from them. */
   def stageFunnelMinsFromDeltas(spark: org.apache.spark.sql.SparkSession,
                                 statePath: String, userCol: String,
-                                stages: Seq[String]): DataFrame = {
-    val all = readDeltaDirs(spark, statePath).getOrElse(
-      throw new IllegalStateException(
-        s"stageFunnelMinsFromDeltas: no deltas under $statePath"))
-    stageMinsMerge(all, userCol, stages)
-  }
+                                stages: Seq[String]): DataFrame =
+    stageMinsMerge(
+      readLog(spark, statePath, LsmStore.stageFunnel(userCol, stages)),
+      userCol, stages)
 
-  /** Min-of-mins by user: folds any union of stage-min rows (state,
-    * batch partials, deltas, duplicates) into the standing mins. */
+  /** Min-of-mins by user: folds any union of stage-min rows (batch
+    * partials, deltas, duplicates) into the standing mins. */
   private def stageMinsMerge(rows: DataFrame, userCol: String,
                              stages: Seq[String]): DataFrame = {
     val aggs = stages.map(t => min(s"t_$t").as(s"t_$t"))
@@ -369,13 +304,17 @@ object StreamOps {
       stageFunnelMinsFromDeltas(spark, statePath, userCol, stages),
       stages)
 
-  /** [[retentionForeachBatch]]'s DELTA-LOG form (same motivation as
-    * the funnel delta above — the retention state is |users| rows):
-    * each batch appends its OWN (cohort_day, mask) partial state;
-    * the standing state is re-reduced from the deltas' exploded day
-    * pairs at read ([[retentionStateFromDeltas]]). Duplicate day
-    * pairs from retries/crashed compactions are absorbed by the
-    * distinct() in the re-reduce.
+  /** STREAMING retention-cohort state (x27 at ingest): per-user
+    * (cohort_day, 8-bit active-day mask) — two longs per user forever,
+    * closed under merge (see [[graft.operators.Retention]]: an
+    * earlier-day arrival shifts existing days to HIGHER offsets, some
+    * permanently out of the window, exactly as the one-shot filter
+    * would). Per-user means corpus-sized, so this is a delta log like
+    * the funnel above: each batch appends its OWN (cohort_day, mask)
+    * partial state; the standing state is re-reduced from the deltas'
+    * exploded day pairs at read ([[retentionStateFromDeltas]]).
+    * Duplicate day pairs from retries/crashed compactions are absorbed
+    * by the distinct() in the re-reduce.
     */
   def retentionForeachBatchDelta(statePath: String, userCol: String,
                                  tsUsCol: String)
@@ -390,9 +329,7 @@ object StreamOps {
 
   def retentionStateFromDeltas(spark: org.apache.spark.sql.SparkSession,
                                statePath: String): DataFrame =
-    retentionMerge(readDeltaDirs(spark, statePath).getOrElse(
-      throw new IllegalStateException(
-        s"retentionStateFromDeltas: no deltas under $statePath")))
+    retentionMerge(readLog(spark, statePath, LsmStore.retention))
 
   /** The distinct re-reduce: any union of retention states (deltas,
     * segments, duplicates) back to one (cohort_day, mask) per user. */
@@ -401,6 +338,7 @@ object StreamOps {
     Retention.retentionState(Retention.stateDays(rows).distinct())
   }
 
+  /** The x27 activation dashboard from the standing retention state. */
   def retentionFromDeltas(spark: org.apache.spark.sql.SparkSession,
                           statePath: String): DataFrame =
     graft.operators.Retention.retentionTable(
@@ -418,20 +356,17 @@ object StreamOps {
     * inflates its lines' df by the duplicate count — the conservative
     * direction for a boilerplate KILL threshold. Retries are
     * idempotent by construction (mode-overwrite of the batch's own
-    * dir; no read of prior state feeds the output).
-    *
-    * `hashedLineKeys` defaults TRUE here (8-byte standing keys — the
-    * state is long-lived by definition); pass false only when the
-    * stored keys must remain inspectable strings.
+    * dir; no read of prior state feeds the output). Line keys are
+    * always hashed (8-byte standing keys — the state is long-lived by
+    * definition).
     */
   def lineFreqForeachBatch(statePath: String, idCol: String,
-                           textCol: String, delim: String = "\n",
-                           hashedLineKeys: Boolean = true)
+                           textCol: String, delim: String = "\n")
       : (DataFrame, Long) => Unit = { (batch, batchId) =>
     if (!batch.isEmpty) {
       graft.operators.Dedup
         .lineDocFreq(graft.operators.Dedup.lineTable(
-          batch, idCol, textCol, delim, hashedLineKeys))
+          batch, idCol, textCol, delim, true)) // hashed line keys
         .withColumn("d", col("line_df")).drop("line_df")
         .withColumn("first_batch", lit(batchId))
         .write.mode("overwrite").parquet(s"$statePath/d=$batchId")
@@ -443,15 +378,9 @@ object StreamOps {
     * no batch has run (callers joining against it see no hot lines).
     */
   def lineFreq(spark: org.apache.spark.sql.SparkSession,
-               statePath: String, hashedLineKeys: Boolean = true)
-      : DataFrame =
-    readDeltaDirs(spark, statePath)
-      .map(_.groupBy("lk").agg(sum("d").as("line_df")))
-      .getOrElse {
-        import spark.implicits._
-        if (hashedLineKeys) Seq.empty[(Long, Long)].toDF("lk", "line_df")
-        else Seq.empty[(String, Long)].toDF("lk", "line_df")
-      }
+               statePath: String): DataFrame =
+    readLog(spark, statePath, LsmStore.lineFreq)
+      .groupBy("lk").agg(sum("d").as("line_df"))
 
   /** Boilerplate-filter a document frame against the STANDING
     * line-frequency state: the same decision/reassembly stage as the
@@ -461,12 +390,12 @@ object StreamOps {
     */
   def lineFreqFilterWithState(docs: DataFrame, idCol: String,
                               textCol: String, maxDocFreq: Long,
-                              statePath: String, delim: String = "\n",
-                              hashedLineKeys: Boolean = true): DataFrame =
+                              statePath: String, delim: String = "\n")
+      : DataFrame =
     graft.operators.Dedup.lineFilterAgainst(
       graft.operators.Dedup.lineTable(docs, idCol, textCol, delim,
-        hashedLineKeys),
-      lineFreq(docs.sparkSession, statePath, hashedLineKeys),
+        true), // hashed line keys
+      lineFreq(docs.sparkSession, statePath),
       maxDocFreq, delim, idCol)
 
   /** Streaming vocabulary heavy hitters via the mergeable Misra–Gries
@@ -482,29 +411,19 @@ object StreamOps {
     */
   def heavyHittersForeachBatch(statePath: String, textCol: String,
                                capacity: Int)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    if (!batch.isEmpty) {
+      : (DataFrame, Long) => Unit =
+    snapshotSink(statePath) { (batch, prior, _) =>
       val spark = batch.sparkSession
       import spark.implicits._
-      if (!appliedBatch(spark, statePath).contains(batchId)) {
-        val mg = new graft.functions.MisraGries(capacity)
-        val part = batch
-          .select(explode(graft.operators.TextAnalysis.tokens(textCol))
-            .as("t"))
-          .as[String].select(mg.toColumn.name("s")).head()
-        val live = new org.apache.hadoop.fs.Path(statePath)
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(live)) mg.merge(readMgState(spark, statePath), part)
-          else part
-        val rows = merged.counts.toSeq
-          .map { case (t, c) => (Option(t), c) } :+
-          ((Option.empty[String], merged.n))
-        publishAtomic(spark, statePath, rows.toDF("term", "c"),
-          Some(batchId))
-      }
+      val mg = new graft.functions.MisraGries(capacity)
+      val part = batch
+        .select(explode(graft.operators.TextAnalysis.tokens(textCol))
+          .as("t"))
+        .as[String].select(mg.toColumn.name("s")).head()
+      val merged = prior.fold(part)(p => mg.merge(mgBuf(p), part))
+      (merged.counts.toSeq.map { case (t, c) => (Option(t), c) } :+
+        ((Option.empty[String], merged.n))).toDF("term", "c")
     }
-  }
 
   /** Streaming Count-Min frequency state (l51's sketch, maintained
     * incrementally): each micro-batch reduces to its own depth x width
@@ -518,31 +437,19 @@ object StreamOps {
     * batch-marker idempotence.
     */
   def cmsForeachBatch(statePath: String, textCol: String, depth: Int,
-                      width: Int): (DataFrame, Long) => Unit = {
-    (batch, batchId) =>
-      if (!batch.isEmpty) {
-        val spark = batch.sparkSession
-        import spark.implicits._
-        if (!appliedBatch(spark, statePath).contains(batchId)) {
-          val grid = graft.operators.TextAnalysis
-            .cmsTokenSketch(batch, textCol, depth, width)
-            .head().getSeq[Long](0)
-          val part = (for {
-            r <- 0 until depth; b <- 0 until width
-            c = grid(r * width + b) if c != 0L
-          } yield (r, b, c)).toDF("r", "bucket", "cnt")
-          val live = new org.apache.hadoop.fs.Path(statePath)
-          val fs = live.getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          val merged =
-            if (fs.exists(live))
-              spark.read.parquet(statePath).unionByName(part)
-                .groupBy("r", "bucket").agg(sum("cnt").as("cnt"))
-            else part
-          publishAtomic(spark, statePath, merged, Some(batchId))
-        }
-      }
-  }
+                      width: Int): (DataFrame, Long) => Unit =
+    snapshotSink(statePath) { (batch, prior, _) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val grid = graft.operators.TextAnalysis
+        .cmsTokenSketch(batch, textCol, depth, width)
+        .head().getSeq[Long](0)
+      val part = (for {
+        r <- 0 until depth; b <- 0 until width
+        c = grid(r * width + b) if c != 0L
+      } yield (r, b, c)).toDF("r", "bucket", "cnt")
+      sumByKeys(prior, part, Seq("r", "bucket"), "cnt")
+    }
 
   /** Any-time point estimates from the [[cmsForeachBatch]] state: one
     * row per input token with its min-over-rows counter (absent cells
@@ -582,25 +489,14 @@ object StreamOps {
     */
   def quotaForeachBatch(histPath: String, sourceCol: String, idCol: String,
                         textCol: String)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      if (!appliedBatch(spark, histPath).contains(batchId)) {
-        val part = graft.operators.CorpusAssembly
+      : (DataFrame, Long) => Unit =
+    snapshotSink(histPath) { (batch, prior, _) =>
+      sumByKeys(prior, graft.operators.CorpusAssembly
           .scoreDocs(batch, sourceCol, idCol, textCol)
           .groupBy(sourceCol, "quality")
-          .agg(sum("n_tokens").as("tokens"))
-        val live = new org.apache.hadoop.fs.Path(histPath)
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(live))
-            spark.read.parquet(histPath).unionByName(part)
-              .groupBy(sourceCol, "quality").agg(sum("tokens").as("tokens"))
-          else part
-        publishAtomic(spark, histPath, merged, Some(batchId))
-      }
+          .agg(sum("n_tokens").as("tokens")),
+        Seq(sourceCol, "quality"), "tokens")
     }
-  }
 
   /** Streaming unigram-LM word-frequency state (l72's training input,
     * maintained at ingest): the trainer reads NOTHING but the
@@ -616,23 +512,12 @@ object StreamOps {
     */
   def unigramWordsForeachBatch(statePath: String, textCol: String,
                                maxWordLen: Int = 16)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      if (!appliedBatch(spark, statePath).contains(batchId)) {
-        val part = graft.operators.UnigramLm
-          .wordTable(batch, textCol, maxWordLen)
-        val live = new org.apache.hadoop.fs.Path(statePath)
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(live))
-            spark.read.parquet(statePath).unionByName(part)
-              .groupBy("word").agg(sum("wf").as("wf"))
-          else part
-        publishAtomic(spark, statePath, merged, Some(batchId))
-      }
+      : (DataFrame, Long) => Unit =
+    snapshotSink(statePath) { (batch, prior, _) =>
+      sumByKeys(prior,
+        graft.operators.UnigramLm.wordTable(batch, textCol, maxWordLen),
+        Seq("word"), "wf")
     }
-  }
 
   /** Train a unigram-LM vocabulary from the standing word-frequency
     * state — equal to [[graft.operators.UnigramLm.train]] over every
@@ -658,26 +543,15 @@ object StreamOps {
     * re-scan.
     */
   def mergeWordsForeachBatch(statePath: String, textCol: String)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      if (!appliedBatch(spark, statePath).contains(batchId)) {
-        val part = batch
+      : (DataFrame, Long) => Unit =
+    snapshotSink(statePath) { (batch, prior, _) =>
+      sumByKeys(prior, batch
           .select(explode(expr(
             s"regexp_extract_all(lower($textCol), '[a-z]+', 0)"))
             .as("word"))
-          .groupBy("word").agg(count(lit(1)).cast("long").as("cnt"))
-        val live = new org.apache.hadoop.fs.Path(statePath)
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(live))
-            spark.read.parquet(statePath).unionByName(part)
-              .groupBy("word").agg(sum("cnt").cast("long").as("cnt"))
-          else part
-        publishAtomic(spark, statePath, merged, Some(batchId))
-      }
+          .groupBy("word").agg(count(lit(1)).cast("long").as("cnt")),
+        Seq("word"), "cnt")
     }
-  }
 
   /** BPE merges from the standing word-frequency state — equal to
     * [[graft.operators.Bpe.train]] over every document streamed so
@@ -716,39 +590,33 @@ object StreamOps {
     */
   def componentsForeachBatch(statePath: String,
                              srcCol: String, dstCol: String)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      if (!appliedBatch(spark, statePath).contains(batchId)) {
-        val fresh = batch.select(
-          col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst"))
-        val live = new org.apache.hadoop.fs.Path(statePath)
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val edges =
-          if (fs.exists(live))
-            spark.read.parquet(statePath)
-              .filter(col("node") =!= col("component"))
-              .select(col("node").as("src"), col("component").as("dst"))
-              .unionByName(fresh)
-          else fresh
-        val labels = graft.operators.GraphRank
-          .connectedComponents(edges, "src", "dst")
-        // singletons of the OLD state that gained no new edge keep
-        // their self-label: CC only returns nodes WITH an edge, and a
-        // previously-singleton node has none in the reduced graph
-        val merged =
-          if (fs.exists(live))
-            spark.read.parquet(statePath).select("node")
-              .unionByName(labels.select("node")).distinct()
-              .join(labels, Seq("node"), "left")
-              .select(col("node"),
-                coalesce(col("component"), col("node")).as("component"))
-          else labels.select("node", "component")
-        publishAtomic(spark, statePath, merged, Some(batchId))
-        labels.unpersist(blocking = false)
-      }
+      : (DataFrame, Long) => Unit = {
+    // connectedComponents returns its labels cached and the publish
+    // reads them, so the sink releases them once the batch is done
+    var labels = Option.empty[DataFrame]
+    val sink = snapshotSink(statePath) { (batch, prior, _) =>
+      val fresh = batch.select(
+        col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+      val edges = prior.fold(fresh)(_
+        .filter(col("node") =!= col("component"))
+        .select(col("node").as("src"), col("component").as("dst"))
+        .unionByName(fresh))
+      val l = graft.operators.GraphRank
+        .connectedComponents(edges, "src", "dst")
+      labels = Some(l)
+      // singletons of the OLD state that gained no new edge keep
+      // their self-label: CC only returns nodes WITH an edge, and a
+      // previously-singleton node has none in the reduced graph
+      prior.fold(l.select("node", "component"))(_.select("node")
+        .unionByName(l.select("node")).distinct()
+        .join(l, Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("component"), col("node")).as("component")))
     }
+    (batch, batchId) =>
+      try sink(batch, batchId)
+      finally { labels.foreach(_.unpersist(blocking = false)); labels = None }
   }
 
   /** The standing cluster labels — equal to one-shot
@@ -775,38 +643,31 @@ object StreamOps {
     */
   def noveltyForeachBatch(statePath: String, metricsPath: String,
                           keyCol: String, k: Int)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    if (!batch.isEmpty) {
+      : (DataFrame, Long) => Unit =
+    snapshotSink(statePath) { (batch, prior, batchId) =>
       val spark = batch.sparkSession
-      if (!appliedBatch(spark, statePath).contains(batchId)) {
-        import spark.implicits._
-        val fresh = graft.operators.DistinctSketch
-          .kminHashes(batch, col(keyCol), k).localCheckpoint(true)
-        val live = new org.apache.hadoop.fs.Path(statePath)
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior =
-          if (fs.exists(live)) spark.read.parquet(statePath).select("h")
-          else fresh.limit(0)
-        val merged = prior.unionByName(fresh).distinct()
-          .orderBy(col("h")).limit(k).localCheckpoint(true)
-        def estOf(sig: DataFrame): Double = {
-          val rows = sig.orderBy(col("h")).collect().map(_.getLong(0))
-          if (rows.length < k) rows.length.toDouble
-          else (k - 1).toDouble /
-            (rows.last.toDouble / math.pow(2.0, 64) + 0.5)
-        }
-        val before = estOf(prior)
-        val after = estOf(merged)
-        val batchEst = estOf(fresh)
-        Seq((batchId, batchEst, before, after,
-            math.max(0.0, after - before)))
-          .toDF("batch", "est_batch_distinct", "est_union_before",
-            "est_union_after", "est_novel")
-          .write.mode("overwrite").parquet(s"$metricsPath/batch=$batchId")
-        publishAtomic(spark, statePath, merged, Some(batchId))
+      import spark.implicits._
+      val fresh = graft.operators.DistinctSketch
+        .kminHashes(batch, col(keyCol), k).localCheckpoint(true)
+      val priorSig = prior.map(_.select("h")).getOrElse(fresh.limit(0))
+      val merged = priorSig.unionByName(fresh).distinct()
+        .orderBy(col("h")).limit(k).localCheckpoint(true)
+      def estOf(sig: DataFrame): Double = {
+        val rows = sig.orderBy(col("h")).collect().map(_.getLong(0))
+        if (rows.length < k) rows.length.toDouble
+        else (k - 1).toDouble /
+          (rows.last.toDouble / math.pow(2.0, 64) + 0.5)
       }
+      val before = estOf(priorSig)
+      val after = estOf(merged)
+      val batchEst = estOf(fresh)
+      Seq((batchId, batchEst, before, after,
+          math.max(0.0, after - before)))
+        .toDF("batch", "est_batch_distinct", "est_union_before",
+          "est_union_after", "est_novel")
+        .write.mode("overwrite").parquet(s"$metricsPath/batch=$batchId")
+      merged
     }
-  }
 
   /** Standing MEDIA near-dup clusters maintained at ingest — the full
     * streaming composition of the modality-shared signature machinery:
@@ -837,9 +698,8 @@ object StreamOps {
         col("fhash").cast("long").as("fhash")).distinct()
         .withColumn("d", lit(batchId)).localCheckpoint(true)
       // standing = deltas from EARLIER batches only (retry-stable)
-      val prior = readDeltaDirs(spark, indexPath)
-        .map(_.filter(col("d") < batchId))
-        .getOrElse(fresh.limit(0))
+      val prior = readLog(spark, indexPath, LsmStore.mediaSignatures)
+        .filter(col("d") < batchId)
       val all = prior.unionByName(fresh)
       val live = all.join(
         all.groupBy("fhash").agg(count(lit(1)).as("df"))
@@ -869,7 +729,7 @@ object StreamOps {
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
       // MATERIALIZE the pairs before touching the delta dir: on a
       // retry the lazy pair plan references the existing d=<batchId>
-      // files through readDeltaDirs, and the overwrite below deletes
+      // files through readLog, and the overwrite below deletes
       // them out from under it (FILE_NOT_EXIST at cluster-fold time)
       val pairsM = pairs.localCheckpoint(true)
       // publish the signature delta FIRST (so a crash between the two
@@ -898,37 +758,28 @@ object StreamOps {
     */
   def distinctSketchForeachBatch(statePath: String, tickCol: String,
                                  keyCol: String, lgK: Int = 12)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      if (!appliedBatch(spark, statePath).contains(batchId)) {
-        val part = graft.operators.DistinctSketch
-          .tickSketches(batch, tickCol, keyCol, lgK)
-        val live = new org.apache.hadoop.fs.Path(statePath)
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // Fold ONLY the ticks present in this batch. Ticks the batch
-        // doesn't touch pass through BYTE-IDENTICAL — re-passing them
-        // through the union gadget is not just wasted work, it can
-        // CHANGE their estimates: Datasketches' HIP estimator is
-        // insertion-order-sensitive, so a union pass's result depends
-        // on merge topology (partition layout), which the round-16
-        // local-cluster run proved by drifting an untouched tick's
-        // estimate by 0.5% when default parallelism changed.
-        val merged =
-          if (fs.exists(live)) {
-            val standing = spark.read.parquet(statePath)
-            val batchTicks = part.select("tick")
-            val folded = standing
-              .join(batchTicks, Seq("tick"), "left_semi")
-              .unionByName(part)
-              .groupBy("tick").agg(hll_union_agg(col("sk")).as("sk"))
-            standing.join(batchTicks, Seq("tick"), "left_anti")
-              .unionByName(folded)
-          } else part
-        publishAtomic(spark, statePath, merged, Some(batchId))
+      : (DataFrame, Long) => Unit =
+    snapshotSink(statePath) { (batch, prior, _) =>
+      val part = graft.operators.DistinctSketch
+        .tickSketches(batch, tickCol, keyCol, lgK)
+      // Fold ONLY the ticks present in this batch. Ticks the batch
+      // doesn't touch pass through BYTE-IDENTICAL — re-passing them
+      // through the union gadget is not just wasted work, it can
+      // CHANGE their estimates: Datasketches' HIP estimator is
+      // insertion-order-sensitive, so a union pass's result depends
+      // on merge topology (partition layout), which the round-16
+      // local-cluster run proved by drifting an untouched tick's
+      // estimate by 0.5% when default parallelism changed.
+      prior.fold(part) { standing =>
+        val batchTicks = part.select("tick")
+        val folded = standing
+          .join(batchTicks, Seq("tick"), "left_semi")
+          .unionByName(part)
+          .groupBy("tick").agg(hll_union_agg(col("sk")).as("sk"))
+        standing.join(batchTicks, Seq("tick"), "left_anti")
+          .unionByName(folded)
       }
     }
-  }
 
   /** Cumulative distinct estimates from the standing sketch state —
     * equal to [[graft.operators.DistinctSketch.cumulativeEstimates]]
@@ -1042,23 +893,12 @@ object StreamOps {
     */
   def mixForeachBatch(histPath: String, groupCol: String, idCol: String,
                       nBuckets: Int = 64)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      if (!appliedBatch(spark, histPath).contains(batchId)) {
-        val part = graft.operators.CorpusAssembly
-          .mixBucketHistogram(batch, groupCol, idCol, nBuckets)
-        val live = new org.apache.hadoop.fs.Path(histPath)
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(live))
-            spark.read.parquet(histPath).unionByName(part)
-              .groupBy(groupCol, "__b").agg(sum("__n").as("__n"))
-          else part
-        publishAtomic(spark, histPath, merged, Some(batchId))
-      }
+      : (DataFrame, Long) => Unit =
+    snapshotSink(histPath) { (batch, prior, _) =>
+      sumByKeys(prior, graft.operators.CorpusAssembly
+          .mixBucketHistogram(batch, groupCol, idCol, nBuckets),
+        Seq(groupCol, "__b"), "__n")
     }
-  }
 
   /** The mixing decision for everything streamed so far: sqrt-reweighted
     * targets and bucket classes from the merged state, edge buckets
@@ -1165,53 +1005,135 @@ object StreamOps {
     tieredForeachBatch(indexPath, LsmStore.dedup, maxDeltas, fanout)(
       dedupIndexForeachBatch(indexPath, flagsPath, idCol, textCol))
 
-  /** An LSM delta-log store described as data: each of its logs — the
-    * sub-directory under the store root that holds the `d=<batchId>`
-    * deltas, "" for the root itself — with its DUPLICATE-TOLERANT
-    * fold, which merges any union of that log's rows (the compacted
-    * dirs plus whatever a crash or replay left behind) given the
-    * compaction's `upTo`. [[compactStoreTiered]] compacts every log of
-    * a store; [[tieredForeachBatch]] fires it behind a sink.
+  /** One `d=<batchId>` delta log: the column schema of its rows (what
+    * [[readLog]] returns, as an empty frame, before the first delta)
+    * and, for a log the tiered compactor serves, its
+    * DUPLICATE-TOLERANT fold, which merges any union of the log's rows
+    * (the compacted dirs plus whatever a crash or replay left behind)
+    * given the compaction's `upTo`. A `cellPartitioned` log's deltas
+    * are written `partitionBy("cell")` (the ANN indexes).
     */
-  final case class LsmStore(
-      logs: (String, (DataFrame, Long) => DataFrame)*)
+  final case class DeltaLog(
+      schema: StructType,
+      fold: Option[(DataFrame, Long) => DataFrame] = None,
+      cellPartitioned: Boolean = false)
 
-  /** Every compacted store's logs and folds. */
+  /** An LSM delta-log store described as data: each of its logs by the
+    * sub-directory under the store root that holds its deltas, "" for
+    * the root itself. [[readLog]] reads any log of any store;
+    * [[compactStoreTiered]] compacts every log of a store whose logs
+    * all have folds; [[tieredForeachBatch]] fires it behind a sink.
+    */
+  final case class LsmStore(logs: (String, DeltaLog)*) {
+    def log(sub: String): DeltaLog =
+      logs.collectFirst { case (`sub`, l) => l }.getOrElse(
+        throw new IllegalArgumentException(
+          s"no log '$sub' in store logs ${logs.map(_._1).mkString(",")}"))
+  }
+
+  /** Every delta-log store: logs, schemas and folds. */
   object LsmStore {
-    private def minFirstBatch(key: String) =
-      (rows: DataFrame, _: Long) =>
-        rows.groupBy(key).agg(min("first_batch").as("first_batch"))
-    private def distinctBy(keys: String*) =
-      (rows: DataFrame, _: Long) => rows.dropDuplicates(keys)
+    /** A schema from a tuple type — the column types and nullability
+      * the `Seq.empty[T].toDF(names)` form gives. */
+    private def cols[T <: Product: TypeTag](names: String*): StructType =
+      StructType(Encoders.product[T].schema.fields.zip(names)
+        .map { case (f, n) => f.copy(name = n) })
+    private def minFirstBatch(schema: StructType, key: String) =
+      DeltaLog(schema, Some((rows: DataFrame, _: Long) =>
+        rows.groupBy(key).agg(min("first_batch").as("first_batch"))))
+    private def distinctBy(schema: StructType, keys: String*) =
+      DeltaLog(schema, Some((rows: DataFrame, _: Long) =>
+        rows.dropDuplicates(keys)))
+    private val shingleSets =
+      cols[(Long, Seq[Long], Long)]("doc", "sh", "first_batch")
 
     /** [[dedupIndexForeachBatch]]: min `first_batch` per hash. */
-    val dedup = LsmStore("" -> minFirstBatch("content_hash"))
+    val dedup = LsmStore("" -> minFirstBatch(
+      cols[(String, Long)]("content_hash", "first_batch"), "content_hash"))
     /** [[dupSpanIndexForeachBatch]]: min `first_batch` per gram key. */
-    val dupSpan = LsmStore("" -> minFirstBatch("gk"))
+    def dupSpan(hashedGramKeys: Boolean) = LsmStore("" -> minFirstBatch(
+      if (hashedGramKeys) cols[(Long, Long)]("gk", "first_batch")
+      else cols[(String, Long)]("gk", "first_batch"), "gk"))
     /** [[nearDupIndexForeachBatch]]: payloads are identical per key
       * by construction, so crash leftovers just drop. */
-    val nearDup = LsmStore("shingles" -> distinctBy("doc"),
-      "buckets" -> distinctBy("doc", "band"))
+    val nearDup = LsmStore(
+      "shingles" -> distinctBy(shingleSets, "doc"),
+      "buckets" -> distinctBy(cols[(Long, Int, Long, Long)](
+        "doc", "band", "bucket", "first_batch"), "doc", "band"))
     /** [[prefixDupIndexForeachBatch]] (the frozen `order/` table is no
       * log): a doc carries MANY prefix rows, so that key must include
       * the shingle or a merge would collapse a prefix to one row. */
-    val prefixDup = LsmStore("prefixes" -> distinctBy("doc", "shingle"),
-      "shingles" -> distinctBy("doc"))
+    val prefixDup = LsmStore(
+      "prefixes" -> distinctBy(cols[(Long, Long, Long, Long)](
+        "doc", "m", "shingle", "first_batch"), "doc", "shingle"),
+      "shingles" -> distinctBy(shingleSets, "doc"))
     /** [[edDistIndexForeachBatch]]'s segment, probe and text logs. */
-    val edDist = LsmStore("segs" -> distinctBy("doc", "key"),
-      "probes" -> distinctBy("doc", "key"), "texts" -> distinctBy("doc"))
+    val edDist = {
+      val keys = cols[(Long, Long, Long)]("doc", "key", "first_batch")
+      LsmStore("segs" -> distinctBy(keys, "doc", "key"),
+        "probes" -> distinctBy(keys, "doc", "key"),
+        "texts" -> distinctBy(cols[(Long, String, Int, Long)](
+          "doc", "txt", "len", "first_batch"), "doc"))
+    }
     /** [[lineFreqForeachBatch]] folds by ADDITION, so it is the store
       * that needs the segment manifests' exactly-once resolution. */
-    val lineFreq = LsmStore("" -> ((rows: DataFrame, upTo: Long) =>
-      rows.groupBy("lk").agg(sum("d").as("d"))
-        .withColumn("first_batch", lit(upTo))))
-    /** [[stageFunnelForeachBatchDelta]]: min-of-mins by user. */
+    val lineFreq = LsmStore("" -> DeltaLog(
+      cols[(Long, Long, Long)]("lk", "d", "first_batch"),
+      Some((rows: DataFrame, upTo: Long) =>
+        rows.groupBy("lk").agg(sum("d").as("d"))
+          .withColumn("first_batch", lit(upTo)))))
+    /** [[stageFunnelForeachBatchDelta]]: min-of-mins by user. The
+      * empty-log schema is the x26 stream's: long user ids and
+      * epoch-microsecond stage times. */
     def stageFunnel(userCol: String, stages: Seq[String]) =
-      LsmStore("" -> ((rows: DataFrame, _: Long) =>
-        stageMinsMerge(rows, userCol, stages)))
+      LsmStore("" -> DeltaLog(
+        StructType((userCol +: stages.map(t => s"t_$t"))
+          .map(StructField(_, LongType))),
+        Some((rows: DataFrame, _: Long) =>
+          stageMinsMerge(rows, userCol, stages))))
     /** [[retentionForeachBatchDelta]]: the distinct re-reduce. */
-    val retention =
-      LsmStore("" -> ((rows: DataFrame, _: Long) => retentionMerge(rows)))
+    val retention = LsmStore("" -> DeltaLog(
+      cols[(Long, Long, Long)]("user_id", "cohort_day", "mask"),
+      Some((rows: DataFrame, _: Long) => retentionMerge(rows))))
+
+    // logs no caller compacts: a schema only
+    /** [[dupClusterForeachBatch]]'s label log. */
+    val dupCluster = LsmStore("" -> DeltaLog(
+      cols[(Long, Long, Long)]("node", "component", "as_of")))
+    /** [[mediaNearDupForeachBatch]]'s signature index. */
+    val mediaSignatures = LsmStore("" -> DeltaLog(
+      cols[(Long, Long, Long)]("id", "fhash", "d")))
+    /** [[annIndexForeachBatch]]'s cell-partitioned vector index. */
+    val ann = LsmStore("" -> DeltaLog(
+      cols[(Long, Seq[Double], Double, Long)]("n_id", "cv", "cn", "cell"),
+      cellPartitioned = true))
+    /** [[annPqIndexForeachBatch]]'s cell-partitioned code index. */
+    val annPq = LsmStore("" -> DeltaLog(
+      cols[(Long, Seq[Long], Long)]("n_id", "codes", "cell"),
+      cellPartitioned = true))
+  }
+
+  /** The one delta-log reader: the live union of log `sub` of `store`
+    * under `root` (every dir [[liveDeltaDirs]] resolves), or, before
+    * the first delta, an empty frame of the log's schema — a
+    * LocalRelation, so a first batch's anti-join against it folds away
+    * at planning. A cell-partitioned log reads as ONE relation rooted
+    * at the log (`basePath`): both hive-style levels (`d=N`, `cell=K`)
+    * surface as partition columns, which is what lets a cell filter
+    * prune directories across ALL deltas at once; the batch level is a
+    * physical detail the reader drops.
+    */
+  def readLog(spark: org.apache.spark.sql.SparkSession, root: String,
+              store: LsmStore, sub: String = ""): DataFrame = {
+    val log = store.log(sub)
+    val path = logPath(root, sub)
+    val dirs = liveDeltaDirs(spark, path)
+    if (dirs.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        log.schema)
+    else if (log.cellPartitioned)
+      spark.read.option("basePath", path).parquet(dirs: _*).drop("d")
+    else spark.read.parquet(dirs: _*)
   }
 
   /** The one tiered sink: `sink` appends each batch's deltas under
@@ -1267,7 +1189,9 @@ object StreamOps {
                          root: String, store: LsmStore, upTo: Long,
                          fanout: Int = 4): Unit = {
     require(fanout >= 2, s"fanout must be >= 2, got $fanout")
-    for ((sub, fold) <- store.logs) {
+    require(store.logs.forall(_._2.fold.isDefined),
+      "compactStoreTiered: every log of the store needs a fold")
+    for ((sub, DeltaLog(_, Some(fold), _)) <- store.logs) {
       val log = logPath(root, sub)
       val logDir = new org.apache.hadoop.fs.Path(log)
       val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1398,8 +1322,7 @@ object StreamOps {
   }
 
   /** The LIVE delta dirs of a store: every reader-visible dir minus
-    * the consumed ones. This is the listing every delta-log reader in
-    * this file goes through — it makes reads correct (not merely
+    * the consumed ones. This is the listing [[readLog]] goes through — it makes reads correct (not merely
     * duplicate-tolerant) in every crash/replay state, which the
     * ADDITIVE stores require. Stores never touched by the tiered
     * compactor have no manifests, so this degrades to the plain
@@ -1517,10 +1440,7 @@ object StreamOps {
     */
   def dedupIndex(spark: org.apache.spark.sql.SparkSession,
                  indexPath: String): DataFrame =
-    readDeltaDirs(spark, indexPath).getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long)].toDF("content_hash", "first_batch")
-    }
+    readLog(spark, indexPath, LsmStore.dedup)
 
   /** Streaming fixed-n duplicated-SPAN dedup —
     * [[graft.operators.Dedup.dupSpanRemoval]] maintained incrementally
@@ -1558,8 +1478,9 @@ object StreamOps {
       import graft.operators.Dedup
       val toks = Dedup.spanToks(batch, idCol, textCol).cache()
       val grams = Dedup.spanGrams(toks, n, hashedGramKeys).cache()
-      val standing = spanIndexGrams(spark, indexPath, hashedGramKeys)
-        .filter(col("first_batch") < batchId).select("gk")
+      val standing =
+        readLog(spark, indexPath, LsmStore.dupSpan(hashedGramKeys))
+          .filter(col("first_batch") < batchId).select("gk")
       val withinDup = grams.groupBy("gk")
         .agg(countDistinct(col("doc")).as("nd"))
         .filter(col("nd") >= 2).select("gk")
@@ -1579,21 +1500,12 @@ object StreamOps {
     }
   }
 
-  /** The standing window-key index (empty-schema frame when absent). */
-  def spanIndexGrams(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String,
-                     hashedGramKeys: Boolean = true): DataFrame =
-    readDeltaDirs(spark, indexPath).getOrElse {
-      import spark.implicits._
-      if (hashedGramKeys) Seq.empty[(Long, Long)].toDF("gk", "first_batch")
-      else Seq.empty[(String, Long)].toDF("gk", "first_batch")
-    }
-
   def dupSpanIndexForeachBatchTiered(indexPath: String,
       flagsPath: String, idCol: String, textCol: String, n: Int,
       maxDeltas: Int, hashedGramKeys: Boolean = true, fanout: Int = 4)
       : (DataFrame, Long) => Unit =
-    tieredForeachBatch(indexPath, LsmStore.dupSpan, maxDeltas, fanout)(
+    tieredForeachBatch(indexPath, LsmStore.dupSpan(hashedGramKeys),
+        maxDeltas, fanout)(
       dupSpanIndexForeachBatch(indexPath, flagsPath, idCol, textCol, n,
         hashedGramKeys))
 
@@ -1666,9 +1578,9 @@ object StreamOps {
       val banded = Dedup.bandedFromHashes(
         bsh.select(col("doc"), explode(col("sh")).as("h")),
         bands, rowsPerBand).cache()
-      val standingSh = nearDupShingles(spark, indexPath)
+      val standingSh = readLog(spark, indexPath, LsmStore.nearDup, "shingles")
         .filter(col("first_batch") < batchId)
-      val standingBk = nearDupBuckets(spark, indexPath)
+      val standingBk = readLog(spark, indexPath, LsmStore.nearDup, "buckets")
         .filter(col("first_batch") < batchId)
       val cand0 =
         if (maxBucket == Int.MaxValue) {
@@ -1730,25 +1642,6 @@ object StreamOps {
       banded.unpersist(blocking = false)
     }
   }
-
-  /** The standing hashed-shingle store: union of published deltas
-    * (empty frame with the right schema before the first batch).
-    */
-  def nearDupShingles(spark: org.apache.spark.sql.SparkSession,
-                      indexPath: String): DataFrame =
-    readDeltaDirs(spark, s"$indexPath/shingles").getOrElse {
-      import spark.implicits._
-      Seq.empty[(Long, Seq[Long], Long)].toDF("doc", "sh", "first_batch")
-    }
-
-  /** The standing LSH bucket store (empty-schema frame when absent). */
-  def nearDupBuckets(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String): DataFrame =
-    readDeltaDirs(spark, s"$indexPath/buckets").getOrElse {
-      import spark.implicits._
-      Seq.empty[(Long, Int, Long, Long)]
-        .toDF("doc", "band", "bucket", "first_batch")
-    }
 
   /** Streaming PREFIX-FILTER near-dup index — the l54 exact-recall
     * Jaccard join ([[graft.operators.Dedup.prefixFilterJaccardPairs]])
@@ -1828,10 +1721,12 @@ object StreamOps {
         .filter(col("rn") <= p)
         .select("doc", "m", "shingle")
         .cache()
-      val standingPx = prefixDupPrefixes(spark, indexPath)
-        .filter(col("first_batch") < batchId)
-      val standingSh = prefixDupShingles(spark, indexPath)
-        .filter(col("first_batch") < batchId)
+      val standingPx =
+        readLog(spark, indexPath, LsmStore.prefixDup, "prefixes")
+          .filter(col("first_batch") < batchId)
+      val standingSh =
+        readLog(spark, indexPath, LsmStore.prefixDup, "shingles")
+          .filter(col("first_batch") < batchId)
       def lenOk =
         col("b.m") >= lit(threshold) * col("a.m") - lit(1e-9) &&
           col("a.m") >= lit(threshold) * col("b.m") - lit(1e-9)
@@ -1862,23 +1757,6 @@ object StreamOps {
     }
   }
 
-  /** The standing prefix store (empty-schema frame when absent). */
-  def prefixDupPrefixes(spark: org.apache.spark.sql.SparkSession,
-                        indexPath: String): DataFrame =
-    readDeltaDirs(spark, s"$indexPath/prefixes").getOrElse {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Long, Long)]
-        .toDF("doc", "m", "shingle", "first_batch")
-    }
-
-  /** The standing full-shingle-set store (empty frame when absent). */
-  def prefixDupShingles(spark: org.apache.spark.sql.SparkSession,
-                        indexPath: String): DataFrame =
-    readDeltaDirs(spark, s"$indexPath/shingles").getOrElse {
-      import spark.implicits._
-      Seq.empty[(Long, Seq[Long], Long)].toDF("doc", "sh", "first_batch")
-    }
-
   /** Streaming DSIR — importance scoring AT INGEST: each arriving
     * batch is scored against the raw/target hashed-unigram
     * distributions of everything that arrived BEFORE it
@@ -1897,33 +1775,22 @@ object StreamOps {
                        idCol: String, textCol: String,
                        targetPred: org.apache.spark.sql.Column,
                        buckets: Int = 4096, topKPerBatch: Int = 100)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    if (!batch.isEmpty) {
+      : (DataFrame, Long) => Unit =
+    snapshotSink(statePath) { (batch, prior, batchId) =>
       val spark = batch.sparkSession
-      if (!appliedBatch(spark, statePath).contains(batchId)) {
-        import graft.operators.Dsir
-        val live = new org.apache.hadoop.fs.Path(statePath)
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior =
-          if (fs.exists(live)) spark.read.parquet(statePath)
-          else {
-            import spark.implicits._
-            Seq.empty[(Long, Long, Long)].toDF("bk", "rc", "tc")
-          }
-        Dsir.scoreAgainstCounts(batch, idCol, textCol, prior,
-            buckets, topKPerBatch)
-          .write.mode("overwrite").parquet(s"$scoresPath/batch=$batchId")
-        val part = Dsir
+      import spark.implicits._
+      import graft.operators.Dsir
+      val counts = prior.getOrElse(
+        Seq.empty[(Long, Long, Long)].toDF("bk", "rc", "tc"))
+      Dsir.scoreAgainstCounts(batch, idCol, textCol, counts,
+          buckets, topKPerBatch)
+        .write.mode("overwrite").parquet(s"$scoresPath/batch=$batchId")
+      sumByKeys(Some(counts), Dsir
           .bucketedTokens(batch, idCol, textCol, targetPred, buckets)
           .groupBy("bk").agg(count(lit(1)).as("rc"),
-            sum(when(col("is_tgt"), 1L).otherwise(0L)).as("tc"))
-        val merged = prior.unionByName(part).groupBy("bk")
-          .agg(sum("rc").cast("long").as("rc"),
-            sum("tc").cast("long").as("tc"))
-        publishAtomic(spark, statePath, merged, Some(batchId))
-      }
+            sum(when(col("is_tgt"), 1L).otherwise(0L)).as("tc")),
+        Seq("bk"), "rc", "tc")
     }
-  }
 
   /** Streaming PCA moment maintenance — keep the exact second-moment
     * cells of [[graft.operators.Pca.momentSums]] as a standing state
@@ -1945,24 +1812,12 @@ object StreamOps {
     */
   def pcaMomentForeachBatch(statePath: String, vecCol: String, dim: Int,
                             digits: Int = 6)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      if (!appliedBatch(spark, statePath).contains(batchId)) {
-        val live = new org.apache.hadoop.fs.Path(statePath)
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val part = graft.operators.Pca.momentSums(batch, vecCol, dim,
-          digits)
-        val merged =
-          if (!fs.exists(live)) part
-          else spark.read.parquet(statePath).unionByName(part)
-            .groupBy("i", "j")
-            .agg(sum("sxy").as("sxy"), sum("sx").as("sx"),
-              sum("sy").as("sy"), sum("n").as("n"))
-        publishAtomic(spark, statePath, merged, Some(batchId))
-      }
+      : (DataFrame, Long) => Unit =
+    snapshotSink(statePath) { (batch, prior, _) =>
+      sumByKeys(prior,
+        graft.operators.Pca.momentSums(batch, vecCol, dim, digits),
+        Seq("i", "j"), "sxy", "sx", "sy", "n")
     }
-  }
 
   /** Current PCA model from the standing moment state — a 2 080-row
     * read plus the driver-side eigensolve; no corpus pass.
@@ -2012,8 +1867,8 @@ object StreamOps {
         col("doc_b").cast("long").as("b")).distinct().cache()
       // the O(index) latest-label resolve feeds TWO consumers (the
       // touched-label lookup and the member scan) — resolve once
-      val cur = latestLabels(
-        dupClusterLog(spark, ccPath).filter(col("as_of") < batchId))
+      val cur = latestLabels(readLog(spark, ccPath, LsmStore.dupCluster)
+          .filter(col("as_of") < batchId))
         .cache()
       val touched = p.select(col("a").as("node"))
         .union(p.select(col("b").as("node"))).distinct()
@@ -2038,30 +1893,14 @@ object StreamOps {
     }
   }
 
-  /** The raw label delta log (possibly several rows per node). */
-  def dupClusterLog(spark: org.apache.spark.sql.SparkSession,
-                    ccPath: String): DataFrame =
-    readDeltaDirs(spark, ccPath).getOrElse {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Long)].toDF("node", "component", "as_of")
-    }
-
   /** Current cluster labels: each node's max-as_of row. */
   def dupClusters(spark: org.apache.spark.sql.SparkSession,
                   ccPath: String): DataFrame =
-    latestLabels(dupClusterLog(spark, ccPath))
+    latestLabels(readLog(spark, ccPath, LsmStore.dupCluster))
 
   private def latestLabels(log: DataFrame): DataFrame =
     log.groupBy("node")
       .agg(max_by(col("component"), col("as_of")).as("component"))
-
-  private def readDeltaDirs(spark: org.apache.spark.sql.SparkSession,
-                            root: String)
-      : Option[DataFrame] = {
-    val dirs = liveDeltaDirs(spark, root)
-    if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs.toIndexedSeq: _*))
-  }
 
   /** STREAMING vector-index maintenance — the IVF corpus index as an
     * append-only delta log (the dedup-index LSM shape applied to ANN
@@ -2115,29 +1954,8 @@ object StreamOps {
   /** The full streamed vector index: union of all published deltas,
     * `(n_id, cv, cn, cell)`. Empty frame when no delta exists yet. */
   def annIndex(spark: org.apache.spark.sql.SparkSession,
-               indexPath: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val deltas =
-      if (!fs.exists(root)) Array.empty[String]
-      else fs.listStatus(root)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("d="))
-        .map(_.getPath.toString)
-    if (deltas.isEmpty)
-      spark.emptyDataFrame
-        .select(lit(0L).as("n_id"),
-          lit(Array.empty[Double]).as("cv"), lit(0.0).as("cn"),
-          lit(0L).as("cell"))
-        .limit(0)
-    // one scan relation rooted at the log: both hive-style levels
-    // (`d=N`, `cell=K`) surface as partition columns — keeping it a
-    // single relation is what lets a cell filter prune directories
-    // across ALL deltas at once; the batch level is a physical detail
-    // the index view hides
-    else spark.read.option("basePath", indexPath)
-      .parquet(deltas.toIndexedSeq: _*)
-      .drop("d")
-  }
+               indexPath: String): DataFrame =
+    readLog(spark, indexPath, LsmStore.ann)
 
   /** ANN top-k over the streamed index: queries probe their `nProbe`
     * nearest cells against the SAME fixed centroid table, the index
@@ -2212,23 +2030,8 @@ object StreamOps {
   /** The streamed code index: union of all published deltas,
     * `(n_id, codes, cell)`. */
   def annPqIndex(spark: org.apache.spark.sql.SparkSession,
-                 indexPath: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val deltas =
-      if (!fs.exists(root)) Array.empty[String]
-      else fs.listStatus(root)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("d="))
-        .map(_.getPath.toString)
-    if (deltas.isEmpty)
-      spark.emptyDataFrame
-        .select(lit(0L).as("n_id"),
-          lit(Array.empty[Long]).as("codes"), lit(0L).as("cell"))
-        .limit(0)
-    else spark.read.option("basePath", indexPath)
-      .parquet(deltas.toIndexedSeq: _*)
-      .drop("d")
-  }
+                 indexPath: String): DataFrame =
+    readLog(spark, indexPath, LsmStore.annPq)
 
   /** ADC top-k over the streamed code index: probes prune the scan to
     * their cell directories (PartitionFilters, as in
@@ -2323,9 +2126,9 @@ object StreamOps {
       // join (as the broadcast side) and the probes-log append — three
       // O(k^2)-per-doc explode evaluations otherwise
       val bProbes = Dedup.passProbes(base, k).cache()
-      def standing(sub: String): Option[DataFrame] =
-        readDeltaDirs(spark, s"$indexPath/$sub")
-          .map(_.filter(col("first_batch") < batchId))
+      def standing(sub: String): DataFrame =
+        readLog(spark, indexPath, LsmStore.edDist, sub)
+          .filter(col("first_batch") < batchId)
 
       def ordered(j: DataFrame): DataFrame = j
         .filter(col("doc_a") =!= col("doc_b"))
@@ -2338,18 +2141,17 @@ object StreamOps {
       val within = ordered(
         bProbes.withColumnRenamed("doc", "doc_b")
           .join(bSegs.withColumnRenamed("doc", "doc_a"), Seq("key")))
-      val vsShorter = standing("segs").map(ss => ordered(
-        ss.select(col("doc").as("doc_a"), col("key"))
-          .join(broadcast(bProbes.withColumnRenamed("doc", "doc_b")),
-            Seq("key"))))
-      val vsLonger = standing("probes").map(sp => ordered(
-        sp.select(col("doc").as("doc_b"), col("key"))
-          .join(broadcast(bSegs.withColumnRenamed("doc", "doc_a")),
-            Seq("key"))))
+      val vsShorter = ordered(standing("segs")
+        .select(col("doc").as("doc_a"), col("key"))
+        .join(broadcast(bProbes.withColumnRenamed("doc", "doc_b")),
+          Seq("key")))
+      val vsLonger = ordered(standing("probes")
+        .select(col("doc").as("doc_b"), col("key"))
+        .join(broadcast(bSegs.withColumnRenamed("doc", "doc_a")),
+          Seq("key")))
 
-      val sTexts = standing("texts")
-        .map(_.select("doc", "txt", "len"))
-      val allTexts = sTexts.map(_.unionByName(base)).getOrElse(base)
+      val allTexts = standing("texts").select("doc", "txt", "len")
+        .unionByName(base)
       val bShort = base.filter(col("len") <= 2 * k + 1)
         .withColumn("bkt", floor(col("len") / (k + 1)))
         .select(col("doc"), col("len"),
@@ -2364,7 +2166,7 @@ object StreamOps {
             abs(col("a.len") - col("b.len")) <= k)
         .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b")))
 
-      val cand = (Seq(within, shortCand) ++ vsShorter ++ vsLonger)
+      val cand = Seq(within, shortCand, vsShorter, vsLonger)
         .reduce(_ unionByName _).distinct()
       val pairs = cand
         .join(allTexts.select(col("doc").as("doc_a"),
@@ -2416,9 +2218,8 @@ object StreamOps {
       hist, sourceCol, idCol, budgetPerSource)
   }
 
-  private def readMgState(spark: org.apache.spark.sql.SparkSession,
-                          statePath: String): graft.functions.MisraGries.Buf = {
-    val rows = spark.read.parquet(statePath).collect()
+  private def mgBuf(state: DataFrame): graft.functions.MisraGries.Buf = {
+    val rows = state.collect()
     graft.functions.MisraGries.Buf(
       rows.filter(!_.isNullAt(0))
         .map(r => r.getString(0) -> r.getLong(1)).toMap,
@@ -2428,7 +2229,7 @@ object StreamOps {
   /** The merged stream summary, for inspection/tests. */
   def heavyHittersState(spark: org.apache.spark.sql.SparkSession,
                         statePath: String): graft.functions.MisraGries.Buf =
-    readMgState(spark, statePath)
+    mgBuf(spark.read.parquet(statePath))
 
   /** The exact heavy-hitter answer for everything streamed so far:
     * recounts the state's <= capacity candidates over `corpus` (the
@@ -2440,7 +2241,7 @@ object StreamOps {
   def heavyHittersFromState(spark: org.apache.spark.sql.SparkSession,
                             statePath: String, corpus: DataFrame,
                             textCol: String, phi: Double): DataFrame = {
-    val buf = readMgState(spark, statePath)
+    val buf = mgBuf(spark.read.parquet(statePath))
     graft.operators.TextAnalysis.recountHeavy(corpus, textCol,
       buf.counts.keys.toSeq.sorted, buf.n, phi)
   }

@@ -162,4 +162,28 @@ class ReferenceParityFixtureSpec extends AnyFunSuite {
     assert(plain.audits("sales").duplicateColumnGroups ==
       Map("OrderID" -> Seq("OrderID0", "OrderID14")))
   }
+
+  test("under smallDataTuned no output frame plans a SortMergeJoin, " +
+    "cached hand-offs included") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] =
+      p.collectWithSubqueries { case n => n }.flatMap {
+        case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+        case n => Seq(n)
+      }
+    // AQE is off inside the scope, so after the action executedPlan is
+    // the plan that ran
+    val sortMerge = ReferenceParity.smallDataTuned(s) {
+      val out = ReferenceParity.run(s, fixture().toString, runDate)
+      out.productElementNames.zip(out.productIterator).collect {
+        case (name, df: DataFrame) =>
+          df.collect()
+          name -> nodes(df.queryExecution.executedPlan)
+            .count(_.nodeName == "SortMergeJoin")
+      }.filter(_._2 > 0).toMap
+    }
+    assert(sortMerge.isEmpty, s"SortMergeJoin count by output: $sortMerge")
+  }
 }

@@ -1051,12 +1051,14 @@ class StreamOpsSpec extends AnyFunSuite {
 
     // compaction is purely physical: standing reads unchanged, a later
     // batch still finds its near-dups against the compacted index
-    val shBefore = StreamOps.nearDupShingles(s, indexPath)
+    val shBefore = StreamOps.readLog(s, indexPath, StreamOps.LsmStore.nearDup,
+        "shingles")
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
       .toSet
     StreamOps.compactStoreTiered(s, indexPath,
       StreamOps.LsmStore.nearDup, upTo = 1L)
-    val shAfter = StreamOps.nearDupShingles(s, indexPath)
+    val shAfter = StreamOps.readLog(s, indexPath, StreamOps.LsmStore.nearDup,
+        "shingles")
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
       .toSet
     assert(shAfter == shBefore, "compaction changed the logical index")
@@ -1173,12 +1175,14 @@ class StreamOpsSpec extends AnyFunSuite {
       "retried batch changed its pairs")
 
     // compaction is purely physical
-    val pxBefore = StreamOps.prefixDupPrefixes(s, indexPath)
+    val pxBefore = StreamOps.readLog(s, indexPath, StreamOps.LsmStore.prefixDup,
+        "prefixes")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     StreamOps.compactStoreTiered(s, indexPath,
       StreamOps.LsmStore.prefixDup, upTo = 1L)
-    val pxAfter = StreamOps.prefixDupPrefixes(s, indexPath)
+    val pxAfter = StreamOps.readLog(s, indexPath, StreamOps.LsmStore.prefixDup,
+        "prefixes")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(pxAfter == pxBefore, "compaction changed the logical index")
@@ -1812,59 +1816,8 @@ class StreamOpsSpec extends AnyFunSuite {
     val stages = Seq("view", "click", "purchase")
     val root = java.nio.file.Files
       .createTempDirectory("graft_retention_stream").toString
-    val funnelPath = s"$root/funnel"
-    val retPath = s"$root/retention"
-    val fSink = StreamOps.stageFunnelForeachBatch(funnelPath, "user_id",
-      "event_type", "ts_us", stages)
-    val rSink = StreamOps.retentionForeachBatch(retPath, "user_id",
-      "ts_us")
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val df = b.toDF("user_id", "event_type", "ts_us")
-      fSink(df, i.toLong); rSink(df, i.toLong)
-    }
-    val all = batches.flatten.toDF("user_id", "event_type", "ts_us")
-
-    def row1(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.collect()(0).toSeq.map(_.asInstanceOf[Long])
-    val streamedFunnel = row1(
-      StreamOps.stageFunnelFromState(s, funnelPath, stages))
-    val oneShotFunnel = row1(graft.operators.Retention.funnelCounts(
-      graft.operators.Retention.stageMins(all, "user_id", "event_type",
-        "ts_us", stages), stages))
-    assert(streamedFunnel == oneShotFunnel)
-    // users 1 and 3 convert fully (stage mins end up ordered despite
-    // arrival order); user 2's click lands just BEFORE its earliest
-    // view and stops at the view stage
-    assert(streamedFunnel == Seq(3L, 3L, 2L, 2L))
-
-    def retMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) ->
-        r.getLong(2)).toMap
-    val streamedRet = retMap(StreamOps.retentionFromState(s, retPath))
-    val oneShotRet = retMap(graft.operators.Retention.retentionTable(
-      graft.operators.Retention.retentionState(
-        graft.operators.Retention.activeDays(all, "user_id", "ts_us"))))
-    assert(streamedRet == oneShotRet)
-    // user 3 cohort shifted to day 0 by the LAST batch: day 2 stays
-    // (offset 2), day 9 fell out (offset 9 > 7); user 2's near-
-    // midnight click lands on day 0, its view on days 1 and 3
-    assert(streamedRet((0L, 0L)) == 2L, streamedRet.toString)
-    assert(streamedRet((0L, 2L)) == 1L)
-    assert(!streamedRet.contains((0L, 9L)))
-
-    // retry idempotence: replaying the last batch changes nothing
-    val lastDf = batches.last.toDF("user_id", "event_type", "ts_us")
-    fSink(lastDf, 2L); rSink(lastDf, 2L)
-    assert(row1(StreamOps.stageFunnelFromState(s, funnelPath, stages))
-      == streamedFunnel)
-    assert(retMap(StreamOps.retentionFromState(s, retPath))
-      == streamedRet)
-
-    // ---- DELTA-LOG forms (the |users|-scale shape): O(batch)
-    // appends instead of a full-state rewrite per batch; dashboards
-    // from the deltas == the rewrite forms == one-shot; tiered
-    // compaction bounds the dir count and is result-inert; a retried
-    // batch after compaction is absorbed at read
+    // the |users|-scale shape: O(batch) delta appends under tiered
+    // compaction, dashboards computed from the deltas at read
     val fdPath = s"$root/funnel_delta"
     val rdPath = s"$root/retention_delta"
     val fdSink = StreamOps.tieredForeachBatch(fdPath,
@@ -1878,10 +1831,36 @@ class StreamOpsSpec extends AnyFunSuite {
       val df = b.toDF("user_id", "event_type", "ts_us")
       fdSink(df, i.toLong); rdSink(df, i.toLong)
     }
-    assert(row1(StreamOps.stageFunnelFromDeltas(s, fdPath, "user_id",
-      stages)) == streamedFunnel)
-    assert(retMap(StreamOps.retentionFromDeltas(s, rdPath))
-      == streamedRet)
+    val all = batches.flatten.toDF("user_id", "event_type", "ts_us")
+
+    def row1(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.collect()(0).toSeq.map(_.asInstanceOf[Long])
+    def streamedFunnel() = row1(StreamOps.stageFunnelFromDeltas(s, fdPath,
+      "user_id", stages))
+    val oneShotFunnel = row1(graft.operators.Retention.funnelCounts(
+      graft.operators.Retention.stageMins(all, "user_id", "event_type",
+        "ts_us", stages), stages))
+    assert(streamedFunnel() == oneShotFunnel)
+    // users 1 and 3 convert fully (stage mins end up ordered despite
+    // arrival order); user 2's click lands just BEFORE its earliest
+    // view and stops at the view stage
+    assert(oneShotFunnel == Seq(3L, 3L, 2L, 2L))
+
+    def retMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        r.getLong(2)).toMap
+    def streamedRet() = retMap(StreamOps.retentionFromDeltas(s, rdPath))
+    val oneShotRet = retMap(graft.operators.Retention.retentionTable(
+      graft.operators.Retention.retentionState(
+        graft.operators.Retention.activeDays(all, "user_id", "ts_us"))))
+    assert(streamedRet() == oneShotRet)
+    // user 3 cohort shifted to day 0 by the LAST batch: day 2 stays
+    // (offset 2), day 9 fell out (offset 9 > 7); user 2's near-
+    // midnight click lands on day 0, its view on days 1 and 3
+    assert(oneShotRet((0L, 0L)) == 2L, oneShotRet.toString)
+    assert(oneShotRet((0L, 2L)) == 1L)
+    assert(!oneShotRet.contains((0L, 9L)))
+
     // every listed delta dir, compacted segments included
     def listedDirs(path: String) = new java.io.File(path).listFiles()
       .map(_.getName)
@@ -1890,14 +1869,18 @@ class StreamOpsSpec extends AnyFunSuite {
       "funnel delta-dir count must stay bounded")
     assert(listedDirs(rdPath).length <= 2,
       "retention delta-dir count must stay bounded")
+
+    // retry idempotence: replaying the last batch changes nothing
+    val lastDf = batches.last.toDF("user_id", "event_type", "ts_us")
+    fdSink(lastDf, 2L); rdSink(lastDf, 2L)
+    assert(streamedFunnel() == oneShotFunnel)
+    assert(streamedRet() == oneShotRet)
     // retry a batch whose delta was already compacted away: its
     // re-created d=1 sits next to the compacted segment that already
     // holds its rows, and the reads must not count them twice
     fdSink(batches(1).toDF("user_id", "event_type", "ts_us"), 1L)
     rdSink(batches(1).toDF("user_id", "event_type", "ts_us"), 1L)
-    assert(row1(StreamOps.stageFunnelFromDeltas(s, fdPath, "user_id",
-      stages)) == streamedFunnel)
-    assert(retMap(StreamOps.retentionFromDeltas(s, rdPath))
-      == streamedRet)
+    assert(streamedFunnel() == oneShotFunnel)
+    assert(streamedRet() == oneShotRet)
   }
 }

@@ -162,7 +162,8 @@ class TieredCompactionSpec extends AnyFunSuite {
     assert(pairsNoBatch(s"$root/ndt/pairs") ==
       pairsNoBatch(s"$root/ndp/pairs"),
       "per-batch tiered compaction changed the near-dup pair stream")
-    def shSet(path: String) = StreamOps.nearDupShingles(s, path)
+    def shSet(path: String) = StreamOps.readLog(s, path,
+        StreamOps.LsmStore.nearDup, "shingles")
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSet,
         r.getLong(2))).toSet
     assert(shSet(s"$root/ndt/index") == shSet(s"$root/ndp/index"),
@@ -186,7 +187,8 @@ class TieredCompactionSpec extends AnyFunSuite {
     assert(pairsNoBatch(s"$root/pft/pairs") ==
       pairsNoBatch(s"$root/pfp/pairs"),
       "per-batch tiered compaction changed the prefix-dup pair stream")
-    def pxSet(path: String) = StreamOps.prefixDupPrefixes(s, path)
+    def pxSet(path: String) = StreamOps.readLog(s, path,
+        StreamOps.LsmStore.prefixDup, "prefixes")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(pxSet(s"$root/pft/index") == pxSet(s"$root/pfp/index"),
