@@ -1840,11 +1840,12 @@ class StreamOpsSpec extends AnyFunSuite {
     val oneShotFunnel = row1(graft.operators.Retention.funnelCounts(
       graft.operators.Retention.stageMins(all, "user_id", "event_type",
         "ts_us", stages), stages))
-    assert(streamedFunnel() == oneShotFunnel)
+    val funnel = streamedFunnel()
+    assert(funnel == oneShotFunnel)
     // users 1 and 3 convert fully (stage mins end up ordered despite
     // arrival order); user 2's click lands just BEFORE its earliest
     // view and stops at the view stage
-    assert(oneShotFunnel == Seq(3L, 3L, 2L, 2L))
+    assert(funnel == Seq(3L, 3L, 2L, 2L))
 
     def retMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1)) ->
@@ -1853,13 +1854,14 @@ class StreamOpsSpec extends AnyFunSuite {
     val oneShotRet = retMap(graft.operators.Retention.retentionTable(
       graft.operators.Retention.retentionState(
         graft.operators.Retention.activeDays(all, "user_id", "ts_us"))))
-    assert(streamedRet() == oneShotRet)
+    val ret = streamedRet()
+    assert(ret == oneShotRet)
     // user 3 cohort shifted to day 0 by the LAST batch: day 2 stays
     // (offset 2), day 9 fell out (offset 9 > 7); user 2's near-
     // midnight click lands on day 0, its view on days 1 and 3
-    assert(oneShotRet((0L, 0L)) == 2L, oneShotRet.toString)
-    assert(oneShotRet((0L, 2L)) == 1L)
-    assert(!oneShotRet.contains((0L, 9L)))
+    assert(ret((0L, 0L)) == 2L, ret.toString)
+    assert(ret((0L, 2L)) == 1L)
+    assert(!ret.contains((0L, 9L)))
 
     // every listed delta dir, compacted segments included
     def listedDirs(path: String) = new java.io.File(path).listFiles()
