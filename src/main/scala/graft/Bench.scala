@@ -4,6 +4,7 @@ import org.apache.spark.sql.SaveMode
 
 import graft.core.Sessions
 import graft.queries.Registry
+import graft.sources.Reports.{jsonString => jstr}
 
 /** Benchmark main (driver contract): times the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -58,7 +59,7 @@ object Bench {
       src.getLines().flatMap { l =>
         val m = try timingsOf(mapper.readTree(l))
         catch { case _: Throwable => Map.empty[String, Double] }
-        if (m.size > 1) Some(m) else None // skip e2e-only dev lines
+        if (m.size > 1) Some(m) else None // skip single-query lines
       }.toList
     } finally src.close()
     maps.flatMap(_.keys).distinct.flatMap { k =>
@@ -86,8 +87,8 @@ object Bench {
       if (m.size > 1) return "BENCH_DETAIL.json" -> m
     }
     // Walk BACKWARDS to the newest history line with a full timing
-    // map: dev runs (GRAFT_BENCH_ONLY=e2e) append single-query lines
-    // that would otherwise shrink the delta comparison to one query.
+    // map: the log holds single-query lines that would otherwise
+    // shrink the delta comparison to one query.
     val hist = new java.io.File(historyFile)
     val none = "" -> Map.empty[String, Double]
     if (!hist.isFile) none
@@ -337,11 +338,6 @@ object Bench {
       }
 
     val headlineReps = 3
-    // GRAFT_BENCH_ONLY=e2e: dev-only shortcut that skips the registry
-    // sweeps and benches just ref_pipeline_e2e (for iterating on the
-    // pipeline without paying the ~4 min full bench); the driver always
-    // runs without it
-    val e2eOnly = sys.env.get("GRAFT_BENCH_ONLY").contains("e2e")
     // headline set first (the round-over-round contract numbers):
     // median-of-3, every sample steady-state (the sf0.001 warmup above
     // already paid codegen compilation for these plans).
@@ -356,7 +352,7 @@ object Bench {
       Thread.sleep(30000); waitedSec += 30; probe()
     }
     val compilesBeforeHeadlines = compiles()
-    if (!e2eOnly) Registry.headlines.foreach { q =>
+    Registry.headlines.foreach { q =>
       time(q.name, () => q.run(spark, sfDir)
         .write.format("noop").mode(SaveMode.Overwrite).save(), timings,
         headlineReps)
@@ -371,7 +367,7 @@ object Bench {
     // them as noise — at n=2 every breadth entry carries a spread, so a
     // delta smaller than its spread is self-describing as noise.
     val compilesBeforeBreadth = compiles()
-    if (!e2eOnly) Registry.all.filterNot(_.headline).foreach { q =>
+    Registry.all.filterNot(_.headline).foreach { q =>
       time(q.name, () => q.run(spark, sfDir)
         .write.format("noop").mode(SaveMode.Overwrite).save(), allTimings,
         2)
@@ -397,12 +393,10 @@ object Bench {
           allTimings, 2)
       }
     val breadthCompiles = compiles() - compilesBeforeBreadth
-    if (!e2eOnly) probe()
+    probe()
 
     // Gate state, declared before the e2e block because the e2e gate
-    // below records into it; trailingHistory() only reads the history
-    // sidecar, so computing it in e2e-only dev mode too is harmless and
-    // gives the dev instrument the same history comparison.
+    // below records into it.
     val histMed = trailingHistory()
     val gateRemeasured =
       scala.collection.mutable.LinkedHashMap[String, Double]()
@@ -436,18 +430,13 @@ object Bench {
     if (!new java.io.File(refRaw).isDirectory)
       unmeasured("ref_pipeline_e2e") = s"reference snapshot missing at $refRaw"
     else {
-      // one untimed warm run for the same codegen-compilation reason;
-      // drop its caches so the timed run re-does the real I/O + cleaning.
-      // Both runs execute under the pipeline's own small-data tuning
+      // untimed warm runs for the same codegen-compilation reason;
+      // drop their caches so the timed runs re-do the real I/O + cleaning.
+      // All runs execute under the pipeline's own small-data tuning
       // (ReferenceParity.smallDataTuned — AQE off, one shuffle
       // partition), exactly as a production deployment of this bounded
       // pipeline would run it.
       graft.pipeline.ReferenceParity.smallDataTuned(spark) {
-        // (e2e-only mode skips the ~90-query sweep that normally deep-
-        // warms the JVM before this point, so it pays extra warm runs to
-        // keep its numbers comparable to the full bench's; the full
-        // bench matches the e2e-only instrument's warm-up depth so the
-        // two modes measure the same steady state)
         val warmRuns = 4
         try {
           (1 to warmRuns).foreach { _ =>
@@ -459,11 +448,10 @@ object Bench {
               .save()
           }
         } catch { case _: Throwable => () }
-        // e2e is median-of-7 in BOTH modes: its ~3 s median sits at
-        // Spark's fixed job-scheduling floor, where one descheduled
-        // sample shifts a median-of-3 by ~0.5 s — larger than any real
-        // change this pipeline sees round to round. With warm-up depth
-        // matched above, the full bench now IS the instrument that
+        // e2e is median-of-7: its ~3 s median sits at Spark's fixed
+        // job-scheduling floor, where one descheduled sample shifts a
+        // median-of-3 by ~0.5 s — larger than any real change this
+        // pipeline sees round to round. This is the instrument that
         // adjudicates the <3.0 s target (emitted as "e2e_med7").
         val e2eBody: () => Unit = () => {
           val out = graft.pipeline.ReferenceParity.run(spark, refRaw,
@@ -542,7 +530,7 @@ object Bench {
     // that is either a genuinely contended window (visible in calib) or
     // a REAL regression — either way it stays in the record, flagged in
     // "gate_flags" instead of silently discarded. ref_pipeline_e2e is
-    // exempt: its instrument is already median-of-7 with matched warmup.
+    // exempt: its instrument is already median-of-7.
     // After re-measuring, the contaminated early sample would still own
     // the max-min spread no matter how many clean samples join it — so
     // once a re-measured query has >=4 kept samples, samples sitting
@@ -561,7 +549,7 @@ object Bench {
       .filter(n => n != "ref_pipeline_e2e" && !errors.contains(n))
       .flatMap(n => gateSuspect(n).map(n -> _)).toSeq
     var gatePasses = 0
-    if (!e2eOnly) while (gatePasses < 2 && gateSuspects().nonEmpty) {
+    while (gatePasses < 2 && gateSuspects().nonEmpty) {
       gatePasses += 1
       gateSuspects().foreach { case (name, why) =>
         Registry.all.find(_.name == name).foreach { q =>
@@ -582,12 +570,6 @@ object Bench {
 
     probe()
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
     def jmap(m: Iterable[(String, Double)], round: Boolean): String =
       m.map { case (k, v) => s"${jstr(k)}:${if (round) r3(v) else v}" }
@@ -601,8 +583,8 @@ object Bench {
       case (k, v) if prev.contains(k) => s"${jstr(k)}:${r3(v - prev(k))}"
     }.mkString("{", ",", "}")
     val total = timings.values.sum
-    // first-class e2e gate number: the median-of-7 steady-state sample
-    // (same instrument in full and e2e-only modes), with its spread —
+    // first-class e2e gate number: the median-of-7 steady-state sample,
+    // with its spread —
     // the "<3.0 s" target is adjudicated by THIS field, not by eyeballing
     // the queries map
     val e2eJson = timings.get("ref_pipeline_e2e").map { v =>
@@ -658,10 +640,7 @@ object Bench {
     // two can lose the overwrite, never the append-only log
     val w = new java.io.FileWriter(historyFile, true)
     try w.write(detail + "\n") finally w.close()
-    // an e2e-only dev run must NOT clobber the committed full-breadth
-    // record that next round's delta diffing reads — it gets its own file
-    val detailFileOut =
-      if (e2eOnly) "BENCH_E2E_ONLY.json" else "BENCH_DETAIL.json"
+    val detailFileOut = "BENCH_DETAIL.json"
     val dw = new java.io.FileWriter(detailFileOut, false)
     try dw.write(detail + "\n") finally dw.close()
     val line = s"""{"metric":"total","value":$total,"unit":"sec","method":"median-of-$headlineReps"$e2eJson,"queries":${jmap(timings, round = true)},"errors":$errs,"unmeasured":$unmeasuredJson,"all_total":${r3(allTimings.values.sum)}$heavyJson,"gate_passes":$gatePasses,"gate_flags":${gateFlags.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")},"codegen_failures":${codegenFailures.get},"calib_sec":$calibJson,"load_avg":$loadJson,$loadGateJson,"waited_sec":$waitedSec,"detail":${jstr(detailFileOut)},"sf":${jstr(sfDir)}}"""

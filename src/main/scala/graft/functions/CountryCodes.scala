@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bundled ISO-3166 reference table replacing the reference's per-row
@@ -54,16 +54,9 @@ object CountryCodes {
     "venezuela" -> ("VEN", "SA"))
 
   private def joined(df: DataFrame, keyCol: String, outCol: String,
-                     value: ((String, String)) => String): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    val lk = table.toSeq.map { case (k, v) => (k, value(v)) }
-      .sortBy(_._1).toDF("__cc_key", "__cc_val")
-    df.join(broadcast(lk), lower(trim(col(keyCol))) === col("__cc_key"),
-        "left")
-      .withColumn(outCol, coalesce(col("__cc_val"), lit("UNK")))
-      .drop("__cc_key", "__cc_val")
-  }
+                     value: ((String, String)) => String): DataFrame =
+    Lookups.withLookup(df, table.map { case (k, v) => k -> value(v) },
+      lower(trim(col(keyCol))), outCol)
 
   /** U2 — attach alpha-3 code (misses, incl. dirty names like `Germani#`,
     * -> "UNK").

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Broadcast reference-table lookups replacing the reference's per-row
@@ -28,20 +28,20 @@ object Lookups {
     (0 until 25).map(i => s"NATION_$i" -> continents(i % 5)).toMap
 
   /** The lookup as a broadcastable DataFrame. */
-  def lookupTable(s: SparkSession, m: Map[String, String],
-                  keyName: String, valName: String): DataFrame = {
+  private def lookupTable(s: SparkSession, m: Map[String, String],
+                          keyName: String, valName: String): DataFrame = {
     import s.implicits._
     m.toSeq.sortBy(_._1).toDF(keyName, valName)
   }
 
-  /** Attach `outCol` by broadcast-joining `m` on `keyCol`; misses -> "UNK"
-    * (the reference's failure policy, add_columns.py:50-51).
+  /** Attach `outCol` by broadcast-joining `m` on the `key` expression
+    * over `df`; misses -> "UNK" (the reference's failure policy,
+    * add_columns.py:50-51).
     */
-  def withLookup(df: DataFrame, m: Map[String, String], keyCol: String,
+  def withLookup(df: DataFrame, m: Map[String, String], key: Column,
                  outCol: String): DataFrame = {
-    val s = df.sparkSession
-    val lk = lookupTable(s, m, "__lk_key", "__lk_val")
-    df.join(broadcast(lk), col(keyCol) === col("__lk_key"), "left")
+    val lk = lookupTable(df.sparkSession, m, "__lk_key", "__lk_val")
+    df.join(broadcast(lk), key === col("__lk_key"), "left")
       .withColumn(outCol, coalesce(col("__lk_val"), lit("UNK")))
       .drop("__lk_key", "__lk_val")
   }

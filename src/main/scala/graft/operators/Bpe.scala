@@ -60,12 +60,6 @@ object Bpe {
     def merged: String = a + b
   }
 
-  /** Lowercase `[a-z]+` word stream of `textCol` — the pre-tokenizer
-    * shared by training and encoding (and by the DuckDB oracle).
-    */
-  private[operators] def wordsSql(textCol: String): String =
-    s"regexp_extract_all(lower($textCol), '[a-z]+', 0)"
-
   /** `word` -> `||w||o||r||d||` (single-char symbols, double-delimited). */
   private[operators] def delimitSql(wordExpr: String): String =
     s"'$Sep$Sep' || regexp_replace($wordExpr, '(.)', '$$1$Sep$Sep')"
@@ -99,7 +93,7 @@ object Bpe {
   /** Distinct-word frequency table of the corpus: (word, cnt, seq). */
   def wordCounts(docs: DataFrame, textCol: String): DataFrame =
     docs
-      .select(explode(expr(wordsSql(textCol))).as("word"))
+      .select(explode(expr(TextAnalysis.wordsSql(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).cast("long").as("cnt"))
       .withColumn("seq", expr(delimitSql("word")))
 
@@ -304,7 +298,7 @@ object Bpe {
     // a k-symbol word contributes 2(k+1) separators, so over a doc the
     // symbol total is nSeps/2 - nWords (each merge removes exactly 2)
     docs
-      .withColumn("words", expr(wordsSql(textCol)))
+      .withColumn("words", expr(TextAnalysis.wordsSql(textCol)))
       .withColumn("n_words", size(col("words")).cast("long"))
       .withColumn("__seq", expr(seqN))
       .withColumn("bpe_tokens", expr(
@@ -405,10 +399,10 @@ object Bpe {
   def oracleTrainCtes(textCol: String, trainFilterSql: String,
                       nMerges: Int): String = {
     val head =
-      s"""tr AS (SELECT lower($textCol) AS t FROM documents
+      s"""tr AS (SELECT $textCol AS t FROM documents
          !  WHERE $trainFilterSql),
          !wc AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS cnt
-         !  FROM (SELECT unnest(regexp_extract_all(t, '[a-z]+')) AS word
+         !  FROM (SELECT unnest(${TextAnalysis.wordsDuckSql("t")}) AS word
          !        FROM tr)
          !  GROUP BY word),
          !w0 AS MATERIALIZED (SELECT cnt,
@@ -465,10 +459,10 @@ object Bpe {
                             nMerges: Int, batch: Int): String = {
     val rounds = nMerges
     val head =
-      s"""tr AS (SELECT lower($textCol) AS t FROM documents
+      s"""tr AS (SELECT $textCol AS t FROM documents
          !  WHERE $trainFilterSql),
          !wc AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS cnt
-         !  FROM (SELECT unnest(regexp_extract_all(t, '[a-z]+')) AS word
+         !  FROM (SELECT unnest(${TextAnalysis.wordsDuckSql("t")}) AS word
          !        FROM tr)
          !  GROUP BY word),
          !b0 AS MATERIALIZED (SELECT cnt,
@@ -551,7 +545,7 @@ object Bpe {
     }.mkString(",\n")
     s"""t0 AS (SELECT doc_id,
        !  coalesce(list_aggregate(list_transform(
-       !    regexp_extract_all(lower($textCol), '[a-z]+'), w ->
+       !    ${TextAnalysis.wordsDuckSql(textCol)}, w ->
        !    '$Sep$Sep' || regexp_replace(w, '(.)', '\\1$Sep$Sep', 'g')),
        !    'string_agg', ''), '') AS seq
        !  FROM documents WHERE $docFilterSql),
@@ -587,8 +581,8 @@ object Bpe {
       .mkString(" UNION ALL ")
     s"""WITH ${oracleTrainCtes(textCol, trainFilterSql, nMerges)},
        !${oracleStreamCtes(textCol, docFilterSql, nMerges)},
-       !alpha AS (SELECT DISTINCT unnest(regexp_extract_all(t, '[a-z]'))
-       !    AS token FROM tr),
+       !alpha AS (SELECT DISTINCT
+       !    unnest(regexp_extract_all(lower(t), '[a-z]')) AS token FROM tr),
        !vocab0 AS (SELECT 0 AS kind, token AS ord, token FROM alpha
        !  UNION ALL
        !  SELECT 1 AS kind, printf('%06d', rank) AS ord, token
@@ -621,7 +615,7 @@ object Bpe {
        !    '$Sep$Sep' || regexp_replace(w, '(.)', '\\1$Sep$Sep', 'g')),
        !    'string_agg', ''), '') AS seq FROM
        !  (SELECT lang, doc_id,
-       !     regexp_extract_all(lower($textCol), '[a-z]+') AS words
+       !     ${TextAnalysis.wordsDuckSql(textCol)} AS words
        !   FROM documents)),
        !$encChain
        !SELECT lang, split, CAST(count(*) AS BIGINT) AS n_docs,

@@ -248,8 +248,8 @@ object CorpusAssembly {
       s"list_filter(range(1, len(p.loads) + 1), " +
         s"q -> p.loads[q] + d.n <= $budget)[1]"
     s"""WITH RECURSIVE scored AS (SELECT doc_id,
-       #  CAST(len(list_filter(string_split($textCol, ' '),
-       #    t -> length(t) > 0)) AS BIGINT) AS n FROM documents),
+       #  CAST(len(${TextAnalysis.tokensDuckSql(textCol)}) AS BIGINT) AS n
+       #  FROM documents),
        #rk AS (SELECT doc_id, n, CAST(row_number() OVER
        #    (ORDER BY n DESC, doc_id) AS BIGINT) AS rnk FROM scored),
        #grps AS (SELECT doc_id, n, (rnk - 1) // $groupSize AS grp,
@@ -409,8 +409,8 @@ object CorpusAssembly {
                 textCol: String): DataFrame =
     df.select(col(sourceCol), col(idCol),
       TextAnalysis.tokenCount(textCol).as("n_tokens"),
-      expr("size(array_distinct(filter(split(" + textCol +
-        ", ' '), t -> length(t) > 0)))").cast("long").as("quality"))
+      expr(s"size(array_distinct(${TextAnalysis.tokensSql(textCol)}))")
+        .cast("long").as("quality"))
 
   /** Exact quota form over a pre-scored frame: rank documents within
     * each source by (`quality` desc, `idCol`) and keep the ranked

@@ -71,10 +71,6 @@ object Dedup {
         coalesce(col("__known"), lit(0L)).as("dup_of_existing"))
   }
 
-  /** Non-empty whitespace tokens, as a SQL fragment over column `textCol`. */
-  private def toksSql(textCol: String): String =
-    s"filter(split($textCol, ' '), t -> length(t) > 0)"
-
   /** Distinct word-`n`-gram shingles of column `textCol`. Documents
     * shorter than `n` tokens yield an empty array (guarded: Spark's
     * sequence(1, 0) would count DOWN, not produce an empty range).
@@ -86,7 +82,7 @@ object Dedup {
     * 6.6s over 500 docs; this form is ~20x cheaper.
     */
   def shingles(textCol: String, n: Int): Column = expr(
-    s"""element_at(transform(array(${toksSql(textCol)}), ts ->
+    s"""element_at(transform(array(${TextAnalysis.tokensSql(textCol)}), ts ->
           IF(size(ts) < $n, array(),
              array_distinct(transform(sequence(1, size(ts) - ${n - 1}),
                i -> array_join(slice(ts, i, $n), ' '))))), 1)""")
@@ -914,7 +910,7 @@ object Dedup {
   private[graft] def spanToks(docs: DataFrame, idCol: String,
                               textCol: String): DataFrame =
     docs.select(col(idCol).as("doc"),
-      expr(s"filter(split($textCol, ' '), t -> length(t) > 0)").as("tk"))
+      TextAnalysis.tokens(textCol).as("tk"))
       .withColumn("n_tokens", size(col("tk")).cast("long"))
 
   /** (doc, pos, gk) n-token window keys of every doc with >= n tokens.
@@ -1065,7 +1061,7 @@ object Dedup {
     */
   def simHash16(textCol: String): Column = expr(
     s"""element_at(transform(
-          array(transform(${toksSql(textCol)},
+          array(transform(${TextAnalysis.tokensSql(textCol)},
                 t -> ${portableTokenHash("t")})),
           hs -> aggregate(sequence(0, 15), CAST(0 AS BIGINT), (acc, j) ->
             acc + IF(

@@ -138,8 +138,7 @@ object DomainMix {
            FROM tmp$t CROSS JOIN kk)"""
     }.mkString(",\n")
     s"""WITH toks AS MATERIALIZED (SELECT $domainCol AS dom,
-          unnest(list_filter(string_split(text, ' '),
-            x -> length(x) > 0)) t
+          unnest(${TextAnalysis.tokensDuckSql("text")}) t
           FROM documents),
         vg AS (SELECT t, CAST(count(*) AS BIGINT) cg FROM toks GROUP BY t),
         tg AS (SELECT CAST(sum(cg) AS BIGINT) tg FROM vg),

@@ -52,9 +52,6 @@ object QualityClassifier {
   final case class Config(nFeatures: Int = 32, iters: Int = 24,
                           lrDen: Long = 2L, stopMin: Long = 3L)
 
-  private def toksSql(textCol: String): String =
-    s"regexp_extract_all(lower($textCol), '[a-z]+', 0)"
-
   /** Per-doc feature table: (doc, y, x) with x = F hashed-bucket token
     * PRESENCE bits + trailing bias 1. Keeps every doc (empty ones get
     * the all-zero vector) and any extra `carry` columns. ONE map-side-
@@ -85,7 +82,7 @@ object QualityClassifier {
       max(when(col("j") === jj, 1L).otherwise(0L)).as(s"__b$jj"))
     docs
       .select(col(idCol).as("doc") +: carryCols :+
-        explode_outer(expr(toksSql(textCol))).as("t"): _*)
+        explode_outer(expr(TextAnalysis.wordsSql(textCol))).as("t"): _*)
       .withColumn("j",
         when(col("t").isNotNull,
           pmod(expr("poly_hash(t)"), lit(cfg.nFeatures)).cast("long")))
@@ -212,10 +209,10 @@ object QualityClassifier {
          #      THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END),
          #    CAST(1 AS BIGINT)) AS x
          #  FROM (SELECT doc_id, lang,
-         #    list_transform(regexp_extract_all(lower($textCol),
-         #      '[a-z]+'), t -> ${duckPolyHash("t")}) AS hs,
+         #    list_transform(${TextAnalysis.wordsDuckSql(textCol)},
+         #      t -> ${duckPolyHash("t")}) AS hs,
          #    CASE WHEN len(list_filter(
-         #        regexp_extract_all(lower($textCol), '[a-z]+'),
+         #        ${TextAnalysis.wordsDuckSql(textCol)},
          #        t -> list_contains([$stops], t))) >= ${cfg.stopMin}
          #      THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS y
          #    FROM documents)),

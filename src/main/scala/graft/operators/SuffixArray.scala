@@ -48,9 +48,7 @@ object SuffixArray {
   private def tokens(docs: DataFrame, idCol: String,
                      textCol: String): DataFrame =
     docs.select(col(idCol).as("doc"),
-        posexplode(expr(
-          s"filter(split($textCol, ' '), t -> length(t) > 0)"))
-          .as(Seq("pos0", "tok")))
+        posexplode(TextAnalysis.tokens(textCol)).as(Seq("pos0", "tok")))
       .select(col("doc"), (col("pos0") + 1).cast("long").as("pos"),
         col("tok"))
 

@@ -9,18 +9,52 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  private def toksSql(textCol: String): String =
-    s"filter(split($textCol, ' '), t -> length(t) > 0)"
+  // The engine's three text rules, one Spark SQL and one DuckDB SQL
+  // spelling each. Every operator, sink and oracle mirror interpolates
+  // these. The DuckDB twins are written out on their own, never derived
+  // from the Spark text, so a mirror still checks one engine against
+  // the other.
+
+  /** Whitespace tokens of SQL expression `e`: the non-empty pieces
+    * between single spaces. Tabs and newlines are NOT separators; they
+    * stay inside tokens.
+    */
+  def tokensSql(e: String): String =
+    s"filter(split($e, ' '), t -> length(t) > 0)"
+
+  /** DuckDB twin of [[tokensSql]]. */
+  def tokensDuckSql(e: String): String =
+    s"list_filter(string_split($e, ' '), t -> length(t) > 0)"
+
+  /** Lowercase words of SQL expression `e`: the `[a-z]+` runs of
+    * `lower(e)`, in order. The pre-tokenizer of Bpe, WordPiece and the
+    * quality classifier.
+    */
+  def wordsSql(e: String): String =
+    s"regexp_extract_all(lower($e), '[a-z]+', 0)"
+
+  /** DuckDB twin of [[wordsSql]]. */
+  def wordsDuckSql(e: String): String =
+    s"regexp_extract_all(lower($e), '[a-z]+')"
+
+  /** DuckDB twin of [[Dedup.shingles]]`(_, 3)` over a bound token array
+    * `tk` (a column or lambda name: it is referenced four times): the
+    * distinct space-joined word 3-grams, empty below 3 tokens. DuckDB's
+    * `list_distinct` does not keep order, so callers unnest or count.
+    */
+  def shinglesDuckSql(tk: String): String =
+    s"""list_distinct(list_transform(range(1, len($tk) - 1),
+          i -> $tk[i] || ' ' || $tk[i+1] || ' ' || $tk[i+2]))"""
 
   /** The whitespace token array every operator here tokenizes with —
     * public so stream-side ops (StreamOps.heavyHittersForeachBatch)
     * reduce EXACTLY the same token stream the batch forms do.
     */
-  def tokens(textCol: String): Column = expr(toksSql(textCol))
+  def tokens(textCol: String): Column = expr(tokensSql(textCol))
 
   /** Whitespace token count. */
   def tokenCount(textCol: String): Column =
-    expr(s"size(${toksSql(textCol)})").cast("long")
+    expr(s"size(${tokensSql(textCol)})").cast("long")
 
   /** BPE-ish subword count: runs of letters, runs of digits, and single
     * other non-space characters each count as one token — a deterministic
@@ -44,7 +78,7 @@ object TextAnalysis {
     * engine (l20's DuckDB oracle hash-matches it).
     */
   def repetitionRatio(textCol: String, n: Int): Column = expr(
-    s"""element_at(transform(array(${toksSql(textCol)}), ts ->
+    s"""element_at(transform(array(${tokensSql(textCol)}), ts ->
           IF(size(ts) < $n, CAST(0.0 AS DOUBLE),
             1.0D - CAST(size(array_distinct(
                 transform(sequence(1, size(ts) - ${n - 1}),
@@ -56,7 +90,7 @@ object TextAnalysis {
     */
   def qualityFeatures(textCol: String, stopwords: Seq[String])
       : Seq[(String, Column)] = {
-    val toks = toksSql(textCol)
+    val toks = tokensSql(textCol)
     val nToks = s"size($toks)"
     val stopArr = stopwords.map(w => s"'$w'").mkString("array(", ", ", ")")
     Seq(
@@ -78,7 +112,7 @@ object TextAnalysis {
     * whole token.
     */
   def markerHits(textCol: String, marker: String): Column =
-    expr(s"size(filter(${toksSql(textCol)}, t -> t = '$marker'))")
+    expr(s"size(filter(${tokensSql(textCol)}, t -> t = '$marker'))")
       .cast("long")
 
   /** Heuristic language ID: argmax of marker-hit counts with a fixed
@@ -102,7 +136,7 @@ object TextAnalysis {
     * (lambda-variable trick — see Dedup.shingles).
     */
   def chunks(textCol: String, size: Int, stride: Int): Column = expr(
-    s"""element_at(transform(array(${toksSql(textCol)}), ts ->
+    s"""element_at(transform(array(${tokensSql(textCol)}), ts ->
         transform(sequence(1, size(ts), $stride),
           i -> struct(CAST(i AS BIGINT) AS start,
                       array_join(slice(ts, i, $size), ' ') AS chunk))), 1)""")
@@ -144,7 +178,7 @@ object TextAnalysis {
     * Portable: the DuckDB oracle reproduces it with list_reduce.
     */
   def fingerprint(textCol: String): Column = expr(
-    s"""aggregate(${toksSql(textCol)}, CAST(0 AS BIGINT), (a, t) ->
+    s"""aggregate(${tokensSql(textCol)}, CAST(0 AS BIGINT), (a, t) ->
         (a * 31 + length(t) * 17 + ascii(substring(t, 1, 1))) % 1000000007)""")
 
   /** Deterministic split assignment for reproducible train/val/test
@@ -309,7 +343,7 @@ object TextAnalysis {
                         dim: Int): DataFrame =
     docs
       .select(col(idCol).as("doc"),
-        explode(expr(toksSql(textCol))).as("t"))
+        explode(tokens(textCol)).as("t"))
       .select(col("doc"), expr("poly_hash(t)").as("h"))
       .select(col("doc"), (col("h") % dim).as("bucket"),
         when(expr(s"(h DIV $dim) % 2 = 0"), lit(1L))
@@ -322,8 +356,7 @@ object TextAnalysis {
     */
   def featureHashSparseOracleSql(dim: Int): String =
     s"""WITH toks AS (SELECT doc_id AS doc,
-          unnest(list_filter(string_split(text, ' '),
-            t -> length(t) > 0)) AS t
+          unnest(${tokensDuckSql("text")}) AS t
         FROM documents),
       h AS (SELECT doc, list_reduce(list_prepend(CAST(7 AS BIGINT),
           list_transform(range(1, length(t) + 1),
@@ -361,10 +394,10 @@ object TextAnalysis {
                     minLen: Int): org.apache.spark.sql.DataFrame = {
     val terms = docs
       .select(col(idCol).as("doc"),
-        explode(expr(s"array_distinct(${toksSql(textCol)})")).as("term"))
+        explode(expr(s"array_distinct(${tokensSql(textCol)})")).as("term"))
       .filter(length(col("term")) >= minLen)
     val tf = docs
-      .select(col(idCol).as("doc"), explode(expr(toksSql(textCol))).as("term"))
+      .select(col(idCol).as("doc"), explode(tokens(textCol)).as("term"))
       .filter(length(col("term")) >= minLen)
       .groupBy("doc", "term").agg(count(lit(1)).as("tf"))
     // corpus size joins in as a 1-row aggregate (no job at construction)
@@ -404,7 +437,7 @@ object TextAnalysis {
   def unigramSurprisal(docs: DataFrame, idCol: String, textCol: String,
                        keepBelowBits: Double): DataFrame = {
     val toks = docs.select(col(idCol).as("doc"),
-      explode(expr(toksSql(textCol))).as("t"))
+      explode(tokens(textCol)).as("t"))
     val vocab = toks.groupBy("t").agg(count(lit(1)).as("c"))
     val total = vocab.agg(sum("c").cast("long").as("tt"))
     val scored = toks
@@ -469,7 +502,7 @@ object TextAnalysis {
                       textCol: String, keepBelowBits: Double,
                       minCount: Long = 2L): org.apache.spark.sql.DataFrame = {
     val toks = docs
-      .select(col(idCol).as("doc"), expr(toksSql(textCol)).as("arr"))
+      .select(col(idCol).as("doc"), tokens(textCol).as("arr"))
       .select(col("doc"), col("arr"),
         posexplode(col("arr")).as(Seq("pos", "t")))
       .withColumn("prev", get(col("arr"), col("pos") - 1))
@@ -587,7 +620,7 @@ object TextAnalysis {
                         shuffleModelJoin: Boolean = false)
       : org.apache.spark.sql.DataFrame = {
     val toks = docs
-      .select(col(idCol).as("doc"), expr(toksSql(textCol)).as("arr"))
+      .select(col(idCol).as("doc"), tokens(textCol).as("arr"))
       .select(col("doc"), col("arr"),
         posexplode(col("arr")).as(Seq("pos", "t")))
       .withColumn("prev", get(col("arr"), col("pos") - 1))
@@ -773,7 +806,7 @@ object TextAnalysis {
     require(queryTerms.nonEmpty, "bm25TopK needs at least one query term")
     val terms = queryTerms.distinct.sorted
     val base = docs
-      .select(col(idCol).as("doc"), expr(toksSql(textCol)).as("arr"))
+      .select(col(idCol).as("doc"), tokens(textCol).as("arr"))
       .withColumn("dl", size(col("arr")).cast("long"))
     val wtf = terms.zipWithIndex.foldLeft(base) { case (d, (t, i)) =>
       d.withColumn(s"tf_$i",
@@ -841,7 +874,7 @@ object TextAnalysis {
                     queries: DataFrame, k: Int,
                     k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val base = docs
-      .select(col(idCol).as("doc"), expr(toksSql(textCol)).as("arr"))
+      .select(col(idCol).as("doc"), tokens(textCol).as("arr"))
       .withColumn("dl", size(col("arr")).cast("long"))
     val stats = base.agg(count(lit(1)).cast("long").as("n"),
       sum("dl").cast("double").as("tot"))

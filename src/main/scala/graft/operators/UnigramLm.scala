@@ -44,13 +44,10 @@ object UnigramLm {
   def costOf(total: Long, cnt: Long): Long =
     lenbin(total) - lenbin(cnt) + 1L
 
-  private def toksSql(textCol: String): String =
-    s"filter(split($textCol, ' '), t -> length(t) > 0)"
-
   /** Distinct truncated words with corpus frequencies. */
   private[graft] def wordTable(docs: DataFrame, textCol: String,
                                maxWordLen: Int): DataFrame =
-    docs.select(explode(expr(toksSql(textCol))).as("tok"))
+    docs.select(explode(TextAnalysis.tokens(textCol)).as("tok"))
       .select(substring(col("tok"), 1, maxWordLen).as("word"))
       .groupBy("word").agg(count(lit(1)).as("wf"))
 
@@ -141,7 +138,7 @@ object UnigramLm {
              vocab: Seq[(String, Long)], maxWordLen: Int = 16,
              maxPieceLen: Int = 4): DataFrame =
     docs.select(col(idCol),
-        expr(s"transform(${toksSql(textCol)}, " +
+        expr(s"transform(${TextAnalysis.tokensSql(textCol)}, " +
           s"t -> substring(t, 1, $maxWordLen))").as("__ws"))
       .select(col(idCol), flatten(transform(col("__ws"),
         w => segmentCol(w, vocab, maxPieceLen))).as("pieces"))

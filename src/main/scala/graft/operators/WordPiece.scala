@@ -135,7 +135,7 @@ object WordPiece {
              vocab: Seq[String], maxWordLen: Int = 16): DataFrame = {
     require(vocab.nonEmpty, "WordPiece.encode: empty vocabulary")
     val words = expr(
-      s"transform(${Bpe.wordsSql(textCol)}, " +
+      s"transform(${TextAnalysis.wordsSql(textCol)}, " +
         s"t -> substring(t, 1, $maxWordLen))")
     docs.select(col(idCol), words.as("__ws"))
       .select(col(idCol), flatten(transform(col("__ws"), w =>
@@ -156,10 +156,10 @@ object WordPiece {
                       nMerges: Int): String = {
     val S = Bpe.Sep
     val head =
-      s"""tr AS (SELECT lower($textCol) AS t FROM documents
+      s"""tr AS (SELECT $textCol AS t FROM documents
          !  WHERE $trainFilterSql),
          !wc AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS cnt
-         !  FROM (SELECT unnest(regexp_extract_all(t, '[a-z]+')) AS word
+         !  FROM (SELECT unnest(${TextAnalysis.wordsDuckSql("t")}) AS word
          !        FROM tr)
          !  GROUP BY word),
          !w0 AS MATERIALIZED (SELECT cnt,
@@ -240,15 +240,15 @@ object WordPiece {
           ${(1 to nMerges).map(k => s"SELECT a || b FROM m$k")
             .mkString("\n          UNION ALL ")})),
       dwords AS (SELECT DISTINCT substr(word, 1, $maxWordLen) AS word
-        FROM (SELECT unnest(regexp_extract_all(lower($textCol),
-          '[a-z]+')) AS word FROM documents)),
+        FROM (SELECT unnest(${TextAnalysis.wordsDuckSql(textCol)}) AS word
+          FROM documents)),
       g0 AS (SELECT word, 1 AS pos,
         CAST([] AS VARCHAR[]) AS pieces FROM dwords),
       ${steps.mkString(",\n      ")},
       tokend AS (SELECT doc_id, u.i AS wpos,
           substr(tk[u.i], 1, $maxWordLen) AS word
         FROM (SELECT doc_id,
-                regexp_extract_all(lower($textCol), '[a-z]+') AS tk
+                ${TextAnalysis.wordsDuckSql(textCol)} AS tk
               FROM documents) t,
           LATERAL (SELECT unnest(range(1, len(tk) + 1)) AS i) u),
       dstream AS (SELECT t.doc_id,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.functions.Exact
+import graft.operators.TextAnalysis
 
 /** Operators beyond the reference's inventory that any warehouse/analytics
   * user of it would reach for next: sessionization, per-group top-N,
@@ -536,8 +537,8 @@ object Extras {
   private val x18 = QueryDef("x18_heavy_hitters", (s, dir) => {
     graft.operators.TextAnalysis.heavyHitters(Tables.documents(s, dir),
       "text", phi = 0.02, capacity = 99)
-  }, Some("""WITH toks AS (SELECT unnest(list_filter(
-        string_split(text, ' '), t -> length(t) > 0)) t FROM documents),
+  }, Some(s"""WITH toks AS (SELECT
+        unnest(${TextAnalysis.tokensDuckSql("text")}) t FROM documents),
       n AS (SELECT CAST(count(*) AS BIGINT) tt FROM toks),
       c AS (SELECT t AS term, CAST(count(*) AS BIGINT) freq
         FROM toks GROUP BY t)
@@ -840,12 +841,10 @@ object Extras {
         (abs(col("est_intersection") - col("n_inter").cast("double")) <=
           lit(0.08) * (col("n_a") + col("n_b") - col("n_inter"))
             .cast("double")).as("inter_ok"))
-  }, Some("""WITH toks AS (SELECT doc_id % 3 AS m,
-        list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+  }, Some(s"""WITH toks AS (SELECT doc_id % 3 AS m,
+        ${TextAnalysis.tokensDuckSql("text")} tk
         FROM documents),
-      sh AS (SELECT m, unnest(list_distinct(list_transform(
-          range(1, len(tk) - 1),
-          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))) AS g
+      sh AS (SELECT m, unnest(${TextAnalysis.shinglesDuckSql("tk")}) AS g
         FROM toks WHERE len(tk) >= 3),
       an AS (SELECT DISTINCT g FROM sh WHERE m IN (0, 1)),
       bn AS (SELECT DISTINCT g FROM sh WHERE m IN (1, 2))

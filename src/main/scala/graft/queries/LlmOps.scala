@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.operators.{Bpe, CorpusAssembly, WordPiece, Dedup, Html, IngestPipeline, Multimodal, Pca, QualityClassifier, Similarity, SuffixArray, TextAnalysis, Urls}
+import graft.operators.TextAnalysis.{shinglesDuckSql, tokensDuckSql, tokensSql, wordsDuckSql, wordsSql}
 
 /** LLM training-data pipeline operators over `documents` / `embeddings`:
   * dedup (exact, n-gram Jaccard, MinHash-LSH, SimHash), similarity search
@@ -141,12 +142,10 @@ object LlmOps {
   // ONE oracle definition for l2 (string shingles, mirrored verbatim)
   // AND l2h (xxhash64 shingle keys): the hashed path's contract is
   // value-identical output, so it must hash-match the same SQL.
-  private val l2OracleSql = """WITH toks AS (SELECT doc_id,
-        list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+  private val l2OracleSql = s"""WITH toks AS (SELECT doc_id,
+        ${tokensDuckSql("text")} tk
         FROM documents),
-      sh AS (SELECT doc_id, list_distinct(list_transform(
-          range(1, len(tk) - 1),
-          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) s
+      sh AS (SELECT doc_id, ${shinglesDuckSql("tk")} s
         FROM toks WHERE len(tk) >= 3),
       sizes AS (SELECT doc_id, CAST(len(s) AS BIGINT) n FROM sh),
       ex AS (SELECT doc_id, unnest(s) shingle FROM sh),
@@ -200,12 +199,10 @@ object LlmOps {
   // corpus test shows the ~100x candidate cut the moment hot shingles
   // actually exist.
   // ONE oracle for l2b AND l2bh (same value-identity contract as l2/l2h).
-  private val l2bOracleSql = """WITH toks AS (SELECT doc_id,
-        list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+  private val l2bOracleSql = s"""WITH toks AS (SELECT doc_id,
+        ${tokensDuckSql("text")} tk
         FROM documents),
-      sh AS (SELECT doc_id, list_distinct(list_transform(
-          range(1, len(tk) - 1),
-          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) s
+      sh AS (SELECT doc_id, ${shinglesDuckSql("tk")} s
         FROM toks WHERE len(tk) >= 3),
       ex AS (SELECT doc_id AS doc, unnest(s) AS shingle FROM sh),
       freq AS (SELECT shingle, count(*) AS df FROM ex GROUP BY 1),
@@ -270,11 +267,9 @@ object LlmOps {
       bucketFold((0 until 4).map(r => s"h${b * 4 + r}"))
     }.mkString("[", ",\n          ", "]")
     s"""WITH toks AS (SELECT doc_id,
-          list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+          ${tokensDuckSql("text")} tk
           FROM documents),
-        sh AS (SELECT doc_id, list_distinct(list_transform(
-            range(1, len(tk) - 1),
-            i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) s
+        sh AS (SELECT doc_id, ${shinglesDuckSql("tk")} s
           FROM toks WHERE len(tk) >= 3),
         ex AS (SELECT doc_id AS doc, unnest(s) AS shingle FROM sh),
         hs AS (SELECT doc, list_reduce(list_prepend(CAST(7 AS BIGINT),
@@ -307,8 +302,8 @@ object LlmOps {
   private val l4 = QueryDef("l4_simhash", (s, dir) => {
     Tables.documents(s, dir)
       .select(col("doc_id"), Dedup.simHash16("text").as("simhash"))
-  }, Some("""WITH toks AS (SELECT doc_id,
-        list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+  }, Some(s"""WITH toks AS (SELECT doc_id,
+        ${tokensDuckSql("text")} tk
         FROM documents),
       th AS (SELECT doc_id, list_transform(tk, t ->
           list_reduce(list_prepend(CAST(7 AS BIGINT),
@@ -1091,12 +1086,10 @@ object LlmOps {
   // rarest-first prefixes) on real data every round. ONE oracle for
   // l54 AND l54h (xxhash64 shingle keys): value-identical output is
   // the hashed path's contract, exactly as l2/l2h.
-  private val l54OracleSql = """WITH toks AS (SELECT doc_id,
-        list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+  private val l54OracleSql = s"""WITH toks AS (SELECT doc_id,
+        ${tokensDuckSql("text")} tk
         FROM documents),
-      sh AS (SELECT doc_id, list_distinct(list_transform(
-          range(1, len(tk) - 1),
-          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) s
+      sh AS (SELECT doc_id, ${shinglesDuckSql("tk")} s
         FROM toks WHERE len(tk) >= 3),
       sizes AS (SELECT doc_id, CAST(len(s) AS BIGINT) n FROM sh),
       ex AS (SELECT doc_id, unnest(s) shingle FROM sh),
@@ -1138,17 +1131,14 @@ object LlmOps {
   // checked by the oracle, which is SEMANTIC (the plain quadratic
   // containment join), so the hash match re-proves the one-sided
   // prefix-filter completeness theorem on real data every round.
-  private val l61OracleSql = """WITH base AS
+  private val l61OracleSql = s"""WITH base AS
         (SELECT doc_id, text FROM documents),
       wrapped AS (SELECT a.doc_id + 100000 AS doc_id,
           a.text || ' ' || b.text AS text
         FROM base a JOIN base b ON b.doc_id = a.doc_id + 1),
       corpus AS (SELECT * FROM base UNION ALL SELECT * FROM wrapped),
-      toks AS (SELECT doc_id, list_filter(string_split(text, ' '),
-          t -> length(t) > 0) tk FROM corpus),
-      sh AS (SELECT doc_id, list_distinct(list_transform(
-          range(1, len(tk) - 1),
-          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) s
+      toks AS (SELECT doc_id, ${tokensDuckSql("text")} tk FROM corpus),
+      sh AS (SELECT doc_id, ${shinglesDuckSql("tk")} s
         FROM toks WHERE len(tk) >= 3),
       sizes AS (SELECT doc_id, CAST(len(s) AS BIGINT) n FROM sh),
       ex AS (SELECT doc_id, unnest(s) shingle FROM sh),
@@ -1205,18 +1195,15 @@ object LlmOps {
         concat(col("text"), lit(" "), col("t2")).as("text")))
     Dedup.containmentPairsCapped(corpus, "doc_id", "text",
       n = 3, threshold = 0.9, maxDf = 10L, hashedShingles = true)
-  }, Some("""WITH base AS
+  }, Some(s"""WITH base AS
         (SELECT doc_id, text || ' bp1 bp2 bp3 bp4' AS text
          FROM documents),
       wrapped AS (SELECT a.doc_id + 100000 AS doc_id,
           a.text || ' ' || b.text AS text
         FROM base a JOIN base b ON b.doc_id = a.doc_id + 1),
       corpus AS (SELECT * FROM base UNION ALL SELECT * FROM wrapped),
-      toks AS (SELECT doc_id, list_filter(string_split(text, ' '),
-          t -> length(t) > 0) tk FROM corpus),
-      sh AS (SELECT doc_id, list_distinct(list_transform(
-          range(1, len(tk) - 1),
-          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) s
+      toks AS (SELECT doc_id, ${tokensDuckSql("text")} tk FROM corpus),
+      sh AS (SELECT doc_id, ${shinglesDuckSql("tk")} s
         FROM toks WHERE len(tk) >= 3),
       ex AS MATERIALIZED (SELECT doc_id, unnest(s) shingle FROM sh),
       dfq AS (SELECT shingle, count(*) AS df FROM ex GROUP BY 1),
@@ -1718,8 +1705,7 @@ object LlmOps {
           ${graft.operators.Html.cleanTextDuckSql(html)} AS t
         FROM ids WHERE id % 11 <> 0),
       tok AS (SELECT id, t,
-          CAST(len(list_filter(string_split(t, ' '),
-            x -> length(x) > 0)) AS BIGINT) AS ntok,
+          CAST(len(${tokensDuckSql("t")}) AS BIGINT) AS ntok,
           CAST(length(t) AS BIGINT) AS nch FROM okd),
       grp AS (SELECT
           sha256(regexp_replace(lower(trim(t)), '\\s+', ' ', 'g')) h,
@@ -1762,7 +1748,7 @@ object LlmOps {
           array_to_string(tk[pos:pos + ${sp - 1}], ' ') AS w FROM p"""
     }.mkString("\n        UNION ALL ")
     s"""WITH toks AS (SELECT doc_id,
-          list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+          ${tokensDuckSql("text")} tk
         FROM documents),
       t2 AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) n FROM toks),
       p AS (SELECT doc_id, n, tk,
@@ -1815,8 +1801,8 @@ object LlmOps {
       .select(col("doc_id"), col("batch").cast("long").as("batch"),
         col("n_tokens"), col("n_dup_positions"), col("dup_ratio"),
         col("clean_text"))
-  }, Some("""WITH toks AS (SELECT doc_id, doc_id % 3 AS b,
-        list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+  }, Some(s"""WITH toks AS (SELECT doc_id, doc_id % 3 AS b,
+        ${tokensDuckSql("text")} tk
         FROM documents),
       t2 AS (SELECT doc_id, b, tk, CAST(len(tk) AS BIGINT) n_tokens
         FROM toks),
@@ -1859,7 +1845,7 @@ object LlmOps {
   private val l75 = QueryDef("l75_corpus_datasheet", (s, dir) => {
     val docs = Tables.documents(s, dir)
     val toks = docs.select(col("doc_id"), col("lang"), col("source"),
-      size(expr("filter(split(text, ' '), t -> length(t) > 0)"))
+      size(TextAnalysis.tokens("text"))
         .cast("long").as("n_tokens"),
       length(col("text")).cast("long").as("n_chars"),
       sha2(graft.operators.Dedup.normalizeText(col("text")), 256)
@@ -1888,8 +1874,7 @@ object LlmOps {
         col("n_distinct_texts"), col("docs_in_dup_groups"),
         col("top_source"), col("top_source_docs"))
   }, Some("""WITH t AS (SELECT doc_id, lang, source,
-        CAST(len(list_filter(string_split(text, ' '),
-          x -> length(x) > 0)) AS BIGINT) AS n_tokens,
+        CAST(len(""" + tokensDuckSql("text") + """) AS BIGINT) AS n_tokens,
         CAST(length(text) AS BIGINT) AS n_chars,
         sha256(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS ch
       FROM documents),
@@ -2014,7 +1999,7 @@ object LlmOps {
       "sentence", hashedKeys = hashed)
   }
   private val l70OracleSql = s"""WITH t AS (SELECT doc_id,
-        list_filter(string_split(text, ' '), x -> length(x) > 0) tk
+        ${tokensDuckSql("text")} tk
         FROM documents),
       ch AS (SELECT doc_id, CAST(i AS BIGINT) pos,
           array_to_string(tk[i : i + 5], ' ') s
@@ -2080,7 +2065,7 @@ object LlmOps {
   // funnel-attributed kills, and survivors — the numbers a pipeline
   // owner tunes thresholds by. One combinable aggregate, stack unpivot.
   private val l58 = QueryDef("l58_filter_funnel", (s, dir) => {
-    val toks = "filter(split(text, ' '), x -> length(x) > 0)"
+    val toks = tokensSql("text")
     TextAnalysis.filterFunnel(Tables.documents(s, dir), Seq(
       "min_tokens_40" -> (expr(s"size($toks)") >= 40),
       // every ratio rule carries an explicit positive-denominator
@@ -2100,8 +2085,8 @@ object LlmOps {
         (expr(s"size($toks)") > 0 &&
           expr(s"size(filter($toks, x -> x IN ('the', 'a')))")
             .cast("double") / expr(s"size($toks)").cast("long") > 0.02)))
-  }, Some("""WITH t AS (SELECT doc_id, text,
-        list_filter(string_split(text, ' '), x -> length(x) > 0) tk
+  }, Some(s"""WITH t AS (SELECT doc_id, text,
+        ${tokensDuckSql("text")} tk
         FROM documents),
       f AS (SELECT doc_id,
           coalesce(len(tk) >= 40, FALSE) p0,
@@ -2222,8 +2207,8 @@ object LlmOps {
     def bucket(h: String) =
       s"""(((($h % $P) + $P) % $P * (((rr.r + 1) * 2654435761) % $P)
           + (rr.r * 40503 + 7)) % $P) % 16"""
-    s"""WITH toks AS (SELECT unnest(list_filter(string_split(text, ' '),
-          t -> length(t) > 0)) AS t FROM documents),
+    s"""WITH toks AS (SELECT unnest(${tokensDuckSql("text")}) AS t
+          FROM documents),
       hh AS (SELECT t, list_reduce(list_prepend(CAST(7 AS BIGINT),
           list_transform(range(1, length(t) + 1),
             i -> CAST(ascii(t[i]) AS BIGINT))),
@@ -2453,8 +2438,8 @@ object LlmOps {
       .groupBy("lang", "predicted").agg(count(lit(1)).as("n"))
   }, Some {
     val hits = langMarkers.map { case (lang, m) =>
-      s"CAST(len(list_filter(list_filter(string_split(text, ' '), " +
-        s"t -> length(t) > 0), t -> t = '$m')) AS BIGINT) AS h_$lang"
+      s"CAST(len(list_filter(${tokensDuckSql("text")}, t -> t = '$m')) " +
+        s"AS BIGINT) AS h_$lang"
     }.mkString(", ")
     val langs = langMarkers.map(_._1)
     val caseArms = langs.zipWithIndex.dropRight(1).map { case (l, i) =>
@@ -2472,8 +2457,8 @@ object LlmOps {
     feats.foldLeft(Tables.documents(s, dir)) { case (df, (name, c)) =>
       df.withColumn(name, c)
     }.select((Seq("doc_id", "lang") ++ feats.map(_._1)).map(col): _*)
-  }, Some("""WITH t AS (SELECT doc_id, lang, text,
-        list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+  }, Some(s"""WITH t AS (SELECT doc_id, lang, text,
+        ${tokensDuckSql("text")} tk
         FROM documents)
       SELECT doc_id, lang,
         CAST(length(text) AS BIGINT) AS n_chars_m,
@@ -2498,8 +2483,7 @@ object LlmOps {
         sum("bpeish_tokens").cast("long").as("bpeish_total"),
         count(lit(1)).as("n_docs"))
   }, Some("""SELECT lang,
-      CAST(sum(len(list_filter(string_split(text, ' '),
-        t -> length(t) > 0))) AS BIGINT) AS ws_total,
+      CAST(sum(len(""" + tokensDuckSql("text") + """)) AS BIGINT) AS ws_total,
       CAST(sum(len(regexp_extract_all(text,
         '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))) AS BIGINT) AS bpeish_total,
       CAST(count(*) AS BIGINT) AS n_docs
@@ -2514,14 +2498,12 @@ object LlmOps {
       .select(col("doc_id"),
         TextAnalysis.repetitionRatio("text", 3).as("rep_ratio"))
       .withColumn("keep", (col("rep_ratio") < 0.3).cast("long"))
-  }, Some("""WITH toks AS (SELECT doc_id,
-        list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+  }, Some(s"""WITH toks AS (SELECT doc_id,
+        ${tokensDuckSql("text")} tk
         FROM documents),
       r AS (SELECT doc_id,
         CASE WHEN len(tk) < 3 THEN CAST(0.0 AS DOUBLE)
-          ELSE 1 - CAST(len(list_distinct(list_transform(
-              range(1, len(tk) - 1),
-              i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))) AS DOUBLE)
+          ELSE 1 - CAST(len(${shinglesDuckSql("tk")}) AS DOUBLE)
             / CAST(len(tk) - 2 AS DOUBLE) END AS rep_ratio
         FROM toks)
       SELECT doc_id, rep_ratio,
@@ -2562,9 +2544,8 @@ object LlmOps {
   private val l10 = QueryDef("l10_fingerprint", (s, dir) => {
     Tables.documents(s, dir)
       .select(col("doc_id"), TextAnalysis.fingerprint("text").as("fp"))
-  }, Some("""SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT),
-      list_transform(list_filter(string_split(text, ' '),
-        t -> length(t) > 0),
+  }, Some(s"""SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT),
+      list_transform(${tokensDuckSql("text")},
         t -> CAST(length(t) * 17 + ascii(t[1]) AS BIGINT))),
       (a, b) -> (a * 31 + b) % 1000000007) AS fp
       FROM documents"""))
@@ -2578,8 +2559,8 @@ object LlmOps {
           .as("c"))
       .select(col("doc_id"), col("c.start").as("chunk_start"),
         col("c.chunk").as("chunk"))
-  }, Some("""WITH t AS (SELECT doc_id,
-        list_filter(string_split(text, ' '), x -> length(x) > 0) tk
+  }, Some(s"""WITH t AS (SELECT doc_id,
+        ${tokensDuckSql("text")} tk
         FROM documents)
       SELECT doc_id, CAST(i AS BIGINT) AS chunk_start,
         array_to_string(tk[i : i + 31], ' ') AS chunk
@@ -2625,12 +2606,10 @@ object LlmOps {
       "doc_id", "text", n = 3)
   }, Some(l15OracleSql))
 
-  private lazy val l15OracleSql = """WITH toks AS (SELECT doc_id,
-        list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+  private lazy val l15OracleSql = s"""WITH toks AS (SELECT doc_id,
+        ${tokensDuckSql("text")} tk
         FROM documents),
-      sh AS (SELECT doc_id, list_distinct(list_transform(
-          range(1, len(tk) - 1),
-          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) s
+      sh AS (SELECT doc_id, ${shinglesDuckSql("tk")} s
         FROM toks WHERE len(tk) >= 3),
       c AS (SELECT doc_id doc, unnest(s) shingle FROM sh
             WHERE doc_id >= 25),
@@ -2674,9 +2653,8 @@ object LlmOps {
     Multimodal.interleaveSequences(docs, "doc_id", "text", media,
       "doc_id", "media_idx", chunkTokens = 16, imageTokens = 32,
       budget = 96L)
-  }, Some("""WITH t AS (SELECT doc_id,
-        CAST(len(list_filter(string_split(text, ' '),
-          x -> length(x) > 0)) AS BIGINT) n_tokens, n_chars
+  }, Some(s"""WITH t AS (SELECT doc_id,
+        CAST(len(${tokensDuckSql("text")}) AS BIGINT) n_tokens, n_chars
         FROM documents),
       base AS (SELECT doc_id, n_tokens,
           (n_tokens + 15) // 16 AS n_chunks FROM t),
@@ -2827,16 +2805,15 @@ object LlmOps {
       .withColumn("alpha_ratio", feats("alpha_ratio"))
       .filter(col("alpha_ratio") >= 0.82 && col("n_tokens") >= 20)
       .withColumn("fp", sha2(expr(
-        """array_join(slice(filter(split(text, ' '),
-           t -> length(t) > 0), 1, 20), ' ')"""), 256))
+        s"array_join(slice(${tokensSql("text")}, 1, 20), ' ')"), 256))
     val keepers = kept.groupBy("fp").agg(min("doc_id").as("keep_id"))
     kept.join(keepers,
         kept("fp") === keepers("fp") && col("doc_id") === col("keep_id"))
       .groupBy("lang").agg(
         count(lit(1)).as("n_docs"),
         sum("n_tokens").cast("long").as("total_tokens"))
-  }, Some("""WITH t AS (SELECT doc_id, lang, text,
-        list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+  }, Some(s"""WITH t AS (SELECT doc_id, lang, text,
+        ${tokensDuckSql("text")} tk
         FROM documents),
       scored AS (SELECT doc_id, lang, text, tk,
           CAST(len(tk) AS BIGINT) n_tokens,
@@ -2900,8 +2877,8 @@ object LlmOps {
     TextAnalysis.topTfidfTerms(Tables.documents(s, dir), "doc_id", "text",
         k = 3, minLen = 5)
       .filter(col("doc") < 25)
-  }, Some("""WITH toks AS (SELECT doc_id,
-        list_filter(string_split(text, ' '), t -> length(t) >= 5) tk
+  }, Some(s"""WITH toks AS (SELECT doc_id,
+        list_filter(${tokensDuckSql("text")}, t -> length(t) >= 5) tk
         FROM documents),
       tf AS (SELECT doc_id AS doc, unnest(tk) AS term FROM toks),
       tfc AS (SELECT doc, term, CAST(count(*) AS BIGINT) tf
@@ -2931,9 +2908,8 @@ object LlmOps {
         count(lit(1)).as("n_docs"),
         sum("n_tokens").cast("long").as("total_tokens"))
   }, Some("""WITH assigned AS (SELECT lang,
-        """ + splitCaseDuck("doc_id") + """ AS split,
-        CAST(len(list_filter(string_split(text, ' '),
-          t -> length(t) > 0)) AS BIGINT) n_tokens
+        """ + splitCaseDuck("doc_id") + s""" AS split,
+        CAST(len(${tokensDuckSql("text")}) AS BIGINT) n_tokens
         FROM documents)
       SELECT lang, split, CAST(count(*) AS BIGINT) AS n_docs,
         CAST(sum(n_tokens) AS BIGINT) AS total_tokens
@@ -2946,8 +2922,8 @@ object LlmOps {
   // aggregation state, no pairwise comparison — see Dedup.dupSpanRemoval.
   // ONE oracle for l23 (string grams, mirrored verbatim) and l23h
   // (xxhash64 gram keys, value-identical by contract).
-  private val l23OracleSql = """WITH toks AS (SELECT doc_id,
-        list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+  private val l23OracleSql = s"""WITH toks AS (SELECT doc_id,
+        ${tokensDuckSql("text")} tk
         FROM documents),
       t2 AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) n_tokens FROM toks),
       g AS (SELECT doc_id, u['pos'] pos, u['gram'] gram
@@ -2992,8 +2968,8 @@ object LlmOps {
   private val l24 = QueryDef("l24_unigram_surprisal", (s, dir) => {
     TextAnalysis.unigramSurprisal(Tables.documents(s, dir), "doc_id",
       "text", keepBelowBits = 5.05)
-  }, Some("""WITH toks AS (SELECT doc_id,
-        unnest(list_filter(string_split(text, ' '), t -> length(t) > 0)) t
+  }, Some(s"""WITH toks AS (SELECT doc_id,
+        unnest(${tokensDuckSql("text")}) t
         FROM documents),
       v AS (SELECT t, CAST(count(*) AS BIGINT) c FROM toks GROUP BY t),
       tot AS (SELECT CAST(sum(c) AS BIGINT) tt FROM v),
@@ -3019,8 +2995,8 @@ object LlmOps {
   private val l24b = QueryDef("l24b_bigram_surprisal", (s, dir) => {
     TextAnalysis.bigramSurprisal(Tables.documents(s, dir), "doc_id",
       "text", keepBelowBits = 4.93, minCount = 2L)
-  }, Some("""WITH t AS (SELECT doc_id,
-        list_filter(string_split(text, ' '), s -> length(s) > 0) tk
+  }, Some(s"""WITH t AS (SELECT doc_id,
+        ${tokensDuckSql("text")} tk
         FROM documents),
       tok AS (SELECT doc_id, u['pos'] pos, u['t'] t
               FROM (SELECT doc_id, unnest(list_transform(
@@ -3079,8 +3055,8 @@ object LlmOps {
   private val l55 = QueryDef("l55_kn_surprisal", (s, dir) => {
     TextAnalysis.knBigramSurprisal(Tables.documents(s, dir), "doc_id",
       "text", keepBelowBits = 5.06)
-  }, Some("""WITH t AS (SELECT doc_id,
-        list_filter(string_split(text, ' '), s -> length(s) > 0) tk
+  }, Some(s"""WITH t AS (SELECT doc_id,
+        ${tokensDuckSql("text")} tk
         FROM documents),
       tok AS (SELECT doc_id, u['pos'] pos, u['t'] t
               FROM (SELECT doc_id, unnest(list_transform(
@@ -3154,9 +3130,8 @@ object LlmOps {
       .withColumn("w_tokens", TextAnalysis.tokenCount("text"))
     CorpusAssembly.systematicWeightedSample(docs, "doc_id", "w_tokens",
       k = 100L, seed = 0L)
-  }, Some("""WITH w AS (SELECT doc_id,
-        CAST(len(list_filter(string_split(text, ' '),
-          t -> length(t) > 0)) AS BIGINT) w
+  }, Some(s"""WITH w AS (SELECT doc_id,
+        CAST(len(${tokensDuckSql("text")}) AS BIGINT) w
         FROM documents),
       f AS (SELECT doc_id, w,
           ((((doc_id + 0) % 100000007 + 100000007) % 100000007)
@@ -3189,9 +3164,8 @@ object LlmOps {
         sum("n_tokens").cast("long").as("bin_tokens"),
         sum(col("straddles_next").cast("long")).cast("long")
           .as("n_straddlers"))
-  }, Some("""WITH t AS (SELECT doc_id,
-        CAST(len(list_filter(string_split(text, ' '),
-          s -> length(s) > 0)) AS BIGINT) n
+  }, Some(s"""WITH t AS (SELECT doc_id,
+        CAST(len(${tokensDuckSql("text")}) AS BIGINT) n
         FROM documents),
       c AS (SELECT doc_id, n,
         CAST(sum(n) OVER (ORDER BY doc_id) AS BIGINT) cum FROM t),
@@ -3219,11 +3193,9 @@ object LlmOps {
           .cast("long").as("tokens_kept"),
         min(when(col("kept"), col("quality"))).cast("long")
           .as("min_quality_kept"))
-  }, Some("""WITH t AS (SELECT source, doc_id,
-        CAST(len(list_filter(string_split(text, ' '),
-          s -> length(s) > 0)) AS BIGINT) n_tokens,
-        CAST(len(list_distinct(list_filter(string_split(text, ' '),
-          s -> length(s) > 0))) AS BIGINT) quality
+  }, Some(s"""WITH t AS (SELECT source, doc_id,
+        CAST(len(${tokensDuckSql("text")}) AS BIGINT) n_tokens,
+        CAST(len(list_distinct(${tokensDuckSql("text")})) AS BIGINT) quality
         FROM documents),
       r AS (SELECT source, doc_id, n_tokens, quality,
         CAST(sum(n_tokens) OVER (PARTITION BY source
@@ -3257,11 +3229,9 @@ object LlmOps {
           .cast("long").as("tokens_kept"),
         min(when(col("kept"), col("quality"))).cast("long")
           .as("min_quality_kept"))
-  }, Some("""WITH t AS (SELECT source, doc_id,
-        CAST(len(list_filter(string_split(text, ' '),
-          s -> length(s) > 0)) AS BIGINT) n_tokens,
-        CAST(len(list_distinct(list_filter(string_split(text, ' '),
-          s -> length(s) > 0))) AS BIGINT) quality
+  }, Some(s"""WITH t AS (SELECT source, doc_id,
+        CAST(len(${tokensDuckSql("text")}) AS BIGINT) n_tokens,
+        CAST(len(list_distinct(${tokensDuckSql("text")})) AS BIGINT) quality
         FROM documents),
       r AS (SELECT source, doc_id, n_tokens, quality,
         CAST(sum(n_tokens) OVER (PARTITION BY source
@@ -3288,8 +3258,8 @@ object LlmOps {
   private val l27 = QueryDef("l27_bm25_topk", (s, dir) => {
     TextAnalysis.bm25TopK(Tables.documents(s, dir), "doc_id", "text",
       Seq("dup", "spark", "vector", "flink"), k = 25)
-  }, Some("""WITH base AS (SELECT doc_id doc,
-        list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+  }, Some(s"""WITH base AS (SELECT doc_id doc,
+        ${tokensDuckSql("text")} tk
         FROM documents),
       wtf AS (SELECT doc, CAST(len(tk) AS BIGINT) dl,
         CAST(len(list_filter(tk, x -> x = 'dup')) AS BIGINT) tf_0,
@@ -3356,11 +3326,11 @@ object LlmOps {
       .toDF("query_id", "term")
     TextAnalysis.bm25BatchTopK(Tables.documents(s, dir), "doc_id",
       "text", queries, k = 10)
-  }, Some("""WITH q(query_id, term) AS (VALUES
+  }, Some(s"""WITH q(query_id, term) AS (VALUES
         (1, 'dup'), (1, 'spark'), (2, 'vector'), (2, 'the'),
         (2, 'batch'), (3, 'flink')),
       base AS (SELECT doc_id doc,
-        list_filter(string_split(text, ' '), t -> length(t) > 0) tk
+        ${tokensDuckSql("text")} tk
         FROM documents),
       wdl AS (SELECT doc, CAST(len(tk) AS BIGINT) dl, tk FROM base),
       st AS (SELECT CAST(count(*) AS BIGINT) n,
@@ -3414,8 +3384,7 @@ object LlmOps {
         concat(col("text"), lit(" rev2")).as("text"))
     val fresh = docs.filter(pmod(col("doc_id"), lit(11L)) === 0L)
       .select((col("doc_id") + lit(3000000L)).as("doc_id"), col("source"),
-        expr("""array_join(reverse(filter(split(text, ' '),
-               t -> length(t) > 0)), ' ')""").as("text"))
+        expr(s"array_join(reverse(${tokensSql("text")}), ' ')").as("text"))
     IngestPipeline.run(
       standing = docs.select("doc_id", "text"),
       batch = recrawled.unionByName(revised).unionByName(fresh),
@@ -3429,8 +3398,8 @@ object LlmOps {
           FROM documents WHERE doc_id % 7 = 0
         UNION ALL
         SELECT doc_id + 3000000 AS doc_id, source,
-          array_to_string(list_reverse(list_filter(string_split(text, ' '),
-            t -> length(t) > 0)), ' ') AS text
+          array_to_string(list_reverse(""" + tokensDuckSql("text") + """),
+            ' ') AS text
           FROM documents WHERE doc_id % 11 = 0),
       ex AS (SELECT DISTINCT
           sha256(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) ch
@@ -3441,8 +3410,7 @@ object LlmOps {
         WHERE ex.ch IS NULL),
       uni AS (SELECT doc_id, text FROM documents
         UNION ALL SELECT doc_id, text FROM surv),
-      toks AS (SELECT doc_id, list_filter(string_split(text, ' '),
-          t -> length(t) > 0) tk FROM uni),
+      toks AS (SELECT doc_id, """ + tokensDuckSql("text") + """ tk FROM uni),
       t2 AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) n_tokens
         FROM toks),
       g AS (SELECT doc_id, u['pos'] pos, u['gram'] gram
@@ -3468,10 +3436,9 @@ object LlmOps {
           cl.clean_text
         FROM surv s JOIN cleanedall cl USING (doc_id)),
       scored AS (SELECT source, doc_id, n_dup_positions,
-          CAST(len(list_filter(string_split(clean_text, ' '),
-            s -> length(s) > 0)) AS BIGINT) n_tokens,
-          CAST(len(list_distinct(list_filter(string_split(clean_text, ' '),
-            s -> length(s) > 0))) AS BIGINT) quality
+          CAST(len(""" + tokensDuckSql("clean_text") + """) AS BIGINT) n_tokens,
+          CAST(len(list_distinct(""" + tokensDuckSql("clean_text") +
+            """)) AS BIGINT) quality
         FROM cleaned),
       r AS (SELECT source, doc_id, n_dup_positions, n_tokens, quality,
           CAST(sum(n_tokens) OVER (PARTITION BY source
@@ -3670,9 +3637,8 @@ object LlmOps {
         sum("n_tokens").cast("long").as("bin_tokens"),
         sum(col("straddles_next").cast("long")).cast("long")
           .as("n_straddlers"))
-  }, Some("""WITH t AS (SELECT doc_id, doc_id // 50 AS shard,
-        CAST(len(list_filter(string_split(text, ' '),
-          s -> length(s) > 0)) AS BIGINT) n
+  }, Some(s"""WITH t AS (SELECT doc_id, doc_id // 50 AS shard,
+        CAST(len(${tokensDuckSql("text")}) AS BIGINT) n
         FROM documents),
       c AS (SELECT doc_id, shard, n,
         CAST(sum(n) OVER (ORDER BY doc_id) AS BIGINT) cum FROM t),
@@ -4029,9 +3995,8 @@ object LlmOps {
     graft.operators.Dsir.importanceResample(Tables.documents(s, dir),
       "doc_id", "text", targetPred = col("lang") === "en",
       buckets = 4096, topK = 100)
-  }, Some("""WITH toks AS (SELECT doc_id, lang,
-        unnest(list_filter(string_split(text, ' '),
-          t -> length(t) > 0)) t
+  }, Some(s"""WITH toks AS (SELECT doc_id, lang,
+        unnest(${tokensDuckSql("text")}) t
         FROM documents),
       bkt AS (SELECT doc_id, lang,
         list_reduce(list_prepend(CAST(7 AS BIGINT),
@@ -4082,11 +4047,10 @@ object LlmOps {
     Dsir.scoreAgainstCounts(docs.filter(split =!= "train"),
       "doc_id", "text", counts, buckets = 4096, topK = 20)
   }, Some("""WITH sp AS (SELECT doc_id, lang, text,
-        """ + TextAnalysis.splitBucketDuckSql("doc_id") + """ AS h
+        """ + TextAnalysis.splitBucketDuckSql("doc_id") + s""" AS h
         FROM documents),
       toks AS (SELECT doc_id, lang,
-        unnest(list_filter(string_split(text, ' '),
-          t -> length(t) > 0)) t
+        unnest(${tokensDuckSql("text")}) t
         FROM sp WHERE h < 80),
       bkt AS (SELECT doc_id, lang,
         list_reduce(list_prepend(CAST(7 AS BIGINT),
@@ -4103,8 +4067,7 @@ object LlmOps {
           - (length(bin(tt + 4096)) - length(bin(tc + 1))) AS BIGINT) wb
         FROM cnt CROSS JOIN tot),
       htoks AS (SELECT doc_id,
-        unnest(list_filter(string_split(text, ' '),
-          t -> length(t) > 0)) t
+        unnest(${tokensDuckSql("text")}) t
         FROM sp WHERE h >= 80),
       hbkt AS (SELECT doc_id,
         list_reduce(list_prepend(CAST(7 AS BIGINT),
@@ -4198,8 +4161,7 @@ object LlmOps {
   }, Some {
     import graft.operators.{Html, TextAnalysis, Urls}
     def tokOf(c: String) =
-      s"CAST(coalesce(sum(len(list_filter(string_split($c, ' '), " +
-        s"t -> length(t) > 0))), 0) AS BIGINT)"
+      s"CAST(coalesce(sum(len(${tokensDuckSql(c)})), 0) AS BIGINT)"
     def chrOf(c: String) = s"CAST(coalesce(sum(length($c)), 0) AS BIGINT)"
     def funnelRow(no: Int, name: String, cte: String, c: String) =
       s"""SELECT CAST($no AS BIGINT) AS stage_no, '$name' AS stage,
@@ -4275,11 +4237,8 @@ object LlmOps {
       eg AS (SELECT ch, min(doc_id) keep_id FROM eh GROUP BY ch),
       s8 AS (SELECT eh.doc_id, eh.source, eh.text
         FROM eh JOIN eg ON eh.ch = eg.ch AND eh.doc_id = eg.keep_id),
-      toks2 AS (SELECT doc_id, list_filter(string_split(text, ' '),
-          t -> length(t) > 0) tk FROM s8),
-      sh2 AS (SELECT doc_id, list_distinct(list_transform(
-          range(1, len(tk) - 1),
-          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) sg
+      toks2 AS (SELECT doc_id, ${tokensDuckSql("text")} tk FROM s8),
+      sh2 AS (SELECT doc_id, ${shinglesDuckSql("tk")} sg
         FROM toks2 WHERE len(tk) >= 3),
       ex2 AS (SELECT doc_id AS doc, unnest(sg) AS shingle FROM sh2),
       freq2 AS (SELECT shingle, count(*) AS df FROM ex2 GROUP BY 1),
@@ -4318,10 +4277,8 @@ object LlmOps {
       s10 AS (SELECT doc_id, source, text FROM s9
         WHERE doc_id = component),
       q1 AS (SELECT source, doc_id, text,
-        CAST(len(list_filter(string_split(text, ' '),
-          s -> length(s) > 0)) AS BIGINT) n_tokens,
-        CAST(len(list_distinct(list_filter(string_split(text, ' '),
-          s -> length(s) > 0))) AS BIGINT) quality
+        CAST(len(${tokensDuckSql("text")}) AS BIGINT) n_tokens,
+        CAST(len(list_distinct(${tokensDuckSql("text")})) AS BIGINT) quality
         FROM s10),
       q2 AS (SELECT source, doc_id, text, n_tokens,
         CAST(sum(n_tokens) OVER (PARTITION BY source
@@ -4459,8 +4416,7 @@ object LlmOps {
   // Result-identical: materialization hints only.
   private def l72TrainChains: String =
     s"""toks AS MATERIALIZED (SELECT doc_id,
-          list_filter(string_split(text, ' '),
-          t -> length(t) > 0) tk FROM documents),
+          ${tokensDuckSql("text")} tk FROM documents),
       w0 AS (SELECT substr(u.t, 1, 16) AS word FROM toks,
         LATERAL (SELECT unnest(tk) AS t) u),
       words AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) wf
@@ -4615,7 +4571,7 @@ object LlmOps {
     import graft.operators.UnigramLm
     val docs = Tables.documents(s, dir)
     val chars = docs.select(explode(expr(
-        "regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
+        wordsSql("text"))).as("w"))
       .agg(sum(length(col("w"))).cast("long").as("total_chars"))
     val bm = bpeMemo.computeIfAbsent(dir,
       d => Bpe.train(bpeTrainDocs(s, d), "text", bpeMerges))
@@ -4655,7 +4611,7 @@ object LlmOps {
           FROM chars, ${name}_t"""
     s"""WITH chars AS MATERIALIZED (SELECT CAST(sum(length(w)) AS BIGINT)
             AS total_chars
-          FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+'))
+          FROM (SELECT unnest(${wordsDuckSql("text")})
                   AS w FROM documents)),
         bpe_t AS MATERIALIZED (SELECT CAST(sum(bpe_total) AS BIGINT)
           AS p FROM (

@@ -56,7 +56,7 @@ object QualityGold {
     val cust = Tables.customer(s, dir)
       .join(broadcast(Tables.nation(s, dir)),
         col("c_nationkey") === col("n_nationkey"))
-    Lookups.withLookup(cust, Lookups.nationCode, "n_name", "iso_code")
+    Lookups.withLookup(cust, Lookups.nationCode, col("n_name"), "iso_code")
       .groupBy("iso_code").agg(count(lit(1)).as("n"))
   }, Some(s"""SELECT ${Lookups.caseSql(Lookups.nationCode, "n_name")}
       AS iso_code, CAST(count(*) AS BIGINT) AS n
@@ -68,7 +68,8 @@ object QualityGold {
     val supp = Tables.supplier(s, dir)
       .join(broadcast(Tables.nation(s, dir)),
         col("s_nationkey") === col("n_nationkey"))
-    Lookups.withLookup(supp, Lookups.nationContinent, "n_name", "continent")
+    Lookups.withLookup(supp, Lookups.nationContinent, col("n_name"),
+      "continent")
       .groupBy("continent").agg(
         count(lit(1)).as("n"),
         Exact.exactSum(col("s_acctbal"), 2).as("acctbal_sum"))

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+
 import graft.operators.Audit.AuditReport
 
 /** Driver-side report sinks (SURVEY §2.1 S7/S8; reference:
@@ -11,15 +13,12 @@ import graft.operators.Audit.AuditReport
   */
 object Reports {
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
+  /** `s` as a quoted JSON string literal: the one JSON string escaper
+    * of every hand-laid JSON record. Jackson escapes the quote, the
+    * backslash and every control character.
+    */
+  def jsonString(s: String): String =
+    "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
 
   /** A scalar id value: numbers/booleans bare, anything else a JSON
     * string — so an int id column serializes as `10248` and a string id
@@ -29,7 +28,7 @@ object Reports {
     case null => "null"
     case b: java.lang.Boolean => b.toString
     case n: java.lang.Number => n.toString
-    case other => s""""${esc(other.toString)}""""
+    case other => jsonString(other.toString)
   }
 
   /** S7 — the audit report as JSON (schema mirrors the reference's
@@ -41,26 +40,26 @@ object Reports {
     */
   def auditJson(source: String, r: AuditReport): String = {
     val missing = r.missingValues.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": $v""" }.mkString(", ")
+      .map { case (k, v) => s"${jsonString(k)}: $v" }.mkString(", ")
     val dupCols = r.duplicateColumnGroups.toSeq.sortBy(_._1)
       .map { case (stem, cols) =>
         s""" - ${stem}: ${cols.mkString(", ")}"""
-      }.map(s => s""""${esc(s)}"""").mkString(", ")
+      }.map(jsonString).mkString(", ")
     val vio =
       if (r.hasIdSamples)
         // parity mode: only fired rules appear (the reference appends
         // if-nonzero), so a clean source serializes an empty array
         r.inconsistencies.map { i =>
-          s"""{"column": "${esc(i.column)}", """ +
+          s"""{"column": ${jsonString(i.column)}, """ +
             s""""error_count": ${i.errorCount}, """ +
-            s""""expected_type": "${esc(i.expectedType)}", """ +
+            s""""expected_type": ${jsonString(i.expectedType)}, """ +
             s""""error_ids": [${i.errorIds.map(jsonScalar).mkString(", ")}]}"""
         }.mkString(", ")
       else r.formatViolations.toSeq.sortBy(_._1)
         .map { case (c, n) =>
-          s"""{"column": "${esc(c)}", "error_count": $n}"""
+          s"""{"column": ${jsonString(c)}, "error_count": $n}"""
         }.mkString(", ")
-    s"""{"source": "${esc(source)}", "missing_values": {$missing}, """ +
+    s"""{"source": ${jsonString(source)}, "missing_values": {$missing}, """ +
       s""""duplicate_rows": ${r.duplicateRows}, """ +
       s""""duplicate_columns": [$dupCols], """ +
       s""""data_type_and_format_inconsistencies": [$vio]}"""

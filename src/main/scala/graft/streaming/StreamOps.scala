@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.operators.{Anomalies, Cleaning}
+import graft.operators.{Anomalies, Cleaning, TextAnalysis}
 import graft.operators.Anomalies.AnomalyRule
 
 /** Structured Streaming surface (SURVEY §2.13 notes the reference is
@@ -546,9 +546,7 @@ object StreamOps {
       : (DataFrame, Long) => Unit =
     snapshotSink(statePath) { (batch, prior, _) =>
       sumByKeys(prior, batch
-          .select(explode(expr(
-            s"regexp_extract_all(lower($textCol), '[a-z]+', 0)"))
-            .as("word"))
+          .select(explode(expr(TextAnalysis.wordsSql(textCol))).as("word"))
           .groupBy("word").agg(count(lit(1)).cast("long").as("cnt")),
         Seq("word"), "cnt")
     }

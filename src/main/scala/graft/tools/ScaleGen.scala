@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Sessions
+import graft.operators.TextAnalysis
 
 /** Dev-only: inflate the driver-generated testdata to larger scale
   * factors by key-shifted replication, preserving every distribution the
@@ -67,7 +68,7 @@ object ScaleGen {
     val lnV = math.log(50000.0)
     s"""array_join(transform(
           transform(sequence(1, greatest(8,
-              size(regexp_extract_all(lower(text), '[a-z]+', 0)))),
+              size(${TextAnalysis.wordsSql("text")}))),
             j -> CAST(exp((pmod(xxhash64(doc_id, j, $seed), 1000000L)
                  / 1000000.0D) * ${lnV}D) AS BIGINT) - 1),
           r -> concat(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.core.Sessions
 import graft.plans.DimBroadcast
 import graft.queries.Registry
+import graft.sources.Reports.jsonString
 
 /** Scale-stress run: execute the headline queries against an INFLATED
   * testdata directory (see [[ScaleGen]]) and report per-query seconds
@@ -116,12 +117,13 @@ object ScaleStress {
     def jmap(m: scala.collection.Map[String, Any]): String =
       m.map { kv =>
         val v = kv._2 match {
-          case s: String => "\"" + s + "\""
+          case s: String => jsonString(s)
           case x => x.toString
         }
-        s""""${kv._1}":$v"""
+        s"${jsonString(kv._1)}:$v"
       }.mkString("{", ",", "}")
-    println(s"""{"scale_stress":"$label","sf_dir":"$sfDir","reps":$reps,""" +
+    println(s"""{"scale_stress":${jsonString(label)},""" +
+      s""""sf_dir":${jsonString(sfDir)},"reps":$reps,""" +
       s""""queries":${jmap(timings)},"errors":${jmap(errors)},""" +
       s""""customer_est_bytes":$customerBytes,""" +
       s""""a8_default":{"bound":${DimBroadcast.defaultMaxBytes},"joins":${jmap(a8DefJoins)},"rows":$a8DefRows,"secs":$a8DefSecs},""" +

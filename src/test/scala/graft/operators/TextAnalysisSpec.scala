@@ -1,12 +1,55 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, rng}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
 class TextAnalysisSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
+
+  /** Seeded strings over letters of both cases, digits, punctuation,
+    * runs of spaces (so leading and trailing ones too), tabs and
+    * newlines, plus the empty string and a few fixed edge cases. */
+  private val ruleTexts: Seq[String] = {
+    val piece = Gen.frequency(
+      6 -> Gen.alphaChar.map(_.toString),
+      2 -> Gen.numChar.map(_.toString),
+      2 -> Gen.oneOf(".", ",", "!", "'", "-", "#", "|"),
+      3 -> Gen.chooseNum(1, 3).map(" " * _),
+      1 -> Gen.oneOf("\t", "\n"))
+    val text = Gen.chooseNum(0, 40)
+      .flatMap(Gen.listOfN(_, piece)).map(_.mkString)
+    Seq("", " ", "   ", "\t", "a\tb c\nd", " Ab  ab aB ab ab ") ++
+      Iterator.iterate(rng.Seed(13L))(_.next).take(500)
+        .flatMap(sd => text(Gen.Parameters.default, sd)).toSeq
+  }
+
+  test("text rules equal plain-Scala references: whitespace tokens split " +
+    "on ' ' only, [a-z]+ words of the lowercased text, distinct 3-gram " +
+    "shingles empty below 3 tokens") {
+    import s.implicits._
+    val rows = ruleTexts.toDF("text").select(col("text"),
+        TextAnalysis.tokens("text"), expr(TextAnalysis.wordsSql("text")),
+        Dedup.shingles("text", 3))
+      .collect()
+    assert(rows.length == ruleTexts.length)
+    rows.foreach { r =>
+      val text = r.getString(0)
+      val toks = text.split(" ").filter(_.nonEmpty).toSeq
+      val words = "[a-z]+".r.findAllIn(text.toLowerCase).toSeq
+      // Scala's sliding yields one short window below 3 tokens, the
+      // rule yields none
+      val shingles =
+        if (toks.size < 3) Seq.empty[String]
+        else toks.sliding(3).map(_.mkString(" ")).toSeq.distinct
+      val shown = "'" + text.replace("\t", "\\t").replace("\n", "\\n") + "'"
+      assert(r.getSeq[String](1) == toks, s"tokens of $shown")
+      assert(r.getSeq[String](2) == words, s"words of $shown")
+      assert(r.getSeq[String](3) == shingles, s"shingles of $shown")
+    }
+  }
 
   test("splitAssign: deterministic across partitionings, fractions near " +
     "the requested 80/10/10") {

@@ -18,7 +18,9 @@ class ReportsSpec extends AnyFunSuite {
   test("audit JSON is valid and carries the reference report's shape") {
     val tmp = Files.createTempDirectory("graft_reports")
     val path = s"$tmp/audit_report.json"
-    Reports.writeAuditJson(path, Map("sales" -> report))
+    val oddName = "a\"b\\c\nd\u0001e"
+    Reports.writeAuditJson(path, Map("sales" -> report.copy(
+      formatViolations = report.formatViolations + (oddName -> 1L))))
     val body = Files.readString(Paths.get(path))
     // shape: array of per-source documents with the reference's keys
     assert(body.startsWith("[") && body.endsWith("]"))
@@ -33,6 +35,12 @@ class ReportsSpec extends AnyFunSuite {
       .json(path)
     assert(parsed.select("source").collect().map(_.getString(0)).toSeq ==
       Seq("sales"))
+    // a column name with a quote, a backslash and control characters
+    // round-trips through a strict JSON parser
+    val entries = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(body).get(0).get("data_type_and_format_inconsistencies")
+    assert((0 until entries.size).map(entries.get(_).get("column").asText)
+      .contains(oddName))
   }
 
   test("inconsistency entries serialize expected_type + error_ids with " +
