@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SaveMode
+import scala.collection.immutable.SeqMap
+import scala.jdk.CollectionConverters._
 
-import graft.core.Sessions
+import graft.core.{ReferenceSnapshot, Sessions}
 import graft.queries.Registry
-import graft.sources.Reports.{jsonString => jstr}
+import graft.tools.QueryRuns
 
 /** Benchmark main (driver contract): times the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -29,79 +30,65 @@ import graft.sources.Reports.{jsonString => jstr}
   */
 object Bench {
 
-  private def timingsOf(node: com.fasterxml.jackson.databind.JsonNode)
-      : Map[String, Double] =
-    Seq("all_queries", "queries").map(node.path)
-      .find(n => n.isObject && n.size() > 0)
-      .map { n =>
-        val it = n.properties().iterator()
-        val b = Map.newBuilder[String, Double]
-        while (it.hasNext) {
-          val e = it.next()
-          if (e.getValue.isNumber) b += e.getKey -> e.getValue.asDouble()
-        }
-        b.result()
-      }.getOrElse(Map.empty)
-
-  /** Per-query TRAILING median over the last `window` BENCH_HISTORY
-    * entries that carry a full timing map — the "what this query costs
-    * on this box on this code" band the contamination gate compares
-    * against. A median over ~20 runs is robust to the handful of
-    * contaminated records in the history (round-6's contended driver
-    * run, round-8's x18).
-    */
-  private def trailingHistory(window: Int = 20): Map[String, Double] = {
-    val hist = new java.io.File(historyFile)
-    if (!hist.isFile) return Map.empty
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val src = scala.io.Source.fromFile(hist)
-    val maps = try {
-      src.getLines().flatMap { l =>
-        val m = try timingsOf(mapper.readTree(l))
-        catch { case _: Throwable => Map.empty[String, Double] }
-        if (m.size > 1) Some(m) else None // skip single-query lines
-      }.toList
-    } finally src.close()
-    maps.flatMap(_.keys).distinct.flatMap { k =>
-      val vals = maps.flatMap(_.get(k)).takeRight(window)
-      if (vals.size >= 3) {
-        val s = vals.sorted
-        val med = if (s.size % 2 == 1) s(s.size / 2)
-          else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-        Some(k -> med)
-      } else None
-    }.toMap
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
-  /** Per-query timings of the previous run, parsed with the Jackson
-    * shipped in Spark: BENCH_DETAIL.json (the committed full record of
-    * the newest run), else the newest full-registry line of
-    * [[historyFile]]. Empty when neither exists.
+  /** Per-query timings of a record; empty when it does not parse. */
+  private def timingsOf(record: => com.fasterxml.jackson.databind.JsonNode)
+      : Map[String, Double] =
+    try {
+      val node = record
+      Seq("all_queries", "queries").map(node.path)
+        .find(n => n.isObject && n.size() > 0).toSeq
+        .flatMap(_.properties().asScala)
+        .collect { case e if e.getValue.isNumber =>
+          e.getKey -> e.getValue.asDouble() }.toMap
+    } catch { case _: Throwable => Map.empty }
+
+  /** The timing maps of [[historyFile]], oldest first, keeping only the
+    * lines that carry a full timing map: the log also holds single-query
+    * lines, which would otherwise shrink a comparison to one query.
     */
-  private def previousBench(): (String, Map[String, Double]) = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val detailFile = new java.io.File("BENCH_DETAIL.json")
-    if (detailFile.isFile) {
-      val m = try timingsOf(mapper.readTree(detailFile))
-      catch { case _: Throwable => Map.empty[String, Double] }
-      if (m.size > 1) return "BENCH_DETAIL.json" -> m
-    }
-    // Walk BACKWARDS to the newest history line with a full timing
-    // map: the log holds single-query lines that would otherwise
-    // shrink the delta comparison to one query.
+  private def historyTimings(): List[Map[String, Double]] = {
     val hist = new java.io.File(historyFile)
-    val none = "" -> Map.empty[String, Double]
-    if (!hist.isFile) none
+    if (!hist.isFile) Nil
     else {
-      val lines = scala.io.Source.fromFile(hist)
-      val all = try lines.getLines().toList finally lines.close()
-      all.reverseIterator.map { l =>
-        try timingsOf(mapper.readTree(l))
-        catch { case _: Throwable => Map.empty[String, Double] }
-      }.find(_.size > 1)
-        .map(historyFile -> _)
-        .getOrElse(none)
+      val src = scala.io.Source.fromFile(hist)
+      try src.getLines()
+        .map(l => timingsOf(QueryRuns.mapper.readTree(l)))
+        .filter(_.size > 1).toList
+      finally src.close()
     }
+  }
+
+  /** Per-query TRAILING median over the last `window` history entries —
+    * the "what this query costs on this box on this code" band the
+    * contamination gate compares against. A median over ~20 runs is
+    * robust to the handful of contaminated records in the history
+    * (round-6's contended driver run, round-8's x18).
+    */
+  private def trailingHistory(history: List[Map[String, Double]],
+                              window: Int = 20): Map[String, Double] =
+    history.flatMap(_.keys).distinct.flatMap { k =>
+      val vals = history.flatMap(_.get(k)).takeRight(window)
+      if (vals.size >= 3) Some(k -> median(vals)) else None
+    }.toMap
+
+  /** Per-query timings of the previous run: BENCH_DETAIL.json (the
+    * committed full record of the newest run), else the newest history
+    * entry. Empty when neither exists.
+    */
+  private def previousBench(history: List[Map[String, Double]])
+      : (String, Map[String, Double]) = {
+    val detailFile = new java.io.File("BENCH_DETAIL.json")
+    val detail =
+      if (detailFile.isFile) timingsOf(QueryRuns.mapper.readTree(detailFile))
+      else Map.empty[String, Double]
+    if (detail.size > 1) "BENCH_DETAIL.json" -> detail
+    else history.lastOption.map(historyFile -> _).getOrElse("" -> Map.empty)
   }
 
   private val historyFile = "BENCH_HISTORY.jsonl"
@@ -249,23 +236,12 @@ object Bench {
       try graft.core.Tables.t(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
-    // ...then run each headline once at the SMALLEST SF: the first
-    // execution of a plan pays whole-stage-codegen compilation (up to
-    // ~1s for the complex plans), which is per-JVM overhead, not query
-    // cost — the generated classes are shared with the identical plan at
-    // the target SF, so the timed runs below measure steady-state
-    // execution. That holds only while the codegen cache holds the
-    // working set (Sessions.build sizes it); "codegen_compiles" ->
-    // "headline_reps" counts the compiles the timed reps still paid.
-    // (The breadth sweep stays unwarmed: its purpose is regression
-    // DELTAS, which cold-vs-cold comparison preserves.)
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory)
-      Registry.headlines.foreach { q =>
-        try q.run(spark, warmDir)
-          .write.format("noop").mode(SaveMode.Overwrite).save()
-        catch { case _: Throwable => () }
-      }
+    // ...then the sf0.001 codegen warm-up of the headline set;
+    // "codegen_compiles" -> "headline_reps" counts the compiles the
+    // timed reps still paid. (The breadth sweep stays unwarmed: its
+    // purpose is regression DELTAS, which cold-vs-cold comparison
+    // preserves.)
+    QueryRuns.warmUp(spark, Registry.headlines)
 
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val allTimings = scala.collection.mutable.LinkedHashMap[String, Double]()
@@ -288,14 +264,22 @@ object Bench {
     val calib = scala.collection.mutable.ArrayBuffer[Double]()
     val loads = scala.collection.mutable.ArrayBuffer[Double]()
     def probe(): Unit = try {
-      loads += java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
+      loads += loadAvg1()
       // bit_xor, not sum: ANSI mode makes a sum of full-range hashes an
       // ARITHMETIC_OVERFLOW; xor keeps the same pure-CPU profile
-      calib += timeOnce(() => spark.range(0L, 20000000L, 1L, 32)
-        .selectExpr("bit_xor(xxhash64(id)) AS h")
-        .write.format("noop").mode(SaveMode.Overwrite).save())
+      calib += QueryRuns.noopSeconds(spark)(
+        spark.range(0L, 20000000L, 1L, 32)
+          .selectExpr("bit_xor(xxhash64(id)) AS h"))
     } catch { case _: Throwable => () } // a broken probe must not kill the bench
+
+    // a query's samples -> its median in the timing maps (the headline
+    // map too for a headline entry) and its max-min spread
+    def store(name: String, headline: Boolean = false): Unit = {
+      val buf = samplesOf(name)
+      allTimings(name) = median(buf.toSeq)
+      if (headline || timings.contains(name)) timings(name) = allTimings(name)
+      if (buf.size > 1) spreads(name) = QueryRuns.r3(buf.max - buf.min)
+    }
 
     // Single-run numbers on this box swing +/-15% run to run (see
     // BENCH_HISTORY.jsonl: identical code, totals 11.6-14.7s), which
@@ -303,39 +287,22 @@ object Bench {
     // therefore the MEDIAN of `reps` runs, with the max-min spread
     // reported alongside so a delta smaller than the spread reads as
     // noise, not regression.
-    def timeOnce(run: () => Unit): Double = {
-      // isolate runs: operator-internal cache() is part of a query's
-      // own cost, but Spark's CacheManager matches canonicalized plans
-      // ACROSS queries (and against the warmup runs), which would let
-      // one run silently serve another's work from memory
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      run()
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-
-    def time(name: String, run: () => Unit,
-             into: scala.collection.mutable.LinkedHashMap[String, Double],
-             reps: Int): Unit =
+    def time(name: String, run: () => Unit, reps: Int,
+             headline: Boolean = false): Unit =
       try {
         val buf = samplesOf.getOrElseUpdate(name,
           scala.collection.mutable.ArrayBuffer[Double]())
-        (1 to reps).foreach(_ => buf += timeOnce(run))
-        into(name) = median(buf.toSeq)
-        if (buf.size > 1)
-          spreads(name) = math.rint((buf.max - buf.min) * 1000) / 1000
+        (1 to reps).foreach(_ => buf += QueryRuns.seconds(spark)(run()))
+        store(name, headline)
       } catch {
         case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .linesIterator.take(1).mkString
+          errors(name) = QueryRuns.firstLine(e)
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
+    def query(name: String): () => Unit = {
+      val q = Registry.named(name)
+      () => QueryRuns.sink(q.run(spark, sfDir))
+    }
 
     val headlineReps = 3
     // headline set first (the round-over-round contract numbers):
@@ -353,12 +320,9 @@ object Bench {
     }
     val compilesBeforeHeadlines = compiles()
     Registry.headlines.foreach { q =>
-      time(q.name, () => q.run(spark, sfDir)
-        .write.format("noop").mode(SaveMode.Overwrite).save(), timings,
-        headlineReps)
+      time(q.name, query(q.name), headlineReps, headline = true)
     }
     val headlineCompiles = compiles() - compilesBeforeHeadlines
-    allTimings ++= timings
     // ...then the rest of the registry, so every query has a regression
     // signal (timed after the headlines to keep the headline numbers
     // free of interference from the breadth sweep). TWO samples each,
@@ -368,9 +332,7 @@ object Bench {
     // delta smaller than its spread is self-describing as noise.
     val compilesBeforeBreadth = compiles()
     Registry.all.filterNot(_.headline).foreach { q =>
-      time(q.name, () => q.run(spark, sfDir)
-        .write.format("noop").mode(SaveMode.Overwrite).save(), allTimings,
-        2)
+      time(q.name, query(q.name), 2)
     }
     // ...and stabilize the slowest breadth entries the same way: their
     // absolute numbers dominate all_total, so their n=1 noise is the
@@ -381,30 +343,31 @@ object Bench {
     val coldFirst = scala.collection.mutable.LinkedHashMap[String, Double]()
     allTimings.toSeq.filterNot { case (k, _) => timings.contains(k) }
       .sortBy(-_._2).take(slowestN).foreach { case (name, med2) =>
-        val q = Registry.all.find(_.name == name).get
         // the true cold sample is the FIRST one taken, not the n=2
         // median — keep cold-vs-cold deltas computable from raw samples
         coldFirst(name) = samplesOf.get(name)
           .flatMap(_.headOption).getOrElse(med2)
         // two breadth samples are already in samplesOf; 2 more make the
         // entry a median-of-4 spanning cold+warm
-        time(name, () => q.run(spark, sfDir)
-          .write.format("noop").mode(SaveMode.Overwrite).save(),
-          allTimings, 2)
+        time(name, query(name), 2)
       }
     val breadthCompiles = compiles() - compilesBeforeBreadth
     probe()
 
     // Gate state, declared before the e2e block because the e2e gate
     // below records into it.
-    val histMed = trailingHistory()
+    val history = historyTimings()
+    val histMed = trailingHistory(history)
     val gateRemeasured =
       scala.collection.mutable.LinkedHashMap[String, Double]()
     val gateDropped = scala.collection.mutable.LinkedHashMap[String, Int]()
     val gateFlags = scala.collection.mutable.LinkedHashMap[String, String]()
-    // shared with the breadth gate: drop samples sitting far above the
-    // refreshed median once enough clean samples exist to outvote them,
-    // and COUNT the drops — the record always says what was discarded
+    // After re-measuring, the contaminated early sample would still own
+    // the max-min spread no matter how many clean samples join it — so
+    // once a re-measured query has >=4 kept samples, samples sitting
+    // >1.5x above the refreshed median (plus a 0.25s jitter floor) are
+    // trimmed as contended-machine artifacts and COUNTED in
+    // "gate_dropped"; the record always says what was discarded.
     def trimContended(name: String): Unit =
       samplesOf.get(name).foreach { buf =>
         val med = median(buf.toSeq)
@@ -414,105 +377,106 @@ object Bench {
           gateDropped(name) =
             gateDropped.getOrElse(name, 0) + (buf.size - kept.size)
           buf.clear(); buf ++= kept
-          allTimings(name) = median(buf.toSeq)
-          spreads(name) = math.rint((buf.max - buf.min) * 1000) / 1000
-          if (timings.contains(name)) timings(name) = allTimings(name)
+          store(name)
         }
       }
+    // Re-measure-and-trim, shared by the e2e and breadth gates: while a
+    // candidate is suspect (bounded at 2 passes), append `samples` fresh
+    // samples (a contaminated early sample then loses the median vote and
+    // the spread is judged over enough samples to mean something) and
+    // trim; still-suspect entries stay in the record, flagged in
+    // "gate_flags" — never silently discarded. Returns the passes run.
+    def gate(candidates: () => Seq[String],
+             suspect: String => Option[String], run: String => () => Unit,
+             samples: Int): Int = {
+      def suspects() = candidates().flatMap(n => suspect(n).map(n -> _))
+      var passes = 0
+      while (passes < 2 && suspects().nonEmpty) {
+        passes += 1
+        suspects().foreach { case (name, why) =>
+          if (!gateRemeasured.contains(name))
+            gateRemeasured(name) = allTimings(name) // pre-gate median
+          System.err.println(
+            s"[bench-gate] pass $passes: re-measuring $name ($why, " +
+              s"median=${allTimings(name)}, " +
+              s"spread=${spreads.getOrElse(name, 0.0)})")
+          time(name, run(name), samples)
+          trimContended(name)
+        }
+      }
+      suspects().foreach { case (n, why) => gateFlags(n) = why }
+      passes
+    }
 
     // Reference-pipeline throughput: the full CSV->audit->clean->enrich->
     // conform->anomalies->star flow at the reference's own data scale, in
     // ONE session. (The reference runs the same flow as nine separate
     // spark-submit processes with per-row Python UDFs.)
-    val refRaw = "/root/reference/data/raw"
     // what this run could not measure, and why — recorded, never silent
     val unmeasured = scala.collection.mutable.LinkedHashMap[String, String]()
-    if (!new java.io.File(refRaw).isDirectory)
-      unmeasured("ref_pipeline_e2e") = s"reference snapshot missing at $refRaw"
-    else {
-      // untimed warm runs for the same codegen-compilation reason;
-      // drop their caches so the timed runs re-do the real I/O + cleaning.
-      // All runs execute under the pipeline's own small-data tuning
-      // (ReferenceParity.smallDataTuned — AQE off, one shuffle
-      // partition), exactly as a production deployment of this bounded
-      // pipeline would run it.
-      graft.pipeline.ReferenceParity.smallDataTuned(spark) {
-        val warmRuns = 4
-        try {
-          (1 to warmRuns).foreach { _ =>
-            spark.catalog.clearCache()
-            val w = graft.pipeline.ReferenceParity.run(spark, refRaw,
-              "2024-11-24")
-            w.factSales.write.format("noop").mode(SaveMode.Overwrite).save()
-            w.dimProducts.write.format("noop").mode(SaveMode.Overwrite)
-              .save()
-          }
-        } catch { case _: Throwable => () }
-        // e2e is median-of-7: its ~3 s median sits at Spark's fixed
-        // job-scheduling floor, where one descheduled sample shifts a
-        // median-of-3 by ~0.5 s — larger than any real change this
-        // pipeline sees round to round. This is the instrument that
-        // adjudicates the <3.0 s target (emitted as "e2e_med7").
-        val e2eBody: () => Unit = () => {
-          val out = graft.pipeline.ReferenceParity.run(spark, refRaw,
-            "2024-11-24")
-          // the two sinks are independent noop writes — consume them
-          // CONCURRENTLY, as a production loader with independent sinks
-          // would (the JDBC loader's dims-before-fact FK ordering lives
-          // in WarehouseLoader, not here); the dim write's whole subtree
-          // is cached, so it overlaps the fact job's scheduling gaps
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val e2e = "ref_pipeline_e2e"
+    ReferenceSnapshot.missing(ReferenceSnapshot.rawDir) match {
+      case Some(why) => unmeasured(e2e) = why
+      case None =>
+        val refRaw = ReferenceSnapshot.raw
+        // untimed warm runs for the same codegen-compilation reason;
+        // drop their caches so the timed runs re-do the real I/O +
+        // cleaning. All runs execute under the pipeline's own small-data
+        // tuning (ReferenceParity.smallDataTuned — AQE off, one shuffle
+        // partition), exactly as a production deployment of this bounded
+        // pipeline would run it.
+        graft.pipeline.ReferenceParity.smallDataTuned(spark) {
+          val warmRuns = 4
           try {
-            val fDims = scala.concurrent.Future {
-              out.dimProducts.write.format("noop")
-                .mode(SaveMode.Overwrite).save()
+            (1 to warmRuns).foreach { _ =>
+              spark.catalog.clearCache()
+              val w = graft.pipeline.ReferenceParity.run(spark, refRaw,
+                "2024-11-24")
+              QueryRuns.sink(w.factSales)
+              QueryRuns.sink(w.dimProducts)
             }
-            out.factSales.write.format("noop").mode(SaveMode.Overwrite)
-              .save()
-            scala.concurrent.Await.result(fDims,
-              scala.concurrent.duration.Duration(15, "min"))
-          } finally pool.shutdown()
-        }
-        time("ref_pipeline_e2e", e2eBody, timings, 7)
-        timings.get("ref_pipeline_e2e")
-          .foreach(allTimings("ref_pipeline_e2e") = _)
-
-        // e2e contamination gate — closes the round-11 gap where the
-        // breadth gate re-measured suspect queries but never the e2e
-        // median-of-7, letting a noisy 3.73 s / spread-1.2 record ship
-        // while the same-code clean band was 2.6-3.7 s / spread ~0.3.
-        // Suspicion: spread above 0.5 s, or median >1.3x the trailing
-        // BENCH_HISTORY e2e median. Cure: up to 2 batches of 5 fresh
-        // samples (the contaminated early samples then lose the median
-        // vote), then the shared contended-sample trim; still-suspect
-        // stays in the record, flagged — never silently discarded.
-        def e2eSuspect(): Option[String] =
-          timings.get("ref_pipeline_e2e").flatMap { m =>
-            val sp = spreads.getOrElse("ref_pipeline_e2e", 0.0)
-            if (sp > 0.5) Some("spread>0.5s")
-            else if (histMed.get("ref_pipeline_e2e")
-              .exists(h => m > 1.3 * h)) Some("median>1.3x-hist")
-            else None
+          } catch { case _: Throwable => () }
+          // e2e is median-of-7: its ~3 s median sits at Spark's fixed
+          // job-scheduling floor, where one descheduled sample shifts a
+          // median-of-3 by ~0.5 s — larger than any real change this
+          // pipeline sees round to round. This is the instrument that
+          // adjudicates the <3.0 s target (emitted as "e2e_med7").
+          val e2eBody: () => Unit = () => {
+            val out = graft.pipeline.ReferenceParity.run(spark, refRaw,
+              "2024-11-24")
+            // the two sinks are independent noop writes — consume them
+            // CONCURRENTLY, as a production loader with independent sinks
+            // would (the JDBC loader's dims-before-fact FK ordering lives
+            // in WarehouseLoader, not here); the dim write's whole subtree
+            // is cached, so it overlaps the fact job's scheduling gaps
+            val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+            implicit val ec: scala.concurrent.ExecutionContext =
+              scala.concurrent.ExecutionContext.fromExecutor(pool)
+            try {
+              val fDims = scala.concurrent.Future {
+                QueryRuns.sink(out.dimProducts)
+              }
+              QueryRuns.sink(out.factSales)
+              scala.concurrent.Await.result(fDims,
+                scala.concurrent.duration.Duration(15, "min"))
+            } finally pool.shutdown()
           }
-        var e2ePasses = 0
-        while (e2ePasses < 2 && e2eSuspect().nonEmpty) {
-          e2ePasses += 1
-          if (!gateRemeasured.contains("ref_pipeline_e2e"))
-            gateRemeasured("ref_pipeline_e2e") = timings("ref_pipeline_e2e")
-          System.err.println(
-            s"[bench-gate] e2e pass $e2ePasses: re-measuring " +
-              s"ref_pipeline_e2e (${e2eSuspect().get}, " +
-              s"median=${timings("ref_pipeline_e2e")}, " +
-              s"spread=${spreads.getOrElse("ref_pipeline_e2e", 0.0)})")
-          time("ref_pipeline_e2e", e2eBody, timings, 5)
-          trimContended("ref_pipeline_e2e")
-          timings.get("ref_pipeline_e2e")
-            .foreach(allTimings("ref_pipeline_e2e") = _)
+          time(e2e, e2eBody, 7, headline = true)
+
+          // e2e contamination gate — closes the round-11 gap where the
+          // breadth gate re-measured suspect queries but never the e2e
+          // median-of-7, letting a noisy 3.73 s / spread-1.2 record ship
+          // while the same-code clean band was 2.6-3.7 s / spread ~0.3.
+          // Suspicion: spread above 0.5 s, or median >1.3x the trailing
+          // BENCH_HISTORY e2e median. Cure: up to 2 batches of 5 fresh
+          // samples.
+          gate(() => Seq(e2e).filter(timings.contains), { n =>
+            if (spreads.getOrElse(n, 0.0) > 0.5) Some("spread>0.5s")
+            else if (histMed.get(n).exists(h => allTimings(n) > 1.3 * h))
+              Some("median>1.3x-hist")
+            else None
+          }, _ => e2eBody, samples = 5)
         }
-        e2eSuspect().foreach(why => gateFlags("ref_pipeline_e2e") = why)
-      }
     }
 
     // ---- Contamination gate ------------------------------------------
@@ -523,21 +487,9 @@ object Bench {
     // record is written, any query whose max-min spread exceeds its
     // median, or whose median sits >2x above its BENCH_HISTORY trailing
     // median (0.5s absolute floor so sub-second jitter doesn't churn),
-    // gets 3 FRESH samples appended and its median/spread recomputed
-    // over the enlarged set — a contaminated early sample then loses
-    // the median vote and the spread is judged over enough samples to
-    // mean something. Bounded at 2 passes; a query still suspect after
-    // that is either a genuinely contended window (visible in calib) or
-    // a REAL regression — either way it stays in the record, flagged in
-    // "gate_flags" instead of silently discarded. ref_pipeline_e2e is
-    // exempt: its instrument is already median-of-7.
-    // After re-measuring, the contaminated early sample would still own
-    // the max-min spread no matter how many clean samples join it — so
-    // once a re-measured query has >=4 kept samples, samples sitting
-    // >1.5x above the refreshed median (plus a 0.25s jitter floor) are
-    // trimmed as contended-machine artifacts and COUNTED in
-    // "gate_dropped"; the record always says what was discarded.
-    def gateSuspect(n: String): Option[String] = {
+    // gets 3 FRESH samples per pass. ref_pipeline_e2e is exempt: its
+    // instrument is already median-of-7, with its own gate above.
+    def breadthSuspect(n: String): Option[String] = {
       val m = allTimings(n)
       val sp = spreads.getOrElse(n, 0.0)
       if (sp > m && sp > 0.05) Some("spread>median")
@@ -545,52 +497,27 @@ object Bench {
         Some("median>2x-hist")
       else None
     }
-    def gateSuspects(): Seq[(String, String)] = allTimings.keys
-      .filter(n => n != "ref_pipeline_e2e" && !errors.contains(n))
-      .flatMap(n => gateSuspect(n).map(n -> _)).toSeq
-    var gatePasses = 0
-    while (gatePasses < 2 && gateSuspects().nonEmpty) {
-      gatePasses += 1
-      gateSuspects().foreach { case (name, why) =>
-        Registry.all.find(_.name == name).foreach { q =>
-          if (!gateRemeasured.contains(name))
-            gateRemeasured(name) = allTimings(name) // pre-gate median
-          System.err.println(
-            s"[bench-gate] pass $gatePasses: re-measuring $name ($why, " +
-              s"median=${allTimings(name)}, " +
-              s"spread=${spreads.getOrElse(name, 0.0)})")
-          time(name, () => q.run(spark, sfDir)
-            .write.format("noop").mode(SaveMode.Overwrite).save(),
-            allTimings, 3)
-          trimContended(name)
-        }
-      }
-    }
-    gateSuspects().foreach { case (n, why) => gateFlags(n) = why }
+    val gatePasses = gate(() => allTimings.keys.toSeq
+      .filter(n => n != e2e && !errors.contains(n)),
+      breadthSuspect, query, samples = 3)
 
     probe()
 
-    def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    def jmap(m: Iterable[(String, Double)], round: Boolean): String =
-      m.map { case (k, v) => s"${jstr(k)}:${if (round) r3(v) else v}" }
-        .mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString("{", ",", "}")
-    val unmeasuredJson = unmeasured
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    val (prevFile, prev) = previousBench()
+    def rounded(m: scala.collection.Map[String, Double]) =
+      m.map { case (k, v) => k -> QueryRuns.r3(v) }
+    val (prevFile, prev) = previousBench(history)
     val deltas = allTimings.collect {
-      case (k, v) if prev.contains(k) => s"${jstr(k)}:${r3(v - prev(k))}"
-    }.mkString("{", ",", "}")
+      case (k, v) if prev.contains(k) => k -> QueryRuns.r3(v - prev(k))
+    }
     val total = timings.values.sum
     // first-class e2e gate number: the median-of-7 steady-state sample,
-    // with its spread —
-    // the "<3.0 s" target is adjudicated by THIS field, not by eyeballing
-    // the queries map
-    val e2eJson = timings.get("ref_pipeline_e2e").map { v =>
-      s""","e2e_med7":${r3(v)},"e2e_spread":${
-        r3(spreads.getOrElse("ref_pipeline_e2e", 0.0))}"""
-    }.getOrElse("")
+    // with its spread — the "<3.0 s" target is adjudicated by THIS field,
+    // not by eyeballing the queries map
+    val head = Seq("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "method" -> s"median-of-$headlineReps") ++
+      timings.get(e2e).toSeq.flatMap(v => Seq(
+        "e2e_med7" -> QueryRuns.r3(v),
+        "e2e_spread" -> QueryRuns.r3(spreads.getOrElse(e2e, 0.0))))
     // Second headline group (round-16 verdict item 6): the heavy
     // optimization-target queries live only in all_queries, where
     // +/-15% box noise on the sub-second headline set hides real wins
@@ -599,31 +526,22 @@ object Bench {
     // records. ADDITIONS-ONLY: "value"/"queries" are untouched.
     val heavyNames = Seq("l61_containment_join", "l71_curation_pipeline",
       "l77_suffix_dup_spans", "l31_trained_quality", "x22_pagerank",
-      "l2b_ngram_jaccard_capped")
-    val heavyJson = {
-      val present = heavyNames.filter(allTimings.contains)
-      if (present.isEmpty) ""
-      else s""","heavy_total":${r3(present.map(allTimings).sum)},""" +
-        s""""heavy_queries":${jmap(
-          present.map(n => n -> allTimings(n)), round = true)}"""
-    }
-    val compilesJson =
-      s""""codegen_compiles":{"run":${compiles() - compilesAtStart},""" +
-        s""""headline_reps":$headlineCompiles,"breadth":$breadthCompiles}"""
-    val calibJson = calib.map(r3).mkString("[", ",", "]")
-    val loadJson = loads.map(r3).mkString("[", ",", "]")
-    val loadGateJson =
-      s""""load_gate":{"ok":$loadGateOk,"load_at_entry":${r3(loadAtEntry)},""" +
-        s""""load_at_start":${r3(loadAtStart)},"pre_wait_sec":$preWaitSec,""" +
-        s""""busy_jvms_at_start":${busyAtStart.size},""" +
-        s""""steal_sec":${r3((stealJiffies() - stealAtStart) / 100.0)}}"""
-    val gateJson =
-      s""""gate_passes":$gatePasses,"gate_remeasured":${
-        jmap(gateRemeasured, round = true)},"gate_dropped":${
-        gateDropped.map { case (k, v) => s"${jstr(k)}:$v" }
-          .mkString("{", ",", "}")},"gate_flags":${
-        gateFlags.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-          .mkString("{", ",", "}")}"""
+      "l2b_ngram_jaccard_capped").filter(allTimings.contains)
+    val heavy =
+      if (heavyNames.isEmpty) Nil
+      else Seq(
+        "heavy_total" -> QueryRuns.r3(heavyNames.map(allTimings).sum),
+        "heavy_queries" -> SeqMap.from(
+          heavyNames.map(n => n -> QueryRuns.r3(allTimings(n)))))
+    val loadGate = SeqMap("ok" -> loadGateOk,
+      "load_at_entry" -> QueryRuns.r3(loadAtEntry),
+      "load_at_start" -> QueryRuns.r3(loadAtStart),
+      "pre_wait_sec" -> preWaitSec,
+      "busy_jvms_at_start" -> busyAtStart.size,
+      "steal_sec" -> QueryRuns.r3((stealJiffies() - stealAtStart) / 100.0))
+    val calibAndLoad = Seq("calib_sec" -> calib.map(QueryRuns.r3),
+      "load_avg" -> loads.map(QueryRuns.r3), "load_gate" -> loadGate,
+      "waited_sec" -> waitedSec)
     // Two outputs with distinct jobs:
     // - BENCH_DETAIL.json + BENCH_HISTORY.jsonl carry the FULL record
     //   (per-query breadth timings, spreads, cold-first samples, deltas
@@ -635,7 +553,18 @@ object Bench {
     //   with the numbers only recoverable from the truncated tail text.
     //   The compact line (headline medians rounded to ms + errors +
     //   calibration evidence) stays well under the window.
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","method":"median-of-$headlineReps"$e2eJson,"queries":${jmap(timings, round = false)},"errors":$errs,"unmeasured":$unmeasuredJson,"spreads":${jmap(spreads, round = false)},"cold_first":${jmap(coldFirst, round = false)},"all_queries":${jmap(allTimings, round = false)},"all_total":${allTimings.values.sum}$heavyJson,"prev_bench":${jstr(prevFile)},"deltas_vs_prev":$deltas,$gateJson,"codegen_failures":${codegenFailures.get},$compilesJson,"calib_sec":$calibJson,"load_avg":$loadJson,$loadGateJson,"waited_sec":$waitedSec,"sf":${jstr(sfDir)}}"""
+    val detail = QueryRuns.json(SeqMap.from(head ++ Seq(
+      "queries" -> timings, "errors" -> errors, "unmeasured" -> unmeasured,
+      "spreads" -> spreads, "cold_first" -> coldFirst,
+      "all_queries" -> allTimings, "all_total" -> allTimings.values.sum) ++
+      heavy ++ Seq("prev_bench" -> prevFile, "deltas_vs_prev" -> deltas,
+      "gate_passes" -> gatePasses,
+      "gate_remeasured" -> rounded(gateRemeasured),
+      "gate_dropped" -> gateDropped, "gate_flags" -> gateFlags,
+      "codegen_failures" -> codegenFailures.get,
+      "codegen_compiles" -> SeqMap("run" -> (compiles() - compilesAtStart),
+        "headline_reps" -> headlineCompiles, "breadth" -> breadthCompiles)) ++
+      calibAndLoad ++ Seq("sf" -> sfDir)))
     // history append BEFORE the detail overwrite: a crash between the
     // two can lose the overwrite, never the append-only log
     val w = new java.io.FileWriter(historyFile, true)
@@ -643,8 +572,13 @@ object Bench {
     val detailFileOut = "BENCH_DETAIL.json"
     val dw = new java.io.FileWriter(detailFileOut, false)
     try dw.write(detail + "\n") finally dw.close()
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","method":"median-of-$headlineReps"$e2eJson,"queries":${jmap(timings, round = true)},"errors":$errs,"unmeasured":$unmeasuredJson,"all_total":${r3(allTimings.values.sum)}$heavyJson,"gate_passes":$gatePasses,"gate_flags":${gateFlags.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")},"codegen_failures":${codegenFailures.get},"calib_sec":$calibJson,"load_avg":$loadJson,$loadGateJson,"waited_sec":$waitedSec,"detail":${jstr(detailFileOut)},"sf":${jstr(sfDir)}}"""
-    println(line)
+    println(QueryRuns.json(SeqMap.from(head ++ Seq(
+      "queries" -> rounded(timings), "errors" -> errors,
+      "unmeasured" -> unmeasured,
+      "all_total" -> QueryRuns.r3(allTimings.values.sum)) ++ heavy ++
+      Seq("gate_passes" -> gatePasses, "gate_flags" -> gateFlags,
+        "codegen_failures" -> codegenFailures.get) ++ calibAndLoad ++
+      Seq("detail" -> detailFileOut, "sf" -> sfDir))))
     spark.stop()
   }
 }

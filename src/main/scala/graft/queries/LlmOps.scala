@@ -26,6 +26,22 @@ object LlmOps {
              ELSE 'test' END"""
   }
 
+  /** One DuckDB dot product of two DOUBLE[] expressions over positions
+    * 1 until `bound`: `"65"` for the 64-dim embeddings, `"len(a) + 1"`
+    * for any width. The prepended 0.0 keeps the sum a DOUBLE, and 0.0
+    * rather than NULL for an empty list.
+    */
+  private def duckDot(a: String, b: String, bound: String): String =
+    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+        list_transform(range(1, $bound), i -> $a[i] * $b[i])),
+        (x, y) -> x + y)"""
+
+  /** Cosine of two DOUBLE[] expressions of any width, by [[duckDot]]. */
+  private def duckCosine(a: String, b: String): String =
+    s"""${duckDot(a, b, s"len($a) + 1")}
+          / (sqrt(${duckDot(a, a, s"len($a) + 1")})
+           * sqrt(${duckDot(b, b, s"len($b) + 1")}))"""
+
   /** Force DuckDB to MATERIALIZE the named CTEs: its optimizer
     * inlines a CTE at every reference site, so a long stage chain
     * whose tail references upstream stages repeatedly re-evaluates
@@ -328,19 +344,11 @@ object LlmOps {
     val emb = Tables.embeddings(s, dir)
     Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 10),
       "vec_id", "embedding", k = 5)
-  }, Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v
+  }, Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v
         FROM embeddings),
       q AS (SELECT vec_id q_id, v qv FROM e WHERE vec_id < 10),
       scored AS (SELECT q_id, e.vec_id n_id,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            list_transform(range(1, len(qv) + 1), i -> qv[i] * v[i])),
-            (x, y) -> x + y)
-          / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list_transform(range(1, len(qv) + 1), i -> qv[i] * qv[i])),
-              (x, y) -> x + y))
-           * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list_transform(range(1, len(v) + 1), i -> v[i] * v[i])),
-              (x, y) -> x + y))) AS cosine
+          ${duckCosine("qv", "v")} AS cosine
         FROM e, q WHERE q_id <> e.vec_id),
       ranked AS (SELECT q_id, n_id, cosine,
           CAST(row_number() OVER (PARTITION BY q_id
@@ -376,15 +384,11 @@ object LlmOps {
   private def lshOracleSql(candCond: String): String = {
     val planeRows = (0 until 32).map(g =>
       s"($g, ${Similarity.planeSqlLiteral(g, 64)})").mkString(",\n        ")
-    def dot(a: String, b: String) =
-      s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          list_transform(range(1, 65), i -> $a[i] * $b[i])),
-          (x, y) -> x + y)"""
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v
           FROM embeddings),
         planes AS (SELECT * FROM (VALUES $planeRows) t(g, pl)),
         bits AS (SELECT vec_id, g // 8 AS tbl,
-            CASE WHEN ${dot("v", "pl")} > 0
+            CASE WHEN ${duckDot("v", "pl", "65")} > 0
               THEN CAST(power(2, g % 8) AS BIGINT)
               ELSE CAST(0 AS BIGINT) END AS bit
           FROM e CROSS JOIN planes),
@@ -395,9 +399,9 @@ object LlmOps {
             ON q.tbl = c.tbl AND $candCond
           WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id),
         scored AS (SELECT q_id, n_id,
-            ${dot("eq.v", "ec.v")}
-            / (sqrt(${dot("eq.v", "eq.v")})
-             * sqrt(${dot("ec.v", "ec.v")})) AS cosine
+            ${duckDot("eq.v", "ec.v", "65")}
+            / (sqrt(${duckDot("eq.v", "eq.v", "65")})
+             * sqrt(${duckDot("ec.v", "ec.v", "65")})) AS cosine
           FROM cand JOIN e eq ON eq.vec_id = q_id
           JOIN e ec ON ec.vec_id = n_id),
         ranked AS (SELECT q_id, n_id, cosine,
@@ -447,20 +451,16 @@ object LlmOps {
   // The e/en/cent/sims/asg CTE prefix (portable centroid sample +
   // argmax-cosine cell assignment) is SHARED between the l11p and l38
   // oracles — one mirror of the IVF assignment machinery.
-  private def ivfOracleDot(a: String, b: String) =
-    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        list_transform(range(1, 65), i -> $a[i] * $b[i])),
-        (x, y) -> x + y)"""
   private def ivfAsgCtes: String =
     s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
           FROM embeddings),
         en AS (SELECT vec_id, v,
-          sqrt(${ivfOracleDot("v", "v")}) AS nrm FROM e),
+          sqrt(${duckDot("v", "v", "65")}) AS nrm FROM e),
         cent AS (SELECT vec_id AS cell, v AS cv, nrm AS cnrm FROM en
           ORDER BY ${Similarity.portableCentroidRankSql("vec_id")}, vec_id
           LIMIT 16),
         sims AS (SELECT en.vec_id, en.v, en.nrm, c.cell,
-            ${ivfOracleDot("en.v", "c.cv")} / (en.nrm * c.cnrm) AS sim
+            ${duckDot("en.v", "c.cv", "65")} / (en.nrm * c.cnrm) AS sim
           FROM en CROSS JOIN cent c),
         asg AS (SELECT vec_id AS n_id, v AS nv, nrm AS nnrm, cell FROM (
             SELECT *, row_number() OVER (PARTITION BY vec_id
@@ -472,14 +472,13 @@ object LlmOps {
       "vec_id", "embedding", k = 5, nCells = 16, nProbe = 4,
       centroidRank = Similarity.portableCentroidRank)
   }, Some {
-    def dot(a: String, b: String) = ivfOracleDot(a, b)
     s"""WITH $ivfAsgCtes,
         prb AS (SELECT vec_id AS q_id, v AS qv, nrm AS qnrm, cell FROM (
             SELECT *, row_number() OVER (PARTITION BY vec_id
               ORDER BY sim DESC, cell) AS r FROM sims
             WHERE vec_id < 10) WHERE r <= 4),
         scored AS (SELECT p.q_id, a.n_id,
-            ${dot("p.qv", "a.nv")} / (p.qnrm * a.nnrm) AS cosine
+            ${duckDot("p.qv", "a.nv", "65")} / (p.qnrm * a.nnrm) AS cosine
           FROM prb p JOIN asg a ON p.cell = a.cell
           WHERE p.q_id <> a.n_id),
         ranked AS (SELECT q_id, n_id, cosine,
@@ -559,10 +558,6 @@ object LlmOps {
     * per-(table, bucket) sign-pattern bucketing, mirrored stage by
     * stage from [[Similarity.lshBucketsAll]].
     */
-  private def l12OracleDot(a: String, b: String): String =
-    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        list_transform(range(1, 65), i -> $a[i] * $b[i])),
-        (x, y) -> x + y)"""
   /** [[l12OracleBucketing]] generalized over the corpus source: the
     * caller supplies CTEs ending in `e(vec_id, v: DOUBLE[])` and gets
     * the shared norm/plane/bucket chain (planes are the same global
@@ -575,10 +570,10 @@ object LlmOps {
       s"($g, ${Similarity.planeSqlLiteral(g, 64)})").mkString(",\n        ")
     s"""$corpusCtes,
       en AS (SELECT vec_id, v,
-          sqrt(${l12OracleDot("v", "v")}) AS nrm FROM e),
+          sqrt(${duckDot("v", "v", "65")}) AS nrm FROM e),
       planes AS (SELECT * FROM (VALUES $planeRows) t(g, pl)),
       bits AS (SELECT vec_id, g // 12 AS tbl,
-          CASE WHEN ${l12OracleDot("v", "pl")} > 0
+          CASE WHEN ${duckDot("v", "pl", "65")} > 0
             THEN CAST(power(2, g % 12) AS BIGINT)
             ELSE CAST(0 AS BIGINT) END AS bit
         FROM e CROSS JOIN planes),
@@ -614,7 +609,7 @@ object LlmOps {
           ON a.tbl = b.tbl AND a.bucket = b.bucket
         WHERE a.doc < b.doc),
       scored AS (SELECT doc_a, doc_b,
-          ${l12OracleDot("ea.v", "eb.v")} / (ea.nrm * eb.nrm) AS cosine
+          ${duckDot("ea.v", "eb.v", "65")} / (ea.nrm * eb.nrm) AS cosine
         FROM pr JOIN en ea ON ea.vec_id = doc_a
         JOIN en eb ON eb.vec_id = doc_b)
       SELECT doc_a, doc_b, cosine FROM scored
@@ -641,12 +636,12 @@ object LlmOps {
           FROM cells c JOIN stats s
             ON s.tbl = c.tbl AND s.bucket = c.bucket),
         small AS (SELECT a.doc AS doc_a, b.doc AS doc_b,
-            ${l12OracleDot("a.v", "b.v")} / (a.nrm * b.nrm) AS cosine
+            ${duckDot("a.v", "b.v", "65")} / (a.nrm * b.nrm) AS cosine
           FROM cs a JOIN cs b
             ON a.tbl = b.tbl AND a.bucket = b.bucket
           WHERE a.cnt <= 2 AND a.doc < b.doc),
         star AS (SELECT rep AS doc_a, doc AS doc_b,
-            ${l12OracleDot("repv", "v")} / (repn * nrm) AS cosine
+            ${duckDot("repv", "v", "65")} / (repn * nrm) AS cosine
           FROM cs WHERE cnt > 2 AND doc <> rep),
         uni AS (SELECT * FROM small UNION ALL SELECT * FROM star)
         SELECT DISTINCT doc_a, doc_b, cosine FROM uni
@@ -837,10 +832,6 @@ object LlmOps {
         emb.filter(col("vec_id") < 10), "vec_id", "embedding", q,
         kCand = 50, k = 5)
     }, Some {
-      def dotN(a: String, b: String, n: Int): String =
-        s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            list_transform(range(1, ${n + 1}), i -> $a[i] * $b[i])),
-            (x, y) -> x + y)"""
       s"""WITH ${Pca.quantizedOracleCtes("embeddings", "embedding",
            dim = 64, k = 4, iters = 20)},
         qe AS (SELECT vec_id, list_transform(embedding,
@@ -851,21 +842,21 @@ object LlmOps {
           FROM qe CROSS JOIN qcomp GROUP BY qe.vec_id, qcomp.c),
         rv AS (SELECT vec_id, list(CAST(coord AS DOUBLE) ORDER BY c)
             AS v FROM red GROUP BY vec_id),
-        rn AS (SELECT vec_id, v, sqrt(${dotN("v", "v", 4)}) AS nrm
+        rn AS (SELECT vec_id, v, sqrt(${duckDot("v", "v", "5")}) AS nrm
           FROM rv),
         rsc AS (SELECT qs.vec_id AS q_id, cs.vec_id AS n_id,
-            ${dotN("qs.v", "cs.v", 4)} / (qs.nrm * cs.nrm) AS rcos
+            ${duckDot("qs.v", "cs.v", "5")} / (qs.nrm * cs.nrm) AS rcos
           FROM rn qs JOIN rn cs ON qs.vec_id <> cs.vec_id
           WHERE qs.vec_id < 10),
         cand AS (SELECT q_id, n_id FROM (SELECT q_id, n_id,
             row_number() OVER (PARTITION BY q_id
               ORDER BY rcos DESC, n_id) AS r FROM rsc) WHERE r <= 50),
         en AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS fv,
-            sqrt(${dotN("CAST(embedding AS DOUBLE[])",
-              "CAST(embedding AS DOUBLE[])", 64)}) AS fn
+            sqrt(${duckDot("CAST(embedding AS DOUBLE[])",
+              "CAST(embedding AS DOUBLE[])", "65")}) AS fn
           FROM embeddings),
         scored AS (SELECT c.q_id, c.n_id,
-            ${dotN("ea.fv", "eb.fv", 64)} / (ea.fn * eb.fn) AS cosine
+            ${duckDot("ea.fv", "eb.fv", "65")} / (ea.fn * eb.fn) AS cosine
           FROM cand c JOIN en ea ON ea.vec_id = c.q_id
           JOIN en eb ON eb.vec_id = c.n_id),
         ranked AS (SELECT q_id, n_id, cosine,
@@ -909,7 +900,7 @@ object LlmOps {
           ON a.tbl = b.tbl AND a.bucket = b.bucket
         WHERE a.doc < b.doc),
       scored AS (SELECT doc_a, doc_b,
-          ${l12OracleDot("ea.v", "eb.v")} / (ea.nrm * eb.nrm) AS cosine
+          ${duckDot("ea.v", "eb.v", "65")} / (ea.nrm * eb.nrm) AS cosine
         FROM pr JOIN en ea ON ea.vec_id = doc_a
         JOIN en eb ON eb.vec_id = doc_b)
       SELECT doc_a, doc_b, cosine FROM scored
@@ -948,10 +939,6 @@ object LlmOps {
         "embedding", q, threshold = 0.9, candThreshold = 0.6,
         nPlanes = 12, nTables = 8, maxBucket = 2)
     }, Some {
-      def dotN(a: String, b: String, n: Int): String =
-        s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            list_transform(range(1, ${n + 1}), i -> $a[i] * $b[i])),
-            (x, y) -> x + y)"""
       val planeRows = (0 until 96).map(g =>
         s"($g, ${Similarity.planeSqlLiteral(g, 4)})")
         .mkString(",\n        ")
@@ -968,10 +955,10 @@ object LlmOps {
             list(CAST(coord AS DOUBLE) ORDER BY c) AS v FROM red
           GROUP BY vec_id),
         rn AS (SELECT vec_id, v,
-            sqrt(${dotN("v", "v", 4)}) AS nrm FROM rv),
+            sqrt(${duckDot("v", "v", "5")}) AS nrm FROM rv),
         planes AS (SELECT * FROM (VALUES $planeRows) t(g, pl)),
         bits AS (SELECT vec_id, g // 12 AS tbl,
-            CASE WHEN ${dotN("v", "pl", 4)} > 0
+            CASE WHEN ${duckDot("v", "pl", "5")} > 0
               THEN CAST(power(2, g % 12) AS BIGINT)
               ELSE CAST(0 AS BIGINT) END AS bit
           FROM rv CROSS JOIN planes),
@@ -987,24 +974,24 @@ object LlmOps {
           FROM cells c JOIN stats s
             ON s.tbl = c.tbl AND s.bucket = c.bucket),
         small AS (SELECT a.doc AS doc_a, b.doc AS doc_b,
-            ${dotN("a.v", "b.v", 4)} / (a.nrm * b.nrm) AS rcos
+            ${duckDot("a.v", "b.v", "5")} / (a.nrm * b.nrm) AS rcos
           FROM cs a JOIN cs b
             ON a.tbl = b.tbl AND a.bucket = b.bucket
           WHERE a.cnt <= 2 AND a.doc < b.doc),
         star AS (SELECT rep AS doc_a, doc AS doc_b,
-            ${dotN("repv", "v", 4)} / (repn * nrm) AS rcos
+            ${duckDot("repv", "v", "5")} / (repn * nrm) AS rcos
           FROM cs WHERE cnt > 2 AND doc <> rep),
         cand AS (SELECT DISTINCT doc_a, doc_b
           FROM (SELECT * FROM small UNION ALL SELECT * FROM star)
           WHERE rcos >= CAST(0.6 AS DOUBLE)),
         en AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS fv,
-            sqrt(${dotN("CAST(embedding AS DOUBLE[])",
-              "CAST(embedding AS DOUBLE[])", 64)}) AS fn FROM tw)
+            sqrt(${duckDot("CAST(embedding AS DOUBLE[])",
+              "CAST(embedding AS DOUBLE[])", "65")}) AS fn FROM tw)
         SELECT c.doc_a, c.doc_b,
-          ${dotN("ea.fv", "eb.fv", 64)} / (ea.fn * eb.fn) AS cosine
+          ${duckDot("ea.fv", "eb.fv", "65")} / (ea.fn * eb.fn) AS cosine
         FROM cand c JOIN en ea ON ea.vec_id = c.doc_a
         JOIN en eb ON eb.vec_id = c.doc_b
-        WHERE ${dotN("ea.fv", "eb.fv", 64)} / (ea.fn * eb.fn) >=
+        WHERE ${duckDot("ea.fv", "eb.fv", "65")} / (ea.fn * eb.fn) >=
           CAST(0.9 AS DOUBLE)"""
     })
 
@@ -1424,10 +1411,7 @@ object LlmOps {
     // and MATERIALIZEs every step: O(k·N) dots instead of O(k²·N) with
     // no re-inlining surface. Proven bitwise-equal (repr-level) to the
     // old mirror at sf0.001 (730 s -> 0.11 s) before adoption.
-    def dot(a: String, b: String) =
-      s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i])),
-          (x, y) -> x + y)"""
+    def dot(a: String, b: String) = duckDot(a, b, s"len($a) + 1")
     val steps = (1 to 8).map { i =>
       if (i == 1)
         s"""s1 AS MATERIALIZED (SELECT vec_id, v, nrm, rel,
@@ -2042,15 +2026,7 @@ object LlmOps {
       e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM tw),
       q AS (SELECT vec_id q_id, v qv FROM e WHERE vec_id < 10),
       scored AS (SELECT q_id, e.vec_id n_id,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            list_transform(range(1, len(qv) + 1), i -> qv[i] * v[i])),
-            (x, y) -> x + y)
-          / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list_transform(range(1, len(qv) + 1), i -> qv[i] * qv[i])),
-              (x, y) -> x + y))
-           * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list_transform(range(1, len(v) + 1), i -> v[i] * v[i])),
-              (x, y) -> x + y))) AS cosine
+          ${duckCosine("qv", "v")} AS cosine
         FROM e, q WHERE q_id <> e.vec_id),
       ranked AS (SELECT q_id, n_id, cosine,
           CAST(row_number() OVER (PARTITION BY q_id
@@ -2399,7 +2375,7 @@ object LlmOps {
           SELECT *, row_number() OVER (PARTITION BY n_id, s
             ORDER BY d2, c) AS r FROM pdist) WHERE r = 1),
       prb AS (SELECT p.vec_id AS q_id, p.v AS qv, p.cell,
-          ${ivfOracleDot("p.v", "c.cv")} AS qc
+          ${duckDot("p.v", "c.cv", "65")} AS qc
         FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
             ORDER BY sim DESC, cell) AS r FROM sims
           WHERE vec_id < 10) p
@@ -2807,8 +2783,8 @@ object LlmOps {
       .withColumn("fp", sha2(expr(
         s"array_join(slice(${tokensSql("text")}, 1, 20), ' ')"), 256))
     val keepers = kept.groupBy("fp").agg(min("doc_id").as("keep_id"))
-    kept.join(keepers,
-        kept("fp") === keepers("fp") && col("doc_id") === col("keep_id"))
+    kept.join(keepers, Seq("fp"))
+      .filter(col("doc_id") === col("keep_id"))
       .groupBy("lang").agg(
         count(lit(1)).as("n_docs"),
         sum("n_tokens").cast("long").as("total_tokens"))

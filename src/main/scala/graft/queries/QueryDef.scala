@@ -34,4 +34,8 @@ object Registry {
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
 
   def headlines: Seq[QueryDef] = all.filter(_.headline)
+
+  /** The registered query called `name`; throws naming it when none is. */
+  def named(name: String): QueryDef = all.find(_.name == name)
+    .getOrElse(throw new NoSuchElementException(s"unknown query $name"))
 }

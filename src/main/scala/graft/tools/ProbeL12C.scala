@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SaveMode
+import scala.collection.immutable.SeqMap
 
 import graft.core.Sessions
 import graft.operators.Similarity
@@ -33,46 +32,24 @@ object ProbeL12C {
     val spark = Sessions.build("graft-probe-l12c", Sessions.cpusFromEnv(32))
     val metrics = TaskMetricsListener.installed(spark)
 
-    // per-stage straggler attribution, beyond the shared task totals
-    val stageMax =
-      new scala.collection.concurrent.TrieMap[Int, (String, Int, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val ms = te.taskInfo.duration
-        stageMax.updateWith(te.stageId) {
-          case Some((n, c, mx)) => Some((n, c + 1, math.max(mx, ms)))
-          case None => Some((te.taskType, 1, ms))
-        }
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted)
-          : Unit = {
-        val si = sc.stageInfo
-        stageMax.updateWith(si.stageId) {
-          case Some((_, c, mx)) => Some((si.name.take(70), c, mx))
-          case None => Some((si.name.take(70), si.numTasks, 0L))
-        }
-      }
-    })
-
     def corpus = LlmOps.twinnedEmbeddings(spark, sfDir)
 
-    def run(name: String, df: org.apache.spark.sql.DataFrame): String = {
-      spark.catalog.clearCache()
-      metrics.reset(); stageMax.clear()
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode(SaveMode.Overwrite).save()
-      val secs = (System.nanoTime() - t0) / 1e9
+    def run(name: String, df: org.apache.spark.sql.DataFrame)
+        : (String, SeqMap[String, Any]) = {
+      metrics.reset()
+      val secs = QueryRuns.noopSeconds(spark)(df)
       metrics.drain()
       val (sp, mx) = (metrics.spillMb, metrics.maxTaskSec)
-      stageMax.toSeq.sortBy(-_._2._3).take(6).foreach {
-        case (sid, (n, c, ms)) =>
-          println(f"[stage] $name s$sid%-5d ${ms / 1e3}%7.1fs max " +
-            f"($c%4d tasks) $n")
+      // per-stage straggler attribution, beyond the shared task totals
+      metrics.stages.toSeq.sortBy(-_._2.maxTaskMs).take(6).foreach {
+        case (sid, st) =>
+          println(f"[stage] $name s$sid%-5d ${st.maxTaskMs / 1e3}%7.1fs " +
+            f"max (${st.tasks}%4d tasks) ${st.name}")
       }
       spark.catalog.clearCache()
       val rows = df.count()
-      s""""$name":{"secs":${math.rint(secs * 1000) / 1000},"rows":$rows,""" +
-        s""""spill_mb":$sp,"max_task_sec":$mx}"""
+      name -> SeqMap("secs" -> QueryRuns.r3(secs), "rows" -> rows,
+        "spill_mb" -> sp, "max_task_sec" -> mx)
     }
 
     val parts = Seq(
@@ -83,8 +60,8 @@ object ProbeL12C {
         corpus, "vec_id", "embedding", threshold = 0.9, dim = 64,
         nPlanes = nPlanes, nTables = 8, maxBucket = cap)))
     ).collect { case (n, f) if mode == "both" || mode == n => f() }
-    println(s"""{"probe_l12c":{"sf_dir":"$sfDir","n_planes":$nPlanes,""" +
-      s""""cap":$cap,${parts.mkString(",")}}}""")
+    println(QueryRuns.json(SeqMap("probe_l12c" -> (SeqMap(
+      "sf_dir" -> sfDir, "n_planes" -> nPlanes, "cap" -> cap) ++ parts))))
     spark.stop()
   }
 }

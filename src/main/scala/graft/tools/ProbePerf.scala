@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SaveMode
-
 import graft.core.Sessions
 import graft.queries.Registry
 
@@ -14,15 +12,14 @@ object ProbePerf {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     val spark = Sessions.build("probe-perf", Sessions.cpusFromEnv(32))
-    val q = Registry.all.find(_.name == name).get
+    val q = Registry.named(name)
     graft.core.Tables.all.foreach { t =>
       try graft.core.Tables.t(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
     for (i <- 1 to reps) {
-      val t0 = System.nanoTime()
-      q.run(spark, sfDir).write.format("noop").mode(SaveMode.Overwrite).save()
-      println(f"PROBE $name rep$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      val secs = QueryRuns.noopSeconds(spark)(q.run(spark, sfDir))
+      println(f"PROBE $name rep$i $secs%.2f s")
     }
     println(q.run(spark, sfDir).queryExecution.executedPlan.toString.take(6000))
     spark.stop()

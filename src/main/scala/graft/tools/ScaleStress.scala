@@ -1,11 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.collection.immutable.SeqMap
+
+import org.apache.spark.sql.DataFrame
 
 import graft.core.Sessions
 import graft.plans.DimBroadcast
 import graft.queries.Registry
-import graft.sources.Reports.jsonString
 
 /** Scale-stress run: execute the headline queries against an INFLATED
   * testdata directory (see [[ScaleGen]]) and report per-query seconds
@@ -24,22 +25,16 @@ import graft.sources.Reports.jsonString
   */
 object ScaleStress {
 
-  private def timeNoop(df: DataFrame): Double = {
-    val t0 = System.nanoTime()
-    df.write.format("noop").mode(SaveMode.Overwrite).save()
-    (System.nanoTime() - t0) / 1e9
-  }
-
   /** Join-node census of the FINAL adaptive plan (collect() first so the
     * inspected QueryExecution is the one that ran — foreach/count clone).
     */
-  private def joinCensus(df: DataFrame): (Map[String, Int], Long) = {
+  private def joinCensus(df: DataFrame): (SeqMap[String, Int], Long) = {
     val n = df.collect().length.toLong
     val plan = df.queryExecution.executedPlan.toString
     val kinds = Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
       "BroadcastNestedLoopJoin")
-    (kinds.map(k => k -> k.r.findAllIn(plan).length).filter(_._2 > 0).toMap,
-      n)
+    (SeqMap.from(kinds.map(k => k -> k.r.findAllIn(plan).length)
+      .filter(_._2 > 0)), n)
   }
 
   def main(args: Array[String]): Unit = {
@@ -48,30 +43,15 @@ object ScaleStress {
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = Sessions.build("graft-scale-stress", Sessions.cpusFromEnv(32))
 
-    // codegen warm-up at the smallest SF (same rationale as Bench)
-    val warmDir = "/root/testdata/sf0.001"
     val headliners = Registry.headlines
-    if (new java.io.File(warmDir).isDirectory)
-      headliners.foreach { q =>
-        try q.run(spark, warmDir).write.format("noop")
-          .mode(SaveMode.Overwrite).save()
-        catch { case _: Throwable => () }
-      }
+    QueryRuns.warmUp(spark, headliners)
 
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     headliners.foreach { q =>
-      try {
-        val secs = (1 to reps).map { _ =>
-          spark.catalog.clearCache()
-          timeNoop(q.run(spark, sfDir))
-        }.min
-        timings(q.name) = secs
-      } catch {
-        case e: Throwable =>
-          errors(q.name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .linesIterator.take(1).mkString
-      }
+      try timings(q.name) = QueryRuns.minSeconds(spark, reps)(
+        q.run(spark, sfDir))
+      catch { case e: Throwable => errors(q.name) = QueryRuns.firstLine(e) }
     }
 
     // ---- a8 degrade evidence: same query, bound above vs below the
@@ -82,53 +62,34 @@ object ScaleStress {
     // lowers the graft bound AND Spark's own autoBroadcastJoinThreshold
     // (else AQE re-promotes the join from the dim's runtime size and the
     // compile-time degrade is invisible at this absolute scale).
-    def a8With(maxBytes: Long): (Map[String, Int], Long, Double) = {
-      spark.catalog.clearCache()
-      val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set(DimBroadcast.maxBytesConf, maxBytes.toString)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-        maxBytes.toString)
-      try {
-        val q = Registry.all.find(_.name == "a8_dashboard_revenue").get
-        val secs = timeNoop(q.run(spark, sfDir))
-        val (joins, rows) = joinCensus(q.run(spark, sfDir))
-        (joins, rows, secs)
-      } finally {
-        // restore BOTH bounds even if a run throws — a leaked tight
-        // maxBytesConf would skew the later g5 join census
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
-        spark.conf.unset(DimBroadcast.maxBytesConf)
-      }
+    // Both bounds are restored even if a run throws — a leaked tight
+    // maxBytesConf would skew the later g5 join census.
+    def a8With(maxBytes: Long): SeqMap[String, Any] = QueryRuns.withConfs(
+      spark, DimBroadcast.maxBytesConf -> maxBytes.toString,
+      "spark.sql.autoBroadcastJoinThreshold" -> maxBytes.toString) {
+      val q = Registry.named("a8_dashboard_revenue")
+      val secs = QueryRuns.noopSeconds(spark)(q.run(spark, sfDir))
+      val (joins, rows) = joinCensus(q.run(spark, sfDir))
+      SeqMap("bound" -> maxBytes, "joins" -> joins, "rows" -> rows,
+        "secs" -> secs)
     }
     val customerBytes = spark.read
       .parquet(s"$sfDir/customer.parquet")
       .queryExecution.optimizedPlan.stats.sizeInBytes
-    val (a8DefJoins, a8DefRows, a8DefSecs) =
-      a8With(DimBroadcast.defaultMaxBytes)
+    val a8Default = a8With(DimBroadcast.defaultMaxBytes)
     // a bound the scaled customer dim EXCEEDS: half its estimated size
-    val tightBound = (customerBytes / 2).toLong.max(1L)
-    val (a8TightJoins, a8TightRows, a8TightSecs) = a8With(tightBound)
+    val a8Tight = a8With((customerBytes / 2).toLong.max(1L))
 
     // ---- g5: report what AQE picked at runtime for the RDD-backed dims
     spark.catalog.clearCache()
-    val g5 = Registry.all.find(_.name == "g5_fact_build").get
+    val g5 = Registry.named("g5_fact_build")
     val (g5Joins, g5Rows) = joinCensus(g5.run(spark, sfDir))
 
-    def jmap(m: scala.collection.Map[String, Any]): String =
-      m.map { kv =>
-        val v = kv._2 match {
-          case s: String => jsonString(s)
-          case x => x.toString
-        }
-        s"${jsonString(kv._1)}:$v"
-      }.mkString("{", ",", "}")
-    println(s"""{"scale_stress":${jsonString(label)},""" +
-      s""""sf_dir":${jsonString(sfDir)},"reps":$reps,""" +
-      s""""queries":${jmap(timings)},"errors":${jmap(errors)},""" +
-      s""""customer_est_bytes":$customerBytes,""" +
-      s""""a8_default":{"bound":${DimBroadcast.defaultMaxBytes},"joins":${jmap(a8DefJoins)},"rows":$a8DefRows,"secs":$a8DefSecs},""" +
-      s""""a8_tight":{"bound":$tightBound,"joins":${jmap(a8TightJoins)},"rows":$a8TightRows,"secs":$a8TightSecs},""" +
-      s""""g5_runtime":{"joins":${jmap(g5Joins)},"rows":$g5Rows}}""")
+    println(QueryRuns.json(SeqMap("scale_stress" -> label, "sf_dir" -> sfDir,
+      "reps" -> reps, "queries" -> timings, "errors" -> errors,
+      "customer_est_bytes" -> customerBytes.bigInteger,
+      "a8_default" -> a8Default, "a8_tight" -> a8Tight,
+      "g5_runtime" -> SeqMap("joins" -> g5Joins, "rows" -> g5Rows))))
     spark.stop()
   }
 }

@@ -1,6 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import scala.collection.immutable.SeqMap
+
+import org.apache.spark.sql.DataFrame
 
 import graft.core.Sessions
 import graft.queries.Registry
@@ -63,7 +65,11 @@ object SkewStress {
   private val mechanismQueries = Seq("g5_fact_build", "a8_dashboard_revenue")
 
   final case class Cell(secs: Double, rows: Long, spillMb: Long,
-                        maxTaskSec: Double, skewJoin: Boolean)
+                        maxTaskSec: Double, skewJoin: Boolean) {
+    def record: SeqMap[String, Any] = SeqMap("secs" -> QueryRuns.r3(secs),
+      "rows" -> rows, "spill_mb" -> spillMb,
+      "max_task_sec" -> QueryRuns.r3(maxTaskSec), "skew_split" -> skewJoin)
+  }
 
   def main(args: Array[String]): Unit = {
     val uniformDir = args(0)
@@ -71,7 +77,7 @@ object SkewStress {
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = Sessions.build("graft-skew-stress", Sessions.cpusFromEnv(32))
     val metrics = TaskMetricsListener.installed(spark)
-    TaskMetricsListener.warmUp(spark, timedQueries)
+    QueryRuns.warmUp(spark, timedQueries.map(Registry.named))
 
     def skewMarked(df: DataFrame): Boolean = {
       val p = df.queryExecution.executedPlan.toString
@@ -88,16 +94,10 @@ object SkewStress {
       * min-of-reps, then one inspected run for rows/plan/task metrics.
       */
     def run(name: String, dir: String): Cell = {
-      val q = Registry.all.find(_.name == name).get
+      val q = Registry.named(name)
       spark.catalog.clearCache()
-      q.run(spark, dir).write.format("noop").mode(SaveMode.Overwrite).save()
-      val secs = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        q.run(spark, dir).write.format("noop")
-          .mode(SaveMode.Overwrite).save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      QueryRuns.sink(q.run(spark, dir))
+      val secs = QueryRuns.minSeconds(spark, reps)(q.run(spark, dir))
       spark.catalog.clearCache()
       metrics.reset()
       val df = q.run(spark, dir)
@@ -106,42 +106,25 @@ object SkewStress {
       Cell(secs, rows, metrics.spillMb, metrics.maxTaskSec, skewMarked(df))
     }
 
-    def jcell(c: Cell): String =
-      s"""{"secs":${math.rint(c.secs * 1000) / 1000},"rows":${c.rows},""" +
-        s""""spill_mb":${c.spillMb},""" +
-        s""""max_task_sec":${math.rint(c.maxTaskSec * 1000) / 1000},""" +
-        s""""skew_split":${c.skewJoin}}"""
-
     // ---- section 1: production-conf timings, uniform vs skewed twin
     val timingParts = timedQueries.map { n =>
       val uni = run(n, uniformDir)
       val skw = run(n, skewDir)
-      s""""$n":{"uniform":${jcell(uni)},"skewed":${jcell(skw)}}"""
+      n -> SeqMap("uniform" -> uni.record, "skewed" -> skw.record)
     }
 
     // ---- section 2: skew-join split mechanism at shrunk trigger bytes
-    def withConfs[A](kvs: (String, String)*)(body: => A): A = {
-      val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body
-      finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-
     val mechParts = mechanismQueries.map { n =>
-      val q = Registry.all.find(_.name == n).get
-      def cell(splitOn: Boolean): (Cell, String) = withConfs(
+      val q = Registry.named(n)
+      def cell(splitOn: Boolean): (Cell, String) = QueryRuns.withConfs(spark,
         "spark.sql.adaptive.skewJoin.enabled" -> splitOn.toString,
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8m",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4m") {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        val df = q.run(spark, skewDir)
-        val rows = rowsOf(df)
-        val secs = (System.nanoTime() - t0) / 1e9
+        var rows = 0L
+        val secs = QueryRuns.seconds(spark) {
+          rows = rowsOf(q.run(spark, skewDir))
+        }
         spark.catalog.clearCache()
         metrics.reset()
         val df2 = q.run(spark, skewDir)
@@ -156,16 +139,14 @@ object SkewStress {
       }
       val (on, onJoins) = cell(splitOn = true)
       val (off, _) = cell(splitOn = false)
-      def j(s: String) = "\"" + s.replace("\\", "\\\\")
-        .replace("\"", "'") + "\""
-      s""""$n":{"split_on":${jcell(on)},"split_off":${jcell(off)},""" +
-        s""""join_nodes_on":${j(onJoins)}}"""
+      n -> SeqMap("split_on" -> on.record, "split_off" -> off.record,
+        "join_nodes_on" -> onJoins)
     }
 
-    println(s"""{"skew_stress":{"uniform_dir":"$uniformDir",""" +
-      s""""skew_dir":"$skewDir","reps":$reps,""" +
-      s""""timings_production_confs":{${timingParts.mkString(",")}},""" +
-      s""""skew_join_mechanism_8m_threshold":{${mechParts.mkString(",")}}}}""")
+    println(QueryRuns.json(SeqMap("skew_stress" -> SeqMap(
+      "uniform_dir" -> uniformDir, "skew_dir" -> skewDir, "reps" -> reps,
+      "timings_production_confs" -> SeqMap.from(timingParts),
+      "skew_join_mechanism_8m_threshold" -> SeqMap.from(mechParts)))))
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SaveMode
+import scala.collection.immutable.SeqMap
 
 import graft.core.Sessions
 import graft.queries.Registry
@@ -32,45 +32,33 @@ object SpillStress {
       if (args.length > 2) args(2).split(",").toSeq else defaultQueries
     val spark = Sessions.build("graft-spill-stress", Sessions.cpusFromEnv(32))
     val metrics = TaskMetricsListener.installed(spark)
-    TaskMetricsListener.warmUp(spark, names)
+    val queries = names.map(Registry.named)
+    QueryRuns.warmUp(spark, queries)
 
-    val parts = names.map { n =>
-      val q = Registry.all.find(_.name == n)
-        .getOrElse(sys.error(s"unknown query $n"))
-      try {
-        val secs = (1 to reps).map { _ =>
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          q.run(spark, sfDir).write.format("noop")
-            .mode(SaveMode.Overwrite).save()
-          (System.nanoTime() - t0) / 1e9
-        }.min
+    val parts = queries.map { q =>
+      val record = try {
+        val secs = QueryRuns.minSeconds(spark, reps)(q.run(spark, sfDir))
         // one inspected run for task metrics (noop write = full
         // materialization; a count() would let Catalyst prune the
         // computed columns and understate the memory story)
         spark.catalog.clearCache()
         metrics.reset()
-        q.run(spark, sfDir).write.format("noop")
-          .mode(SaveMode.Overwrite).save()
+        QueryRuns.sink(q.run(spark, sfDir))
         metrics.drain()
         val (sp, pk, mx, sw) = (metrics.spillMb, metrics.peakExecMemMb,
           metrics.maxTaskSec, metrics.shuffleWriteMb)
         spark.catalog.clearCache()
         val rows = q.run(spark, sfDir).count()
-        s""""$n":{"secs":${math.rint(secs * 1000) / 1000},"rows":$rows,""" +
-          s""""spill_mb":$sp,""" +
-          s""""peak_task_exec_mem_mb":$pk,""" +
-          s""""max_task_sec":$mx,""" +
-          s""""shuffle_write_mb":$sw}"""
+        SeqMap("secs" -> QueryRuns.r3(secs), "rows" -> rows,
+          "spill_mb" -> sp, "peak_task_exec_mem_mb" -> pk,
+          "max_task_sec" -> mx, "shuffle_write_mb" -> sw)
       } catch {
-        case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .linesIterator.take(1).mkString.replace("\"", "'")
-          s""""$n":{"error":"$msg"}"""
+        case e: Throwable => SeqMap("error" -> QueryRuns.firstLine(e))
       }
+      q.name -> record
     }
-    println(s"""{"spill_stress":{"sf_dir":"$sfDir","reps":$reps,""" +
-      s""""queries":{${parts.mkString(",")}}}}""")
+    println(QueryRuns.json(SeqMap("spill_stress" -> SeqMap(
+      "sf_dir" -> sfDir, "reps" -> reps, "queries" -> SeqMap.from(parts)))))
     spark.stop()
   }
 }

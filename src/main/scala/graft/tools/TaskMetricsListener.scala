@@ -2,23 +2,28 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
 
-import graft.queries.Registry
+import TaskMetricsListener.StageStat
 
 /** Shared task-level measurement for the scale-evidence tools
   * (SkewStress / SpillStress / ProbeL12C) and GraphRankSpec: spill,
-  * straggler, peak task memory, shuffle volume. One implementation so
-  * the tools whose numbers are compared against each other measure
-  * identically.
+  * straggler, peak task memory, shuffle volume, and a per-stage
+  * straggler breakdown. One implementation so the tools whose numbers
+  * are compared against each other measure identically.
   */
 final class TaskMetricsListener extends SparkListener {
   val spilledBytes = new AtomicLong(0L)
   val maxTaskMs = new AtomicLong(0L)
   val peakExecMem = new AtomicLong(0L)
   val shuffleWriteBytes = new AtomicLong(0L)
-  private val taskEndsSeen = new AtomicLong(0L)
+  private val eventsSeen = new AtomicLong(0L)
+  /** Per-stage straggler attribution, stage id -> name, task count and
+    * max task ms: a scan stage burning tens of seconds of single-task
+    * time on a GFLOP-scale pass is an interpreted-codegen fallback.
+    */
+  val stages = new scala.collection.concurrent.TrieMap[Int, StageStat]()
 
   private def raiseTo(a: AtomicLong, v: Long): Unit = {
     var cur = a.get()
@@ -26,22 +31,38 @@ final class TaskMetricsListener extends SparkListener {
   }
 
   override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-    taskEndsSeen.incrementAndGet()
+    val ms = te.taskInfo.duration
+    stages.updateWith(te.stageId) {
+      case Some(s) => Some(s.copy(tasks = s.tasks + 1,
+        maxTaskMs = math.max(s.maxTaskMs, ms)))
+      case None => Some(StageStat(te.taskType, 1, ms))
+    }
+    eventsSeen.incrementAndGet()
     Option(te.taskMetrics).foreach { m =>
       spilledBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
       shuffleWriteBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
       raiseTo(peakExecMem, m.peakExecutionMemory)
-      raiseTo(maxTaskMs, te.taskInfo.duration)
+      raiseTo(maxTaskMs, ms)
+    }
+  }
+
+  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+    eventsSeen.incrementAndGet()
+    val si = sc.stageInfo
+    stages.updateWith(si.stageId) {
+      case Some(s) => Some(s.copy(name = si.name.take(70)))
+      case None => Some(StageStat(si.name.take(70), si.numTasks, 0L))
     }
   }
 
   def reset(): Unit = {
     spilledBytes.set(0L); maxTaskMs.set(0L)
     peakExecMem.set(0L); shuffleWriteBytes.set(0L)
+    stages.clear()
   }
 
   /** Wait for the async listener bus to go quiescent: poll the
-    * task-end count until it is stable across two consecutive 100 ms
+    * task-end and stage-end count until it is stable across two 100 ms
     * windows (a fixed 300 ms sleep undercounted under heavy stages,
     * where the bus lags behind the last action by more than that),
     * bounded at 5 s. Quiescence proves DELIVERY has caught up; it
@@ -57,7 +78,7 @@ final class TaskMetricsListener extends SparkListener {
     var stable = 0
     while (stable < 2 && System.nanoTime() < deadline) {
       Thread.sleep(100)
-      val cur = taskEndsSeen.get()
+      val cur = eventsSeen.get()
       stable = if (cur == prev) stable + 1 else 0
       prev = cur
     }
@@ -76,18 +97,5 @@ object TaskMetricsListener {
     l
   }
 
-  /** Codegen warm-up shared by the evidence tools: run each named
-    * registry query once at the smallest SF so the timed runs measure
-    * steady-state execution, not per-JVM compilation.
-    */
-  def warmUp(spark: SparkSession, names: Seq[String],
-             warmDir: String = "/root/testdata/sf0.001"): Unit =
-    if (new java.io.File(warmDir).isDirectory)
-      names.foreach { n =>
-        Registry.all.find(_.name == n).foreach { q =>
-          try q.run(spark, warmDir).write.format("noop")
-            .mode(SaveMode.Overwrite).save()
-          catch { case _: Throwable => () }
-        }
-      }
+  final case class StageStat(name: String, tasks: Int, maxTaskMs: Long)
 }

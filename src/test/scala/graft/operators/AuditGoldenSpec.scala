@@ -16,7 +16,7 @@ import graft.sources.Csv
   */
 class AuditGoldenSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
-  private val raw = "/root/reference/data/raw"
+  private def raw = graft.core.ReferenceSnapshot.raw
 
   import Audit.RefRules._
 

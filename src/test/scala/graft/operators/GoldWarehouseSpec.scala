@@ -168,7 +168,7 @@ class GoldWarehouseSpec extends AnyFunSuite {
             s"${f.dataType}")).databaseTypeDefinition).toMap
     // schema-only: building the plans never runs the pipeline
     val out = graft.pipeline.ReferenceParity.run(s,
-      "/root/reference/data/raw", "2024-11-24")
+      graft.core.ReferenceSnapshot.raw, "2024-11-24")
     val fact = ddl(out.factSales)
     assert(fact == Map(
       "SalesID" -> "BIGINT", "CustomerKey" -> "BIGINT",

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.core.ReferenceSnapshot
 
 /** End-to-end golden test: the full parity pipeline over the reference's
   * raw CSVs must reproduce its committed artifacts.
@@ -20,7 +21,7 @@ class ReferenceParitySpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
 
   private lazy val out =
-    ReferenceParity.run(s, "/root/reference/data/raw", runDate = "2024-11-24")
+    ReferenceParity.run(s, ReferenceSnapshot.raw, runDate = "2024-11-24")
 
   test("anomaly counts match logs/anomalies_summary/2024-11-24.txt: " +
     "sales 0 / products 1") {
@@ -48,7 +49,7 @@ class ReferenceParitySpec extends AnyFunSuite {
     // the committed document, parsed back through Spark's JSON reader —
     // error_ids arrays union to string across int- and string-id sources
     val ref = s.read.option("multiLine", "true")
-      .json("/root/reference/logs/data_processing/2024-12-02/audit_report.json")
+      .json(ReferenceSnapshot.path(ReferenceSnapshot.auditReport))
       .select(col("source"),
         explode(col("data_type_and_format_inconsistencies")).as("i"))
       .select("source", "i.column", "i.error_count", "i.expected_type",
@@ -138,7 +139,7 @@ class ReferenceParitySpec extends AnyFunSuite {
     // stage a raw dir with sales.csv missing (the reference's per-source
     // try/except scenario, etl_extract.py:39-61)
     val dir = java.nio.file.Files.createTempDirectory("graft-resilient")
-    val src = java.nio.file.Paths.get("/root/reference/data/raw")
+    val src = java.nio.file.Paths.get(ReferenceSnapshot.raw)
     ReferenceParity.sourceNames.filter(_ != "sales").foreach { n =>
       java.nio.file.Files.copy(src.resolve(s"$n.csv"),
         dir.resolve(s"$n.csv"))
@@ -174,7 +175,7 @@ class ReferenceParitySpec extends AnyFunSuite {
     // exercised through the BATCH pipeline, not just ScdMergeSpec's
     // hand-built frames)
     val dir = java.nio.file.Files.createTempDirectory("graft-scd2-day2")
-    val src = java.nio.file.Paths.get("/root/reference/data/raw")
+    val src = java.nio.file.Paths.get(ReferenceSnapshot.raw)
     ReferenceParity.sourceNames.foreach { n =>
       java.nio.file.Files.copy(src.resolve(s"$n.csv"), dir.resolve(s"$n.csv"))
     }
@@ -226,7 +227,7 @@ class ReferenceParitySpec extends AnyFunSuite {
 
   test("runResilient over an intact raw dir returns full outputs and " +
     "no failures") {
-    val report = ReferenceParity.runResilient(s, "/root/reference/data/raw",
+    val report = ReferenceParity.runResilient(s, ReferenceSnapshot.raw,
       runDate = "2024-11-24")
     assert(report.failures.isEmpty)
     assert(report.outputs.isDefined)

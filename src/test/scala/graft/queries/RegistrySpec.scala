@@ -41,6 +41,15 @@ class RegistrySpec extends AnyFunSuite {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("SparkEntry.entry returns rows on sf0.001 and equals " +
+    "a8_dashboard_revenue there") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val entry = rows(graft.SparkEntry.entry(s))
+    assert(entry.nonEmpty)
+    assert(entry == rows(Registry.named("a8_dashboard_revenue").run(s, sf)))
+  }
+
   test("typed fact dataset decodes (Gold schema matches its encoder)") {
     val fact = graft.operators.Gold.factSalesTyped(s, sf)
     val first = fact.head()

@@ -65,7 +65,8 @@ class ReportsSpec extends AnyFunSuite {
     val parsed = graft.TestSpark.spark.read.option("multiLine", "true")
       .json(path)
     val refCols = graft.TestSpark.spark.read.option("multiLine", "true")
-      .json("/root/reference/logs/data_processing/2024-12-02/audit_report.json")
+      .json(graft.core.ReferenceSnapshot.path(
+        graft.core.ReferenceSnapshot.auditReport))
       .select(org.apache.spark.sql.functions.explode(
         org.apache.spark.sql.functions.col(
           "data_type_and_format_inconsistencies")).as("i"))
