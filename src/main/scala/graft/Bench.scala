@@ -68,7 +68,7 @@ object Bench {
     * the "what this query costs on this box on this code" band the
     * contamination gate compares against. A median over ~20 runs is
     * robust to the handful of contaminated records in the history
-    * (round-6's contended driver run, round-8's x18).
+    * (round-6's contended run, round-8's x18).
     */
   private def trailingHistory(history: List[Map[String, Double]],
                               window: Int = 20): Map[String, Double] =

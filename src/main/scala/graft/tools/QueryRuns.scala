@@ -15,7 +15,7 @@ import graft.queries.QueryDef
 object QueryRuns {
 
   /** Smallest SF: the codegen warm-up directory. */
-  val warmDir = "/root/testdata/sf0.001"
+  private val warmDir = "/root/testdata/sf0.001"
 
   /** Full materialization through the noop sink: a bare count() would
     * let Catalyst prune the computed columns away and time nothing.
