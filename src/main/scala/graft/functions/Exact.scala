@@ -83,14 +83,4 @@ object Exact {
     */
   def revenue(price: Column, discount: Column): Column =
     price * (lit(1.0) - discount)
-
-  /** [[revenue]] integerized at 4 decimals for exact aggregation. */
-  def revenueE4(price: Column, discount: Column): Column =
-    toScaledLong(revenue(price, discount), 4)
-
-  /** Matching DuckDB SQL fragment for [[revenueE4]] (kept adjacent so the two
-    * sides can't drift).
-    */
-  val revenueE4Sql: String =
-    "CAST(round(l_extendedprice * (1 - l_discount) * 10000, 0) AS BIGINT)"
 }

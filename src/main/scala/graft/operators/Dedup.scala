@@ -494,19 +494,6 @@ object Dedup {
     (sh, cand)
   }
 
-  /** MinHash signature over the array column `shingleCol`: element i is
-    * min over shingles of xxhash64(i, shingle) — k seeded permutations.
-    *
-    * NOTE: referencing this array column from several downstream
-    * expressions makes Catalyst's CollapseProject INLINE (= recompute) the
-    * whole k x |shingles| hash tensor per reference; [[minHashLshPairs]]
-    * therefore uses the explode/aggregate formulation instead, where each
-    * hash is computed exactly once.
-    */
-  def minHashSignature(shingleCol: String, k: Int): Column =
-    expr(s"""transform(sequence(0, ${k - 1}),
-         i -> array_min(transform($shingleCol, t -> xxhash64(i, t))))""")
-
   /** MinHash-LSH near-dup candidates, verified with exact Jaccard.
     *
     * bands x rowsPerBand = k. A pair collides if any band of their
@@ -520,17 +507,16 @@ object Dedup {
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
                       threshold: Double = 0.2): DataFrame = {
-    val sh = Barrier.filterAbove(
-      df.select(col(idCol).as("doc"), shingles(textCol, n).as("sh")),
-      size(col("sh")) > 0).cache()
+    val sh = shingleTable(df, idCol, textCol, n)
     // signature via explode + k min-aggregates — one shuffle on doc id,
     // map-side partial mins keep the exchange tiny. Each shingle STRING
     // is hashed exactly once (xxhash64), then the k permutations re-hash
     // that fixed-width LONG (xxhash64(i, h)): k constant-width hashes per
     // shingle instead of k variable-length string traversals. (Affine
     // maps would be cheaper still, but long multiplication overflows
-    // under ANSI mode; and the array-expression form recomputes the hash
-    // tensor per downstream reference — see minHashSignature's note.)
+    // under ANSI mode. An array-expression signature column would be
+    // worse: CollapseProject inlines it into every downstream reference
+    // and recomputes the k x |shingles| hash tensor per reference.)
     val exploded = sh.select(col("doc"), explode(col("sh")).as("shingle"))
       .withColumn("h", xxhash64(col("shingle")))
     val banded = bandedFromHashes(exploded, bands, rowsPerBand)
@@ -748,113 +734,6 @@ object Dedup {
       .groupBy("doc").agg(max("overlap").as("max_overlap"))
   }
 
-  /** RDD ids backing a localCheckpoint'ed Dataset, read off its OWN
-    * analyzed plan (the LogicalRDD node — reflective access because the
-    * class is private[sql], but its shape is stable public API in
-    * behavior). Exact attribution: a before/after getPersistentRDDs
-    * snapshot would also capture RDDs that OTHER driver threads persist
-    * in the same window and later wrongly unpersist them — this repo
-    * itself runs concurrent driver threads (audit futures, concurrent
-    * sink writes) on shared sessions.
-    */
-  private def checkpointRddIds(ds: DataFrame): Set[Int] =
-    ds.queryExecution.analyzed.collect {
-      case p if p.getClass.getSimpleName == "LogicalRDD" =>
-        p.getClass.getMethod("rdd").invoke(p) match {
-          case r: org.apache.spark.rdd.RDD[_] => r.id
-        }
-    }.toSet
-
-  /** Resolve near-dup PAIRS into keep/drop decisions: connected components
-    * by iterative min-label propagation (each doc repeatedly adopts the
-    * smallest id reachable over pair edges), then every component keeps
-    * its minimum id. Iterations bound the component DIAMETER handled —
-    * near-dup clusters are shallow (a hub + copies), so few rounds close
-    * them; the loop stops early at a fixpoint.
-    *
-    * Scale shape: each round is one join + one groupBy-min on ids — no
-    * driver-side graph, no quadratic step. (This is the standard
-    * large-scale alternative to a graph library for dedup clustering.)
-    *
-    * @return (doc, keeper) for every id in `allIds` — keeper == doc means
-    *         the row survives dedup.
-    */
-  def resolveKeepers(pairs: DataFrame, allIds: DataFrame, idCol: String,
-                     maxIter: Int = 5): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    // undirected edges, both directions
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct().cache()
-    var labels = allIds.select(col(idCol).as("doc"), col(idCol).as("label"))
-    // RDD ids of the newest checkpoint generation — the lineage root the
-    // CURRENT generation recomputes from if a cached partition is lost.
-    // Dataset.unpersist releases CacheManager entries but NOT checkpoint
-    // blocks, so those are tracked by id; crucially a checkpoint is only
-    // released once a NEWER checkpoint has materialized (freeing it
-    // while a cached descendant still recomputes through it would turn
-    // the next evicted partition into "Checkpoint block not found").
-    var lastCkptIds = Set.empty[Int]
-    // blocks of the checkpoint superseded THIS iteration — still
-    // reachable from the cached `labels` generation until `labels` is
-    // replaced below, so their release waits for the end of the
-    // iteration (freeing them while the `changed` count can still
-    // recompute an evicted `labels` partition through them would throw
-    // "Checkpoint block not found" on a cluster)
-    var pendingRelease = Set.empty[Int]
-    var converged = false
-    var i = 0
-    while (i < maxIter && !converged) {
-      // each doc adopts min(own label, neighbors' labels)
-      val viaNeighbors = edges
-        .join(labels.select(col("doc").as("dst"),
-          col("label").as("n_label")), Seq("dst"))
-        .groupBy(col("src").as("doc"))
-        .agg(min("n_label").as("n_label"))
-      val nextPlan = labels.join(viaNeighbors, Seq("doc"), "left")
-        .select(col("doc"),
-          least(col("label"), coalesce(col("n_label"), col("label")))
-            .as("label"))
-      // Every generation is materialized by the convergence count below,
-      // so persist it and RELEASE the superseded one — without that,
-      // maxIter label generations stay pinned at once (memory pressure
-      // for free at 100 TB). Every 3rd round, localCheckpoint instead of
-      // cache to truncate lineage: the plan otherwise nests every prior
-      // round's join, and a partition recompute after executor loss
-      // would cascade back to round 0.
-      val next =
-        if ((i + 1) % 3 == 0) {
-          val ck = nextPlan.localCheckpoint() // eager: materializes here
-          // the new checkpoint is a self-contained recompute root — but
-          // the CURRENT `labels` cache still recomputes through the old
-          // one, and the `changed` count below consumes `labels`, so
-          // the old blocks are only queued for release here
-          pendingRelease = lastCkptIds
-          lastCkptIds = checkpointRddIds(ck)
-          ck
-        } else nextPlan.cache()
-      val changed = next.join(labels.withColumnRenamed("label", "old"),
-          Seq("doc"))
-        .filter(col("label") =!= col("old")).count()
-      // cached generations release their DATA only — their lineage
-      // (back to the retained checkpoint) stays recomputable
-      labels.unpersist(blocking = false) // no-op for generation 0
-      labels = next
-      // `labels` is now the new self-contained checkpoint (on ckpt
-      // iterations), so nothing live recomputes through the superseded
-      // blocks any more — release them
-      pendingRelease.foreach(id => sc.getPersistentRDDs.get(id)
-        .foreach(_.unpersist(blocking = false)))
-      pendingRelease = Set.empty
-      converged = changed == 0
-      i += 1
-    }
-    // the loop's counts materialized the final generation, so the edge
-    // cache has served its purpose whatever the caller does next
-    edges.unpersist(blocking = false)
-    labels.select(col("doc"), col("label").as("keeper"))
-  }
-
   /** Cross-document duplicated-SPAN removal — exact substring dedup in
     * the sense of Lee et al. 2021 (arXiv:2107.06499, "Deduplicating
     * Training Data Makes Language Models Better"): any window of `n`
@@ -1070,188 +949,6 @@ object Dedup {
                        1, -1)) > 0,
               CAST(power(2, j) AS BIGINT), CAST(0 AS BIGINT)))), 1)""")
 
-  /** Edit-distance similarity join (Ed-Join, Xiao et al. VLDB'08): every
-    * pair of documents with `levenshtein(text_a, text_b) <= k`, found
-    * WITHOUT an all-pairs comparison and with EXACT recall (blocking is
-    * a theorem, not a heuristic — unlike the Jaccard/LSH family above,
-    * nothing here trades recall for cost).
-    *
-    * Stage 1 — exact prefix-signature blocking. Each document's
-    * character q-grams are occurrence-indexed ((gram, i-th occurrence),
-    * turning the gram multiset into a set), and one edit operation can
-    * destroy at most `q` of them, so two strings within edit distance k
-    * share >= max(S_a, S_b) - q*k elements (Gravano et al. VLDB'01
-    * count filter; S = gram count). By the prefix-filter lemma, under
-    * ANY global total order over elements the pair must then share an
-    * element inside each side's first q*k + 1 elements. The order used
-    * is global gram frequency ASCENDING (rarest first, computed by one
-    * map-combinable gram-keyed count): signatures are each document's
-    * RAREST grams, so the inverted index the candidates join through is
-    * shallow by construction — boilerplate grams never enter it. The
-    * exactness never depends on that (a pathological corpus only grows
-    * buckets, not false negatives).
-    *
-    * Stage 2 — length filter: |len_a - len_b| <= k (each edit changes
-    * length by at most 1), applied inside the candidate join.
-    *
-    * Stage 3 — banded verify: Spark's threshold form
-    * `levenshtein(a, b, k)` computes only the 2k+1-wide diagonal band
-    * (O(k*len) per pair, not O(len^2)) and returns -1 past the bound.
-    *
-    * Short-string tier: strings with S <= q*k grams (len <= q*k + q - 1)
-    * get no count-filter guarantee AMONG THEMSELVES (max(S) - q*k <= 0),
-    * so short x short pairs are generated by a length-bucket equi-join
-    * instead (bucket width k+1, probe side fans to the 3 adjacent
-    * buckets — no cartesian, no nested loop; the tier is bounded-length
-    * by definition, and short x LONG pairs are still covered by the
-    * signature join because a short document's signature is all of its
-    * grams while the pair bound only needs the LONGER side to clear
-    * q*k). Documents with fewer than q characters have no grams and can
-    * only match inside the short tier, which is where they are routed.
-    *
-    * Scale shape: one gram-keyed count, one per-document window (bounded
-    * by document length), one rare-gram equi-join, banded verification
-    * on candidates only. No crossJoin in any plan.
-    */
-  def editDistanceJoin(df: DataFrame, idCol: String, textCol: String,
-                       k: Int, q: Int = 3): DataFrame = {
-    val base = edJoinBase(df, idCol, textCol, k, q)
-    val cand = editDistanceCandidates(base, k, q)
-    cand
-      .join(base.select(col("doc").as("doc_a"), col("txt").as("ta")),
-        Seq("doc_a"))
-      .join(base.select(col("doc").as("doc_b"), col("txt").as("tb")),
-        Seq("doc_b"))
-      .withColumn("dist", levenshtein(col("ta"), col("tb"), k).cast("long"))
-      // barrier: a bare filter on the derived column gets pushed into
-      // the join condition by substitution and the banded levenshtein
-      // runs TWICE per candidate (the SCALE_r12 §7/§8 trap, seen live
-      // in this plan) — the referenced non-deterministic column pins it
-      // above the projection
-      .transform(df => graft.operators.Barrier.filterAbove(df,
-        col("dist") =!= -1L))
-      .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), col("dist"))
-  }
-
-  /** Normalized cached input for the edit-distance join: (doc, txt,
-    * len, ng) with ng = the DISTINCT q-gram count. ng is computed here,
-    * once, because the short-tier routing consumes it from several
-    * branches — as a filter expression it would re-run the gram HOF
-    * over the full corpus per consumer.
-    */
-  private[graft] def edJoinBase(df: DataFrame, idCol: String,
-                                textCol: String, k: Int,
-                                q: Int): DataFrame =
-    df.select(col(idCol).as("doc"), col(textCol).as("txt"),
-        length(col(textCol)).as("len"))
-      .withColumn("ng",
-        when(col("len") < q, lit(0))
-          .otherwise(size(expr(
-            s"array_distinct(transform(sequence(1, " +
-              s"greatest(length(txt) - ${q - 1}, 1)), " +
-              s"i -> substring(txt, i, $q)))"))))
-      .cache()
-
-  /** The exact-recall blocking stage of [[editDistanceJoin]] over an
-    * [[edJoinBase]] frame — public so probes can price the candidate
-    * volume separately from the verify stage.
-    */
-  private[graft] def editDistanceCandidates(base: DataFrame, k: Int,
-                                            q: Int): DataFrame = {
-    require(k >= 1, s"editDistanceJoin needs k >= 1, got $k")
-    require(q >= 1, s"editDistanceJoin needs q >= 1, got $q")
-    val qk = q * k
-
-    // Long tier: DISTINCT q-grams -> global-rarity signatures. The
-    // count bound holds on distinct gram VALUES, not just the
-    // occurrence multiset: one edit modifies at most q gram slots, and
-    // a value vanishes from the set only if at least one of its slots
-    // was destroyed — so k edits remove at most q*k distinct values
-    // from EITHER side's set, |A ∩ B| >= max(|A|, |B|) - q*k, and the
-    // prefix lemma applies with the same q*k + 1 signature size. Using
-    // sets instead of occurrence-indexed multisets drops a whole
-    // per-(doc, gram) occurrence window (a corpus-sized shuffle) from
-    // the plan.
-    // Both shared frames are cached: `grams` feeds the frequency count
-    // AND the signature join, and `sig` is BOTH sides of the candidate
-    // self-join — uncached, the gram pipeline re-evaluates per consumer
-    // (measured 14.5 s -> 4.4 s for the sf0.1 candidate stage). Same
-    // lifetime convention as shingleTable's cache.
-    val grams = base.filter(col("len") >= q)
-      .select(col("doc"), col("len"),
-        explode(expr(
-          s"array_distinct(transform(sequence(1, length(txt) - ${q - 1}), " +
-            s"i -> substring(txt, i, $q)))")).as("gram"))
-      .cache()
-    val freq = grams.groupBy("gram").agg(count(lit(1)).as("gfreq"))
-    val sig = grams.join(freq, Seq("gram"))
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("doc").orderBy(col("gfreq"), col("gram"))))
-      .filter(col("rnk") <= qk + 1)
-      .select("doc", "len", "gram")
-      .cache()
-    val longCand = sig.as("a")
-      .join(sig.as("b"),
-        col("a.gram") === col("b.gram") &&
-          col("a.doc") < col("b.doc") &&
-          abs(col("a.len") - col("b.len")) <= k)
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-
-    // Short tier: length-bucket equi-join among documents whose
-    // DISTINCT-gram set is too small for the count filter (the cached
-    // `ng` column — no HOF re-evaluation here).
-    val shorts = base.filter(col("ng") <= qk)
-      .withColumn("bkt", floor(col("len") / (k + 1)))
-    val probe = shorts.select(col("doc"), col("len"),
-      explode(array(col("bkt") - 1, col("bkt"), col("bkt") + 1)).as("bkt"))
-    val shortCand = probe.as("a")
-      .join(shorts.as("b"),
-        col("a.bkt") === col("b.bkt") && col("a.doc") < col("b.doc") &&
-          abs(col("a.len") - col("b.len")) <= k)
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-
-    longCand.union(shortCand).distinct()
-  }
-
-  /** PassJoin edit-distance similarity join (Li, Deng & Feng, ICDE
-    * 2011) — the SCALE path for `levenshtein <= k` pairs on
-    * self-similar corpora, where [[editDistanceJoin]]'s q-gram prefix
-    * signatures go hot (measured at 260k power-law docs: 27-55M
-    * candidates, 15-30 GB spill, 31-139 s max task — fixed-length
-    * grams on text built from a shared vocabulary carry no rarity at
-    * ANY q).
-    *
-    * Exact-recall blocking by the segment pigeonhole: split every
-    * document into k+1 contiguous segments (lengths len/(k+1) rounded,
-    * LAST len mod (k+1) segments one char longer). k edits transforming
-    * a into b touch at most k of a's k+1 segments, so some segment
-    * survives VERBATIM as a substring of b, shifted by the net
-    * insert/delete balance before it: shift d satisfies
-    * |d| + |Δ - d| <= k with Δ = len_b - len_a (prefix edits produce
-    * |d| of it, suffix edits must absorb the remaining Δ - d).
-    *
-    * Plan shape: the index is (k+1) segment keys per document —
-    * xxhash64(i, len, segment) so a key only matches probes aimed at
-    * exactly this segment index AND this partner length; the probe
-    * side enumerates, per document, each (segment index i, length gap
-    * Δ in [0, k], shift d in the exact window above) and emits the
-    * hashed substring at the arithmetically determined position — all
-    * codegen'd generators and substring/hash calls, no windows, no
-    * interpreted lambdas. Segment keys are ~len/(k+1) chars long
-    * (whole phrases), so buckets are near-singleton on any corpus that
-    * is not literally duplicated — the heat that kills gram blocking
-    * cannot occur. Probe volume is (k+1) * (k+1) * ~(k+1) rows per
-    * document — O(k^2 * N) 16-byte rows, uniform keys, no skew.
-    *
-    * Documents with len < k+1 have empty segments and route through
-    * the same length-bucket short tier as [[editDistanceJoin]]; their
-    * partners (len <= 2k+1) are included in the tier, and mid-size
-    * documents covered by both tiers dedupe in the candidate distinct.
-    * Verification is the banded threshold levenshtein. Exactness
-    * (== brute force) is EditDistanceJoinSpec-pinned on the same
-    * corpora as the prefix form.
-    */
   /** The PassJoin SEGMENT keys of a (doc, txt, len) frame: one
     * `xxhash64(i, len, segment)` per segment — the indexed side.
     * Shared by the batch join and the streaming index
@@ -1310,8 +1007,10 @@ object Dedup {
   }
 
   /** The length-bucket short-tier candidates among documents with
-    * len <= 2k+1 (partners of sub-(k+1) docs all land there) — shared
-    * by both batch forms and the streaming index.
+    * len <= 2k+1 (partners of sub-(k+1) docs all land there): bucket
+    * width k+1, the probe side fans to the 3 adjacent buckets — an
+    * equi-join, no cartesian, no nested loop. Shared by the batch join
+    * and the streaming index.
     */
   private[graft] def shortTierCandidates(base: DataFrame,
                                          k: Int): DataFrame = {
@@ -1326,6 +1025,47 @@ object Dedup {
       .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
   }
 
+  /** PassJoin edit-distance similarity join (Li, Deng & Feng, ICDE
+    * 2011): every pair of documents (id_a < id_b) with
+    * `levenshtein(text_a, text_b) <= k`, with its distance, found
+    * WITHOUT an all-pairs comparison and with EXACT recall — the
+    * blocking is a theorem, not a heuristic. Segment keys, not q-grams:
+    * fixed-length grams on text built from a shared vocabulary carry no
+    * rarity at any q, so q-gram prefix signatures go hot on
+    * self-similar corpora (SCALE_r12 §18: 94 s / 24 GB spill at 260k
+    * docs against 11 s / no spill here).
+    *
+    * Exact-recall blocking by the segment pigeonhole: split every
+    * document into k+1 contiguous segments (lengths len/(k+1) rounded,
+    * LAST len mod (k+1) segments one char longer). k edits transforming
+    * a into b touch at most k of a's k+1 segments, so some segment
+    * survives VERBATIM as a substring of b, shifted by the net
+    * insert/delete balance before it: shift d satisfies
+    * |d| + |Δ - d| <= k with Δ = len_b - len_a (prefix edits produce
+    * |d| of it, suffix edits must absorb the remaining Δ - d).
+    *
+    * Plan shape: the index is (k+1) segment keys per document —
+    * xxhash64(i, len, segment) so a key only matches probes aimed at
+    * exactly this segment index AND this partner length; the probe
+    * side enumerates, per document, each (segment index i, length gap
+    * Δ in [0, k], shift d in the exact window above) and emits the
+    * hashed substring at the arithmetically determined position — all
+    * codegen'd generators and substring/hash calls, no windows, no
+    * interpreted lambdas. Segment keys are ~len/(k+1) chars long
+    * (whole phrases), so buckets are near-singleton on any corpus that
+    * is not literally duplicated — the heat that kills gram blocking
+    * cannot occur. Probe volume is (k+1) * (k+1) * ~(k+1) rows per
+    * document — O(k^2 * N) 16-byte rows, uniform keys, no skew.
+    *
+    * Documents with len < k+1 have empty segments and route through
+    * the length-bucket short tier ([[shortTierCandidates]]); their
+    * partners (len <= 2k+1) are included in the tier, and mid-size
+    * documents covered by both tiers dedupe in the candidate distinct.
+    * Verification is Spark's threshold `levenshtein(a, b, k)`, which
+    * computes only the 2k+1-wide diagonal band and returns -1 past the
+    * bound. Exactness (== brute force) is EditDistanceJoinSpec-pinned,
+    * including a seeded property over the tier-boundary lengths.
+    */
   def editDistanceJoinPass(df: DataFrame, idCol: String, textCol: String,
                            k: Int, broadcastIndex: Boolean = false
                           ): DataFrame = {
@@ -1356,7 +1096,7 @@ object Dedup {
         greatest(col("doc_a"), col("doc_b")).as("doc_b"))
 
     // Short tier: partners of sub-(k+1) documents all have len <= 2k+1;
-    // bucket-join that set (same machinery as editDistanceJoin).
+    // bucket-join that set.
     val shortCand = shortTierCandidates(base, k)
 
     val cand = longCand.union(shortCand).distinct()

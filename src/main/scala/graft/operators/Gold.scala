@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.core.Tables
-import graft.plans.DimBroadcast
 import graft.schema.Star
 
 /** Star-schema build (SURVEY §2.11 G1-G5; reference: BBT-ETL-DW
@@ -20,15 +19,12 @@ import graft.schema.Star
   *    on FACT-sized tables we derive them arithmetically (datediff for
   *    calendar, orderkey*10+linenumber for the sales id) — zero shuffles,
   *    deterministic, valid at any scale.
-  *  - dim sides of the fact build are size-guarded in two layers: the
-  *    [[graft.plans.DimBroadcast.hint]] wrapper broadcasts only when the
-  *    compile-time estimate fits the configured bound, and because the
-  *    [[orderedId]]-keyed dims are RDD-backed (no estimate) the hint
-  *    stands down entirely and AQE converts the shuffle join to
-  *    broadcast at RUNTIME from actual sizes (GoldWarehouseSpec asserts
-  *    the conversion). Either way a scaling dim can never force-OOM the
-  *    driver. The only always-wide exchange is fact x orders on the
-  *    order key.
+  *  - dim sides of the fact build carry no compile-time hint: the
+  *    [[orderedId]]-keyed dims are RDD-backed (no size estimate), so AQE
+  *    converts each shuffle join to broadcast at RUNTIME from actual
+  *    sizes (GoldWarehouseSpec asserts the conversion) and a scaling dim
+  *    can never force-OOM the driver. The only always-wide exchange is
+  *    fact x orders on the order key.
   */
 object Gold {
 
@@ -127,8 +123,8 @@ object Gold {
   /** Memo of [[orderedId]]-keyed dim frames, per session and dim+dir.
     * Because orderedId runs its sampling/count jobs at CONSTRUCTION (see
     * its caveat), every re-construction of factSales — plan inspection,
-    * repeated query runs, DimBroadcast stats access — would otherwise
-    * re-pay ~2 jobs per dim; the memo makes dim keying once-per-session.
+    * repeated query runs — would otherwise re-pay ~2 jobs per dim; the
+    * memo makes dim keying once-per-session.
     *
     * A weak-key map cannot reclaim these entries: the DataFrame values
     * strongly reference their SparkSession key, pinning each entry for
@@ -189,14 +185,11 @@ object Gold {
     Tables.lineitem(s, dir)
       .withColumn("__line", lineId.cast("long"))
       .join(orders, col("l_orderkey") === col("o_orderkey"))
-      .join(DimBroadcast.hint(
-          dimCustomer(s, dir).select("c_custkey", "CustomerKey")),
+      .join(dimCustomer(s, dir).select("c_custkey", "CustomerKey"),
         col("o_custkey") === col("c_custkey"))
-      .join(DimBroadcast.hint(
-          dimProduct(s, dir).select("p_partkey", "ProductKey")),
+      .join(dimProduct(s, dir).select("p_partkey", "ProductKey"),
         col("l_partkey") === col("p_partkey"))
-      .join(DimBroadcast.hint(
-          dimStore(s, dir).select("s_suppkey", "StoreKey")),
+      .join(dimStore(s, dir).select("s_suppkey", "StoreKey"),
         col("l_suppkey") === col("s_suppkey"))
       .select(
         (col("l_orderkey") * 100 + col("__line")).cast("long")

@@ -78,7 +78,7 @@ object RangeJoin {
     *    linearly with salt — the probe showed returns flat well below
     *    the cap). Cost: one codegen'd scan of the point side — noise
     * next to the join it tunes, and the same spirit as
-    * DimBroadcast.hint's size-aware threshold.
+    * DimBroadcastRule's size-aware threshold.
     */
   private val Oversub = 8L
 

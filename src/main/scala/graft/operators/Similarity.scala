@@ -566,14 +566,14 @@ object Similarity {
     * map-side from a per-cell aggregate of O(1) state (count + min_by
     * vector — no collect_list). Exact-cosine verification is
     * unchanged, so precision stays exact; recall inside an over-cap
-    * cell narrows to rep-adjacency, which [[graft.operators.Dedup]]'s
-    * `resolveKeepers` closes back into one component when the cluster
-    * is transitively near-duplicate (a∼rep and b∼rep ⇒ a,b share a
-    * component) — the dedup use case the operator exists for. A true
-    * near-dup pair is lost only when EVERY table puts it in an over-cap
-    * cell whose representative matches neither side; under-cap cells
-    * (the overwhelming majority of a healthy corpus) are exhaustive
-    * all-pairs exactly as before.
+    * cell narrows to rep-adjacency, which
+    * [[GraphRank.connectedComponents]] closes back into one component
+    * when the cluster is transitively near-duplicate (a∼rep and b∼rep
+    * ⇒ a,b share a component) — the dedup use case the operator exists
+    * for. A true near-dup pair is lost only when EVERY table puts it in
+    * an over-cap cell whose representative matches neither side;
+    * under-cap cells (the overwhelming majority of a healthy corpus)
+    * are exhaustive all-pairs exactly as before.
     *
     * Sizing rule at scale: the structure has 2^nPlanes cells per table,
     * so keep average occupancy O(1) — nPlanes ≈ log₂(corpus) − 2 — and

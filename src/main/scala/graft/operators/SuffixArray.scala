@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{BinaryType, DoubleType, FloatType,
+  LongType}
 
 /** Corpus-wide duplicated-span detection via PREFIX DOUBLING — the
   * suffix-array rank construction (Manber–Myers) expressed as dataflow,
@@ -85,6 +86,15 @@ object SuffixArray {
     val schema = sorted.schema
     val keyIdx = keyCols.map(schema.fieldIndex).toArray
     val keyTypes = keyIdx.map(schema.fields(_).dataType)
+    // samePrev compares internal values with Objects.equals: binary keys
+    // would compare by array reference and floating keys break on
+    // -0.0 vs 0.0, so only atomic, non-binary, non-floating keys rank.
+    keyCols.zip(keyTypes).foreach { case (c, t) =>
+      require(GraftSqlShim.isAtomic(t) &&
+        !Seq(BinaryType, FloatType, DoubleType).contains(t),
+        s"denseRankOver key column $c has type ${t.simpleString}; keys " +
+          "must be atomic, non-binary and non-floating")
+    }
     val nk = keyIdx.length
     // Both passes run on INTERNAL rows (round-16 verdict item 4 /
     // guide §5): `Dataset.rdd` deserialized every UnsafeRow to a

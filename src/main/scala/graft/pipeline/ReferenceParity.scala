@@ -469,7 +469,7 @@ object ReferenceParity {
     // shuffle_hash hints are safe here: the build side of every hinted
     // join fits one task's hash map. Do NOT copy either pattern into an
     // SF-scaling path — those use Gold's parallel orderedId and
-    // DimBroadcast.hint's size guard.
+    // DimBroadcastRule's size guard.
 
     // ---- tax conformance (J2, sales_tax.py:62-67) ----
     val salesIso = CountryCodes.withIsoCode(salesGeo, "ShipCountry",

@@ -21,9 +21,17 @@ import org.apache.spark.sql.catalyst.plans.logical.BROADCAST
   *    cardinality at any SF — always hinted.
   *  - SCALING dims (customer/part/supplier grow linearly with SF) are
   *    hinted only while their size estimate stays under
-  *    [[DimBroadcast.maxBytesConf]]; past the bound the rule stands down
-  *    and the planner shuffles — at the 100 TB north star, customer is
-  *    terabytes and a forced hint would OOM the driver.
+  *    [[DimBroadcastRule.maxBytesConf]]; past the bound the rule stands
+  *    down and the planner shuffles — at the 100 TB north star, customer
+  *    is terabytes and a forced hint would OOM the driver, where an
+  *    unguarded `broadcast()` at the call site would override the size
+  *    check. The estimate is `plan.stats.sizeInBytes` — file-size based
+  *    for parquet scans, no job is triggered.
+  *
+  * The rule only fills EMPTY hints, so a call-site `broadcast()` (or any
+  * other strategy hint) always wins. Dims that are not file scans —
+  * e.g. Gold's RDD-backed surrogate-keyed dims — are never hinted here;
+  * AQE's runtime conversion broadcasts those from actual sizes.
   *
   * The dim list is name-based over the scanned file paths (our testdata
   * and gold-layer naming); a production deployment would key on catalog
@@ -46,7 +54,8 @@ class DimBroadcastRule extends Rule[LogicalPlan] {
   }
 
   private def maxBytes: BigInt = BigInt(conf.getConfString(
-    DimBroadcast.maxBytesConf, DimBroadcast.defaultMaxBytes.toString))
+    DimBroadcastRule.maxBytesConf,
+    DimBroadcastRule.defaultMaxBytes.toString))
 
   private def broadcastable(plan: LogicalPlan): Boolean =
     scansOnly(plan, boundedDims) ||
@@ -59,4 +68,19 @@ class DimBroadcastRule extends Rule[LogicalPlan] {
       j.copy(hint = hint.copy(rightHint =
         Some(HintInfo(strategy = Some(BROADCAST)))))
   }
+}
+
+object DimBroadcastRule {
+
+  /** Session conf key bounding what the rule broadcasts among SCALING
+    * dims, in bytes of estimated plan size.
+    */
+  val maxBytesConf = "spark.graft.dimBroadcast.maxBytes"
+
+  /** 512 MiB: generous next to Spark's 10 MB auto-broadcast default —
+    * the point of hinting dims is that stats under- or over-shoot for
+    * wide-but-short tables — but far below executor/driver heap, so a
+    * mis-hint degrades performance, not stability.
+    */
+  val defaultMaxBytes: Long = 512L * 1024 * 1024
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.Exact
 import graft.operators.AsOfJoin
-import graft.plans.DimBroadcast
 
 /** Joins (SURVEY §2.5), aggregations (§2.6), windows (§2.7) and
   * dedup/sort/limit/set ops (§2.8).
@@ -14,10 +13,11 @@ import graft.plans.DimBroadcast
   * Scale notes, applied throughout:
   *  - BOUNDED dims (nation: 25 rows, region: 5 — schema-fixed at any SF)
   *    get unconditional `broadcast()` hints; SCALING dims (customer, part,
-  *    supplier grow linearly with SF) go through [[DimBroadcast.hint]],
-  *    which broadcasts only while the size estimate stays under the
-  *    configured bound and otherwise lets the planner shuffle — a forced
-  *    hint on a terabyte-scale "dim" OOMs the driver at 100 TB;
+  *    supplier grow linearly with SF) are joined bare, and
+  *    [[graft.plans.DimBroadcastRule]] broadcasts them only while the
+  *    size estimate stays under the configured bound, otherwise letting
+  *    the planner shuffle — a forced hint on a terabyte-scale "dim" OOMs
+  *    the driver at 100 TB;
   *  - aggregates over money use [[Exact]] scaled-long sums: exact at any
   *    parallelism AND the right representation at scale (no float drift,
   *    no slow Decimal path);
@@ -69,12 +69,12 @@ object JoinsAggs {
       WHERE o_orderkey % 500 = 0"""))
 
   // J3 — inner broadcast join fact x dim (sales_currency.py:61-67). part
-  // scales with SF, so the hint is size-aware: BroadcastHashJoin while part
-  // fits the bound, sort-merge once it outgrows it — never shuffle-vs-OOM.
+  // scales with SF, so the broadcast is size-aware (DimBroadcastRule):
+  // BroadcastHashJoin while part fits the bound, sort-merge once it
+  // outgrows it — never shuffle-vs-OOM.
   private val j3 = QueryDef("j3_broadcast_inner", (s, dir) => {
     Tables.lineitem(s, dir)
-      .join(DimBroadcast.hint(Tables.part(s, dir)),
-        col("l_partkey") === col("p_partkey"))
+      .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
       .groupBy("p_brand").agg(
         count(lit(1)).as("n"),
         Exact.exactSum(Exact.revenue(col("l_extendedprice"),
@@ -88,8 +88,8 @@ object JoinsAggs {
   // (sales_currency.py:70-74 + drop right key).
   private val j4 = QueryDef("j4_left_using", (s, dir) => {
     Tables.lineitem(s, dir)
-      .join(DimBroadcast.hint(Tables.part(s, dir)
-        .select(col("p_partkey").as("l_partkey"), col("p_type"))),
+      .join(Tables.part(s, dir)
+        .select(col("p_partkey").as("l_partkey"), col("p_type")),
         Seq("l_partkey"), "left")
       .groupBy("p_type").agg(count(lit(1)).as("n"))
   }, Some("""SELECT p_type, CAST(count(*) AS BIGINT) AS n
@@ -278,8 +278,7 @@ object JoinsAggs {
     Tables.lineitem(s, dir)
       .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey"),
         col("l_orderkey") === col("o_orderkey"))
-      .join(DimBroadcast.hint(Tables.customer(s, dir)
-        .select("c_custkey", "c_nationkey")),
+      .join(Tables.customer(s, dir).select("c_custkey", "c_nationkey"),
         col("o_custkey") === col("c_custkey"))
       .join(broadcast(Tables.nation(s, dir)),
         col("c_nationkey") === col("n_nationkey"))

@@ -998,10 +998,9 @@ object LlmOps {
   // L49 — edit-distance similarity join: all document pairs within
   // levenshtein <= 8, via PassJoin segment-pigeonhole blocking
   // (exact recall by theorem, near-singleton buckets by construction —
-  // the q-gram prefix form Dedup.editDistanceJoin is kept for corpora
-  // where grams ARE discriminating, but on self-similar text it goes
-  // hot: 94 s / 24 GB spill vs 11 s / 0 spill at 260k docs,
-  // SCALE_r12 §18) + banded threshold verify. The oracle is SEMANTIC,
+  // q-gram prefix signatures go hot on self-similar text: 94 s / 24 GB
+  // spill vs 11 s / 0 spill at 260k docs, SCALE_r12 §18) + banded
+  // threshold verify. The oracle is SEMANTIC,
   // not a replay: DuckDB computes the same pair set by length-bucketed
   // brute-force levenshtein, so the hash match checks the blocking
   // theorem itself — a false negative in either tier would drop a pair

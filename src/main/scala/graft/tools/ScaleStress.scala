@@ -5,7 +5,7 @@ import scala.collection.immutable.SeqMap
 import org.apache.spark.sql.DataFrame
 
 import graft.core.Sessions
-import graft.plans.DimBroadcast
+import graft.plans.DimBroadcastRule
 import graft.queries.Registry
 
 /** Scale-stress run: execute the headline queries against an INFLATED
@@ -14,7 +14,7 @@ import graft.queries.Registry
   *
   * Beyond timing, this is the empirical check of the two 100x claims the
   * plans make at sf0.1:
-  *  - a8 (scan-backed dims through DimBroadcast.hint): run once with the
+  *  - a8 (scan-backed dims sized by DimBroadcastRule): run once with the
   *    default bound and once with a bound the scaled dims EXCEED — the
   *    same query code must degrade from broadcast to a shuffle join and
   *    still complete (no hint-forced OOM path);
@@ -55,8 +55,8 @@ object ScaleStress {
     }
 
     // ---- a8 degrade evidence: same query, bound above vs below the
-    // scaled dim size. hint() reads the conf at plan-construction time,
-    // so set it before building each plan.
+    // scaled dim size. DimBroadcastRule reads the conf when the plan is
+    // optimized, so set it before building and running each plan.
     // Models "dim exceeds what an executor can hold": in production BOTH
     // broadcast layers see the same physical constraint, so the tight run
     // lowers the graft bound AND Spark's own autoBroadcastJoinThreshold
@@ -65,7 +65,7 @@ object ScaleStress {
     // Both bounds are restored even if a run throws — a leaked tight
     // maxBytesConf would skew the later g5 join census.
     def a8With(maxBytes: Long): SeqMap[String, Any] = QueryRuns.withConfs(
-      spark, DimBroadcast.maxBytesConf -> maxBytes.toString,
+      spark, DimBroadcastRule.maxBytesConf -> maxBytes.toString,
       "spark.sql.autoBroadcastJoinThreshold" -> maxBytes.toString) {
       val q = Registry.named("a8_dashboard_revenue")
       val secs = QueryRuns.noopSeconds(spark)(q.run(spark, sfDir))
@@ -76,7 +76,7 @@ object ScaleStress {
     val customerBytes = spark.read
       .parquet(s"$sfDir/customer.parquet")
       .queryExecution.optimizedPlan.stats.sizeInBytes
-    val a8Default = a8With(DimBroadcast.defaultMaxBytes)
+    val a8Default = a8With(DimBroadcastRule.defaultMaxBytes)
     // a bound the scaled customer dim EXCEEDS: half its estimated size
     val a8Tight = a8With((customerBytes / 2).toLong.max(1L))
 

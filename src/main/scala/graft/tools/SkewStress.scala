@@ -30,7 +30,7 @@ import graft.queries.Registry
   *        that side is far beyond any executor's memory, so this section
   *        sets autoBroadcastJoinThreshold=-1 to model the
   *        too-big-to-broadcast reality and force the shuffle join the
-  *        splitter exists for (DimBroadcast-hinted dims stay broadcast,
+  *        splitter exists for (DimBroadcastRule's dims stay broadcast,
   *        as their bounded size survives 100 TB);
   *      - AQE only splits a partition exceeding
   *        `skewedPartitionThresholdInBytes` (256 MB default) AND 5x the

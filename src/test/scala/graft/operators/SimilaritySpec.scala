@@ -285,9 +285,7 @@ class SimilaritySpec extends AnyFunSuite {
     }
     // keeper resolution recovers the full cluster from the star pairs
     val ids = clustered.select(col("vec_id").as("doc_id"))
-    val keepers = graft.operators.Dedup.resolveKeepers(
-        starred.select("doc_a", "doc_b"), ids, "doc_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val keepers = DedupSpec.keepers(starred, ids)
     assert((0L until 200L).forall(keepers(_) == 0L),
       "every cluster member must resolve to the representative")
   }

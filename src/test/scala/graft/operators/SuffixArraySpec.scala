@@ -115,4 +115,15 @@ class SuffixArraySpec extends AnyFunSuite {
     assert(ranked.filter(col("payload") === concat(lit("payload"),
       col("id"))).count() == 5000)
   }
+
+  test("denseRankOver rejects binary and floating key columns, naming " +
+    "the column and its type") {
+    val df = s.createDataFrame(Seq((1L, Array[Byte](1, 2), 0.5)))
+      .toDF("id", "kb", "kd")
+    for ((c, t) <- Seq("kb" -> "binary", "kd" -> "double")) {
+      val e = intercept[IllegalArgumentException](
+        SuffixArray.denseRankOverWithMax(df, Seq("id", c), "r"))
+      assert(e.getMessage.contains(s"column $c has type $t"), e.getMessage)
+    }
+  }
 }

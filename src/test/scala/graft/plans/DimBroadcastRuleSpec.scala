@@ -1,10 +1,15 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.core.Tables
+import graft.queries.Registry
 
 class DimBroadcastRuleSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
@@ -17,8 +22,8 @@ class DimBroadcastRuleSpec extends AnyFunSuite {
   }
 
   private def withMaxBytes[T](bytes: Long)(f: => T): T = {
-    s.conf.set(DimBroadcast.maxBytesConf, bytes.toString)
-    try f finally s.conf.unset(DimBroadcast.maxBytesConf)
+    s.conf.set(DimBroadcastRule.maxBytesConf, bytes.toString)
+    try f finally s.conf.unset(DimBroadcastRule.maxBytesConf)
   }
 
   test("a dim-table build side broadcasts even with auto-broadcast off " +
@@ -43,14 +48,48 @@ class DimBroadcastRuleSpec extends AnyFunSuite {
     }
   }
 
-  test("DimBroadcast.hint broadcasts a scaling dim that fits the bound") {
+  /** Whether the static physical plan of `df` broadcasts a build side
+    * that scans `dim`'s parquet file. */
+  private def broadcastsDim(df: DataFrame, dim: String): Boolean =
+    df.queryExecution.sparkPlan.collect {
+      case j: BroadcastHashJoinExec =>
+        val build = if (j.buildSide == BuildRight) j.right else j.left
+        build.collectLeaves().exists {
+          case scan: FileSourceScanExec =>
+            scan.relation.location.rootPaths
+              .exists(_.toString.endsWith(s"/$dim.parquet"))
+          case _ => false
+        }
+    }.contains(true)
+
+  // The registered joins against a SCALING dim: the rule alone decides
+  // whether each broadcasts.
+  private val scalingDimJoins = Seq(
+    "j3_broadcast_inner" -> "part",
+    "j4_left_using" -> "part",
+    "a8_dashboard_revenue" -> "customer")
+
+  test("registered scaling-dim joins (j3, j4, a8) broadcast their dim " +
+    "under the default bound") {
     withAutoBroadcastOff {
-      val joined = Tables.lineitem(s, sf)
-        .join(DimBroadcast.hint(Tables.part(s, sf)),
-          col("l_partkey") === col("p_partkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastHashJoin"), plan.take(800))
-      assert(joined.count() == 6000)
+      scalingDimJoins.foreach { case (name, dim) =>
+        val df = Registry.named(name).run(s, sf)
+        assert(broadcastsDim(df, dim),
+          s"$name: $dim not broadcast\n${df.queryExecution.sparkPlan}")
+      }
+    }
+  }
+
+  test("registered scaling-dim joins (j3, j4, a8) do not broadcast their " +
+    "dim at maxBytes = 1") {
+    withAutoBroadcastOff {
+      withMaxBytes(1L) {
+        scalingDimJoins.foreach { case (name, dim) =>
+          val df = Registry.named(name).run(s, sf)
+          assert(!broadcastsDim(df, dim),
+            s"$name: $dim broadcast\n${df.queryExecution.sparkPlan}")
+        }
+      }
     }
   }
 
@@ -58,12 +97,10 @@ class DimBroadcastRuleSpec extends AnyFunSuite {
     "answers correctly") {
     withAutoBroadcastOff {
       withMaxBytes(1L) {
-        // j3's shape: fact x scaling dim through the size-aware hint. With
-        // the bound at 1 byte the hint must stand down AND the optimizer
-        // rule must not re-hint — the plan has to shuffle, not broadcast.
+        // j3's shape: fact x scaling dim. With the bound at 1 byte the
+        // rule must not hint — the plan has to shuffle, not broadcast.
         val joined = Tables.lineitem(s, sf)
-          .join(DimBroadcast.hint(Tables.part(s, sf)),
-            col("l_partkey") === col("p_partkey"))
+          .join(Tables.part(s, sf), col("l_partkey") === col("p_partkey"))
         val plan = joined.queryExecution.executedPlan.toString
         assert(!plan.contains("BroadcastHashJoin"), plan.take(800))
         assert(plan.contains("SortMergeJoin") ||
